@@ -61,6 +61,10 @@ from spark_streaming_twitter_spark.functions.hashing import (
 )
 from spark_streaming_twitter_spark.functions import sampling
 from spark_streaming_twitter_spark.registry import QUERIES, query
+from spark_streaming_twitter_spark.streaming.keeper import (
+    keeper_stream,
+    make_keeper_prober,
+)
 from spark_streaming_twitter_spark.text.analysis import (
     _EMAIL_RE as _PII_EMAIL_RE,
     _PHONE_RE as _PII_PHONE_RE,
@@ -400,6 +404,29 @@ def minhash_band_structs_from_sig(sig):
     )
 
 
+def minhash_band_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) rows of a (doc_id, text) frame, batch or
+    streaming: the row-wise banding projection. Every doc emits exactly
+    one row per band, so the band-0 slice is the doc set."""
+    return (
+        docs.withColumn(
+            "sig",
+            minhash_signature_struct(
+                shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
+            ),
+        )
+        .select(
+            "doc_id",
+            F.explode(minhash_band_structs_from_sig(F.col("sig"))).alias("bk"),
+        )
+        .select(
+            "doc_id",
+            F.col("bk.band").alias("band"),
+            F.col("bk.band_key").alias("band_key"),
+        )
+    )
+
+
 @query(
     "stream_text_minhash_ingest_dedup",
     oracle=f"""
@@ -476,26 +503,7 @@ def stream_text_minhash_ingest_dedup(
         # md5-per-shingle banding is the hot loop, so spread the batch
         # across cores before the projection (at cluster scale a Kafka
         # topic's partition count does this at the source).
-        bands = (
-            stream.repartition(par)
-            .withColumn(
-                "sig",
-                minhash_signature_struct(
-                    shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                ),
-            )
-            .select(
-                "doc_id",
-                F.explode(
-                    minhash_band_structs_from_sig(F.col("sig"))
-                ).alias("bk"),
-            )
-            .select(
-                "doc_id",
-                F.col("bk.band").alias("band"),
-                F.col("bk.band_key").alias("band_key"),
-            )
-        )
+        bands = minhash_band_rows(stream.repartition(par))
         matches = (
             bands.join(F.broadcast(ref_bands), ["band", "band_key"])
             .where(F.col("doc_id") != F.col("ref_id"))
@@ -550,26 +558,7 @@ def _self_dedup_stream_bands(spark: SparkSession, spool_dir: str) -> DataFrame:
         .option("pathGlobFilter", "batch_*.parquet")
         .parquet(spool_dir)
     )
-    return (
-        stream.repartition(par)
-        .withColumn(
-            "sig",
-            minhash_signature_struct(
-                shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-            ),
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                minhash_band_structs_from_sig(F.col("sig"))
-            ).alias("bk"),
-        )
-        .select(
-            "doc_id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-        )
-    )
+    return minhash_band_rows(stream.repartition(par))
 
 
 def stream_text_minhash_self_dedup(
@@ -1501,7 +1490,7 @@ FROM (SELECT * FROM h0 UNION ALL SELECT * FROM h1
 def stream_text_minhash_keeper_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _text_keeper_stream(spark, sf_dir, roundrobin=False)
+    return _minhash_keeper_stream(spark, sf_dir)
 
 
 @query(
@@ -1525,140 +1514,28 @@ def stream_text_minhash_keeper_dedup_persisted(
 ) -> DataFrame:
     from spark_streaming_twitter_spark.text.corpus import _kept_ledger_dir
 
-    return _text_keeper_stream(
-        spark,
-        sf_dir,
-        roundrobin=False,
-        keep_ledger_dir=_kept_ledger_dir("text_keeper_ledger"),
+    return _minhash_keeper_stream(
+        spark, sf_dir, keep_ledger_dir=_kept_ledger_dir("text_keeper_ledger")
     )
 
 
-def _text_keeper_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    roundrobin: bool,
-    keep_ledger_dir: "str | None" = None,
+def _minhash_keeper_stream(
+    spark: SparkSession, sf_dir: str, **opts
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
+    """The text keeper stream: a doc's MinHash band keys probe the kept
+    index, every shared (band, band_key) is a hit, and the band-0 slice
+    holds one row per doc. ``opts`` pass through to keeper_stream."""
+    return keeper_stream(
+        spark,
+        "doc_id",
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        lambda spool_dir: _self_dedup_stream_bands(spark, spool_dir),
+        lambda store_dir: make_keeper_prober(
+            spark, store_dir, "doc_id", ["band", "band_key"],
+            item_slice=F.col("band") == 0,
+        ),
+        **opts,
     )
-
-    tmp = tempfile.mkdtemp(prefix="minhash_keeper_stream_")
-    if keep_ledger_dir is not None:
-        # production read-back shape (VERDICT r14 #4): the keeper STORE
-        # (side=ledger + side=index — r16 fused single-write layout)
-        # outlives the query; overwrite-at-start with the pre-rmtree
-        # ownership recheck, returned frame is the parquet-backed ledger
-        # side itself
-        from spark_streaming_twitter_spark.text.corpus import (
-            _reclaim_ledger_dir,
-        )
-
-        _reclaim_ledger_dir(keep_ledger_dir)
-        store_dir = keep_ledger_dir
-    else:
-        store_dir = os.path.join(tmp, "store")
-    # spool in its own subdir — the partitioned store must not share a
-    # root with the FileStreamSource's scan (partition inference)
-    spool_dir = os.path.join(tmp, "spool")
-    ledger_dir = os.path.join(store_dir, "side=ledger")
-    idx_dir = os.path.join(store_dir, "side=index")
-    state = {"has_index": False}
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool = (
-            spool_roundrobin_batches if roundrobin else spool_ordered_batches
-        )
-        spool(docs, "doc_id", spool_dir)
-        bands = _self_dedup_stream_bands(spark, spool_dir)
-
-        def probe_and_keep(bdf: DataFrame, _epoch_id: int) -> None:
-            bdf = bdf.persist()
-            # no .distinct() on the band keys: the banding projection is
-            # one row per (doc_id, band) by construction (explode of the
-            # per-doc band structs over a spool where each doc_id appears
-            # in exactly one batch), so the old distinct was a no-op
-            # exchange paid inside BOTH write actions per trigger (r15)
-            doc_keys = bdf.select("doc_id", "band", "band_key")
-            # r16: the batch's doc set is the band-0 slice — every doc
-            # emits exactly one row per band (minhash_band_structs_from_
-            # sig builds bands 0..MINHASH_BANDS-1 per doc), so the filter
-            # is row-for-row the old distinct() without its exchange
-            media = doc_keys.where(F.col("band") == 0).select("doc_id")
-            idx = None
-            if not state["has_index"]:
-                report = media.select(
-                    "doc_id",
-                    F.lit(0).cast("bigint").alias("n_index_hits"),
-                )
-            else:
-                idx = spark.read.parquet(idx_dir).select("band", "band_key")
-                hits = (
-                    doc_keys.join(F.broadcast(idx), ["band", "band_key"])
-                    .groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                )
-                report = media.join(hits, "doc_id", "left").select(
-                    "doc_id",
-                    F.coalesce("n", F.lit(0).cast("bigint")).alias(
-                        "n_index_hits"
-                    ),
-                )
-            # r15: pin the per-batch report (localCheckpoint — the index
-            # append below recaches every plan reading the store, so a
-            # persisted report would silently rebuild against the
-            # post-append listing; lineage truncation makes that
-            # impossible) and derive the kept set from it directly —
-            # each doc_id arrives in exactly one spool batch, so the old
-            # whole-ledger read-back + broadcast join was bitwise
-            # `report.where(n_index_hits = 0)`. (r16 measured NEGATIVE:
-            # folding the unpinned report subtree into the single write
-            # job re-evaluates the probe DAG per branch and grows the
-            # AQE stage count — the pin stays.)
-            report = report.localCheckpoint()
-            kept = report.where(F.col("n_index_hits") == 0).select("doc_id")
-            novel = (
-                doc_keys.join(F.broadcast(kept), "doc_id")
-                .select("band", "band_key")
-                .distinct()
-            )
-            if state["has_index"]:
-                novel = novel.join(
-                    idx,
-                    ["band", "band_key"],
-                    "left_anti",
-                )
-            # r16 (VERDICT r15 next #1): decision rows + novel index
-            # entries land in ONE partitioned write job (side=ledger /
-            # side=index) — same rows as the old pair of appends, one
-            # action fewer per trigger; the ledger side writes from the
-            # checkpointed blocks, so the probe join still runs once
-            report.withColumn("side", F.lit("ledger")).unionByName(
-                novel.withColumn("side", F.lit("index")),
-                allowMissingColumns=True,
-            ).write.mode("append").partitionBy("side").parquet(store_dir)
-            # partition dir exists iff index rows ever landed — an empty
-            # or all-dropped batch must not flip the flag
-            state["has_index"] = os.path.isdir(idx_dir)
-            bdf.unpersist()
-
-        run_foreach_batch(bands, probe_and_keep, output_mode="append")
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_index_hits", (F.col("n_index_hits") == 0).alias("kept")
-        )
-        if keep_ledger_dir is not None:
-            return out
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
 
 
 @query(
@@ -1681,7 +1558,7 @@ def _text_keeper_stream(
 def stream_text_minhash_keeper_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _text_keeper_stream(spark, sf_dir, roundrobin=True)
+    return _minhash_keeper_stream(spark, sf_dir, roundrobin=True)
 
 
 
@@ -2004,26 +1881,7 @@ def _ingest_pipeline_stream(
                 "doc_id", "is_contaminated"
             )
             # stage 3: near-dup against the cross-batch table index
-            bands = (
-                bdf.withColumn(
-                    "sig",
-                    minhash_signature_struct(
-                        shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                    ),
-                )
-                .select(
-                    "doc_id",
-                    F.explode(
-                        minhash_band_structs_from_sig(F.col("sig"))
-                    ).alias("bk"),
-                )
-                .select(
-                    "doc_id",
-                    F.col("bk.band").alias("band"),
-                    F.col("bk.band_key").alias("band_key"),
-                )
-                .persist()
-            )
+            bands = minhash_band_rows(bdf).persist()
             owners_here = bands.groupBy("band", "band_key").agg(
                 F.min("doc_id").alias("new_ref")
             )

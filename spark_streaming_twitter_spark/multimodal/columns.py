@@ -755,11 +755,10 @@ def encode_wav(n_samples: int, samples, rate: int = WAV_RATE) -> bytes:
     import numpy as np
 
     arr = np.asarray(samples, dtype=np.int64)
-    # loud failure on out-of-range input (ADVICE r15): the vectorized
-    # astype would silently WRAP where struct.pack('<h') raised
-    assert arr.size == 0 or (arr.min() >= -32768 and arr.max() <= 32767), (
-        "encode_wav: sample out of int16 range"
-    )
+    # loud failure on out-of-range input, even under python -O: the
+    # vectorized astype would silently WRAP where struct.pack('<h') raised
+    if arr.size and (arr.min() < -32768 or arr.max() > 32767):
+        raise ValueError("encode_wav: sample out of int16 range")
     pcm = arr.astype("<i2").tobytes()
     assert len(pcm) == n_samples * 2
     fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)

@@ -46,6 +46,11 @@ from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
 from spark_streaming_twitter_spark.registry import query
+from spark_streaming_twitter_spark.streaming.keeper import (
+    chunk_key_frame,
+    keeper_stream,
+    make_keeper_prober,
+)
 
 PHASH_GRID = 8  # sample grid side: 8x8 cells
 DHASH_BITS = 56  # 8 rows x 7 horizontal comparisons
@@ -1528,359 +1533,66 @@ def _phash_keeper_oracle(batch_label: str | None = None) -> str:
     )
 
 
-def keeper_store_dirs(store_dir: str) -> "tuple[str, str]":
-    """(ledger subdir, index subdir) of a keeper's partitioned store.
-
-    r16 layout (VERDICT r15 next #1): each keeper owns ONE parquet store
-    partitioned by ``side`` — ``side=ledger`` holds the per-item decision
-    rows, ``side=index`` the kept entries — so every trigger lands both
-    in a SINGLE write job instead of two."""
-    import os
-
-    return (
-        os.path.join(store_dir, "side=ledger"),
-        os.path.join(store_dir, "side=index"),
-    )
-
-
-def keeper_ledger_frame(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The keeper store's decision-ledger relation (media_id,
-    n_index_hits), total: an all-empty stream (no ledger rows ever
-    written) yields an empty typed frame instead of a schema-inference
-    error."""
-    import glob
-    import os
-
-    ledger_dir, _ = keeper_store_dirs(store_dir)
-    if not glob.glob(os.path.join(ledger_dir, "*.parquet")):
-        return spark.createDataFrame(
-            [], "media_id long, n_index_hits long"
-        )
-    return spark.read.parquet(ledger_dir).select("media_id", "n_index_hits")
-
-
 def make_chunk_keeper_prober(spark: SparkSession, store_dir: str, radius: int):
-    """ONE trigger's worth of the chunk-LSH keeper protocol, as a
-    reusable closure over a keeper STORE (see keeper_store_dirs): probe
-    the batch's distinct (media_id, sig, c, chunk_val) keys against the
-    kept index (broadcast join + full-signature Hamming verify <=
-    radius + per-item verified-hit count), then land the per-item
-    decision rows (side=ledger) and ONLY kept items' chunk entries
-    (side=index) in ONE partitioned write. Returns the batch's PINNED
-    (localCheckpointed) decision report (media_id, n_index_hits) for
-    caption propagation / drop collection by the caller. (r16 measured
-    NEGATIVE: skipping the checkpoint and folding the report subtree
-    into the single write job re-evaluates the probe DAG per branch and
-    grows the AQE stage count — jobs/run 54->69, video slower — so the
-    pin stays even for callers that never read the report.) Shared by
-    the standalone keeper streams and the fused single-stream flagship
-    — one protocol, two trigger topologies."""
-    import os
-
-    ledger_dir, idx_dir = keeper_store_dirs(store_dir)
-    state = {"has_index": False}
-    hamming = F.bit_count(F.col("sig").bitwiseXOR(F.col("ref_sig")))
-
-    def probe_and_keep(keys: DataFrame) -> DataFrame:
-        # r15 optimization (guide §2.4/§5): pin the per-batch report once
-        # and derive everything downstream from the pinned rows. The old
-        # body re-read the whole ledger dir and re-joined it against the
-        # batch to recover this batch's kept set — but every media_id
-        # arrives in exactly one spool batch, so that read-back is
-        # bitwise `report.where(n_index_hits = 0)`. localCheckpoint (not
-        # persist) is load-bearing: the index append below triggers
-        # recacheByPath on every cached plan reading the store, which
-        # would silently REBUILD a merely-persisted report against the
-        # post-append file listing (self-matches); the checkpoint
-        # truncates lineage so the report can never be recomputed. The
-        # kept-index relation is likewise read once per trigger (probe +
-        # anti-join share it), not twice.
-        # r16: the batch's media set is the c=0 slice — every item
-        # carries exactly one row per chunk index (explode of a per-item
-        # 0..n_chunks-1 sequence over unique batch ids), so the filter
-        # is row-for-row what the old distinct() computed, without the
-        # distinct's exchange + agg inside every trigger (guide §2.4)
-        media = keys.where(F.col("c") == 0).select("media_id")
-        idx = None
-        if not state["has_index"]:
-            report = media.select(
-                "media_id", F.lit(0).cast("bigint").alias("n_index_hits")
-            )
-        else:
-            idx = spark.read.parquet(idx_dir).select(
-                "c", "chunk_val", "ref_sig"
-            )
-            nhits = (
-                keys.join(F.broadcast(idx), ["c", "chunk_val"])
-                .where(hamming <= radius)
-                .groupBy("media_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            report = media.join(nhits, "media_id", "left").select(
-                "media_id",
-                F.coalesce("n", F.lit(0).cast("bigint")).alias(
-                    "n_index_hits"
-                ),
-            )
-        report = report.localCheckpoint()
-        kept = report.where(F.col("n_index_hits") == 0).select("media_id")
-        novel = (
-            keys.join(F.broadcast(kept), "media_id")
-            .select("c", "chunk_val", F.col("sig").alias("ref_sig"))
-            .distinct()
-        )
-        if state["has_index"]:
-            novel = novel.join(
-                idx,
-                ["c", "chunk_val", "ref_sig"],
-                "left_anti",
-            )
-        # r16 (VERDICT r15 next #1, guide §2.4): ledger rows + novel
-        # index entries land in ONE partitioned write job — the ledger
-        # side comes straight from the checkpointed blocks, so the probe
-        # join still runs exactly once per trigger. The rows are bitwise
-        # the two frames the old pair of writes appended; only the
-        # action count per trigger changes (3 -> 2).
-        report.withColumn("side", F.lit("ledger")).unionByName(
-            novel.withColumn("side", F.lit("index")),
-            allowMissingColumns=True,
-        ).write.mode("append").partitionBy("side").parquet(store_dir)
-        # the partition dir exists iff index rows have ever landed — an
-        # empty micro-batch (or an all-dropped one) must not flip the
-        # flag onto an unreadable empty dir
-        state["has_index"] = os.path.isdir(idx_dir)
-        # contract: the PINNED (localCheckpointed) per-batch decision
-        # report — callers filter it (drops/captions) without re-reading
-        # the ledger; lineage-free, so safe after the index append
-        return report
-
-    return probe_and_keep
+    """The chunk-LSH keeper prober (image dHash, audio fingerprint): a
+    chunk-bucket match is a hit only when the full signatures are within
+    ``radius`` Hamming; the c=0 slice holds one row per item."""
+    return make_keeper_prober(
+        spark, store_dir, "media_id", ["c", "chunk_val"],
+        entry=("sig", "ref_sig"),
+        verify=F.bit_count(F.col("sig").bitwiseXOR(F.col("ref_sig"))) <= radius,
+        item_slice=F.col("c") == 0,
+    )
 
 
 def make_video_keeper_prober(spark: SparkSession, store_dir: str):
-    """The video instance of the keeper protocol (frame-signature
-    containment: a clip drops when it shares >= VIDEO_MIN_SHARED
-    distinct frames with ANY kept clip), same probe/store contract as
-    make_chunk_keeper_prober over distinct (media_id, frame_sig) rows."""
-    import os
-
-    ledger_dir, idx_dir = keeper_store_dirs(store_dir)
-    state = {"has_index": False}
-
-    def probe_and_keep(dsig: DataFrame) -> DataFrame:
-        media = dsig.select("media_id").distinct()
-        if not state["has_index"]:
-            report = media.select(
-                "media_id", F.lit(0).cast("bigint").alias("n_index_hits")
-            )
-        else:
-            idx = spark.read.parquet(idx_dir).select("frame_sig", "kept_id")
-            nhits = (
-                dsig.join(F.broadcast(idx), "frame_sig")
-                .groupBy("media_id", "kept_id")
-                .agg(F.count_distinct("frame_sig").alias("nsh"))
-                .where(F.col("nsh") >= VIDEO_MIN_SHARED)
-                .groupBy("media_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            )
-            report = media.join(nhits, "media_id", "left").select(
-                "media_id",
-                F.coalesce("n", F.lit(0).cast("bigint")).alias(
-                    "n_index_hits"
-                ),
-            )
-        # r15 optimization: pin the per-batch report (localCheckpoint —
-        # see make_chunk_keeper_prober for why persist() is unsafe here:
-        # the index append recaches every plan reading the store) and
-        # derive the kept set from it directly — each media_id arrives in
-        # exactly one spool batch, so the old ledger read-back +
-        # broadcast join was bitwise `report.where(n_index_hits = 0)`.
-        report = report.localCheckpoint()
-        novel = (
-            dsig.join(F.broadcast(
-                report.where(F.col("n_index_hits") == 0).select("media_id")
-            ), "media_id")
-            .select("frame_sig", F.col("media_id").alias("kept_id"))
-            .distinct()
-        )
-        # r16 (VERDICT r15 next #1): ledger + index in ONE write job —
-        # same rows as the old pair of appends, one action fewer
-        report.withColumn("side", F.lit("ledger")).unionByName(
-            novel.withColumn("side", F.lit("index")),
-            allowMissingColumns=True,
-        ).write.mode("append").partitionBy("side").parquet(store_dir)
-        state["has_index"] = os.path.isdir(idx_dir)
-        return report
-
-    return probe_and_keep
-
-
-def _chunk_keeper_stream(
-    spark: SparkSession,
-    src_ids: DataFrame,
-    src_builder,
-    sig_stream,
-    sig_col: str,
-    n_chunks: int,
-    chunk_bits: int,
-    radius: int,
-    caption_docs: "DataFrame | None" = None,
-    caption_dir: "str | None" = None,
-    roundrobin: bool = False,
-    keep_ledger_dir: "str | None" = None,
-    id_bounds: "tuple[int, int] | None" = None,
-) -> DataFrame:
-    """Keeper-aware online chunk-LSH dedup stream, generic over the
-    signature family (image dHash, audio fingerprint): probe every
-    item's chunk buckets against the KEPT index (broadcast join +
-    full-signature Hamming verify + per-item verified-hit count), keep
-    = zero hits, append ONLY kept items' (c, chunk_val, sig) entries.
-    Returns the per-item decision ledger (media_id, n_index_hits,
-    kept). When ``caption_dir``/``caption_docs`` are given, each
-    micro-batch ALSO joins its dropped items against the caption
-    documents (identity linkage: media_id IS the caption doc_id) and
-    appends the propagated flags there — cross-modality propagation in
-    the SAME ingest pass.
-
-    Per-batch reports land in a tempdir parquet LEDGER (not a
-    driver-side list — the executors write, the driver only
-    coordinates; at 100 TB the ledger is the run's Delta audit table),
-    read back once after the stream drains."""
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
+    """The video keeper prober (frame-signature containment): a clip drops
+    when it shares >= VIDEO_MIN_SHARED distinct frames with ANY kept
+    clip; n_index_hits counts such clips."""
+    return make_keeper_prober(
+        spark, store_dir, "media_id", ["frame_sig"],
+        entry=("media_id", "kept_id"), min_shared=VIDEO_MIN_SHARED,
     )
 
-    mask = (1 << chunk_bits) - 1
-    tmp = tempfile.mkdtemp(prefix="chunk_keeper_stream_")
-    # the spool lives in its own subdir: the partitioned keeper store
-    # (side=...) must not share a root with the FileStreamSource's scan,
-    # or its partition inference sees conflicting directory structures
-    spool_dir = os.path.join(tmp, "spool")
-    if keep_ledger_dir is not None:
-        # production read-back shape (VERDICT r14 #4): the keeper STORE
-        # (side=ledger decisions + side=index kept entries — r16 fused
-        # single-write layout) outlives the query; overwrite-at-start
-        # with the pre-rmtree ownership recheck, returned frame is the
-        # parquet-backed ledger side itself
-        from spark_streaming_twitter_spark.text.corpus import (
-            _reclaim_ledger_dir,
-        )
 
-        _reclaim_ledger_dir(keep_ledger_dir)
-        store_dir = keep_ledger_dir
-    else:
-        store_dir = os.path.join(tmp, "store")
-    try:
-        # r16 (guide §8): the spool shuffles IDS ONLY — the payload
-        # builder runs post-shuffle inside the bucketed write
-        # (spool synth=), so the synthesized bytes never cross an
-        # exchange and the builder runs exactly once per spool; bounds
-        # come from the id scan (media_id_bounds), not a payload pass
-        if roundrobin:
-            spool_roundrobin_batches(
-                src_ids, "doc_id", spool_dir,
-                synth=src_builder, synth_id_col="media_id",
-            )
-        else:
-            spool_ordered_batches(
-                src_ids, "doc_id", spool_dir, bounds=id_bounds,
-                synth=src_builder, synth_id_col="media_id",
-            )
-        par = spark.sparkContext.defaultParallelism
-        stream = (
+def _media_keeper_stream(
+    spark: SparkSession, sf_dir: str, mod3: int, **opts
+) -> DataFrame:
+    """The keeper stream over one media kind (``mod3``: 0 image, 1 audio,
+    2 video); ``opts`` pass through to keeper_stream. The spool shuffles
+    ids only and the payload is synthesized after the exchange, with the
+    ordered spool's bounds from the id scan, not a payload pass."""
+    par = spark.sparkContext.defaultParallelism
+
+    def key_stream(spool_dir: str) -> DataFrame:
+        media = (
             spark.readStream.schema("media_id long, payload binary")
             .option("maxFilesPerTrigger", 1)
             .option("latestFirst", "false")
             .option("pathGlobFilter", "batch_*.parquet")
             .parquet(spool_dir)
+            .repartition(par)
         )
-        chunks = (
-            sig_stream(stream.repartition(par))
-            .select(
-                "media_id",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
+        if mod3 == 0:
+            return chunk_key_frame(perceptual_hashes(media), "dhash", PHASH_CHUNKS, 14)
+        if mod3 == 1:
+            return chunk_key_frame(
+                audio_fingerprints(media), "fingerprint", AFP_CHUNKS, 12
             )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-        )
+        return video_frame_signatures(media).select("media_id", "frame_sig")
 
-        prober = make_chunk_keeper_prober(spark, store_dir, radius)
+    def make_prober(store_dir: str):
+        if mod3 == 2:
+            return make_video_keeper_prober(spark, store_dir)
+        radius = (PHASH_RADIUS, AFP_RADIUS)[mod3]
+        return make_chunk_keeper_prober(spark, store_dir, radius)
 
-        def probe_and_keep(bdf: DataFrame, _epoch_id: int) -> None:
-            bdf = bdf.persist()
-            # no .distinct() on the chunk keys: the projection is one row
-            # per (media_id, c) by construction (explode of a per-media
-            # 0..n_chunks-1 sequence over a spool where each media_id
-            # appears in exactly one batch), so the old distinct was a
-            # no-op exchange paid inside BOTH write actions per trigger
-            keys = bdf.select("media_id", "sig", "c", "chunk_val")
-            report = prober(keys)
-            if caption_dir is not None:
-                # this batch's drops, straight from the pinned report
-                # (bitwise what the old ledger read-back + batch join gave)
-                drops = report.where(F.col("n_index_hits") > 0)
-                caption_docs.join(
-                    F.broadcast(drops),
-                    F.col("doc_id") == F.col("media_id"),
-                ).select(
-                    "doc_id",
-                    "n_index_hits",
-                    F.length("text").cast("bigint").alias("caption_len"),
-                ).write.mode("append").parquet(caption_dir)
-            bdf.unpersist()
-
-        run_foreach_batch(chunks, probe_and_keep, output_mode="append")
-        ledger = keeper_ledger_frame(spark, store_dir).select(
-            "media_id",
-            "n_index_hits",
-            (F.col("n_index_hits") == 0).alias("kept"),
-        )
-        if keep_ledger_dir is not None:
-            return ledger
-        rows = ledger.collect()
-        out = spark.createDataFrame(rows, ledger.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _phash_keeper_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    caption_dir: "str | None" = None,
-    keep_ledger_dir: "str | None" = None,
-) -> DataFrame:
-    docs = (
-        table(spark, sf_dir, "documents").select("doc_id", "text")
-        if caption_dir is not None
-        else None
-    )
-    return _chunk_keeper_stream(
-        spark,
-        media_ids(spark, sf_dir, 0),
-        phash_media_from_ids,
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-        caption_docs=docs,
-        caption_dir=caption_dir,
-        keep_ledger_dir=keep_ledger_dir,
-        id_bounds=media_id_bounds(spark, sf_dir, 0),
+    if not opts.get("roundrobin"):
+        opts["bounds"] = media_id_bounds(spark, sf_dir, mod3)
+    synth = (phash_media_from_ids, fp_audio_from_ids, fp_video_from_ids)[mod3]
+    return keeper_stream(
+        spark, "media_id", media_ids(spark, sf_dir, mod3), key_stream,
+        make_prober, synth=synth, **opts,
     )
 
 
@@ -1905,7 +1617,7 @@ def _phash_keeper_stream(
 def stream_media_phash_keeper_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _phash_keeper_stream(spark, sf_dir)
+    return _media_keeper_stream(spark, sf_dir, 0)
 
 
 @query(
@@ -1927,8 +1639,8 @@ def stream_media_phash_keeper_dedup_persisted(
 ) -> DataFrame:
     from spark_streaming_twitter_spark.text.corpus import _kept_ledger_dir
 
-    return _phash_keeper_stream(
-        spark, sf_dir, keep_ledger_dir=_kept_ledger_dir("phash_keeper_ledger")
+    return _media_keeper_stream(
+        spark, sf_dir, 0, keep_ledger_dir=_kept_ledger_dir("phash_keeper_ledger")
     )
 
 
@@ -1970,9 +1682,22 @@ def stream_caption_drop_propagation(
     import shutil
     import tempfile
 
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     cap_dir = tempfile.mkdtemp(prefix="caption_flags_") + "/flags"
+
+    def flag_captions(report: DataFrame) -> None:
+        # this batch's drops, straight from the keeper's pinned report
+        drops = report.where(F.col("n_index_hits") > 0)
+        docs.join(
+            F.broadcast(drops), F.col("doc_id") == F.col("media_id")
+        ).select(
+            "doc_id",
+            "n_index_hits",
+            F.length("text").cast("bigint").alias("caption_len"),
+        ).write.mode("append").parquet(cap_dir)
+
     try:
-        _phash_keeper_stream(spark, sf_dir, caption_dir=cap_dir)
+        _media_keeper_stream(spark, sf_dir, 0, on_report=flag_captions)
         flags = spark.read.parquet(cap_dir).select(
             "doc_id", "n_index_hits", "caption_len"
         )
@@ -2513,7 +2238,7 @@ FROM (SELECT * FROM h0 UNION ALL SELECT * FROM h1
 def stream_media_video_keeper_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _video_keeper_stream(spark, sf_dir, roundrobin=False)
+    return _media_keeper_stream(spark, sf_dir, 2)
 
 
 @query(
@@ -2535,92 +2260,9 @@ def stream_media_video_keeper_dedup_persisted(
 ) -> DataFrame:
     from spark_streaming_twitter_spark.text.corpus import _kept_ledger_dir
 
-    return _video_keeper_stream(
-        spark,
-        sf_dir,
-        roundrobin=False,
-        keep_ledger_dir=_kept_ledger_dir("video_keeper_ledger"),
+    return _media_keeper_stream(
+        spark, sf_dir, 2, keep_ledger_dir=_kept_ledger_dir("video_keeper_ledger")
     )
-
-
-def _video_keeper_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    roundrobin: bool,
-    keep_ledger_dir: "str | None" = None,
-) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="vfp_keeper_stream_")
-    # spool in its own subdir — see _chunk_keeper_stream (the partitioned
-    # store must not share a root with the stream source's scan)
-    spool_dir = os.path.join(tmp, "spool")
-    if keep_ledger_dir is not None:
-        from spark_streaming_twitter_spark.text.corpus import (
-            _reclaim_ledger_dir,
-        )
-
-        _reclaim_ledger_dir(keep_ledger_dir)
-        store_dir = keep_ledger_dir
-    else:
-        store_dir = os.path.join(tmp, "store")
-    try:
-        # r16 (guide §8): ids-only spool shuffle, MP4 synthesis runs
-        # post-shuffle inside the bucketed write (see _chunk_keeper_stream)
-        ids = media_ids(spark, sf_dir, 2)
-        if roundrobin:
-            spool_roundrobin_batches(
-                ids, "doc_id", spool_dir,
-                synth=fp_video_from_ids, synth_id_col="media_id",
-            )
-        else:
-            spool_ordered_batches(
-                ids, "doc_id", spool_dir,
-                bounds=media_id_bounds(spark, sf_dir, 2),
-                synth=fp_video_from_ids, synth_id_col="media_id",
-            )
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(spool_dir)
-        )
-        sigs = video_frame_signatures(stream.repartition(par)).select(
-            "media_id", "frame_sig"
-        )
-
-        prober = make_video_keeper_prober(spark, store_dir)
-
-        def probe_and_keep(bdf: DataFrame, _epoch_id: int) -> None:
-            bdf = bdf.persist()
-            # frame_sig CAN repeat within a clip, so the distinct here is
-            # load-bearing (the prober contract is distinct rows) — kept
-            prober(bdf.select("media_id", "frame_sig").distinct())
-            bdf.unpersist()
-
-        run_foreach_batch(sigs, probe_and_keep, output_mode="append")
-        ledger = keeper_ledger_frame(spark, store_dir).select(
-            "media_id",
-            "n_index_hits",
-            (F.col("n_index_hits") == 0).alias("kept"),
-        )
-        if keep_ledger_dir is not None:
-            return ledger
-        rows = ledger.collect()
-        out = spark.createDataFrame(rows, ledger.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def stream_media_audio_ttl_dedup(
@@ -2668,17 +2310,7 @@ def stream_media_audio_ttl_dedup(
 def stream_media_audio_keeper_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _chunk_keeper_stream(
-        spark,
-        media_ids(spark, sf_dir, 1),
-        fp_audio_from_ids,
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-        id_bounds=media_id_bounds(spark, sf_dir, 1),
-    )
+    return _media_keeper_stream(spark, sf_dir, 1)
 
 
 @query(
@@ -2701,17 +2333,8 @@ def stream_media_audio_keeper_dedup_persisted(
 ) -> DataFrame:
     from spark_streaming_twitter_spark.text.corpus import _kept_ledger_dir
 
-    return _chunk_keeper_stream(
-        spark,
-        media_ids(spark, sf_dir, 1),
-        fp_audio_from_ids,
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-        keep_ledger_dir=_kept_ledger_dir("audio_keeper_ledger"),
-        id_bounds=media_id_bounds(spark, sf_dir, 1),
+    return _media_keeper_stream(
+        spark, sf_dir, 1, keep_ledger_dir=_kept_ledger_dir("audio_keeper_ledger")
     )
 
 
@@ -4149,17 +3772,7 @@ def stream_media_video_ttl_dedup_bounded_disorder(
 def stream_media_phash_keeper_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _chunk_keeper_stream(
-        spark,
-        media_ids(spark, sf_dir, 0),
-        phash_media_from_ids,
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-        roundrobin=True,
-    )
+    return _media_keeper_stream(spark, sf_dir, 0, roundrobin=True)
 
 
 @query(
@@ -4177,17 +3790,7 @@ def stream_media_phash_keeper_dedup_unordered(
 def stream_media_audio_keeper_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _chunk_keeper_stream(
-        spark,
-        media_ids(spark, sf_dir, 1),
-        fp_audio_from_ids,
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-        roundrobin=True,
-    )
+    return _media_keeper_stream(spark, sf_dir, 1, roundrobin=True)
 
 
 @query(
@@ -4205,7 +3808,7 @@ def stream_media_audio_keeper_dedup_unordered(
 def stream_media_video_keeper_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _video_keeper_stream(spark, sf_dir, roundrobin=True)
+    return _media_keeper_stream(spark, sf_dir, 2, roundrobin=True)
 
 
 def _stream_media_curation_oracle(suffix: str = "") -> str:

@@ -175,6 +175,8 @@ def spool_ordered_batches(
     frame is too cheap to be worth a dedicated persist) and an
     identity-mapped builder (out id == in id), which every media payload
     builder is."""
+    if synth is not None and bounds is None:
+        raise ValueError("spool_ordered_batches: synth requires bounds")
     if bounds is None:
         # r15 (guide §5): the bounds agg and the bucketed write are two
         # full evaluations of df's plan — cache it across the two passes

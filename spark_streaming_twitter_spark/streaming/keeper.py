@@ -1,0 +1,234 @@
+"""The keeper protocol: online dedup where the first arrival is kept.
+
+Per micro-batch every item probes the index of items kept by earlier
+triggers. An item with no hit is kept and its entries join the index; an
+item with a hit is dropped and QUARANTINED — its entries never join — so
+a chain A~B~C where B matches A cannot suppress C through the dropped B.
+Decision granularity is the micro-batch: items in one trigger probe the
+same index snapshot.
+
+One protocol serves every modality. Text MinHash bands, image/audio
+chunk-LSH buckets and video frame signatures differ only in the
+parameters of ``make_keeper_prober``; ``keeper_stream`` is the one
+streaming shell around it, and the fused multimodal flagship drives the
+same probers from its own trigger.
+"""
+
+from __future__ import annotations
+
+import os
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def keeper_store_dirs(store_dir: str) -> "tuple[str, str]":
+    """(ledger subdir, index subdir) of a keeper's partitioned store.
+
+    Each keeper owns ONE parquet store partitioned by ``side``:
+    ``side=ledger`` holds the per-item decision rows, ``side=index`` the
+    kept entries, so every trigger lands both in a single write job."""
+    return (
+        os.path.join(store_dir, "side=ledger"),
+        os.path.join(store_dir, "side=index"),
+    )
+
+
+def keeper_ledger_frame(
+    spark: SparkSession, store_dir: str, id_col: str
+) -> DataFrame:
+    """The store's decision ledger (id_col, n_index_hits), total: a stream
+    that never wrote a ledger row yields an empty typed frame instead of a
+    schema-inference error."""
+    import glob
+
+    ledger_dir, _ = keeper_store_dirs(store_dir)
+    if not glob.glob(os.path.join(ledger_dir, "*.parquet")):
+        return spark.createDataFrame([], f"{id_col} long, n_index_hits long")
+    return spark.read.parquet(ledger_dir).select(id_col, "n_index_hits")
+
+
+def chunk_key_frame(
+    sig_df: DataFrame, sig_col: str, n_chunks: int, chunk_bits: int
+) -> DataFrame:
+    """Chunk-LSH probe keys (media_id, sig, c, chunk_val): one row per
+    (item, chunk index), ``chunk_val`` the signature's c-th
+    ``chunk_bits``-wide slice. No distinct is needed: the explode of a
+    per-item 0..n_chunks-1 sequence over unique ids is one row per key
+    by construction."""
+    mask = (1 << chunk_bits) - 1
+    return sig_df.select(
+        "media_id",
+        F.col(sig_col).alias("sig"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
+    ).withColumn(
+        "chunk_val", F.expr(f"shiftright(sig, c * {chunk_bits}) & {mask}")
+    )
+
+
+def make_keeper_prober(
+    spark: SparkSession,
+    store_dir: str,
+    id_col: str,
+    key_cols: "list[str]",
+    entry: "tuple[str, str] | None" = None,
+    verify: "F.Column | None" = None,
+    min_shared: "int | None" = None,
+    item_slice: "F.Column | None" = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """One trigger's worth of the keeper protocol, as a closure over a
+    keeper store (see keeper_store_dirs).
+
+    The returned ``probe_and_keep(keys)`` takes the batch's probe keys
+    (``id_col`` plus ``key_cols``, and the ``entry`` source column),
+    counts each item's hits against the kept index, and lands the
+    per-item decision rows (side=ledger) and ONLY kept items' entries
+    (side=index) in one partitioned write. It returns the batch's PINNED
+    decision report (id_col, n_index_hits).
+
+    - ``entry``: (source column, index column) stored beside the keys in
+      each index entry, e.g. the full signature a chunk hit is verified
+      against, or the kept clip a frame belongs to.
+    - ``verify``: predicate over a probe-key/index-entry pair; a key
+      match counts as a hit only where it holds.
+    - ``min_shared``: count one hit per kept entry owner sharing at
+      least this many distinct keys with the item, instead of one per
+      matching key.
+    - ``item_slice``: a predicate selecting exactly one key row per item,
+      which finds the batch's items without the exchange and aggregate
+      of a distinct inside every trigger. Leave it None where keys can
+      repeat within an item (video frame signatures); the items are then
+      the distinct ids.
+
+    Every index entry is written once: an entry already in the index
+    would have matched its own item, so that item is not kept.
+    """
+    _, idx_dir = keeper_store_dirs(store_dir)
+    idx_cols = [*key_cols, entry[1]] if entry else key_cols
+    entry_cols = [F.col(entry[0]).alias(entry[1])] if entry else []
+    zero = F.lit(0).cast("bigint")
+    state = {"has_index": False}
+
+    def probe_and_keep(keys: DataFrame) -> DataFrame:
+        if item_slice is not None:
+            items = keys.where(item_slice).select(id_col)
+        else:
+            items = keys.select(id_col).distinct()
+        if not state["has_index"]:
+            report = items.select(id_col, zero.alias("n_index_hits"))
+        else:
+            idx = spark.read.parquet(idx_dir).select(*idx_cols)
+            hits = keys.join(F.broadcast(idx), key_cols)
+            if verify is not None:
+                hits = hits.where(verify)
+            if min_shared is not None:
+                hits = (
+                    hits.groupBy(id_col, entry[1])
+                    .agg(F.count_distinct(*key_cols).alias("n_shared"))
+                    .where(F.col("n_shared") >= min_shared)
+                )
+            nhits = hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+            report = items.join(nhits, id_col, "left").select(
+                id_col, F.coalesce("n", zero).alias("n_index_hits")
+            )
+        # localCheckpoint, not persist: the store append below fires
+        # recacheByPath on every cached plan reading the store, which would
+        # rebuild a merely-persisted report against the post-append index
+        # (every kept item self-matching); the checkpoint cuts the lineage.
+        # Dropping the pin altogether re-evaluates the probe for each
+        # branch of the write (measured: more jobs per run, video slower).
+        report = report.localCheckpoint()
+        # each id arrives in exactly one batch, so this batch's kept set
+        # is the report's zero-hit rows, with no ledger read-back
+        kept = report.where(F.col("n_index_hits") == 0).select(id_col)
+        novel = keys.join(F.broadcast(kept), id_col).select(*key_cols, *entry_cols)
+        report.withColumn("side", F.lit("ledger")).unionByName(
+            novel.distinct().withColumn("side", F.lit("index")),
+            allowMissingColumns=True,
+        ).write.mode("append").partitionBy("side").parquet(store_dir)
+        # the partition dir exists iff index rows have ever landed: an
+        # empty or all-dropped batch must not flip the flag onto an
+        # unreadable empty dir
+        state["has_index"] = os.path.isdir(idx_dir)
+        return report
+
+    return probe_and_keep
+
+
+def keeper_stream(
+    spark: SparkSession,
+    id_col: str,
+    src: DataFrame,
+    key_stream: Callable[[str], DataFrame],
+    make_prober: Callable[[str], Callable[[DataFrame], DataFrame]],
+    roundrobin: bool = False,
+    bounds: "tuple[int, int] | None" = None,
+    synth=None,
+    keep_ledger_dir: "str | None" = None,
+    on_report: "Callable[[DataFrame], None] | None" = None,
+) -> DataFrame:
+    """Run a keeper over ``src`` (keyed by ``doc_id``) replayed as four
+    micro-batches; return the decision ledger (id_col, n_index_hits,
+    kept).
+
+    - The spool is round-robin (``roundrobin``) or by id range, with
+      ``bounds`` the exact id (min, max) when known. ``synth`` builds
+      the payload after the spool's shuffle, so the exchange moves ids
+      only (see streaming.harness.spool_ordered_batches).
+    - ``key_stream(spool_dir)`` builds the streaming probe-key frame,
+      ``make_prober(store_dir)`` the per-trigger prober, and
+      ``on_report`` receives each trigger's pinned report.
+    - With ``keep_ledger_dir`` the store outlives the query (overwritten
+      at start, ownership re-checked) and the returned frame is its
+      parquet-backed ledger side; otherwise the ledger is collected and
+      the store removed with the temp dir.
+    """
+    import shutil
+    import tempfile
+
+    from spark_streaming_twitter_spark.streaming.harness import (
+        run_foreach_batch,
+        spool_ordered_batches,
+        spool_roundrobin_batches,
+    )
+    from spark_streaming_twitter_spark.text.corpus import _reclaim_ledger_dir
+
+    tmp = tempfile.mkdtemp(prefix="keeper_stream_")
+    # the spool lives in its own subdir: the partitioned store (side=...)
+    # must not share a root with the FileStreamSource's scan, or its
+    # partition inference sees conflicting directory structures
+    spool_dir = os.path.join(tmp, "spool")
+    if keep_ledger_dir is not None:
+        _reclaim_ledger_dir(keep_ledger_dir)
+        store_dir = keep_ledger_dir
+    else:
+        store_dir = os.path.join(tmp, "store")
+    try:
+        synth_opts = {"synth": synth, "synth_id_col": synth and id_col}
+        if roundrobin:
+            spool_roundrobin_batches(src, "doc_id", spool_dir, **synth_opts)
+        else:
+            spool_ordered_batches(
+                src, "doc_id", spool_dir, bounds=bounds, **synth_opts
+            )
+        prober = make_prober(store_dir)
+
+        def trigger(bdf: DataFrame, _epoch_id: int) -> None:
+            bdf = bdf.persist()
+            report = prober(bdf)
+            if on_report is not None:
+                on_report(report)
+            bdf.unpersist()
+
+        run_foreach_batch(key_stream(spool_dir), trigger, output_mode="append")
+        kept = (F.col("n_index_hits") == 0).alias("kept")
+        ledger = keeper_ledger_frame(spark, store_dir, id_col).select(
+            id_col, "n_index_hits", kept
+        )
+        if keep_ledger_dir is not None:
+            return ledger
+        out = spark.createDataFrame(ledger.collect(), ledger.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out

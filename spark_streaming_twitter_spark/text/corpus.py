@@ -3646,9 +3646,9 @@ FROM c
     "trigger grid): per micro-batch the SAME foreachBatch pass builds "
     "each modality's payloads for its slice of the batch (doc_id % 3 "
     "routes image/audio/video), probes/updates the three kept-indices "
-    "via the shared keeper protocol (make_chunk_keeper_prober / "
-    "make_video_keeper_prober — the standalone streams' bodies, "
-    "reused verbatim), and packs the batch's survivors, so curation "
+    "through the one keeper protocol (streaming/keeper.py — the same "
+    "probers the standalone keeper streams run), and packs the batch's "
+    "survivors, so curation "
     "and training-example construction happen in ONE pass over the "
     "wire instead of four streams (3 keeper spools + a packer spool) "
     "over the same bytes. Keeper semantics are IDENTICAL per trigger; "
@@ -3748,6 +3748,7 @@ def _mm_fused_impl(
         spool_ordered_batches,
         spool_roundrobin_batches,
     )
+    from spark_streaming_twitter_spark.streaming.keeper import chunk_key_frame
 
     tmp = tempfile.mkdtemp(prefix="stream_mm_fused_")
     if keep_ledger_dir is not None:
@@ -3757,9 +3758,9 @@ def _mm_fused_impl(
         ledger_dir = keep_ledger_dir
     else:
         ledger_dir = os.path.join(tmp, "ledger")
-    # r16: each modality owns one partitioned keeper STORE (side=ledger +
+    # each modality owns one partitioned keeper store (side=ledger +
     # side=index), so every trigger's decisions + index entries land in a
-    # single write job per modality (see make_chunk_keeper_prober)
+    # single write job per modality (see streaming/keeper.py)
     probers = {
         "image": ph.make_chunk_keeper_prober(
             spark, os.path.join(tmp, "image_store"), ph.PHASH_RADIUS
@@ -3771,30 +3772,6 @@ def _mm_fused_impl(
             spark, os.path.join(tmp, "video_store")
         ),
     }
-
-    def chunk_keys(sig_df, sig_col, n_chunks, chunk_bits):
-        mask = (1 << chunk_bits) - 1
-        return (
-            sig_df.select(
-                "media_id",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-            # no .distinct(): one row per (media_id, c) by construction
-            # (explode of a per-media 0..n_chunks-1 sequence over unique
-            # batch ids) — the old distinct was a no-op exchange paid in
-            # both prober write actions (r15; video keeps its distinct,
-            # frame_sigs genuinely repeat within a clip)
-            .select("media_id", "sig", "c", "chunk_val")
-        )
 
     carry = {"offset": 0}
     media_cost = F.element_at(
@@ -3819,15 +3796,12 @@ def _mm_fused_impl(
 
         def probe(kind: str, frame: DataFrame) -> DataFrame:
             # persist the synthesized keys/signatures before the prober:
-            # each prober runs >=2 actions (ledger append + index update)
-            # over this frame, and without the cache the mapInPandas
-            # payload synthesis + hashing recomputes per action — exactly
-            # the per-trigger cost the fused topology exists to price
-            # (ADVICE r13; the standalone streams persist their
-            # micro-batch the same way). Returns the prober's PINNED
-            # (localCheckpointed) per-batch decision report (r15) —
-            # lineage-free, so unpersisting the input frame here cannot
-            # force a payload re-synthesis.
+            # each prober runs 2 actions (report pin + store write) over
+            # this frame, and without the cache the mapInPandas payload
+            # synthesis + hashing recomputes per action (the keeper
+            # stream shell persists its micro-batch the same way). The
+            # prober's report is localCheckpointed, so unpersisting the
+            # input frame here cannot force a payload re-synthesis.
             frame = frame.persist()
             try:
                 return probers[kind](frame)
@@ -3841,7 +3815,7 @@ def _mm_fused_impl(
             fi = pool.submit(
                 probe,
                 "image",
-                chunk_keys(
+                chunk_key_frame(
                     ph.perceptual_hashes(ph.phash_media_from_ids(ids(0))),
                     "dhash", ph.PHASH_CHUNKS, 14,
                 ),
@@ -3849,7 +3823,7 @@ def _mm_fused_impl(
             fa = pool.submit(
                 probe,
                 "audio",
-                chunk_keys(
+                chunk_key_frame(
                     ph.audio_fingerprints(ph.fp_audio_from_ids(ids(1))),
                     "fingerprint", ph.AFP_CHUNKS, 12,
                 ),
@@ -3858,15 +3832,12 @@ def _mm_fused_impl(
                 probe,
                 "video",
                 ph.video_frame_signatures(ph.fp_video_from_ids(ids(2)))
-                .select("media_id", "frame_sig")
-                .distinct(),
+                .select("media_id", "frame_sig"),
             )
             reports = [fi.result(), fa.result(), fv.result()]
-        # this batch's drops, straight from the probers' PINNED
-        # per-batch reports (r15 — bitwise what the old per-modality
-        # ledger read-back + batch join produced: every doc is decided
-        # the trigger it arrives, so each ledger's rows for this batch's
-        # media ARE this trigger's report rows)
+        # this batch's drops, straight from the probers' pinned reports:
+        # every doc is decided the trigger it arrives, so each ledger's
+        # rows for this batch's media ARE this trigger's report rows
         drops = None
         for rep in reports:
             d = rep.where(F.col("n_index_hits") > 0).select(

@@ -51,6 +51,16 @@ def test_decode_header_parser_edge_cases():
     assert mm._parse_image_header(b"P6garbage") == ("ppm", None, None)
 
 
+def test_encode_wav_rejects_out_of_range_samples():
+    # a ValueError, not an assert: python -O must not let int16 wrap
+    import pytest
+
+    assert mm.decode_wav(mm.encode_wav(2, [-32768, 32767]))[2] == [-32768, 32767]
+    for bad in ([0, 32768], [-32769]):
+        with pytest.raises(ValueError, match="int16 range"):
+            mm.encode_wav(len(bad), bad)
+
+
 def test_byte_histogram_fracs_sum_to_one(spark):
     media = mm.media_table(spark, SF).limit(10)
     sums = (
@@ -364,7 +374,7 @@ def test_caption_drops_are_image_linked_and_never_the_keeper(spark):
 
 
 def test_keeper_prober_report_is_pinned_across_index_append(spark, tmp_path):
-    """r15 prober contract: probe_and_keep returns the batch's PINNED
+    """Prober contract: probe_and_keep returns the batch's PINNED
     decision report, and the pin must survive the index append. The
     append fires recacheByPath on every cached plan reading the index
     dir — a merely-persisted report would silently rebuild against the
@@ -378,37 +388,25 @@ def test_keeper_prober_report_is_pinned_across_index_append(spark, tmp_path):
 
     load_all()  # phash's oracles compose registry entries from dedup
     from spark_streaming_twitter_spark.multimodal import phash as ph
+    from spark_streaming_twitter_spark.streaming.keeper import (
+        chunk_key_frame,
+        keeper_ledger_frame,
+    )
 
     store_dir = str(tmp_path / "store")
     prober = ph.make_chunk_keeper_prober(spark, store_dir, ph.PHASH_RADIUS)
     media = ph.phash_media_table(spark, SF)
     sig = ph.perceptual_hashes(media)
-    mask = (1 << 14) - 1
-    chunks = (
-        sig.select(
-            "media_id",
-            F.col("dhash").alias("sig"),
-            F.explode(
-                F.sequence(F.lit(0), F.lit(ph.PHASH_CHUNKS - 1))
-            ).alias("c"),
-        )
-        .withColumn(
-            "chunk_val",
-            F.expr("shiftright(sig, c * 14)")
-            .bitwiseAND(F.lit(mask))
-            .cast("bigint"),
-        )
-        .select("media_id", "sig", "c", "chunk_val")
-    )
+    chunks = chunk_key_frame(sig, "dhash", ph.PHASH_CHUNKS, 14)
     lo, hi = media.agg(F.min("media_id"), F.max("media_id")).first()
     cut = lo + (hi - lo) // 2
     r1 = prober(chunks.where(F.col("media_id") <= cut))
     r2 = prober(chunks.where(F.col("media_id") > cut))
     # read AFTER both appends: the pinned reports must equal the ledger
-    # (side=ledger of the r16 fused store)
+    # (the store's side=ledger partition)
     ledger = {
         (r.media_id, r.n_index_hits)
-        for r in ph.keeper_ledger_frame(spark, store_dir).collect()
+        for r in keeper_ledger_frame(spark, store_dir, "media_id").collect()
     }
     got = {(r.media_id, r.n_index_hits) for r in r1.collect()} | {
         (r.media_id, r.n_index_hits) for r in r2.collect()
