@@ -39,12 +39,25 @@ Charikar simhash chunking).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
+from spark_streaming_twitter_spark.multimodal.kernels import (
+    AFP_FRAMES,
+    DHASH_BITS,
+    PHASH_GRID,
+    VIDEO_FRAME_BYTES,
+    VIDEO_FRAMES,
+    afp_batch,
+    encode_mp4_batch,
+    encode_ppm_batch,
+    encode_wav_batch,
+    media_keys_batch,
+    per_batch,
+    phash_batch,
+    video_sig_batch,
+)
 from spark_streaming_twitter_spark.registry import query
 from spark_streaming_twitter_spark.streaming.keeper import (
     chunk_key_frame,
@@ -52,8 +65,6 @@ from spark_streaming_twitter_spark.streaming.keeper import (
     make_keeper_prober,
 )
 
-PHASH_GRID = 8  # sample grid side: 8x8 cells
-DHASH_BITS = 56  # 8 rows x 7 horizontal comparisons
 PHASH_CHUNKS = 4  # 4 x 14-bit chunks -> guaranteed recall at radius 3
 PHASH_RADIUS = 8  # verify threshold on dHash Hamming distance
 
@@ -77,34 +88,11 @@ def phash_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def phash_media_from_ids(docs: DataFrame) -> DataFrame:
-    """The image payload builder over ANY doc_id frame — shared by the
-    fixture table and the fused single-stream flagship (which builds
-    payloads per micro-batch)."""
-
-    def encode(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 24, (did % 24) // 3
-                w, h = g % 16 + 8, g % 12 + 8
-                step, off = (2 * g + 71) % 256, g * 131 + v
-                # r15 (guide §4.2): vectorized pixel ramp — same exact
-                # integer arithmetic as the old per-byte Python loop
-                # (all terms non-negative, i*step < 2^63), same bytes
-                body = (
-                    (off + np.arange(w * h * 3, dtype=np.int64) * step)
-                    % 256
-                ).astype(np.uint8).tobytes()
-                payloads.append(f"P6\n{w} {h}\n255\n".encode("ascii") + body)
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(encode, "media_id long, payload binary")
+    """The image payload encoder over ANY doc_id frame: the fixture table
+    and the keeper streams' post-spool payload synthesis."""
+    return docs.mapInPandas(
+        per_batch(encode_ppm_batch), "media_id long, payload binary"
+    )
 
 
 def media_id_bounds(
@@ -151,51 +139,9 @@ def perceptual_hashes(df: DataFrame) -> DataFrame:
     Both stay under 2^56 so the BIGINT packing is sign-safe on both
     engines. Malformed payloads drop per-row (100 TB tolerance contract).
     """
-
-    def hashes(batches: Iterator) -> Iterator:
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        # Full P6 header through maxval: the match end IS the pixel-body
-        # offset (one whitespace after maxval per the PPM spec). A payload
-        # whose length is not header + w*h*3 is malformed and drops —
-        # hashing the LAST w*h*3 bytes of a junk-trailed payload would
-        # silently hash the wrong bytes.
-        hdr = re.compile(
-            rb"P6\s+(?:#[^\n]*\s+)*(\d+)\s+(?:#[^\n]*\s+)*(\d+)\s+"
-            rb"(?:#[^\n]*\s+)*\d+\s"
-        )
-        shifts = np.arange(DHASH_BITS, dtype=np.int64)
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "dhash": [], "ahash": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                m = hdr.match(payload)
-                if m is None:
-                    continue
-                w, h = int(m.group(1)), int(m.group(2))
-                if w <= 0 or h <= 0 or len(payload) != m.end() + w * h * 3:
-                    continue
-                px = np.frombuffer(
-                    payload, np.uint8, count=w * h * 3, offset=m.end()
-                )
-                gray = px.reshape(h, w, 3).astype(np.int64).sum(axis=2)
-                ys = (np.arange(PHASH_GRID) * h) // PHASH_GRID
-                xs = (np.arange(PHASH_GRID) * w) // PHASH_GRID
-                cells = gray[np.ix_(ys, xs)]
-                dbits = (cells[:, :-1] > cells[:, 1:]).reshape(-1)
-                dhash = int(np.sum(dbits.astype(np.int64) << shifts))
-                total = int(cells.sum())
-                abits = cells.reshape(-1)[:DHASH_BITS] * 64 > total
-                ahash = int(np.sum(abits.astype(np.int64) << shifts))
-                out["media_id"].append(mid)
-                out["dhash"].append(dhash)
-                out["ahash"].append(ahash)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(hashes, "media_id long, dhash long, ahash long")
+    return df.mapInPandas(
+        per_batch(phash_batch), "media_id long, dhash long, ahash long"
+    )
 
 
 # Generator-replay oracle: recompute every sampled cell from the pixel
@@ -347,7 +293,6 @@ def media_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consecutive frames" bits, reduced to its exact-integer core).
 # ---------------------------------------------------------------------------
 
-AFP_FRAMES = 49  # 49 frame energies -> 48 comparison bits
 AFP_CHUNKS = 4  # 4 x 12-bit chunks -> guaranteed recall at radius 3
 AFP_RADIUS = 6  # verify threshold on fingerprint Hamming distance
 
@@ -374,31 +319,9 @@ def fp_audio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fp_audio_from_ids(docs: DataFrame) -> DataFrame:
     """The audio payload builder over ANY doc_id frame (see
     phash_media_from_ids)."""
-    from spark_streaming_twitter_spark.multimodal.columns import encode_wav
-
-    def encode(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 24, (did % 24) // 3
-                n = g % 256 + 200
-                kg = ((g * 4093 + 31) % 65536) | 1
-                off = g * 37 + v * 16
-                # r15 (guide §4.2): vectorized waveform — same exact
-                # integer arithmetic as the old per-sample list comp
-                # (off + i*i*kg < 2^63 for every fixture i), same bytes
-                i = np.arange(n, dtype=np.int64)
-                samples = ((off + i * i * kg) % 65536) - 32768
-                payloads.append(encode_wav(n, samples))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(encode, "media_id long, payload binary")
+    return docs.mapInPandas(
+        per_batch(encode_wav_batch), "media_id long, payload binary"
+    )
 
 
 def audio_fingerprints(df: DataFrame) -> DataFrame:
@@ -407,35 +330,7 @@ def audio_fingerprints(df: DataFrame) -> DataFrame:
     sum(|sample|) — exact integers — and bit f says whether energy fell
     from frame f to f+1. 48 bits, sign-safe in BIGINT. Malformed
     payloads drop per-row."""
-    from spark_streaming_twitter_spark.multimodal.columns import decode_wav
-
-    def fps(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        shifts = np.arange(AFP_FRAMES - 1, dtype=np.int64)
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "fingerprint": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_wav(bytes(payload))
-                if decoded is None:
-                    continue
-                _rate, n, samples = decoded
-                flen = n // AFP_FRAMES
-                if flen == 0:
-                    continue
-                arr = np.abs(
-                    np.array(samples[: AFP_FRAMES * flen], dtype=np.int64)
-                ).reshape(AFP_FRAMES, flen)
-                energy = arr.sum(axis=1)
-                bits = energy[:-1] > energy[1:]
-                out["media_id"].append(mid)
-                out["fingerprint"].append(
-                    int(np.sum(bits.astype(np.int64) << shifts))
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(fps, "media_id long, fingerprint long")
+    return df.mapInPandas(per_batch(afp_batch), "media_id long, fingerprint long")
 
 
 _AFP_SIGS_SQL = """
@@ -666,8 +561,6 @@ def media_phash_group_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Video: frame-signature dedup — frames are the shingles of video.
 # ---------------------------------------------------------------------------
 
-VIDEO_FRAMES = 16  # frames per fixture clip
-VIDEO_FRAME_BYTES = 48  # bytes per frame payload
 VIDEO_MIN_SHARED = 8  # pair threshold: >= 8 of 16 frames identical
 VIDEO_SIG_MAX_OCC = 64  # df cap on frame signatures (rule-8 guard)
 
@@ -693,73 +586,9 @@ def fp_video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fp_video_from_ids(docs: DataFrame) -> DataFrame:
     """The video payload builder over ANY doc_id frame (see
     phash_media_from_ids)."""
-    import struct
-
-    from spark_streaming_twitter_spark.multimodal.columns import _mp4_box
-
-    def encode(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 24, (did % 24) // 3
-                kg = ((g * 4093 + 31) % 256) | 1
-                # r15 (guide §4.2): vectorized frame matrix — same exact
-                # integer arithmetic as the old per-byte double loop
-                # (every term non-negative and < 2^63), same bytes
-                f_col = np.arange(VIDEO_FRAMES, dtype=np.int64).reshape(
-                    -1, 1
-                )
-                j_row = np.arange(VIDEO_FRAME_BYTES, dtype=np.int64)
-                bump = np.where(f_col < v, 5 + v * 11, 0)
-                mat = (
-                    (g * 53 + f_col * 29 + j_row * kg + bump) % 256
-                ).astype(np.uint8)
-                frames = [mat[f].tobytes() for f in range(VIDEO_FRAMES)]
-                ftyp = _mp4_box(
-                    b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2"
-                )
-                stsz_body = (
-                    struct.pack(">I", 0)
-                    + struct.pack(">II", 0, VIDEO_FRAMES)
-                    + b"".join(
-                        struct.pack(">I", len(fr)) for fr in frames
-                    )
-                )
-                trak = _mp4_box(
-                    b"trak",
-                    _mp4_box(
-                        b"mdia",
-                        _mp4_box(
-                            b"minf",
-                            _mp4_box(b"stbl", _mp4_box(b"stsz", stsz_body)),
-                        ),
-                    ),
-                )
-                mvhd_body = (
-                    struct.pack(">I", 0)
-                    + struct.pack(">II", 0, 0)
-                    + struct.pack(">II", 600, VIDEO_FRAMES * 40)
-                    + struct.pack(">I", 0x00010000)
-                    + struct.pack(">HH", 0x0100, 0)
-                    + b"\x00" * 8
-                    + struct.pack(
-                        ">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-                    )
-                    + b"\x00" * 24
-                    + struct.pack(">I", 2)
-                )
-                moov = _mp4_box(b"moov", _mp4_box(b"mvhd", mvhd_body) + trak)
-                mdat = _mp4_box(b"mdat", b"".join(frames))
-                payloads.append(ftyp + moov + mdat)
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(encode, "media_id long, payload binary")
+    return docs.mapInPandas(
+        per_batch(encode_mp4_batch), "media_id long, payload binary"
+    )
 
 
 def video_frame_signatures(df: DataFrame) -> DataFrame:
@@ -768,61 +597,11 @@ def video_frame_signatures(df: DataFrame) -> DataFrame:
     frame's signature is the exact position-weighted checksum
     ``sum(byte * (j+1))`` — the stand-in for a per-frame perceptual hash
     that a SQL oracle can replay byte-for-byte (a real pipeline would
-    put media_phash_codes' dHash here; the Spark plumbing is identical)."""
-    import struct
-
-    from spark_streaming_twitter_spark.multimodal.columns import decode_mp4
-
-    def sigs(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "media_id": [],
-                "frame_idx": [],
-                "frame_sig": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                meta = decode_mp4(payload)
-                if meta is None or not meta.get("samples"):
-                    continue
-                # locate the mdat body with a top-level box walk
-                pos, mdat = 0, None
-                while pos + 8 <= len(payload):
-                    (size,) = struct.unpack_from(">I", payload, pos)
-                    if size < 8 or pos + size > len(payload):
-                        break
-                    if payload[pos + 4 : pos + 8] == b"mdat":
-                        mdat = payload[pos + 8 : pos + size]
-                        break
-                    pos += size
-                if mdat is None:
-                    continue
-                # r15 (guide §4.2): vectorized position-weighted checksum
-                # — np.dot over uint8→int64 is the exact integer sum the
-                # old per-byte loop computed; the cumulative-offset frame
-                # walk keeps the stop-at-first-short-frame semantics
-                # (offsets are monotone, so "first short frame" == "first
-                # frame whose end exceeds len(mdat)")
-                off = 0
-                for f, sz in enumerate(meta["samples"]):
-                    if off + sz > len(mdat):
-                        break
-                    frame = np.frombuffer(
-                        mdat, np.uint8, count=sz, offset=off
-                    ).astype(np.int64)
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(f)
-                    out["frame_sig"].append(
-                        int(frame @ np.arange(1, sz + 1, dtype=np.int64))
-                    )
-                    off += sz
-            yield pd.DataFrame(out)
-
+    put media_phash_codes' dHash here; the Spark plumbing is identical).
+    A clip's frames stop at its first short frame; a malformed clip
+    drops."""
     return df.mapInPandas(
-        sigs, "media_id long, frame_idx int, frame_sig long"
+        per_batch(video_sig_batch), "media_id long, frame_idx int, frame_sig long"
     )
 
 
@@ -1551,7 +1330,64 @@ def make_video_keeper_prober(spark: SparkSession, store_dir: str):
     clip; n_index_hits counts such clips."""
     return make_keeper_prober(
         spark, store_dir, "media_id", ["frame_sig"],
-        entry=("media_id", "kept_id"), min_shared=VIDEO_MIN_SHARED,
+        entry=("media_id", "kept_id"), min_shared=F.lit(VIDEO_MIN_SHARED),
+    )
+
+
+def media_keys_from_ids(docs: DataFrame) -> DataFrame:
+    """(media_id, m, frame_idx, sig) for every id of a doc_id frame, in
+    ONE mapInPandas: each id builds and decodes its modality's payload
+    (m = doc_id % 3) and emits the same signatures as the per-modality
+    chains, one row per frame for video (see kernels.media_keys_batch)."""
+    return docs.mapInPandas(
+        per_batch(media_keys_batch), "media_id long, m int, frame_idx int, sig long"
+    )
+
+
+def media_key_frame(sigs: DataFrame) -> DataFrame:
+    """Modality-tagged probe keys (media_id, m, frame_idx, c, chunk_val,
+    entry) over media_keys_from_ids rows: an image or audio signature
+    splits into its chunk-LSH keys exactly as chunk_key_frame does
+    (c 0..3, 14- or 12-bit chunks); a video frame is one key (c 0,
+    chunk_val the frame signature). ``entry`` is what the kept index
+    stores beside a key: the full signature a chunk hit is verified
+    against, or the clip a frame belongs to."""
+    bits = "IF(m = 0, 14, 12)"
+    return sigs.select(
+        "media_id", "m", "frame_idx", "sig",
+        F.expr(
+            f"explode(IF(m = 2, array(0), sequence(0, IF(m = 0, "
+            f"{PHASH_CHUNKS}, {AFP_CHUNKS}) - 1)))"
+        ).alias("c"),
+    ).select(
+        "media_id", "m", "frame_idx", "c",
+        F.expr(
+            f"IF(m = 2, sig, shiftright(sig, c * {bits}) "
+            f"& (shiftleft(1L, {bits}) - 1))"
+        ).alias("chunk_val"),
+        F.expr("IF(m = 2, media_id, sig)").alias("entry"),
+    )
+
+
+def make_media_keeper_prober(spark: SparkSession, store_dir: str):
+    """One keeper prober over one store for all three media kinds, on
+    media_key_frame keys. ``m`` joins the key, so keys never hit across
+    modalities; a chunk hit verifies within its modality's radius
+    (image PHASH_RADIUS, audio AFP_RADIUS); a video clip counts one hit
+    per kept clip sharing >= VIDEO_MIN_SHARED distinct frames. Per item,
+    decisions and n_index_hits equal make_chunk_keeper_prober's and
+    make_video_keeper_prober's."""
+    m = F.col("m")
+    radius = F.when(m == 0, PHASH_RADIUS).when(m == 1, AFP_RADIUS)
+    return make_keeper_prober(
+        spark, store_dir, "media_id", ["m", "c", "chunk_val"],
+        entry=("entry", "ref"),
+        verify=radius.isNull()
+        | (F.bit_count(F.col("entry").bitwiseXOR(F.col("ref"))) <= radius),
+        min_shared=F.when(m == 2, VIDEO_MIN_SHARED),
+        # one row per item: a clip's frames are a prefix (the decoder
+        # stops at the first short frame), so every keyed clip has frame 0
+        item_slice=(F.col("c") == 0) & (F.col("frame_idx") == 0),
     )
 
 

@@ -10,8 +10,11 @@ same index snapshot.
 One protocol serves every modality. Text MinHash bands, image/audio
 chunk-LSH buckets and video frame signatures differ only in the
 parameters of ``make_keeper_prober``; ``keeper_stream`` is the one
-streaming shell around it, and the fused multimodal flagship drives the
-same probers from its own trigger.
+streaming shell around it. The fused multimodal flagship runs one
+Python pass and one probe per trigger: its keys carry the modality
+``m`` as a key column, with a per-row verify radius and a per-row
+``min_shared``, so a single prober over a single store decides all
+three media kinds (multimodal.phash.make_media_keeper_prober).
 """
 
 from __future__ import annotations
@@ -74,7 +77,7 @@ def make_keeper_prober(
     key_cols: "list[str]",
     entry: "tuple[str, str] | None" = None,
     verify: "F.Column | None" = None,
-    min_shared: "int | None" = None,
+    min_shared: "F.Column | None" = None,
     item_slice: "F.Column | None" = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """One trigger's worth of the keeper protocol, as a closure over a
@@ -92,9 +95,10 @@ def make_keeper_prober(
       against, or the kept clip a frame belongs to.
     - ``verify``: predicate over a probe-key/index-entry pair; a key
       match counts as a hit only where it holds.
-    - ``min_shared``: count one hit per kept entry owner sharing at
-      least this many distinct keys with the item, instead of one per
-      matching key.
+    - ``min_shared``: a per-row threshold. Where it is non-null, an
+      item counts one hit per kept entry owner sharing at least that
+      many distinct keys with it, instead of one per matching key;
+      where it is null, each verified key match counts, as without it.
     - ``item_slice``: a predicate selecting exactly one key row per item,
       which finds the batch's items without the exchange and aggregate
       of a distinct inside every trigger. Leave it None where keys can
@@ -122,13 +126,18 @@ def make_keeper_prober(
             hits = keys.join(F.broadcast(idx), key_cols)
             if verify is not None:
                 hits = hits.where(verify)
+            weight = F.lit(1)
             if min_shared is not None:
-                hits = (
-                    hits.groupBy(id_col, entry[1])
-                    .agg(F.count_distinct(*key_cols).alias("n_shared"))
-                    .where(F.col("n_shared") >= min_shared)
+                hits = hits.groupBy(
+                    id_col, entry[1], min_shared.alias("min_shared")
+                ).agg(
+                    F.count_distinct(*key_cols).alias("n_shared"),
+                    F.count(F.lit(1)).alias("n_rows"),
                 )
-            nhits = hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+                weight = F.when(
+                    F.col("min_shared").isNull(), F.col("n_rows")
+                ).otherwise((F.col("n_shared") >= F.col("min_shared")).cast("int"))
+            nhits = hits.groupBy(id_col).agg(F.sum(weight).alias("n"))
             report = items.join(nhits, id_col, "left").select(
                 id_col, F.coalesce("n", zero).alias("n_index_hits")
             )

@@ -405,6 +405,19 @@ def _adaptive_reject_anti_join(
     return src.join(drops.hint("shuffle_hash"), "doc_id", "left_anti")
 
 
+def _reject_gate_counts(src: DataFrame, drops: DataFrame) -> "tuple[int, int]":
+    """(n_drops, n_src) for _adaptive_reject_anti_join, counted in ONE
+    action over the union of both sides."""
+    is_drop = F.col("is_drop")
+    row = (
+        src.select(F.lit(False).alias("is_drop"))
+        .unionByName(drops.select(F.lit(True).alias("is_drop")))
+        .agg(F.count(F.when(is_drop, 1)), F.count(F.when(~is_drop, 1)))
+        .first()
+    )
+    return row[0], row[1]
+
+
 def _kept_ledger_dir(name: str) -> str:
     """Namespaced kept location for a persisted flagship ledger (ADVICE
     r13): per-user under ``$SPARK_GRAFT_LEDGER_BASE`` (default the temp
@@ -3643,12 +3656,14 @@ FROM c
     oracle=_mm_fused_oracle(),
     doc="The flagship capstone FUSED into one stream — the topology a "
     "production ingest actually owns (one topic, one consumer, one "
-    "trigger grid): per micro-batch the SAME foreachBatch pass builds "
-    "each modality's payloads for its slice of the batch (doc_id % 3 "
-    "routes image/audio/video), probes/updates the three kept-indices "
-    "through the one keeper protocol (streaming/keeper.py — the same "
-    "probers the standalone keeper streams run), and packs the batch's "
-    "survivors, so curation "
+    "trigger grid): per micro-batch ONE Python pass builds and decodes "
+    "every doc's media payload (doc_id % 3 routes image/audio/video) "
+    "into modality-tagged probe keys, ONE probe of the one keeper "
+    "protocol (streaming/keeper.py) decides all three kinds against a "
+    "single kept index — the modality joins the key, the verify radius "
+    "and the video frame threshold are per row, so every decision "
+    "equals the standalone keeper streams' — and the batch's survivors "
+    "are packed, so curation "
     "and training-example construction happen in ONE pass over the "
     "wire instead of four streams (3 keeper spools + a packer spool) "
     "over the same bytes. Keeper semantics are IDENTICAL per trigger; "
@@ -3748,30 +3763,19 @@ def _mm_fused_impl(
         spool_ordered_batches,
         spool_roundrobin_batches,
     )
-    from spark_streaming_twitter_spark.streaming.keeper import chunk_key_frame
 
     tmp = tempfile.mkdtemp(prefix="stream_mm_fused_")
     if keep_ledger_dir is not None:
-        # production read-back shape (VERDICT r13 #4): the ledger outlives
-        # the query — overwrite-at-start, like any output-table rewrite
+        # production read-back shape: the ledger outlives the query —
+        # overwrite-at-start, like any output-table rewrite
         _reclaim_ledger_dir(keep_ledger_dir)
         ledger_dir = keep_ledger_dir
     else:
         ledger_dir = os.path.join(tmp, "ledger")
-    # each modality owns one partitioned keeper store (side=ledger +
-    # side=index), so every trigger's decisions + index entries land in a
-    # single write job per modality (see streaming/keeper.py)
-    probers = {
-        "image": ph.make_chunk_keeper_prober(
-            spark, os.path.join(tmp, "image_store"), ph.PHASH_RADIUS
-        ),
-        "audio": ph.make_chunk_keeper_prober(
-            spark, os.path.join(tmp, "audio_store"), ph.AFP_RADIUS
-        ),
-        "video": ph.make_video_keeper_prober(
-            spark, os.path.join(tmp, "video_store")
-        ),
-    }
+    # one modality-tagged keeper store (side=ledger + side=index) for all
+    # three media kinds, so every trigger's decisions and index entries
+    # land in a single write job (see streaming/keeper.py)
+    probe = ph.make_media_keeper_prober(spark, os.path.join(tmp, "media_store"))
 
     carry = {"offset": 0}
     media_cost = F.element_at(
@@ -3779,85 +3783,40 @@ def _mm_fused_impl(
         (F.col("doc_id") % 3 + 1).cast("int"),
     ).cast("bigint")
     count_expr = F.size(tokens(F.col("text"))).cast("bigint") + media_cost
-    # r16: one id-scan agg serves the spool cuts and the packer's shard
-    # bound (offsets are shard-size invariant; one job fewer per trigger)
+    # one id-scan agg serves the spool cuts and the packer's shard bound
+    # (offsets are shard-size invariant, so no per-trigger max-id job)
     doc_lo, doc_hi = _doc_id_bounds(spark, sf_dir)
     inner = _make_pack_batch(
         ledger_dir, carry, count_expr=count_expr, max_id_bound=doc_hi
     )
 
     def fused(bdf: DataFrame, epoch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         bdf = bdf.persist()
-
-        def ids(k: int) -> DataFrame:
-            return bdf.where(F.col("doc_id") % 3 == k).select("doc_id")
-
-        def probe(kind: str, frame: DataFrame) -> DataFrame:
-            # persist the synthesized keys/signatures before the prober:
-            # each prober runs 2 actions (report pin + store write) over
-            # this frame, and without the cache the mapInPandas payload
-            # synthesis + hashing recomputes per action (the keeper
-            # stream shell persists its micro-batch the same way). The
-            # prober's report is localCheckpointed, so unpersisting the
-            # input frame here cannot force a payload re-synthesis.
-            frame = frame.persist()
-            try:
-                return probers[kind](frame)
-            finally:
-                frame.unpersist()
-
-        # the three modality probes are independent within the trigger
-        # (disjoint slices, separate index/ledger dirs) — overlap them,
-        # same scheduling economics as the 4-stream form's keeper phase
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fi = pool.submit(
-                probe,
-                "image",
-                chunk_key_frame(
-                    ph.perceptual_hashes(ph.phash_media_from_ids(ids(0))),
-                    "dhash", ph.PHASH_CHUNKS, 14,
-                ),
-            )
-            fa = pool.submit(
-                probe,
-                "audio",
-                chunk_key_frame(
-                    ph.audio_fingerprints(ph.fp_audio_from_ids(ids(1))),
-                    "fingerprint", ph.AFP_CHUNKS, 12,
-                ),
-            )
-            fv = pool.submit(
-                probe,
-                "video",
-                ph.video_frame_signatures(ph.fp_video_from_ids(ids(2)))
-                .select("media_id", "frame_sig"),
-            )
-            reports = [fi.result(), fa.result(), fv.result()]
-        # this batch's drops, straight from the probers' pinned reports:
-        # every doc is decided the trigger it arrives, so each ledger's
-        # rows for this batch's media ARE this trigger's report rows
-        drops = None
-        for rep in reports:
-            d = rep.where(F.col("n_index_hits") > 0).select(
-                F.col("media_id").alias("doc_id")
-            )
-            drops = d if drops is None else drops.unionByName(d)
-        # VERDICT r13 #1: the per-trigger reject set is batch-bounded but
-        # NOT small under disorder (most of a clustered batch drops), so
-        # the same measured gate decides broadcast vs shuffled here too;
-        # persist so the gate's count doesn't recompute the ledger joins
-        drops = drops.persist()
+        # one Python pass builds every modality's keys; persisted because
+        # the prober reads them twice (report pin and store write), and
+        # the report is localCheckpointed, so unpersisting cannot force
+        # the payloads to be rebuilt
+        keys = ph.media_key_frame(
+            ph.media_keys_from_ids(bdf.select("doc_id"))
+        ).persist()
         try:
-            inner(
-                _adaptive_reject_anti_join(
-                    bdf, drops, drops.count(), bdf.count()
-                ),
-                epoch_id,
-            )
+            report = probe(keys)
         finally:
-            drops.unpersist()
+            keys.unpersist()
+        # every doc is decided the trigger it arrives, so this batch's
+        # drops are the pinned report's hit rows
+        drops = report.where(F.col("n_index_hits") > 0).select(
+            F.col("media_id").alias("doc_id")
+        )
+        # the reject set is batch-bounded but NOT small under disorder
+        # (most of a clustered batch drops), so the measured gate picks
+        # the broadcast or the shuffled anti-join
+        inner(
+            _adaptive_reject_anti_join(
+                bdf, drops, *_reject_gate_counts(bdf, drops)
+            ),
+            epoch_id,
+        )
         bdf.unpersist()
 
     spool = spool_roundrobin_batches if unordered else spool_ordered_batches

@@ -169,3 +169,106 @@ def test_ordered_spool_rejects_synth_without_bounds(spark, tmp_path):
             ids, "doc_id", str(tmp_path / "spool"),
             synth=lambda df: df, synth_id_col="media_id",
         )
+
+
+A_IMG = 0x5A5  # < 2^12: its 14- and 12-bit chunk keys coincide, (0x5A5, 0, 0, 0)
+A_AUD = 0x123456789ABC  # every 12-bit chunk non-zero
+KEPT_CLIP = list(range(1000, 1016))
+
+
+def _clip(shared, new):
+    return KEPT_CLIP[:shared] + list(range(new, new + 16 - shared))
+
+
+# (item, m, signature or frame signatures) per batch, and the expected
+# n_index_hits of every item
+TAGGED_CASES = {
+    "radius_video_and_cross_modality": (
+        [
+            [(1, 0, A_IMG), (2, 1, A_AUD), (3, 2, KEPT_CLIP)],
+            [
+                (4, 0, A_IMG ^ 0x7F),  # Hamming 7 <= 8: dropped via 3 chunks
+                (5, 1, A_AUD ^ 0x7F),  # Hamming 7 > 6: kept
+                (6, 2, _clip(8, 2000)),  # 8 distinct shared frames: dropped
+                (7, 2, _clip(7, 3000) + [KEPT_CLIP[0]]),  # 7 distinct: kept
+                (8, 1, A_IMG),  # image 1's (c, chunk_val) keys, as audio: kept
+                (9, 1, A_AUD),  # exact audio dup: all 4 chunks hit
+            ],
+        ],
+        {1: 0, 2: 0, 3: 0, 4: 3, 5: 0, 6: 1, 7: 0, 8: 0, 9: 4},
+    ),
+    "index_of_one_modality": (
+        [
+            [(10, 0, A_IMG), (11, 0, A_AUD)],
+            [(12, 1, A_IMG), (13, 2, KEPT_CLIP), (14, 0, A_AUD)],
+        ],
+        {10: 0, 11: 0, 12: 0, 13: 0, 14: 4},
+    ),
+    "all_dropped_batch": (
+        [
+            [(20, 0, A_IMG), (21, 1, A_AUD), (22, 2, KEPT_CLIP)],
+            [(23, 0, A_IMG), (24, 1, A_AUD), (25, 2, _clip(12, 4000))],
+        ],
+        {20: 0, 21: 0, 22: 0, 23: 4, 24: 4, 25: 1},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TAGGED_CASES))
+def test_tagged_prober_equals_per_modality_probers(spark, tmp_path, case):
+    """The modality-tagged prober over one store decides every item, with
+    the same n_index_hits, as the image, audio and video probers over
+    their own stores fed each modality's slice of the same batches."""
+    ph = _phash()
+    batches, want = TAGGED_CASES[case]
+
+    def sig_rows(batch, m):
+        rows = []
+        for mid, k, sig in batch:
+            if k == m:
+                frames = sig if m == 2 else [sig]
+                rows += [(mid, m, f, s) for f, s in enumerate(frames)]
+        return rows
+
+    def sigs(batch, modalities=(0, 1, 2)):
+        return spark.createDataFrame(
+            [r for m in modalities for r in sig_rows(batch, m)],
+            "media_id long, m int, frame_idx int, sig long",
+        )
+
+    tagged = ph.make_media_keeper_prober(spark, str(tmp_path / "tagged"))
+    got = _run(tagged, [ph.media_key_frame(sigs(b)) for b in batches], "media_id")
+    assert got == sorted(want.items())
+
+    per_modality = [
+        (
+            ph.make_chunk_keeper_prober(spark, str(tmp_path / "image"), ph.PHASH_RADIUS),
+            lambda b: chunk_key_frame(sigs(b, [0]), "sig", ph.PHASH_CHUNKS, 14),
+        ),
+        (
+            ph.make_chunk_keeper_prober(spark, str(tmp_path / "audio"), ph.AFP_RADIUS),
+            lambda b: chunk_key_frame(sigs(b, [1]), "sig", ph.AFP_CHUNKS, 12),
+        ),
+        (
+            ph.make_video_keeper_prober(spark, str(tmp_path / "video")),
+            lambda b: sigs(b, [2]).select("media_id", F.col("sig").alias("frame_sig")),
+        ),
+    ]
+    separate = []
+    for prober, keys in per_modality:
+        separate += _run(prober, [keys(b) for b in batches], "media_id")
+    assert got == sorted(separate)
+
+    ledger, index = _store(
+        spark, str(tmp_path / "tagged"), "media_id", ("m", "c", "chunk_val", "ref")
+    )
+    assert ledger == got
+    assert len(index) == len(set(index)), "an index row was written twice"
+    # only kept items' keys joined the index
+    kept = {mid for mid, n in want.items() if n == 0}
+    keys = ph.media_key_frame(sigs([r for b in batches for r in b]))
+    kept_keys = keys.where(F.col("media_id").isin(*kept))
+    assert index == _rows(
+        kept_keys.select("m", "c", "chunk_val", F.col("entry").alias("ref")).distinct(),
+        "m", "c", "chunk_val", "ref",
+    )

@@ -836,3 +836,30 @@ def test_adaptive_reject_anti_join_pins_both_sides(spark):
         for r in _adaptive_reject_anti_join(src, big, 0, n_src).collect()
     )
     assert a == b == list(range(750, 1000))
+
+
+def test_reject_gate_counts_both_sides_in_one_action(spark):
+    """The flagship's reject gate counts the drop set and the batch in
+    one action, and n_src counts every batch row, dropped or not."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_twitter_spark.text.corpus import _reject_gate_counts
+
+    src = spark.range(1000).select(F.col("id").alias("doc_id"))
+    big = spark.range(750).select(F.col("id").alias("doc_id"))
+    none = big.where(F.lit(False))
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (counts, n_one) = jobs("gate_one", lambda: _reject_gate_counts(src, big))
+    assert counts == (750, 1000)
+    assert _reject_gate_counts(src, none) == (0, 1000)
+    (_, n_two) = jobs("gate_two", lambda: (big.count(), src.count()))
+    assert n_one < n_two
