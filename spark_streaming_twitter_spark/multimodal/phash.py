@@ -1,5 +1,6 @@
-"""Perceptual-hash MEDIA dedup: image dHash/aHash and audio
-energy-envelope fingerprints, each with Hamming-banded pair detection.
+"""Perceptual-hash MEDIA dedup: image dHash/aHash, audio
+energy-envelope fingerprints and video frame signatures, batch and
+streaming.
 
 Closes the one LLM-pipeline dedup hole the round-7 judge named: the dedup
 family covered text five ways (MinHash/simhash/substring/chunk/semantic)
@@ -30,6 +31,17 @@ duplicate-group size, never corpus-quadratic (same argument as
 dedup_simhash_pairs; for adversarial buckets the dedup.lsh_candidate_pairs
 cap pattern applies unchanged).
 
+Streaming structure: every registered media stream binds one modality
+to one shell. ``_MEDIA_KINDS``, indexed by media_id % 3 (0 image,
+1 audio, 2 video), holds each modality's payload builder, decoder, key
+builder (media_id, sig, c, chunk_val), pair rule (Hamming radius, or
+shared frames for video) and keeper prober. The shells are
+``_media_ingest_stream`` (probe a static index of canonical items),
+``_media_state_stream`` (self and TTL dedup: one stateful processor;
+``_STRATEGIES`` picks its per-bucket update rule from bucket_rules.py,
+the spool order, the read-back reconciliation and the event-time sweep)
+and ``_media_keeper_stream`` (the keeper protocol, streaming/keeper.py).
+
 Reference parity: the reference engine (TwitterDatasetTrendingHashtag.java)
 has no image operators; this extends the mandated training-data-pipeline
 surface (brief: multimodal dedup) using only published constructions
@@ -39,10 +51,14 @@ Charikar simhash chunking).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
+from spark_streaming_twitter_spark.multimodal import bucket_rules
 from spark_streaming_twitter_spark.multimodal.kernels import (
     AFP_FRAMES,
     DHASH_BITS,
@@ -59,6 +75,12 @@ from spark_streaming_twitter_spark.multimodal.kernels import (
     video_sig_batch,
 )
 from spark_streaming_twitter_spark.registry import query
+from spark_streaming_twitter_spark.streaming.harness import (
+    run_to_memory,
+    spool_block_reversed_batches,
+    spool_ordered_batches,
+    spool_roundrobin_batches,
+)
 from spark_streaming_twitter_spark.streaming.keeper import (
     chunk_key_frame,
     keeper_stream,
@@ -718,6 +740,452 @@ def media_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Streaming media dedup: one modality table x one shell per strategy.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _MediaKind:
+    """One modality of the streaming media dedup.
+
+    ``synth`` builds payloads from ids, ``decode`` extracts signatures,
+    ``keys`` turns decoded rows into LSH keys (media_id, sig, c,
+    chunk_val). A candidate pair is verified by Hamming ``radius`` on
+    the full signatures or, where radius is None (video), by at least
+    VIDEO_MIN_SHARED distinct shared keys. ``max_occ`` caps a static
+    index key's postings; ``prober`` and ``keeper_cols`` bind the
+    keeper protocol."""
+
+    synth: Callable[[DataFrame], DataFrame]
+    decode: Callable[[DataFrame], DataFrame]
+    keys: Callable[[DataFrame], DataFrame]
+    n_chunks: int
+    radius: int | None
+    prober: Callable
+    keeper_cols: tuple[str, ...] = ("media_id", "sig", "c", "chunk_val")
+    max_occ: int | None = None
+
+    def key_frame(self, payloads: DataFrame) -> DataFrame:
+        return self.keys(self.decode(payloads))
+
+    def pairs(self, hits: DataFrame) -> DataFrame:
+        """The pair rule over candidate rows (c, chunk_val, media_id, sig,
+        ref_id, ref_sig): (media_id, ref_id, hamming) or, for video,
+        (media_id, ref_id, n_shared)."""
+        if self.radius is None:
+            return (
+                hits.groupBy("media_id", "ref_id")
+                .agg(F.count_distinct("chunk_val").alias("n_shared"))
+                .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
+            )
+        ham = F.bit_count(F.col("sig").bitwiseXOR(F.col("ref_sig")))
+        return (
+            hits.where(ham <= self.radius)
+            .select("media_id", "ref_id", ham.cast("int").alias("hamming"))
+            .distinct()
+        )
+
+
+def _frame_keys(sigs: DataFrame) -> DataFrame:
+    """One key per video frame: c = 0, chunk_val = sig = frame_sig."""
+    return sigs.select(
+        "media_id",
+        F.col("frame_sig").alias("sig"),
+        F.lit(0).alias("c"),
+        F.col("frame_sig").alias("chunk_val"),
+    )
+
+
+# indexed by mod3 = media_id % 3; the probers resolve their factory at
+# call time, so a wrapped factory (perfbench) is seen
+_MEDIA_KINDS = (
+    _MediaKind(
+        phash_media_from_ids,
+        perceptual_hashes,
+        lambda s: chunk_key_frame(s, "dhash", PHASH_CHUNKS, 14),
+        PHASH_CHUNKS,
+        PHASH_RADIUS,
+        lambda spark, d: make_chunk_keeper_prober(spark, d, PHASH_RADIUS),
+    ),
+    _MediaKind(
+        fp_audio_from_ids,
+        audio_fingerprints,
+        lambda s: chunk_key_frame(s, "fingerprint", AFP_CHUNKS, 12),
+        AFP_CHUNKS,
+        AFP_RADIUS,
+        lambda spark, d: make_chunk_keeper_prober(spark, d, AFP_RADIUS),
+    ),
+    _MediaKind(
+        fp_video_from_ids,
+        video_frame_signatures,
+        _frame_keys,
+        1,
+        None,
+        lambda spark, d: make_video_keeper_prober(spark, d),
+        keeper_cols=("media_id", "chunk_val AS frame_sig"),
+        max_occ=VIDEO_SIG_MAX_OCC,
+    ),
+)
+
+# strategy -> (bucket update rule, spool order, read-back
+# reconciliation, event-time sweep); see bucket_rules
+_STRATEGIES = {
+    "self": (bucket_rules.first_owner, "ordered", None, False),
+    "self_unordered": (bucket_rules.min_owner, "roundrobin", "min_owner", False),
+    "ttl": (bucket_rules.last_seen, "ordered", None, True),
+    "ttl_unordered": (bucket_rules.sorted_window, "roundrobin", "max_ref", False),
+    "ttl_bounded": (bucket_rules.sorted_window, "block_reversed", "max_ref", True),
+}
+
+
+def _read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
+    """A media spool (batch_0.parquet ...) as a payload stream: one file
+    per trigger, in spool order, spread over the cluster."""
+    return (
+        spark.readStream.schema("media_id long, payload binary")
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .option("pathGlobFilter", "batch_*.parquet")
+        .parquet(spool_dir)
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
+def _spool_media(
+    spark: SparkSession,
+    sf_dir: str,
+    mod3: int,
+    spool_dir: str,
+    order: str,
+    bounds: "tuple[int, int]",
+) -> int:
+    """Spool a modality's ids in ``order`` (ordered, roundrobin or
+    block_reversed); the spool shuffles ids only and synthesises the
+    payloads after the exchange. Returns the disorder bound (0 unless
+    block-reversed)."""
+    ids = media_ids(spark, sf_dir, mod3)
+    synth = {"synth": _MEDIA_KINDS[mod3].synth, "synth_id_col": "media_id"}
+    if order == "roundrobin":
+        spool_roundrobin_batches(ids, "doc_id", spool_dir, **synth)
+        return 0
+    if order == "block_reversed":
+        return spool_block_reversed_batches(
+            ids, "doc_id", spool_dir, bounds=bounds, **synth
+        )
+    spool_ordered_batches(ids, "doc_id", spool_dir, bounds=bounds, **synth)
+    return 0
+
+
+def _media_ingest_stream(spark: SparkSession, sf_dir: str, mod3: int) -> DataFrame:
+    """Near-dup detection AT INGEST against a static index: each trigger's
+    keys probe a persisted, broadcast index of the canonical items
+    (media_id % 24 == mod3) on (c, chunk_val), statelessly, and the
+    read-back applies the pair rule."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import Window
+
+    kind = _MEDIA_KINDS[mod3]
+    tmp = tempfile.mkdtemp(prefix="media_ingest_")
+    refs = None
+    try:
+        bounds = media_id_bounds(spark, sf_dir, mod3)
+        _spool_media(spark, sf_dir, mod3, tmp, "ordered", bounds)
+        canon = media_ids(spark, sf_dir, mod3).where(F.col("doc_id") % 24 == mod3)
+        refs = kind.key_frame(kind.synth(canon)).select(
+            F.col("media_id").alias("ref_id"),
+            F.col("sig").alias("ref_sig"),
+            "c",
+            "chunk_val",
+        )
+        if kind.max_occ is not None:
+            refs = (
+                refs.distinct()
+                .withColumn(
+                    "occ",
+                    F.count(F.lit(1)).over(Window.partitionBy("c", "chunk_val")),
+                )
+                .where(F.col("occ") <= kind.max_occ)
+                .drop("occ")
+            )
+        # the static side of a stream-static join re-evaluates every
+        # trigger: persist it so the refs decode once
+        refs = refs.persist()
+        refs.count()
+        hits = (
+            kind.key_frame(_read_spool(spark, tmp))
+            .join(F.broadcast(refs), ["c", "chunk_val"])
+            .where(F.col("media_id") != F.col("ref_id"))
+        )
+        pairs = kind.pairs(run_to_memory(hits, output_mode="append"))
+        out = spark.createDataFrame(pairs.collect(), pairs.schema)
+    finally:
+        if refs is not None:
+            refs.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _media_state_stream(
+    spark: SparkSession, sf_dir: str, mod3: int, strategy: str
+) -> DataFrame:
+    """Self-referential streaming media dedup: there is no static index;
+    each bucket's state is the stream's own past.
+
+    Keys are sharded by (c, chunk_val mod 64 / n_chunks), 64 shards for
+    every modality, and one transformWithStateInPandas MapState maps
+    chunk_val to the bucket's (media_id, sig) entries. ``strategy``
+    picks the update rule, the spool order, the read-back reconciliation
+    and whether event-time timers sweep entries below watermark -
+    horizon (horizon = half the id range; the bounded spool's disorder
+    bound is the watermark delay). Ordered rules verify the Hamming
+    radius inside the processor, so only verified pairs are emitted;
+    disorder-tolerant rules emit candidates, because a later trigger may
+    still change a bucket's owner or an item's predecessor, and verify
+    after reconciling."""
+    import shutil
+    import tempfile
+
+    import pandas as pd
+    from pyspark.sql.streaming.stateful_processor import (
+        StatefulProcessor,
+        StatefulProcessorHandle,
+    )
+
+    from spark_streaming_twitter_spark.streaming.queries import (
+        _forward_vendored_protobuf_to_workers,
+        _run_tws_update,
+    )
+
+    _forward_vendored_protobuf_to_workers(spark)
+    kind = _MEDIA_KINDS[mod3]
+    rule, order, reconcile, timed = _STRATEGIES[strategy]
+    lo, hi = bounds = media_id_bounds(spark, sf_dir, mod3)
+    horizon = (hi - lo + 1) // 2
+    radius = kind.radius if reconcile is None else None
+
+    def entries(v) -> list:
+        return list(zip(map(int, v[0]), map(int, v[1])))
+
+    class MediaBuckets(StatefulProcessor):
+        def init(self, handle: StatefulProcessorHandle) -> None:
+            self._h = handle
+            self._buckets = handle.getMapState(
+                "buckets", "chunk_val bigint", "ids array<bigint>, sigs array<bigint>"
+            )
+
+        def _put(self, cv: int, old: list, new: list) -> None:
+            if new == old:
+                return
+            if new:
+                self._buckets.updateValue(
+                    (cv,), ([m for m, _ in new], [s for _, s in new])
+                )
+            else:
+                self._buckets.removeKey((cv,))
+
+        def handleInputRows(self, key, rows, timerValues):
+            c = int(key[0])
+            pdf = pd.concat(list(rows), ignore_index=True)
+            out = []
+            for cv, grp in pdf.groupby("chunk_val", sort=True):
+                cv = int(cv)
+                cur = self._buckets.getValue((cv,))
+                old = entries(cur) if cur is not None else []
+                state, emits = bucket_rules.update(
+                    rule, old, grp["media_id"], grp["sig"], horizon, radius
+                )
+                self._put(cv, old, state)
+                out += [(c, cv, *e) for e in emits]
+            if timed:
+                # watermark + 1 ms, never deleted: the registration that
+                # fires mid-stream; the sweep re-checks the horizon, so
+                # its cadence cannot change the output
+                self._h.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
+            if out:
+                yield pd.DataFrame(
+                    out, columns=["c", "chunk_val", "media_id", "sig", "ref_id", "ref_sig"]
+                )
+
+        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+            wm_ms = timerValues.getCurrentWatermarkInMs()
+            stored = [(k[0], entries(v)) for k, v in self._buckets.iterator()]
+            for cv, old in stored:
+                self._put(cv, old, bucket_rules.expire(old, wm_ms, horizon))
+            return iter(())
+
+        def close(self) -> None:
+            pass
+
+    tmp = tempfile.mkdtemp(prefix="media_state_")
+    try:
+        delay = _spool_media(spark, sf_dir, mod3, tmp, order, bounds)
+        keys = kind.key_frame(_read_spool(spark, tmp))
+        if timed:
+            keys = keys.withColumn(
+                "ts",
+                F.timestamp_seconds(F.lit(bucket_rules.TS_BASE) + F.col("media_id")),
+            ).withWatermark("ts", f"{delay} seconds")
+        hits = (
+            keys.withColumn("shard", F.pmod("chunk_val", F.lit(64 // kind.n_chunks)))
+            .groupBy("c", "shard")
+            .transformWithStateInPandas(
+                statefulProcessor=MediaBuckets(),
+                outputStructType="c int, chunk_val bigint, media_id bigint, "
+                "sig bigint, ref_id bigint, ref_sig bigint",
+                outputMode="Update",
+                timeMode="EventTime" if timed else "None",
+            )
+        )
+        rows = _run_tws_update(spark, hits)
+        if reconcile == "min_owner":
+            # final owner per bucket = min emitted owner: ownership only
+            # decreases and every demotion emits the new owner
+            rows = (
+                rows.groupBy("c", "chunk_val")
+                .agg(
+                    F.min(F.struct("ref_id", "ref_sig")).alias("o"),
+                    F.collect_set(F.struct("media_id", "sig")).alias("m"),
+                )
+                .select("c", "chunk_val", F.explode("m").alias("m"), "o")
+                .select("c", "chunk_val", "m.*", "o.*")
+            )
+        elif reconcile == "max_ref":
+            # final predecessor per (bucket, item) = max emitted ref
+            rows = (
+                rows.groupBy("c", "chunk_val", "media_id", "sig")
+                .agg(F.max(F.struct("ref_id", "ref_sig")).alias("r"))
+                .select("c", "chunk_val", "media_id", "sig", "r.*")
+            )
+        pairs = kind.pairs(rows)
+        out = spark.createDataFrame(pairs.collect(), pairs.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def stream_media_phash_self_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential IMAGE dedup, ordered arrival: the first arrival
+    owns a bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 0, "self")
+
+
+def stream_media_audio_self_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential AUDIO dedup, ordered arrival: the first arrival
+    owns a bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 1, "self")
+
+
+def stream_media_video_self_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential VIDEO dedup, ordered arrival: the first arrival
+    owns a bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 2, "self")
+
+
+def stream_media_phash_self_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential IMAGE dedup under round-robin disorder: the
+    min-id owner, reconciled on the read-back (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 0, "self_unordered")
+
+
+def stream_media_audio_self_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential AUDIO dedup under round-robin disorder: the
+    min-id owner, reconciled on the read-back (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 1, "self_unordered")
+
+
+def stream_media_video_self_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Self-referential VIDEO dedup under round-robin disorder: the
+    min-id owner, reconciled on the read-back (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 2, "self_unordered")
+
+
+def stream_media_phash_ttl_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded IMAGE dedup, ordered arrival: each arrival pairs
+    with the latest earlier one (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 0, "ttl")
+
+
+def stream_media_audio_ttl_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded AUDIO dedup, ordered arrival: each arrival pairs
+    with the latest earlier one (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 1, "ttl")
+
+
+def stream_media_video_ttl_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded VIDEO dedup, ordered arrival: each arrival pairs
+    with the latest earlier one (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 2, "ttl")
+
+
+def stream_media_phash_ttl_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded IMAGE dedup under round-robin disorder: a sorted
+    window per bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 0, "ttl_unordered")
+
+
+def stream_media_audio_ttl_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded AUDIO dedup under round-robin disorder: a sorted
+    window per bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 1, "ttl_unordered")
+
+
+def stream_media_video_ttl_dedup_unordered(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded VIDEO dedup under round-robin disorder: a sorted
+    window per bucket (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 2, "ttl_unordered")
+
+
+def stream_media_phash_ttl_dedup_bounded_disorder(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded IMAGE dedup under bounded disorder: a sorted window
+    swept below watermark - horizon (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 0, "ttl_bounded")
+
+
+def stream_media_audio_ttl_dedup_bounded_disorder(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded AUDIO dedup under bounded disorder: a sorted window
+    swept below watermark - horizon (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 1, "ttl_bounded")
+
+
+def stream_media_video_ttl_dedup_bounded_disorder(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Horizon-bounded VIDEO dedup under bounded disorder: a sorted window
+    swept below watermark - horizon (see _media_state_stream)."""
+    return _media_state_stream(spark, sf_dir, 2, "ttl_bounded")
+
+
+# ---------------------------------------------------------------------------
 # Streaming composition: near-dup check AT INGEST against a static index.
 # ---------------------------------------------------------------------------
 
@@ -758,11 +1226,12 @@ WHERE bit_count(xor(dhash, ref_dhash)) <= {PHASH_RADIUS}
     "plan (mapInPandas on a streaming DataFrame — the Arrow batch path "
     "works identically there), and each micro-batch probes a BROADCAST "
     "static index of canonical codes (the v=0 group representatives) "
-    "via the same 4x14-bit chunk LSH, emitting (media_id, ref_id, "
-    "hamming) matches in append mode — completely STATELESS: no state "
+    "via the same 4x14-bit chunk LSH, emitting candidate matches in "
+    "append mode — completely STATELESS: no state "
     "store, no watermark, per-batch cost independent of stream history, "
     "which is why this shape scales to unbounded ingest. The memory-"
-    "sink read-back is re-deduplicated batch-side (a pair can surface "
+    "sink read-back is Hamming-verified and re-deduplicated batch-side "
+    "(a pair can surface "
     "through more than one matching chunk) and compared against the "
     "generator-replay oracle that recomputes codes, banding, and "
     "verify for the whole corpus.",
@@ -770,84 +1239,7 @@ WHERE bit_count(xor(dhash, ref_dhash)) <= {PHASH_RADIUS}
 def stream_media_phash_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_to_memory,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="phash_stream_")
-    data_dir = os.path.join(tmp, "payloads")
-    ref_chunks = None
-    try:
-        src = phash_media_table(spark, sf_dir)
-        src.repartition(4).write.parquet(data_dir)
-
-        codes = media_phash_codes(spark, sf_dir)
-        refs = codes.where(F.col("media_id") % 24 == 0).select(
-            F.col("media_id").alias("ref_id"),
-            F.col("dhash").alias("ref_dhash"),
-        )
-        # persist: the static side of a stream-static join re-evaluates
-        # every micro-batch — without this the ref payloads re-encode and
-        # re-hash once per trigger (the text twin measured 16x on this)
-        ref_chunks = (
-            refs.select(
-                "ref_id",
-                "ref_dhash",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(PHASH_CHUNKS - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr("shiftright(ref_dhash, c * 14)").bitwiseAND(
-                    F.lit(16383)
-                ),
-            )
-            .persist()
-        )
-        ref_chunks.count()
-
-        schema = "media_id long, payload binary"
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        scodes = perceptual_hashes(stream)
-        schunks = scodes.select(
-            "media_id",
-            "dhash",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(PHASH_CHUNKS - 1))
-            ).alias("c"),
-        ).withColumn(
-            "chunk_val",
-            F.expr("shiftright(dhash, c * 14)").bitwiseAND(F.lit(16383)),
-        )
-        hamming = F.bit_count(F.col("dhash").bitwiseXOR(F.col("ref_dhash")))
-        matches = (
-            schunks.join(
-                F.broadcast(ref_chunks),
-                ["c", "chunk_val"],
-            )
-            .where(F.col("media_id") != F.col("ref_id"))
-            .where(hamming <= PHASH_RADIUS)
-            .select(
-                "media_id", "ref_id", hamming.cast("int").alias("hamming")
-            )
-        )
-        sink = run_to_memory(matches, output_mode="append").distinct()
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        if ref_chunks is not None:
-            ref_chunks.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _media_ingest_stream(spark, sf_dir, 0)
 
 
 # Oracle for stream_media_phash_self_dedup (registered in
@@ -882,133 +1274,6 @@ SELECT media_id, ref_id,
 FROM hits
 WHERE bit_count(xor(dhash, ref_dhash)) <= {PHASH_RADIUS}
 """
-
-
-def stream_media_phash_self_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SELF-REFERENTIAL streaming IMAGE dedup — the media twin of
-    stream_text_minhash_self_dedup (dedup/dedup.py), completing the
-    north-star pair: there is NO static index; incoming image payloads
-    are decoded and perceptually hashed INSIDE the streaming plan (the
-    batch perceptual_hashes mapInPandas unchanged), their 4x14-bit dHash
-    chunk keys probe a transformWithStateInPandas MapState AND insert
-    novel buckets, so a re-crop arriving in batch 7 of an image first
-    seen in batch 2 is flagged first-occurrence-wins with no pre-built
-    index.
-
-    State layout: tws grouping key (c, chunk_val % 16) = 64 shards (the
-    mod width is the cluster-width dial, as the band-key prefix is for
-    the text twin); each shard's MapState maps chunk_val -> (first-seen
-    media_id, its full dHash) — carrying the owner's dHash IN STATE is
-    what lets the Hamming verify (bit_count(xor) <= 8) run inside the
-    processor at probe time, so only VERIFIED near-dup pairs are ever
-    emitted, not raw candidates. A micro-batch costs one point-probe
-    (+point-insert when novel) per touched chunk bucket — bounded by
-    probes, never a history rescan (same measured-flat contract as
-    tools/self_dedup_cost_probe.py establishes for the text twin).
-    Read-back dedups pairs that surfaced through more than one chunk.
-    """
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class ChunkOwners(StatefulProcessor):
-        """One MapState per (chunk, val-mod) shard: chunk_val ->
-        (owner media_id, owner dhash)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "chunk_val bigint", "ref_id bigint, ref_dhash bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {"media_id": [], "ref_id": [], "hamming": []}
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                pairs = sorted(
-                    (int(m), int(d))
-                    for m, d in zip(grp["media_id"], grp["dhash"])
-                )
-                # one state roundtrip per touched bucket (getValue is
-                # None when absent; containsKey would double the calls)
-                cur = self._owners.getValue((cv,))
-                if cur is not None:
-                    owner, odh = int(cur[0]), int(cur[1])
-                else:
-                    owner, odh = pairs.pop(0)
-                    self._owners.updateValue((cv,), (owner, odh))
-                for mid, dh in pairs:
-                    ham = (dh ^ odh).bit_count()
-                    if ham <= PHASH_RADIUS:
-                        out["media_id"].append(mid)
-                        out["ref_id"].append(owner)
-                        out["hamming"].append(ham)
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="phash_self_stream_")
-    try:
-        src = phash_media_table(spark, sf_dir)
-        spool_ordered_batches(src, "media_id", tmp)
-
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            perceptual_hashes(stream.repartition(par))
-            .select(
-                "media_id",
-                "dhash",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(PHASH_CHUNKS - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr("shiftright(dhash, c * 14)")
-                .bitwiseAND(F.lit(16383))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=ChunkOwners(),
-            outputStructType="media_id bigint, ref_id bigint, hamming int",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits).distinct()
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # Horizon-bounded (TTL) media self-dedup oracle, generic over the
@@ -1058,176 +1323,6 @@ WHERE p.media_id - p.ref_id <= horizon
 _PHASH_TTL_DEDUP_ORACLE = _chunk_ttl_oracle(
     _PHASH_SIGS_SQL, "sigs", "dhash", "imgs", PHASH_CHUNKS, 14, PHASH_RADIUS
 )
-
-_MEDIA_TTL_TS_BASE = 1_700_000_000
-
-
-def _chunk_ttl_dedup_stream(
-    spark: SparkSession,
-    src: DataFrame,
-    sig_stream,
-    sig_col: str,
-    n_chunks: int,
-    chunk_bits: int,
-    radius: int,
-) -> DataFrame:
-    """HORIZON-BOUNDED streaming media dedup, generic over the chunk-LSH
-    signature family (image dHash, audio fingerprint) — the media twin
-    of stream_text_minhash_ttl_dedup: MapState per chunk bucket holds
-    the LAST (media_id, sig) — refreshed on every arrival — and an
-    event-time timer sweeps entries idle past the horizon, so STATE IS
-    BOUNDED BY THE HORIZON, not stream history. A probe flags against
-    the latest earlier same-bucket arrival when (a) its event-time
-    distance is within the horizon and (b) the full-signature Hamming
-    verify passes — the verify runs in the processor against the
-    signature carried in state, so only verified pairs are emitted.
-    Correctness never depends on sweep timing (the probe re-checks the
-    distance), making the TTL purely a resource bound."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    mask = (1 << chunk_bits) - 1
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class LastSeenChunk(StatefulProcessor):
-        """chunk_val -> (last media_id, last sig); timer-swept TTL."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._last = handle.getMapState(
-                "last_seen",
-                "chunk_val bigint",
-                "ref_id bigint, ref_sig bigint",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {"media_id": [], "ref_id": [], "hamming": []}
-            batch_max = int(pdf["media_id"].max())
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                pairs = sorted(
-                    (int(m), int(d))
-                    for m, d in zip(grp["media_id"], grp["sig"])
-                )
-                cur = self._last.getValue((cv,))
-                last = (int(cur[0]), int(cur[1])) if cur is not None else None
-                for mid, dh in pairs:
-                    if last is not None and mid - last[0] <= horizon:
-                        ham = (dh ^ last[1]).bit_count()
-                        if ham <= radius:
-                            out["media_id"].append(mid)
-                            out["ref_id"].append(last[0])
-                            out["hamming"].append(ham)
-                    last = (mid, dh)
-                self._last.updateValue((cv,), last)
-            # watermark + 1 ms, never deleted — the registration
-            # that actually fires mid-stream (see the text TTL twin;
-            # probe-verified); eviction re-checks the horizon against
-            # the watermark, so sweep cadence cannot affect output
-            self._h.registerTimer(
-                timerValues.getCurrentWatermarkInMs() + 1
-            )
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            expired = [
-                k_[0]
-                for k_, v_ in self._last.iterator()
-                if (_MEDIA_TTL_TS_BASE + int(v_[0]) + horizon) * 1000 < wm_ms
-            ]
-            for cv in expired:
-                self._last.removeKey((cv,))
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="chunk_ttl_stream_")
-    try:
-        spool_ordered_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            sig_stream(stream.repartition(par))
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(_MEDIA_TTL_TS_BASE) + F.col("media_id")
-                ),
-            )
-            .withWatermark("ts", "0 seconds")
-            .select(
-                "media_id",
-                "ts",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=LastSeenChunk(),
-            outputStructType="media_id bigint, ref_id bigint, hamming int",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits).distinct()
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def stream_media_phash_ttl_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HORIZON-BOUNDED streaming IMAGE dedup — see _chunk_ttl_dedup_stream
-    (the generic processor) and the registered oracle: flags against the
-    latest earlier same-chunk-bucket arrival within the horizon with the
-    full-dHash Hamming verify in state."""
-    return _chunk_ttl_dedup_stream(
-        spark,
-        phash_media_table(spark, sf_dir),
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-    )
 
 
 # Keeper-aware online media dedup oracle: 4 unrolled index epochs (the
@@ -1398,37 +1493,17 @@ def _media_keeper_stream(
     2 video); ``opts`` pass through to keeper_stream. The spool shuffles
     ids only and the payload is synthesized after the exchange, with the
     ordered spool's bounds from the id scan, not a payload pass."""
-    par = spark.sparkContext.defaultParallelism
-
-    def key_stream(spool_dir: str) -> DataFrame:
-        media = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(spool_dir)
-            .repartition(par)
-        )
-        if mod3 == 0:
-            return chunk_key_frame(perceptual_hashes(media), "dhash", PHASH_CHUNKS, 14)
-        if mod3 == 1:
-            return chunk_key_frame(
-                audio_fingerprints(media), "fingerprint", AFP_CHUNKS, 12
-            )
-        return video_frame_signatures(media).select("media_id", "frame_sig")
-
-    def make_prober(store_dir: str):
-        if mod3 == 2:
-            return make_video_keeper_prober(spark, store_dir)
-        radius = (PHASH_RADIUS, AFP_RADIUS)[mod3]
-        return make_chunk_keeper_prober(spark, store_dir, radius)
-
+    kind = _MEDIA_KINDS[mod3]
     if not opts.get("roundrobin"):
         opts["bounds"] = media_id_bounds(spark, sf_dir, mod3)
-    synth = (phash_media_from_ids, fp_audio_from_ids, fp_video_from_ids)[mod3]
     return keeper_stream(
-        spark, "media_id", media_ids(spark, sf_dir, mod3), key_stream,
-        make_prober, synth=synth, **opts,
+        spark,
+        "media_id",
+        media_ids(spark, sf_dir, mod3),
+        lambda d: kind.key_frame(_read_spool(spark, d)).selectExpr(*kind.keeper_cols),
+        lambda store_dir: kind.prober(spark, store_dir),
+        synth=kind.synth,
+        **opts,
     )
 
 
@@ -1583,8 +1658,9 @@ WHERE bit_count(xor(fingerprint, ref_fp)) <= {AFP_RADIUS}
     "the batch path uses — RIFF walk + 48 energy-envelope direction "
     "bits), and each micro-batch probes a PERSISTED broadcast static "
     "index of canonical fingerprints (the v=0 group representatives, "
-    "media_id % 24 = 1) via the same 4x12-bit chunk LSH, then verifies "
-    "bit_count(xor) <= 6 — stateless append, per-batch cost independent "
+    "media_id % 24 = 1) via the same 4x12-bit chunk LSH, verified "
+    "bit_count(xor) <= 6 on the read-back — stateless append, per-batch "
+    "cost independent "
     "of stream history. The ref index is banded ONCE and persisted (the "
     "stream-static join re-evaluates its static side every trigger; the "
     "text twin measured 16x on this). Memory-sink read-back dedups "
@@ -1593,78 +1669,7 @@ WHERE bit_count(xor(fingerprint, ref_fp)) <= {AFP_RADIUS}
 def stream_media_audio_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_to_memory,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="afp_stream_")
-    data_dir = os.path.join(tmp, "payloads")
-    ref_chunks = None
-    try:
-        src = fp_audio_table(spark, sf_dir)
-        src.repartition(4).write.parquet(data_dir)
-
-        refs = (
-            audio_fingerprints(fp_audio_table(spark, sf_dir))
-            .where(F.col("media_id") % 24 == 1)
-            .select(
-                F.col("media_id").alias("ref_id"),
-                F.col("fingerprint").alias("ref_fp"),
-            )
-        )
-        ref_chunks = (
-            refs.select(
-                "ref_id",
-                "ref_fp",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(AFP_CHUNKS - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr("shiftright(ref_fp, c * 12)").bitwiseAND(F.lit(4095)),
-            )
-            .persist()
-        )
-        ref_chunks.count()
-
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        sfps = audio_fingerprints(stream)
-        schunks = sfps.select(
-            "media_id",
-            "fingerprint",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(AFP_CHUNKS - 1))
-            ).alias("c"),
-        ).withColumn(
-            "chunk_val",
-            F.expr("shiftright(fingerprint, c * 12)").bitwiseAND(F.lit(4095)),
-        )
-        hamming = F.bit_count(F.col("fingerprint").bitwiseXOR(F.col("ref_fp")))
-        matches = (
-            schunks.join(F.broadcast(ref_chunks), ["c", "chunk_val"])
-            .where(F.col("media_id") != F.col("ref_id"))
-            .where(hamming <= AFP_RADIUS)
-            .select(
-                "media_id", "ref_id", hamming.cast("int").alias("hamming")
-            )
-        )
-        sink = run_to_memory(matches, output_mode="append").distinct()
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        if ref_chunks is not None:
-            ref_chunks.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _media_ingest_stream(spark, sf_dir, 1)
 
 
 # Oracles for the audio/video SELF-referential streaming dedups
@@ -1716,115 +1721,6 @@ HAVING count(DISTINCT frame_sig) >= {VIDEO_MIN_SHARED}
 """
 
 
-def stream_media_audio_self_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SELF-REFERENTIAL streaming AUDIO dedup — third cell of the
-    self-dedup column (text/image above, video below; the static-index
-    INGEST twins fill the other column, so every modality now has both):
-    WAV payloads stream in, acoustic fingerprints are decoded and
-    computed inside the plan, and each clip's 4x12-bit fingerprint
-    chunks probe AND populate a tws MapState whose value carries the
-    owning clip's id and FULL fingerprint — the Hamming
-    bit_count(xor) <= 6 verify runs at probe time, emitting only
-    verified near-dup pairs, exactly the image twin's design with the
-    audio fingerprint family. Shard key (c, chunk_val % 16) = 64 shards;
-    one state roundtrip per touched chunk bucket per batch."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class ChunkOwners(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "chunk_val bigint", "ref_id bigint, ref_fp bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {"media_id": [], "ref_id": [], "hamming": []}
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                pairs = sorted(
-                    (int(m), int(f))
-                    for m, f in zip(grp["media_id"], grp["fingerprint"])
-                )
-                cur = self._owners.getValue((cv,))
-                if cur is not None:
-                    owner, ofp = int(cur[0]), int(cur[1])
-                else:
-                    owner, ofp = pairs.pop(0)
-                    self._owners.updateValue((cv,), (owner, ofp))
-                for mid, fp in pairs:
-                    ham = (fp ^ ofp).bit_count()
-                    if ham <= AFP_RADIUS:
-                        out["media_id"].append(mid)
-                        out["ref_id"].append(owner)
-                        out["hamming"].append(ham)
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="afp_self_stream_")
-    try:
-        src = fp_audio_table(spark, sf_dir)
-        spool_ordered_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            audio_fingerprints(stream.repartition(par))
-            .select(
-                "media_id",
-                "fingerprint",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(AFP_CHUNKS - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr("shiftright(fingerprint, c * 12)")
-                .bitwiseAND(F.lit(4095))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=ChunkOwners(),
-            outputStructType="media_id bigint, ref_id bigint, hamming int",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits).distinct()
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 _AFP_TTL_DEDUP_ORACLE = _chunk_ttl_oracle(
     _AFP_SIGS_SQL, "afps", "fingerprint", "auds", AFP_CHUNKS, 12, AFP_RADIUS
 )
@@ -1852,139 +1748,6 @@ WHERE media_id - ref_id <= horizon
 GROUP BY 1, 2
 HAVING count(DISTINCT frame_sig) >= {VIDEO_MIN_SHARED}
 """
-
-
-def stream_media_video_ttl_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HORIZON-BOUNDED streaming VIDEO dedup — the frame-signature
-    instance of the TTL family, completing the TTL column across all
-    four modalities (text/image/audio above): MapState per frame
-    signature holds the LAST clip that carried it (refreshed on every
-    arrival), an event-time timer sweeps signatures idle past the
-    horizon, and each arrival emits a raw (media, ref, frame_sig) hit
-    when the signature's latest earlier holder is within the horizon —
-    the >= {VIDEO_MIN_SHARED}-shared-DISTINCT-frames pair threshold
-    runs on the read-back, exactly like the self-dedup twin. State is
-    bounded by the horizon's frame-signature volume, not stream
-    history; sweep timing provably cannot affect output (the probe
-    re-checks the distance)."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    src = fp_video_table(spark, sf_dir)
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class LastSeenSig(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._last = handle.getMapState(
-                "last_seen", "frame_sig bigint", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "media_id": [],
-                "ref_id": [],
-                "frame_sig": [],
-            }
-            batch_max = int(pdf["media_id"].max())
-            for sig, grp in pdf.groupby("frame_sig", sort=True):
-                sig = int(sig)
-                ids = sorted({int(m) for m in grp["media_id"]})
-                cur = self._last.getValue((sig,))
-                last = int(cur[0]) if cur is not None else None
-                for mid in ids:
-                    if last is not None and mid - last <= horizon:
-                        out["media_id"].append(mid)
-                        out["ref_id"].append(last)
-                        out["frame_sig"].append(sig)
-                    last = mid
-                self._last.updateValue((sig,), (last,))
-            # watermark + 1 ms, never deleted — the registration
-            # that actually fires mid-stream (see the text TTL twin;
-            # probe-verified); eviction re-checks the horizon against
-            # the watermark, so sweep cadence cannot affect output
-            self._h.registerTimer(
-                timerValues.getCurrentWatermarkInMs() + 1
-            )
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            expired = [
-                k_[0]
-                for k_, v_ in self._last.iterator()
-                if (_MEDIA_TTL_TS_BASE + int(v_[0]) + horizon) * 1000 < wm_ms
-            ]
-            for sig in expired:
-                self._last.removeKey((sig,))
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="vfp_ttl_stream_")
-    try:
-        spool_ordered_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        sigs = (
-            video_frame_signatures(stream.repartition(par))
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(_MEDIA_TTL_TS_BASE) + F.col("media_id")
-                ),
-            )
-            .withWatermark("ts", "0 seconds")
-            .select("media_id", "ts", "frame_sig")
-            .withColumn("pfx", F.pmod(F.col("frame_sig"), F.lit(64)))
-        )
-        hits = sigs.groupBy("pfx").transformWithStateInPandas(
-            statefulProcessor=LastSeenSig(),
-            outputStructType=(
-                "media_id bigint, ref_id bigint, frame_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # Video keeper oracle: 4 unrolled epochs over the kept-clip frame index
@@ -2101,27 +1864,6 @@ def stream_media_video_keeper_dedup_persisted(
     )
 
 
-def stream_media_audio_ttl_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HORIZON-BOUNDED streaming AUDIO dedup — the acoustic-fingerprint
-    instance of _chunk_ttl_dedup_stream: MapState holds the LAST
-    (media_id, fingerprint) per 12-bit chunk bucket, event-time timers
-    sweep entries idle past the horizon, probes flag against the latest
-    earlier same-bucket arrival within the horizon with the 48-bit
-    Hamming verify (<= 6) in the processor. Completes the TTL column of
-    the semantics x modality matrix for audio."""
-    return _chunk_ttl_dedup_stream(
-        spark,
-        fp_audio_table(spark, sf_dir),
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-    )
-
-
 @query(
     "stream_media_audio_keeper_dedup",
     oracle=_chunk_keeper_oracle(
@@ -2174,108 +1916,6 @@ def stream_media_audio_keeper_dedup_persisted(
     )
 
 
-def stream_media_video_self_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SELF-REFERENTIAL streaming VIDEO dedup — the last cell: the
-    modality/architecture dedup matrix is complete (text, image, audio,
-    video x static-index ingest, self-referential state). MP4 payloads
-    stream in, the container walk + per-frame signatures run inside the
-    plan, and each DISTINCT frame signature probes/populates a tws
-    MapState mapping frame_sig -> first-seen clip. Hits emit raw
-    (media_id, ref_id, frame_sig) rows; the >= 8-shared-DISTINCT-frames
-    pair threshold runs batch-side on the read-back, exactly like the
-    video ingest twin — per-arrival emission is bounded by the clip's
-    own frame count (<= 16 rows), so there is no hot-bucket quadratic
-    term to cap: state ownership is one ref per signature by
-    construction."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class SigOwners(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "frame_sig bigint", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "media_id": [],
-                "ref_id": [],
-                "frame_sig": [],
-            }
-            for sig, grp in pdf.groupby("frame_sig", sort=True):
-                sig = int(sig)
-                ids = sorted({int(m) for m in grp["media_id"]})
-                cur = self._owners.getValue((sig,))
-                if cur is not None:
-                    owner = int(cur[0])
-                else:
-                    owner = ids.pop(0)
-                    self._owners.updateValue((sig,), (owner,))
-                for mid in ids:
-                    out["media_id"].append(mid)
-                    out["ref_id"].append(owner)
-                    out["frame_sig"].append(sig)
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="vfp_self_stream_")
-    try:
-        src = fp_video_table(spark, sf_dir)
-        spool_ordered_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        sigs = (
-            video_frame_signatures(stream.repartition(par))
-            .select("media_id", "frame_sig")
-            .withColumn("pfx", F.pmod(F.col("frame_sig"), F.lit(64)))
-        )
-        hits = sigs.groupBy("pfx").transformWithStateInPandas(
-            statefulProcessor=SigOwners(),
-            outputStructType="media_id bigint, ref_id bigint, frame_sig bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 @query(
     "stream_media_video_ingest_dedup",
     oracle=f"""
@@ -2321,65 +1961,7 @@ HAVING count(DISTINCT frame_sig) >= {VIDEO_MIN_SHARED}
 def stream_media_video_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_to_memory,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="vfp_stream_")
-    data_dir = os.path.join(tmp, "payloads")
-    crefs = None
-    try:
-        src = fp_video_table(spark, sf_dir)
-        src.repartition(4).write.parquet(data_dir)
-
-        refs = (
-            video_frame_signatures(fp_video_table(spark, sf_dir))
-            .where(F.col("media_id") % 24 == 2)
-            .select(F.col("media_id").alias("ref_id"), "frame_sig")
-            .distinct()
-        )
-        crefs = (
-            refs.withColumn(
-                "occ", F.count(F.lit(1)).over(Window.partitionBy("frame_sig"))
-            )
-            .where(F.col("occ") <= VIDEO_SIG_MAX_OCC)
-            .select("ref_id", "frame_sig")
-            .persist()
-        )
-        crefs.count()
-
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        ssigs = video_frame_signatures(stream).select(
-            "media_id", "frame_sig"
-        )
-        matches = (
-            ssigs.join(F.broadcast(crefs), ["frame_sig"])
-            .where(F.col("media_id") != F.col("ref_id"))
-            .select("media_id", "ref_id", "frame_sig")
-        )
-        sink = run_to_memory(matches, output_mode="append")
-        agg = (
-            sink.groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        if crefs is not None:
-            crefs.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _media_ingest_stream(spark, sf_dir, 2)
 
 
 def _media_ledger_oracle() -> str:
@@ -2623,971 +2205,6 @@ def corpus_curation_pipeline_v8(
         ("survivors", n_docs - n_all),
     ]
     return spark.createDataFrame(rows, "stage string, n_dropped bigint")
-
-
-def _chunk_unordered_self_dedup_stream(
-    spark: SparkSession,
-    src: DataFrame,
-    sig_stream,
-    sig_col: str,
-    n_chunks: int,
-    chunk_bits: int,
-    radius: int,
-) -> DataFrame:
-    """DISORDER-TOLERANT self-referential streaming media dedup, generic
-    over the chunk-LSH signature family — the media twin of
-    stream_text_minhash_self_dedup_unordered: a round-robin spool
-    simulates Kafka cross-partition disorder (arrival order disagrees
-    with media_id order everywhere), so bucket ownership is
-    MIN-ID-RECONCILED in MapState — state per chunk bucket is the
-    smallest (media_id, sig) seen SO FAR; a smaller arriving id claims
-    the bucket and the DEMOTED previous owner re-emits as a candidate.
-
-    The Hamming verify moves OUT of the processor and into the
-    read-back: verifying against the owner-at-emission would pin pairs
-    to an owner a later batch may demote, so emissions carry the raw
-    (bucket, media, sig, owner-at-emission, owner sig) and the
-    reconciliation (one aggregation, no self-join) recomputes per bucket
-    the FINAL owner = min emitted owner (ownership only decreases; every
-    demotion emits a row carrying the new owner, so the global min is
-    always witnessed) and verifies each emitted media against the FINAL
-    owner's signature — bit-identical to the ordered twin and to the
-    arrival-order-free oracle. Per-batch cost contract unchanged: one
-    point probe per touched bucket, updateValue only on ownership
-    change."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-    mask = (1 << chunk_bits) - 1
-
-    class MinIdChunkOwners(StatefulProcessor):
-        """chunk_val -> min (media_id, sig) so far; demotion re-emits."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners",
-                "chunk_val bigint",
-                "ref_id bigint, ref_sig bigint",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            c = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "c": [],
-                "chunk_val": [],
-                "media_id": [],
-                "sig": [],
-                "owner": [],
-                "owner_sig": [],
-            }
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                pairs = sorted(
-                    (int(m), int(d))
-                    for m, d in zip(grp["media_id"], grp["sig"])
-                )
-                cur = self._owners.getValue((cv,))
-                owner = (int(cur[0]), int(cur[1])) if cur is not None else None
-                emit = pairs
-                if owner is None or pairs[0][0] < owner[0]:
-                    demoted = owner
-                    owner = pairs[0]
-                    self._owners.updateValue((cv,), owner)
-                    emit = pairs[1:] + ([demoted] if demoted else [])
-                for mid, dh in emit:
-                    out["c"].append(c)
-                    out["chunk_val"].append(cv)
-                    out["media_id"].append(mid)
-                    out["sig"].append(dh)
-                    out["owner"].append(owner[0])
-                    out["owner_sig"].append(owner[1])
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="chunk_self_unord_")
-    try:
-        spool_roundrobin_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            sig_stream(stream.repartition(par))
-            .select(
-                "media_id",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=MinIdChunkOwners(),
-            outputStructType=(
-                "c int, chunk_val bigint, media_id bigint, sig bigint, "
-                "owner bigint, owner_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        # reconcile in ONE aggregation: final owner per bucket = min
-        # emitted (owner, owner_sig); verify every emitted media
-        # against the FINAL owner's signature
-        hamming = F.bit_count(
-            F.col("m.sig").bitwiseXOR(F.col("o.owner_sig"))
-        )
-        agg = (
-            sink.groupBy("c", "chunk_val")
-            .agg(
-                F.min(F.struct("owner", "owner_sig")).alias("o"),
-                F.collect_set(F.struct("media_id", "sig")).alias("ms"),
-            )
-            .select("o", F.explode("ms").alias("m"))
-            .where(hamming <= radius)
-            .select(
-                F.col("m.media_id").alias("media_id"),
-                F.col("o.owner").alias("ref_id"),
-                hamming.cast("int").alias("hamming"),
-            )
-            .distinct()
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def stream_media_phash_self_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Disorder-tolerant IMAGE self-dedup (see
-    _chunk_unordered_self_dedup_stream)."""
-    return _chunk_unordered_self_dedup_stream(
-        spark,
-        phash_media_table(spark, sf_dir),
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-    )
-
-
-def stream_media_audio_self_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Disorder-tolerant AUDIO self-dedup (see
-    _chunk_unordered_self_dedup_stream)."""
-    return _chunk_unordered_self_dedup_stream(
-        spark,
-        fp_audio_table(spark, sf_dir),
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-    )
-
-
-def stream_media_video_self_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """DISORDER-TOLERANT self-referential streaming VIDEO dedup — the
-    frame-signature instance: min-id-reconciled ownership per frame
-    signature (an arriving smaller clip id demotes the stored owner,
-    which re-emits as a candidate frame hit); the read-back reconciles
-    each signature's FINAL owner = min emitted owner in one
-    aggregation, then applies the >= 8-shared-DISTINCT-frames pair
-    threshold — bit-identical to the ordered video twin under the same
-    arrival-order-free oracle."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class MinIdSigOwners(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "frame_sig bigint", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "media_id": [],
-                "owner": [],
-                "frame_sig": [],
-            }
-            for sig, grp in pdf.groupby("frame_sig", sort=True):
-                sig = int(sig)
-                ids = sorted({int(m) for m in grp["media_id"]})
-                cur = self._owners.getValue((sig,))
-                owner = int(cur[0]) if cur is not None else None
-                emit = ids
-                if owner is None or ids[0] < owner:
-                    demoted = owner
-                    owner = ids[0]
-                    self._owners.updateValue((sig,), (owner,))
-                    emit = ids[1:] + ([demoted] if demoted is not None else [])
-                for mid in emit:
-                    out["media_id"].append(mid)
-                    out["owner"].append(owner)
-                    out["frame_sig"].append(sig)
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="vfp_self_unord_")
-    try:
-        src = fp_video_table(spark, sf_dir)
-        spool_roundrobin_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        sigs = (
-            video_frame_signatures(stream.repartition(par))
-            .select("media_id", "frame_sig")
-            .withColumn("pfx", F.pmod(F.col("frame_sig"), F.lit(64)))
-        )
-        hits = sigs.groupBy("pfx").transformWithStateInPandas(
-            statefulProcessor=MinIdSigOwners(),
-            outputStructType=(
-                "media_id bigint, owner bigint, frame_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("frame_sig")
-            .agg(
-                F.min("owner").alias("ref_id"),
-                F.collect_set("media_id").alias("ms"),
-            )
-            .select("frame_sig", "ref_id", F.explode("ms").alias("media_id"))
-            .groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _chunk_ttl_unordered_stream(
-    spark: SparkSession,
-    src: DataFrame,
-    sig_stream,
-    sig_col: str,
-    n_chunks: int,
-    chunk_bits: int,
-    radius: int,
-) -> DataFrame:
-    """HORIZON-BOUNDED media dedup under Kafka CROSS-PARTITION DISORDER,
-    generic over the chunk-LSH signature family — the media twin of
-    stream_text_minhash_ttl_dedup_unordered: TTL semantics are
-    order-free on the event-time axis, but under disorder a bucket's
-    within-horizon predecessor may ARRIVE after the item it should
-    flag, so MapState keeps the SORTED (media_id, sig) window per chunk
-    bucket (two parallel arrays in one entry); each batch merges its
-    pairs in and emits every ADJACENT pair with a new endpoint and id
-    distance <= horizon, carrying BOTH signatures. The Hamming verify
-    moves to the READ-BACK against the FINAL immediate predecessor
-    (= max emitted ref per (bucket, media), since gap-filling only
-    moves a predecessor UP) — verifying in-processor would pin the
-    check to a predecessor a later batch may displace. Bit-identical
-    to the ordered twin for any arrival order. State bound as in the
-    text twin: unbounded under this fixture's unbounded disorder
-    (timeMode None); production sweep = the bounded-disorder variant's
-    watermark - horizon - D rule (dedup/dedup.py)."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-    mask = (1 << chunk_bits) - 1
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class SortedSigWindow(StatefulProcessor):
-        """chunk_val -> sorted (media_id, sig) window (parallel arrays)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._w = handle.getMapState(
-                "window",
-                "chunk_val bigint",
-                "ids array<bigint>, sigs array<bigint>",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            c = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "c": [],
-                "chunk_val": [],
-                "media_id": [],
-                "sig": [],
-                "ref_id": [],
-                "ref_sig": [],
-            }
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                new = {
-                    int(m): int(d)
-                    for m, d in zip(grp["media_id"], grp["sig"])
-                }
-                cur = self._w.getValue((cv,))
-                window = dict(new)
-                if cur is not None:
-                    window.update(
-                        {int(i): int(s) for i, s in zip(cur[0], cur[1])}
-                    )
-                merged = sorted(window)
-                for p, s in zip(merged, merged[1:]):
-                    if (p in new or s in new) and s - p <= horizon:
-                        out["c"].append(c)
-                        out["chunk_val"].append(cv)
-                        out["media_id"].append(s)
-                        out["sig"].append(window[s])
-                        out["ref_id"].append(p)
-                        out["ref_sig"].append(window[p])
-                self._w.updateValue(
-                    (cv,), (merged, [window[i] for i in merged])
-                )
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="chunk_ttl_unord_")
-    try:
-        spool_roundrobin_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            sig_stream(stream.repartition(par))
-            .select(
-                "media_id",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=SortedSigWindow(),
-            outputStructType=(
-                "c int, chunk_val bigint, media_id bigint, sig bigint, "
-                "ref_id bigint, ref_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        # reconcile: final immediate predecessor per (bucket, media) =
-        # max emitted (ref_id, ref_sig); Hamming verify on the read-back
-        agg = sink.groupBy("c", "chunk_val", "media_id", "sig").agg(
-            F.max(F.struct("ref_id", "ref_sig")).alias("r")
-        )
-        hamming = F.bit_count(F.col("sig").bitwiseXOR(F.col("r.ref_sig")))
-        res = (
-            agg.where(hamming <= radius)
-            .select(
-                "media_id",
-                F.col("r.ref_id").alias("ref_id"),
-                hamming.cast("int").alias("hamming"),
-            )
-            .distinct()
-        )
-        rows = res.collect()
-        out = spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def stream_media_phash_ttl_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Disorder-tolerant IMAGE TTL dedup (see
-    _chunk_ttl_unordered_stream)."""
-    return _chunk_ttl_unordered_stream(
-        spark,
-        phash_media_table(spark, sf_dir),
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-    )
-
-
-def stream_media_audio_ttl_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Disorder-tolerant AUDIO TTL dedup (see
-    _chunk_ttl_unordered_stream)."""
-    return _chunk_ttl_unordered_stream(
-        spark,
-        fp_audio_table(spark, sf_dir),
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-    )
-
-
-def stream_media_video_ttl_dedup_unordered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HORIZON-BOUNDED VIDEO dedup under CROSS-PARTITION DISORDER — the
-    frame-signature instance of the sorted-window TTL: MapState keeps
-    the sorted clip-id window per frame signature, each batch emits
-    adjacent within-horizon (pred, clip) pairs with a new endpoint,
-    and the read-back reconciles each (signature, clip)'s final
-    predecessor as max emitted ref before applying the
-    >= 8-shared-DISTINCT-frames pair threshold — bit-identical to the
-    ordered video TTL twin under the same order-free oracle."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    src = fp_video_table(spark, sf_dir)
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class SortedIdWindow(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._w = handle.getMapState(
-                "window", "frame_sig bigint", "ids array<bigint>"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out: dict[str, list] = {
-                "media_id": [],
-                "ref_id": [],
-                "frame_sig": [],
-            }
-            for sig, grp in pdf.groupby("frame_sig", sort=True):
-                sig = int(sig)
-                new = {int(m) for m in grp["media_id"]}
-                cur = self._w.getValue((sig,))
-                merged = sorted(
-                    new.union(int(x) for x in cur[0])
-                ) if cur is not None else sorted(new)
-                for p, s in zip(merged, merged[1:]):
-                    if (p in new or s in new) and s - p <= horizon:
-                        out["media_id"].append(s)
-                        out["ref_id"].append(p)
-                        out["frame_sig"].append(sig)
-                self._w.updateValue((sig,), (merged,))
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="vfp_ttl_unord_")
-    try:
-        spool_roundrobin_batches(src, "media_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        sigs = (
-            video_frame_signatures(stream.repartition(par))
-            .select("media_id", "frame_sig")
-            .withColumn("pfx", F.pmod(F.col("frame_sig"), F.lit(64)))
-        )
-        hits = sigs.groupBy("pfx").transformWithStateInPandas(
-            statefulProcessor=SortedIdWindow(),
-            outputStructType=(
-                "media_id bigint, ref_id bigint, frame_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("frame_sig", "media_id")
-            .agg(F.max("ref_id").alias("ref_id"))
-            .groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _chunk_ttl_bounded_stream(
-    spark: SparkSession,
-    src: DataFrame,
-    sig_stream,
-    sig_col: str,
-    n_chunks: int,
-    chunk_bits: int,
-    radius: int,
-) -> DataFrame:
-    """HORIZON-BOUNDED media dedup under BOUNDED disorder with the
-    WATERMARK-SWEPT state bound — the media twin of
-    stream_text_minhash_ttl_dedup_bounded_disorder, closing the same
-    state-bound gap for the chunk-LSH modalities that the unordered
-    variants (timeMode=None, fixture-only worst case) leave open: a
-    block-reversed spool provides the bounded-delay contract (bound D
-    feeds the watermark delay), the processor keeps the sorted
-    (media_id, sig) window per chunk bucket, and event-time timers
-    sweep window entries below watermark - horizon (the watermark
-    already runs D behind). The eviction-safety argument is the text
-    twin's verbatim: an evicted id can never be a future pair's ref
-    (any future arrival is above the watermark, hence > horizon away)
-    and no false adjacency forms across an evicted gap (a late arrival
-    below an evicted id would be below the watermark — contradiction).
-    Emission, max-ref read-back reconciliation, Hamming verify, and the
-    oracle are the unordered twin's verbatim; state per bucket is
-    bounded by horizon + D of event time."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_block_reversed_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-    mask = (1 << chunk_bits) - 1
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    tmp = tempfile.mkdtemp(prefix="chunk_ttl_bounded_")
-    try:
-        # r16: the horizon agg above already computed the exact bounds —
-        # pass them so the payload synthesis runs once (VERDICT r15 #5)
-        disorder_bound = spool_block_reversed_batches(
-            src, "media_id", tmp, bounds=(lo, hi)
-        )
-
-        class SweptSigWindow(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._h = handle
-                self._w = handle.getMapState(
-                    "window",
-                    "chunk_val bigint",
-                    "ids array<bigint>, sigs array<bigint>",
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                c = int(key[0])
-                pdf = pd.concat(list(rows), ignore_index=True)
-                out: dict[str, list] = {
-                    "c": [],
-                    "chunk_val": [],
-                    "media_id": [],
-                    "sig": [],
-                    "ref_id": [],
-                    "ref_sig": [],
-                }
-                for cv, grp in pdf.groupby("chunk_val", sort=True):
-                    cv = int(cv)
-                    new = {
-                        int(m): int(d)
-                        for m, d in zip(grp["media_id"], grp["sig"])
-                    }
-                    cur = self._w.getValue((cv,))
-                    window = dict(new)
-                    if cur is not None:
-                        window.update(
-                            {int(i): int(s) for i, s in zip(cur[0], cur[1])}
-                        )
-                    merged = sorted(window)
-                    for p, s in zip(merged, merged[1:]):
-                        if (p in new or s in new) and s - p <= horizon:
-                            out["c"].append(c)
-                            out["chunk_val"].append(cv)
-                            out["media_id"].append(s)
-                            out["sig"].append(window[s])
-                            out["ref_id"].append(p)
-                            out["ref_sig"].append(window[p])
-                    self._w.updateValue(
-                        (cv,), (merged, [window[i] for i in merged])
-                    )
-                # watermark + 1 ms, never deleted — the registration
-                # that actually fires mid-stream (see the text twin)
-                self._h.registerTimer(
-                    timerValues.getCurrentWatermarkInMs() + 1
-                )
-                if out["media_id"]:
-                    yield pd.DataFrame(out)
-
-            def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-                wm_ms = timerValues.getCurrentWatermarkInMs()
-                stale = []
-                for k_, v_ in self._w.iterator():
-                    pairs = [
-                        (int(i), int(s)) for i, s in zip(v_[0], v_[1])
-                    ]
-                    keep = [
-                        (i, s)
-                        for i, s in pairs
-                        if (_MEDIA_TTL_TS_BASE + i + horizon) * 1000 >= wm_ms
-                    ]
-                    if len(keep) != len(pairs):
-                        stale.append((k_[0], keep))
-                for cv, keep in stale:
-                    if keep:
-                        self._w.updateValue(
-                            (cv,),
-                            ([i for i, _ in keep], [s for _, s in keep]),
-                        )
-                    else:
-                        self._w.removeKey((cv,))
-                return iter(())
-
-            def close(self) -> None:
-                pass
-
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        chunks = (
-            sig_stream(stream.repartition(par))
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(_MEDIA_TTL_TS_BASE) + F.col("media_id")
-                ),
-            )
-            .withWatermark("ts", f"{disorder_bound} seconds")
-            .select(
-                "media_id",
-                "ts",
-                F.col(sig_col).alias("sig"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_chunks - 1))
-                ).alias("c"),
-            )
-            .withColumn(
-                "chunk_val",
-                F.expr(f"shiftright(sig, c * {chunk_bits})")
-                .bitwiseAND(F.lit(mask))
-                .cast("bigint"),
-            )
-            .withColumn("pfx", F.col("chunk_val") % 16)
-        )
-        hits = chunks.groupBy("c", "pfx").transformWithStateInPandas(
-            statefulProcessor=SweptSigWindow(),
-            outputStructType=(
-                "c int, chunk_val bigint, media_id bigint, sig bigint, "
-                "ref_id bigint, ref_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = sink.groupBy("c", "chunk_val", "media_id", "sig").agg(
-            F.max(F.struct("ref_id", "ref_sig")).alias("r")
-        )
-        hamming = F.bit_count(F.col("sig").bitwiseXOR(F.col("r.ref_sig")))
-        res = (
-            agg.where(hamming <= radius)
-            .select(
-                "media_id",
-                F.col("r.ref_id").alias("ref_id"),
-                hamming.cast("int").alias("hamming"),
-            )
-            .distinct()
-        )
-        rows = res.collect()
-        out = spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def stream_media_phash_ttl_dedup_bounded_disorder(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bounded-disorder IMAGE TTL dedup (see _chunk_ttl_bounded_stream)."""
-    return _chunk_ttl_bounded_stream(
-        spark,
-        phash_media_table(spark, sf_dir),
-        perceptual_hashes,
-        "dhash",
-        PHASH_CHUNKS,
-        14,
-        PHASH_RADIUS,
-    )
-
-
-def stream_media_audio_ttl_dedup_bounded_disorder(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bounded-disorder AUDIO TTL dedup (see _chunk_ttl_bounded_stream)."""
-    return _chunk_ttl_bounded_stream(
-        spark,
-        fp_audio_table(spark, sf_dir),
-        audio_fingerprints,
-        "fingerprint",
-        AFP_CHUNKS,
-        12,
-        AFP_RADIUS,
-    )
-
-
-def stream_media_video_ttl_dedup_bounded_disorder(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bounded-disorder VIDEO TTL dedup — the frame-signature instance
-    of the watermark-swept sorted window: per frame signature the clip-id
-    window is swept below watermark - horizon; adjacency emission,
-    max-ref reconciliation and the shared-frames threshold are the
-    unordered twin's verbatim."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_block_reversed_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    src = fp_video_table(spark, sf_dir)
-    lo, hi = src.agg(F.min("media_id"), F.max("media_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    tmp = tempfile.mkdtemp(prefix="vfp_ttl_bounded_")
-    try:
-        # r16: the horizon agg above already computed the exact bounds —
-        # pass them so the payload synthesis runs once (VERDICT r15 #5)
-        disorder_bound = spool_block_reversed_batches(
-            src, "media_id", tmp, bounds=(lo, hi)
-        )
-
-        class SweptIdWindow(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._h = handle
-                self._w = handle.getMapState(
-                    "window", "frame_sig bigint", "ids array<bigint>"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                pdf = pd.concat(list(rows), ignore_index=True)
-                out: dict[str, list] = {
-                    "media_id": [],
-                    "ref_id": [],
-                    "frame_sig": [],
-                }
-                for sig, grp in pdf.groupby("frame_sig", sort=True):
-                    sig = int(sig)
-                    new = {int(m) for m in grp["media_id"]}
-                    cur = self._w.getValue((sig,))
-                    merged = sorted(
-                        new.union(int(x) for x in cur[0])
-                    ) if cur is not None else sorted(new)
-                    for p, s in zip(merged, merged[1:]):
-                        if (p in new or s in new) and s - p <= horizon:
-                            out["media_id"].append(s)
-                            out["ref_id"].append(p)
-                            out["frame_sig"].append(sig)
-                    self._w.updateValue((sig,), (merged,))
-                self._h.registerTimer(
-                    timerValues.getCurrentWatermarkInMs() + 1
-                )
-                if out["media_id"]:
-                    yield pd.DataFrame(out)
-
-            def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-                wm_ms = timerValues.getCurrentWatermarkInMs()
-                stale = []
-                for k_, v_ in self._w.iterator():
-                    ids = [int(x) for x in v_[0]]
-                    keep = [
-                        i
-                        for i in ids
-                        if (_MEDIA_TTL_TS_BASE + i + horizon) * 1000 >= wm_ms
-                    ]
-                    if len(keep) != len(ids):
-                        stale.append((k_[0], keep))
-                for sig, keep in stale:
-                    if keep:
-                        self._w.updateValue((sig,), (keep,))
-                    else:
-                        self._w.removeKey((sig,))
-                return iter(())
-
-            def close(self) -> None:
-                pass
-
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        sigs = (
-            video_frame_signatures(stream.repartition(par))
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(_MEDIA_TTL_TS_BASE) + F.col("media_id")
-                ),
-            )
-            .withWatermark("ts", f"{disorder_bound} seconds")
-            .select("media_id", "ts", "frame_sig")
-            .withColumn("pfx", F.pmod(F.col("frame_sig"), F.lit(64)))
-        )
-        hits = sigs.groupBy("pfx").transformWithStateInPandas(
-            statefulProcessor=SweptIdWindow(),
-            outputStructType=(
-                "media_id bigint, ref_id bigint, frame_sig bigint"
-            ),
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("frame_sig", "media_id")
-            .agg(F.max("ref_id").alias("ref_id"))
-            .groupBy("media_id", "ref_id")
-            .agg(F.count_distinct("frame_sig").alias("n_shared"))
-            .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 @query(

@@ -266,6 +266,8 @@ def spool_block_reversed_batches(
     n_batches: int = 6,
     block: int | None = None,
     bounds: "tuple[int, int] | None" = None,
+    synth=None,
+    synth_id_col: "str | None" = None,
 ) -> int:
     """BOUNDED-disorder spool — the production middle ground between
     ``spool_ordered_batches`` (no disorder) and
@@ -279,16 +281,19 @@ def spool_block_reversed_batches(
     watermark delay of D seconds never drops a row (max lateness is
     D - 1 s), which is exactly the bounded-delay contract a real Kafka
     consumer group provides and the watermark-swept TTL dedup's state
-    bound relies on."""
-    # r16: callers that already know the exact id bounds (the TTL media
-    # streams compute them for their horizon) pass them in, so the
-    # payload-synthesis plan runs once, in the bucketed write only
+    bound relies on.
+
+    ``bounds`` and ``synth``/``synth_id_col`` work as in
+    spool_ordered_batches: exact id bounds from a cheaper relation, and
+    a payload builder run after the shuffle (requires ``bounds``)."""
+    if synth is not None and bounds is None:
+        raise ValueError("spool_block_reversed_batches: synth requires bounds")
     if bounds is not None:
         lo, hi = bounds
         return _spool_block_reversed_cuts(
-            df, id_col, spool_dir, n_batches, block, lo, hi
+            df, id_col, spool_dir, n_batches, block, lo, hi, synth, synth_id_col
         )
-    # r15: cache across the bounds agg + bucketed write, as in
+    # cache across the bounds agg + bucketed write, as in
     # spool_ordered_batches
     df = df.persist()
     try:
@@ -300,18 +305,9 @@ def spool_block_reversed_batches(
         df.unpersist()
 
 
-def _spool_block_reversed_cuts(
-    df: DataFrame,
-    id_col: str,
-    spool_dir: str,
-    n_batches: int,
-    block: "int | None",
-    lo: int,
-    hi: int,
-) -> int:
-    n = hi - lo + 1
-    if block is None:
-        block = max(2, n // (2 * n_batches))
+def _block_reversed_bucket(
+    id_col: str, lo: int, n: int, n_batches: int, block: int
+) -> "F.Column":
     idn = F.col(id_col) - F.lit(lo)
     ak = (
         idn
@@ -321,7 +317,35 @@ def _spool_block_reversed_cuts(
     b = F.lit(0)
     for q in range(1, n_batches):
         b = b + (ak >= F.lit(n * q // n_batches)).cast("int")
-    _spool_bucketed(df, b, spool_dir, n_batches)
+    return b
+
+
+def _spool_block_reversed_cuts(
+    df: DataFrame,
+    id_col: str,
+    spool_dir: str,
+    n_batches: int,
+    block: "int | None",
+    lo: int,
+    hi: int,
+    synth=None,
+    synth_id_col: "str | None" = None,
+) -> int:
+    n = hi - lo + 1
+    if block is None:
+        block = max(2, n // (2 * n_batches))
+    _spool_bucketed(
+        df,
+        _block_reversed_bucket(id_col, lo, n, n_batches, block),
+        spool_dir,
+        n_batches,
+        synth=synth,
+        synth_bucket=(
+            _block_reversed_bucket(synth_id_col, lo, n, n_batches, block)
+            if synth is not None
+            else None
+        ),
+    )
     return block
 
 

@@ -1059,14 +1059,14 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "watermark - horizon by event-time timers, Hamming verify on "
         "the max-ref-reconciled read-back; eviction safety per the text "
         "twin's proof, oracle the ordered twin's verbatim (see "
-        "_chunk_ttl_bounded_stream in multimodal/phash.py).",
+        "_media_state_stream in multimodal/phash.py).",
     )(stream_media_phash_ttl_dedup_bounded_disorder)
     query(
         "stream_media_audio_ttl_dedup_bounded_disorder",
         oracle=_AFP_TTL_DEDUP_ORACLE,
         doc="Horizon-bounded AUDIO dedup under BOUNDED disorder — the "
         "acoustic-fingerprint instance of the watermark-swept sorted "
-        "window (see _chunk_ttl_bounded_stream in multimodal/phash.py).",
+        "window (see _media_state_stream in multimodal/phash.py).",
     )(stream_media_audio_ttl_dedup_bounded_disorder)
     query(
         "stream_media_video_ttl_dedup_bounded_disorder",
@@ -1088,7 +1088,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "merge, Hamming verify moved to the read-back against the "
         "max-ref-reconciled final predecessor; order-free TTL semantics "
         "under the ordered twin's oracle VERBATIM (see "
-        "_chunk_ttl_unordered_stream in multimodal/phash.py).",
+        "_media_state_stream in multimodal/phash.py).",
     )(stream_media_phash_ttl_dedup_unordered)
     query(
         "stream_media_audio_ttl_dedup_unordered",
@@ -1096,7 +1096,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded AUDIO dedup under cross-partition disorder "
         "— the acoustic-fingerprint instance of the sorted-window TTL "
         "with the 48-bit Hamming verify on the reconciled read-back "
-        "(see _chunk_ttl_unordered_stream in multimodal/phash.py).",
+        "(see _media_state_stream in multimodal/phash.py).",
     )(stream_media_audio_ttl_dedup_unordered)
     query(
         "stream_media_video_ttl_dedup_unordered",

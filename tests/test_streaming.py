@@ -1110,8 +1110,12 @@ def test_block_reversed_spool_bounds_disorder(spark, tmp_path):
     displacement bound holds — no id in batch j exceeds any id of a
     LATER batch by more than D - 1, where D is the returned bound. The
     watermark-delay = D guarantee of the swept TTL queries rests on
-    exactly this."""
+    exactly this. The second input spools ids only, with exact bounds,
+    and synthesises its rows after the shuffle; it must land the same
+    batches."""
     import os
+
+    from pyspark.sql import functions as F
 
     from spark_streaming_twitter_spark.streaming.harness import (
         spool_block_reversed_batches,
@@ -1121,30 +1125,55 @@ def test_block_reversed_spool_bounds_disorder(spark, tmp_path):
     df = spark.createDataFrame(
         [(i + 7, f"doc {i}") for i in range(n)], "doc_id long, text string"
     )
-    spool = str(tmp_path / "spool")
-    os.makedirs(spool)
-    d = spool_block_reversed_batches(df, "doc_id", spool, n_batches=6)
-    batches = []
-    for i in range(6):
-        path = os.path.join(spool, f"batch_{i}.parquet")
-        batches.append(
-            sorted(r.doc_id for r in spark.read.parquet(path).collect())
+    ids = spark.range(7, n + 7).select(F.col("id").alias("doc_id"))
+
+    def synth(d):
+        return d.select(
+            F.col("doc_id").alias("item_id"),
+            F.concat(F.lit("doc "), (F.col("doc_id") - 7).cast("string")).alias("text"),
         )
-    delivered = sorted(x for b in batches for x in b)
-    assert delivered == [i + 7 for i in range(n)]  # exactly once
-    # genuine cross-batch disorder exists
-    assert any(
-        max(batches[i]) > min(batches[j])
-        for i in range(6)
-        for j in range(i + 1, 6)
-        if batches[i] and batches[j]
-    )
-    # and it is bounded by D: everything in earlier batches is
-    # <= x + D - 1 for every x in a later batch
-    for j in range(6):
-        for i in range(j):
-            if batches[i] and batches[j]:
-                assert max(batches[i]) <= min(batches[j]) + d - 1, (i, j)
+
+    def spool_rows(out):
+        return spool_block_reversed_batches(df, "doc_id", out, n_batches=6)
+
+    def spool_ids(out, bounds=(7, n + 6)):
+        return spool_block_reversed_batches(
+            ids, "doc_id", out, n_batches=6, bounds=bounds,
+            synth=synth, synth_id_col="item_id",
+        )
+
+    with pytest.raises(ValueError):
+        spool_ids(str(tmp_path / "unbounded"), bounds=None)
+    runs = {}
+    for name, id_col, spool_fn in (
+        ("rows", "doc_id", spool_rows),
+        ("synth", "item_id", spool_ids),
+    ):
+        spool = str(tmp_path / name)
+        os.makedirs(spool)
+        d = spool_fn(spool)
+        batches = []
+        for i in range(6):
+            rows = spark.read.parquet(os.path.join(spool, f"batch_{i}.parquet"))
+            assert rows.columns == [id_col, "text"], name
+            batches.append(sorted(r[id_col] for r in rows.collect()))
+        runs[name] = (d, batches)
+        delivered = sorted(x for b in batches for x in b)
+        assert delivered == [i + 7 for i in range(n)]  # exactly once
+        # genuine cross-batch disorder exists
+        assert any(
+            max(batches[i]) > min(batches[j])
+            for i in range(6)
+            for j in range(i + 1, 6)
+            if batches[i] and batches[j]
+        )
+        # and it is bounded by D: everything in earlier batches is
+        # <= x + D - 1 for every x in a later batch
+        for j in range(6):
+            for i in range(j):
+                if batches[i] and batches[j]:
+                    assert max(batches[i]) <= min(batches[j]) + d - 1, (i, j)
+    assert runs["synth"] == runs["rows"]
 
 
 def test_scoped_shuffle_partitions_concurrent_and_nested(spark):
