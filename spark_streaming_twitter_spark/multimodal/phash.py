@@ -31,16 +31,18 @@ duplicate-group size, never corpus-quadratic (same argument as
 dedup_simhash_pairs; for adversarial buckets the dedup.lsh_candidate_pairs
 cap pattern applies unchanged).
 
-Streaming structure: every registered media stream binds one modality
+Streaming structure: every registered media stream binds modalities
 to one shell. ``_MEDIA_KINDS``, indexed by media_id % 3 (0 image,
 1 audio, 2 video), holds each modality's payload builder, decoder, key
-builder (media_id, sig, c, chunk_val), pair rule (Hamming radius, or
-shared frames for video) and keeper prober. The shells are
-``_media_ingest_stream`` (probe a static index of canonical items),
-``_media_state_stream`` (self and TTL dedup: one stateful processor;
-``_STRATEGIES`` picks its per-bucket update rule from bucket_rules.py,
-the spool order, the read-back reconciliation and the event-time sweep)
-and ``_media_keeper_stream`` (the keeper protocol, streaming/keeper.py).
+builder (media_id, sig, c, chunk_val) and pair rule (Hamming radius, or
+shared frames for video). The shells are ``_media_ingest_stream``
+(probe a static index of canonical items), ``_media_state_stream``
+(self and TTL dedup: one stateful processor; ``_STRATEGIES`` picks its
+per-bucket update rule from bucket_rules.py, the spool order, the
+read-back reconciliation and the event-time sweep) and
+``_media_keeper_stream`` (the keeper protocol, streaming/keeper.py,
+over modality-tagged keys: one modality, or all three in one stream
+for the multimodal flagship and the curation report).
 
 Reference parity: the reference engine (TwitterDatasetTrendingHashtag.java)
 has no image operators; this extends the mandated training-data-pipeline
@@ -117,34 +119,31 @@ def phash_media_from_ids(docs: DataFrame) -> DataFrame:
     )
 
 
-def media_id_bounds(
-    spark: SparkSession, sf_dir: str, mod3: int
-) -> "tuple[int, int]":
-    """Exact (min, max) media_id of a modality's fixture slice, computed
-    from the documents ID SCAN — not from the synthesized payload frame.
-    media_id IS doc_id for every payload builder (identity mapInPandas),
-    so these are bitwise the bounds the spool's own agg would compute,
-    without paying a full payload-synthesis pass for them (VERDICT r15
-    next #5; guide §8)."""
-    row = (
+def media_id_bounds(spark: SparkSession, sf_dir: str) -> tuple:
+    """Exact (min, max) media_id of each modality's fixture slice,
+    indexed by mod3 (None for an empty slice), from ONE grouped
+    aggregate over the documents ID SCAN — not from the synthesized
+    payload frame. media_id IS doc_id for every payload builder
+    (identity mapInPandas), so these are bitwise the bounds the spool's
+    own agg would compute, without a payload-synthesis pass (guide §8)."""
+    rows = (
         table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == mod3)
+        .groupBy((F.col("doc_id") % 3).alias("m"))
         .agg(F.min("doc_id"), F.max("doc_id"))
-        .first()
+        .collect()
     )
-    return row[0], row[1]
+    got = {m: (lo, hi) for m, lo, hi in rows}
+    return tuple(got.get(m) for m in range(3))
 
 
-def media_ids(spark: SparkSession, sf_dir: str, mod3: int) -> DataFrame:
-    """A modality's fixture id slice (doc_id % 3 == mod3) — the NARROW
-    frame the spool shuffles when payload synthesis runs post-shuffle
-    (guide §8); no widen: the spool's bucket repartition re-partitions
-    it anyway."""
+def media_ids(spark: SparkSession, sf_dir: str, *mods: int) -> DataFrame:
+    """The fixture ids of the modalities ``mods`` (doc_id % 3) — the
+    NARROW frame a spool shuffles (guide §8); no widen: the spool's
+    bucket repartition re-partitions it anyway."""
     return (
         table(spark, sf_dir, "documents")
         .select("doc_id")
-        .where(F.col("doc_id") % 3 == mod3)
+        .where((F.col("doc_id") % 3).isin(*mods))
     )
 
 
@@ -753,16 +752,13 @@ class _MediaKind:
     chunk_val). A candidate pair is verified by Hamming ``radius`` on
     the full signatures or, where radius is None (video), by at least
     VIDEO_MIN_SHARED distinct shared keys. ``max_occ`` caps a static
-    index key's postings; ``prober`` and ``keeper_cols`` bind the
-    keeper protocol."""
+    index key's postings."""
 
     synth: Callable[[DataFrame], DataFrame]
     decode: Callable[[DataFrame], DataFrame]
     keys: Callable[[DataFrame], DataFrame]
     n_chunks: int
     radius: int | None
-    prober: Callable
-    keeper_cols: tuple[str, ...] = ("media_id", "sig", "c", "chunk_val")
     max_occ: int | None = None
 
     def key_frame(self, payloads: DataFrame) -> DataFrame:
@@ -796,8 +792,7 @@ def _frame_keys(sigs: DataFrame) -> DataFrame:
     )
 
 
-# indexed by mod3 = media_id % 3; the probers resolve their factory at
-# call time, so a wrapped factory (perfbench) is seen
+# indexed by mod3 = media_id % 3
 _MEDIA_KINDS = (
     _MediaKind(
         phash_media_from_ids,
@@ -805,7 +800,6 @@ _MEDIA_KINDS = (
         lambda s: chunk_key_frame(s, "dhash", PHASH_CHUNKS, 14),
         PHASH_CHUNKS,
         PHASH_RADIUS,
-        lambda spark, d: make_chunk_keeper_prober(spark, d, PHASH_RADIUS),
     ),
     _MediaKind(
         fp_audio_from_ids,
@@ -813,7 +807,6 @@ _MEDIA_KINDS = (
         lambda s: chunk_key_frame(s, "fingerprint", AFP_CHUNKS, 12),
         AFP_CHUNKS,
         AFP_RADIUS,
-        lambda spark, d: make_chunk_keeper_prober(spark, d, AFP_RADIUS),
     ),
     _MediaKind(
         fp_video_from_ids,
@@ -821,8 +814,6 @@ _MEDIA_KINDS = (
         _frame_keys,
         1,
         None,
-        lambda spark, d: make_video_keeper_prober(spark, d),
-        keeper_cols=("media_id", "chunk_val AS frame_sig"),
         max_occ=VIDEO_SIG_MAX_OCC,
     ),
 )
@@ -838,11 +829,14 @@ _STRATEGIES = {
 }
 
 
-def _read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """A media spool (batch_0.parquet ...) as a payload stream: one file
-    per trigger, in spool order, spread over the cluster."""
+def _read_spool(
+    spark: SparkSession, spool_dir: str, schema: str = "media_id long, payload binary"
+) -> DataFrame:
+    """A media spool (batch_0.parquet ...) as a stream, payloads by
+    default: one file per trigger, in spool order, spread over the
+    cluster."""
     return (
-        spark.readStream.schema("media_id long, payload binary")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .option("pathGlobFilter", "batch_*.parquet")
@@ -890,7 +884,7 @@ def _media_ingest_stream(spark: SparkSession, sf_dir: str, mod3: int) -> DataFra
     tmp = tempfile.mkdtemp(prefix="media_ingest_")
     refs = None
     try:
-        bounds = media_id_bounds(spark, sf_dir, mod3)
+        bounds = media_id_bounds(spark, sf_dir)[mod3]
         _spool_media(spark, sf_dir, mod3, tmp, "ordered", bounds)
         canon = media_ids(spark, sf_dir, mod3).where(F.col("doc_id") % 24 == mod3)
         refs = kind.key_frame(kind.synth(canon)).select(
@@ -961,7 +955,7 @@ def _media_state_stream(
     _forward_vendored_protobuf_to_workers(spark)
     kind = _MEDIA_KINDS[mod3]
     rule, order, reconcile, timed = _STRATEGIES[strategy]
-    lo, hi = bounds = media_id_bounds(spark, sf_dir, mod3)
+    lo, hi = bounds = media_id_bounds(spark, sf_dir)[mod3]
     horizon = (hi - lo + 1) // 2
     radius = kind.radius if reconcile is None else None
 
@@ -1410,7 +1404,9 @@ def _phash_keeper_oracle(batch_label: str | None = None) -> str:
 def make_chunk_keeper_prober(spark: SparkSession, store_dir: str, radius: int):
     """The chunk-LSH keeper prober (image dHash, audio fingerprint): a
     chunk-bucket match is a hit only when the full signatures are within
-    ``radius`` Hamming; the c=0 slice holds one row per item."""
+    ``radius`` Hamming; the c=0 slice holds one row per item. The
+    streams probe with make_media_keeper_prober; this per-modality form
+    is the reference its decisions are tested against."""
     return make_keeper_prober(
         spark, store_dir, "media_id", ["c", "chunk_val"],
         entry=("sig", "ref_sig"),
@@ -1422,7 +1418,8 @@ def make_chunk_keeper_prober(spark: SparkSession, store_dir: str, radius: int):
 def make_video_keeper_prober(spark: SparkSession, store_dir: str):
     """The video keeper prober (frame-signature containment): a clip drops
     when it shares >= VIDEO_MIN_SHARED distinct frames with ANY kept
-    clip; n_index_hits counts such clips."""
+    clip; n_index_hits counts such clips. Like make_chunk_keeper_prober,
+    the per-modality reference for make_media_keeper_prober."""
     return make_keeper_prober(
         spark, store_dir, "media_id", ["frame_sig"],
         entry=("media_id", "kept_id"), min_shared=F.lit(VIDEO_MIN_SHARED),
@@ -1487,22 +1484,25 @@ def make_media_keeper_prober(spark: SparkSession, store_dir: str):
 
 
 def _media_keeper_stream(
-    spark: SparkSession, sf_dir: str, mod3: int, **opts
+    spark: SparkSession, sf_dir: str, *mods: int, **opts
 ) -> DataFrame:
-    """The keeper stream over one media kind (``mod3``: 0 image, 1 audio,
-    2 video); ``opts`` pass through to keeper_stream. The spool shuffles
-    ids only and the payload is synthesized after the exchange, with the
-    ordered spool's bounds from the id scan, not a payload pass."""
-    kind = _MEDIA_KINDS[mod3]
+    """The keeper stream over the media kinds ``mods`` (0 image, 1 audio,
+    2 video: one, or all three); ``opts`` pass through to keeper_stream.
+    The spool holds ids only; each trigger builds its modality-tagged
+    keys in one Python pass and probes one tagged store. An ordered
+    spool cuts each modality on its own id range (media_id_bounds), so
+    an id's epoch is the one its modality's standalone oracle replays,
+    and the kinds never hit each other's keys."""
     if not opts.get("roundrobin"):
-        opts["bounds"] = media_id_bounds(spark, sf_dir, mod3)
+        opts["bounds"] = media_id_bounds(spark, sf_dir)
     return keeper_stream(
         spark,
         "media_id",
-        media_ids(spark, sf_dir, mod3),
-        lambda d: kind.key_frame(_read_spool(spark, d)).selectExpr(*kind.keeper_cols),
-        lambda store_dir: kind.prober(spark, store_dir),
-        synth=kind.synth,
+        media_ids(spark, sf_dir, *mods),
+        lambda d: media_key_frame(
+            media_keys_from_ids(_read_spool(spark, d, "doc_id long"))
+        ),
+        lambda store_dir: make_media_keeper_prober(spark, store_dir),
         **opts,
     )
 
@@ -2317,60 +2317,47 @@ SELECT 'caption',
     "drift from the registered online detectors — one wrong keep/drop "
     "decision in any modality's stream flips a count here. This is "
     "the per-run observability table a 100 TB streaming ingest logs: "
-    "each count is an O(ledger) aggregate over the executor-written "
-    "parquet decision ledgers, and the three modality streams are "
-    "independent (parallel queries against one source at scale).",
+    "ONE keeper stream decides all three modalities (modality-tagged "
+    "keys, one kept store, each modality cut on its own id range), and "
+    "the three modality rows are one grouped O(ledger) aggregate over "
+    "its decision ledger.",
 )
 def stream_media_curation_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _media_curation_report_impl(
-        spark,
-        sf_dir,
-        stream_media_phash_keeper_dedup,
-        stream_media_audio_keeper_dedup,
-        stream_media_video_keeper_dedup,
-    )
+    return _media_curation_report_impl(spark, sf_dir, roundrobin=False)
 
 
 def _media_curation_report_impl(
-    spark: SparkSession, sf_dir: str, ik_fn, ak_fn, vk_fn
+    spark: SparkSession, sf_dir: str, roundrobin: bool
 ) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    # independent streams (disjoint media subsets, separate
-    # spools/indices/ledgers): run concurrently, wall = max not sum —
-    # same scheduling win as the flagship's keeper phase
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fi = pool.submit(ik_fn, spark, sf_dir)
-        fa = pool.submit(ak_fn, spark, sf_dir)
-        fv = pool.submit(vk_fn, spark, sf_dir)
-        ik, ak, vk = fi.result(), fa.result(), fv.result()
-
-    def kind_row(kind: str, ledger: DataFrame):
-        agg = ledger.agg(
+    ledger = _media_keeper_stream(spark, sf_dir, 0, 1, 2, roundrobin=roundrobin)
+    per_kind = {
+        r["m"]: (r["n"], r["nd"], r["nh"])
+        for r in ledger.groupBy((F.col("media_id") % 3).alias("m"))
+        .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((~F.col("kept")).cast("bigint")).alias("nd"),
             F.sum("n_index_hits").alias("nh"),
-        ).first()
-        return (kind, agg["n"], agg["nd"], int(agg["nh"] or 0))
-
-    idrops = ik.where(~F.col("kept"))
-    # broadcast the tiny DROP set against the caption scan — the corpus
-    # side never shuffles (same shape as the caption propagation query)
-    cap = docs.join(
-        F.broadcast(idrops), F.col("doc_id") == F.col("media_id")
-    ).agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.sum("n_index_hits").alias("nh"),
-    ).first()
-    rows = [
-        kind_row("image", ik),
-        kind_row("audio", ak),
-        kind_row("video", vk),
-        ("caption", ik.count(), cap["nd"], int(cap["nh"] or 0)),
+        )
+        .collect()
+    }
+    # broadcast the tiny image DROP set against the caption scan — the
+    # corpus side never shuffles (same shape as the caption propagation
+    # query)
+    idrops = ledger.where((F.col("media_id") % 3 == 0) & ~F.col("kept"))
+    cap = (
+        table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .join(F.broadcast(idrops), F.col("doc_id") == F.col("media_id"))
+        .agg(F.count(F.lit(1)).alias("nd"), F.sum("n_index_hits").alias("nh"))
+        .first()
+    )
+    kinds = [
+        (kind, *per_kind.get(m, (0, 0, 0)))
+        for m, kind in enumerate(("image", "audio", "video"))
     ]
+    rows = kinds + [("caption", kinds[0][1], cap["nd"], cap["nh"] or 0)]
     return spark.createDataFrame(
         rows,
         "kind string, n_streamed bigint, n_dropped bigint, n_hits bigint",
@@ -2393,10 +2380,4 @@ def _media_curation_report_impl(
 def stream_media_curation_report_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _media_curation_report_impl(
-        spark,
-        sf_dir,
-        stream_media_phash_keeper_dedup_unordered,
-        stream_media_audio_keeper_dedup_unordered,
-        stream_media_video_keeper_dedup_unordered,
-    )
+    return _media_curation_report_impl(spark, sf_dir, roundrobin=True)

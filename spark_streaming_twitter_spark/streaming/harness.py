@@ -147,7 +147,7 @@ def spool_ordered_batches(
     id_col: str,
     spool_dir: str,
     n_batches: int = 4,
-    bounds: "tuple[int, int] | None" = None,
+    bounds: "tuple | None" = None,
     synth=None,
     synth_id_col: "str | None" = None,
 ) -> None:
@@ -164,11 +164,13 @@ def spool_ordered_batches(
     the media fixtures synthesize payloads in mapInPandas over an id
     scan, so the id scan's own min/max lets the synthesis run exactly
     once, inside the bucketed write, instead of once more for the
-    bounds agg (VERDICT r15 next #5; guide §8: decide with small rows,
-    move big rows once). The values MUST be the frame's true id min/max
-    — they define the batch cuts the oracles replay.
+    bounds agg (guide §8: decide with small rows, move big rows once).
+    Or one (min, max) per residue class of ``id % len(bounds)``, so
+    each class is cut on its own range (see ordered_cuts). The values
+    MUST be the true id min/max — they define the batch cuts the
+    oracles replay.
 
-    ``synth``/``synth_id_col`` (r16, guide §8): pass the payload BUILDER
+    ``synth``/``synth_id_col`` (guide §8): pass the payload BUILDER
     and its output id column instead of a pre-synthesized ``df`` — the
     bucket shuffle then moves only ids and the builder runs post-shuffle
     in the write pass (see _spool_bucketed). Requires ``bounds`` (the id
@@ -178,25 +180,51 @@ def spool_ordered_batches(
     if synth is not None and bounds is None:
         raise ValueError("spool_ordered_batches: synth requires bounds")
     if bounds is None:
-        # r15 (guide §5): the bounds agg and the bucketed write are two
-        # full evaluations of df's plan — cache it across the two passes
+        # the bounds agg and the bucketed write are two full evaluations
+        # of df's plan — cache it across the two passes
         df = df.persist()
         try:
             lo, hi = df.agg(F.min(id_col), F.max(id_col)).first()
-            _spool_ordered_cuts(df, id_col, spool_dir, n_batches, lo, hi)
+            _spool_ordered_cuts(df, id_col, spool_dir, n_batches, (lo, hi))
         finally:
             df.unpersist()
     else:
-        lo, hi = bounds
         _spool_ordered_cuts(
-            df, id_col, spool_dir, n_batches, lo, hi, synth, synth_id_col
+            df, id_col, spool_dir, n_batches, bounds, synth, synth_id_col
         )
 
 
-def _ordered_bucket(id_col: str, cuts: list) -> "F.Column":
+def ordered_cuts(bounds: tuple, n_batches: int = 4) -> tuple:
+    """The ordered spool's batch cuts, one list per residue class.
+
+    ``bounds`` is the ids' exact (min, max), one class cut on the whole
+    range, or one (min, max) per class of ``id % len(bounds)`` (None
+    for a class with no ids), each class cut on its own range. An id's
+    batch is the number of its class's cuts it exceeds, which is the
+    oracles' ``id <= lo + (hi - lo + 1) * q // n_batches`` ladder."""
+    per_class = (bounds,) if isinstance(bounds[0], int) else bounds
+    return tuple(
+        None
+        if b is None
+        else [b[0] + (b[1] - b[0] + 1) * q // n_batches for q in range(1, n_batches)]
+        for b in per_class
+    )
+
+
+def _ordered_bucket(id_col: str, cuts: tuple) -> "F.Column":
+    def rank(class_cuts: list) -> "F.Column":
+        b = F.lit(0)
+        for cut in class_cuts:
+            b = b + (F.col(id_col) > cut).cast("int")
+        return b
+
+    if len(cuts) == 1:
+        return rank(cuts[0])
+    cls = F.pmod(F.col(id_col), F.lit(len(cuts)))
     b = F.lit(0)
-    for cut in cuts:
-        b = b + (F.col(id_col) > cut).cast("int")
+    for k, class_cuts in enumerate(cuts):
+        if class_cuts is not None:
+            b = F.when(cls == k, rank(class_cuts)).otherwise(b)
     return b
 
 
@@ -205,14 +233,11 @@ def _spool_ordered_cuts(
     id_col: str,
     spool_dir: str,
     n_batches: int,
-    lo: int,
-    hi: int,
+    bounds: tuple,
     synth=None,
     synth_id_col: "str | None" = None,
 ) -> None:
-    cuts = [
-        lo + (hi - lo + 1) * q // n_batches for q in range(1, n_batches)
-    ]
+    cuts = ordered_cuts(bounds, n_batches)
     _spool_bucketed(
         df,
         _ordered_bucket(id_col, cuts),
@@ -349,14 +374,15 @@ def _spool_block_reversed_cuts(
     return block
 
 
-# Concurrent keeper streams (text/corpus.py + multimodal/phash.py run three
-# independent streams through a ThreadPoolExecutor) share ONE session-global
-# spark.sql.shuffle.partitions, so the pin must be set once and restored
-# once across overlapping scopes: an unsynchronized get/set/restore lets a
-# thread capture a sibling's pinned value as "prev" (leaking the pin into
-# every later query) or run its micro-batches at the caller's unpinned
-# value (ADVICE r13). Lock + per-session refcount: the first scope in sets,
-# the last scope out restores, nested/concurrent scopes are no-ops.
+# Registered queries a caller runs on threads of one session (the
+# benchmark warm-up in perfbench/keeper_ingest.py does) share ONE
+# session-global spark.sql.shuffle.partitions, so the pin must be set
+# once and restored once across overlapping scopes: an unsynchronized
+# get/set/restore lets a thread capture a sibling's pinned value as
+# "prev" (leaking the pin into every later query) or run its
+# micro-batches at the caller's unpinned value. Lock + per-session
+# refcount: the first scope in sets, the last scope out restores,
+# nested/concurrent scopes are no-ops.
 _PIN_LOCK = threading.Lock()
 _PIN_STATE: dict[int, list] = {}  # id(session) -> [depth, prev_value]
 
@@ -371,8 +397,8 @@ def _scoped_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
     trigger over kilobyte-scale fixture state. Scope the conf to the query
     (the value is captured at stream start) and restore it after, leaving
     the caller's session untouched. Re-entrant and thread-safe per session:
-    concurrent/nested scopes set once and restore once (ADVICE r13 — the
-    flagship's three overlapped keeper streams race here otherwise).
+    nested scopes, and scopes of queries a caller runs concurrently on
+    threads of one session, set once and restore once.
     """
     key = "spark.sql.shuffle.partitions"
     sk = id(spark)

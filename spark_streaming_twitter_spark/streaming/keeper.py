@@ -10,11 +10,11 @@ same index snapshot.
 One protocol serves every modality. Text MinHash bands, image/audio
 chunk-LSH buckets and video frame signatures differ only in the
 parameters of ``make_keeper_prober``; ``keeper_stream`` is the one
-streaming shell around it. The fused multimodal flagship runs one
-Python pass and one probe per trigger: its keys carry the modality
-``m`` as a key column, with a per-row verify radius and a per-row
-``min_shared``, so a single prober over a single store decides all
-three media kinds (multimodal.phash.make_media_keeper_prober).
+streaming shell around it. Every media keeper runs one Python pass
+and one probe per trigger: its keys carry the modality ``m`` as a key
+column, with a per-row verify radius and a per-row ``min_shared``, so a
+single prober over a single store decides one media kind or all three
+(multimodal.phash.make_media_keeper_prober).
 """
 
 from __future__ import annotations
@@ -172,8 +172,7 @@ def keeper_stream(
     key_stream: Callable[[str], DataFrame],
     make_prober: Callable[[str], Callable[[DataFrame], DataFrame]],
     roundrobin: bool = False,
-    bounds: "tuple[int, int] | None" = None,
-    synth=None,
+    bounds: "tuple | None" = None,
     keep_ledger_dir: "str | None" = None,
     on_report: "Callable[[DataFrame], None] | None" = None,
 ) -> DataFrame:
@@ -182,9 +181,9 @@ def keeper_stream(
     kept).
 
     - The spool is round-robin (``roundrobin``) or by id range, with
-      ``bounds`` the exact id (min, max) when known. ``synth`` builds
-      the payload after the spool's shuffle, so the exchange moves ids
-      only (see streaming.harness.spool_ordered_batches).
+      ``bounds`` the exact id (min, max) when known, or one per residue
+      class to cut each class on its own range (see
+      streaming.harness.spool_ordered_batches).
     - ``key_stream(spool_dir)`` builds the streaming probe-key frame,
       ``make_prober(store_dir)`` the per-trigger prober, and
       ``on_report`` receives each trigger's pinned report.
@@ -214,13 +213,10 @@ def keeper_stream(
     else:
         store_dir = os.path.join(tmp, "store")
     try:
-        synth_opts = {"synth": synth, "synth_id_col": synth and id_col}
         if roundrobin:
-            spool_roundrobin_batches(src, "doc_id", spool_dir, **synth_opts)
+            spool_roundrobin_batches(src, "doc_id", spool_dir)
         else:
-            spool_ordered_batches(
-                src, "doc_id", spool_dir, bounds=bounds, **synth_opts
-            )
+            spool_ordered_batches(src, "doc_id", spool_dir, bounds=bounds)
         prober = make_prober(store_dir)
 
         def trigger(bdf: DataFrame, _epoch_id: int) -> None:

@@ -28,6 +28,8 @@ Scale designs, per operator:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -493,13 +495,15 @@ def _ledger_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
 @query(
     "stream_multimodal_ingest_to_training",
     oracle=_mm_ingest_to_training_oracle(),
-    doc="FLAGSHIP multimodal capstone: disorderly-arriving media is "
-    "keeper-deduped per modality by the ONLINE keeper streams (image "
-    "pHash / audio fingerprint / video frame-signature — their three "
-    "oracles composed VERBATIM), and the SURVIVING documents are packed "
-    "into multimodal training sequences at ingest — the full "
-    "curation-to-training-examples story for a multimodal corpus in "
-    "one registered query. The keeper decision ledgers feed the packer "
+    doc="FLAGSHIP multimodal capstone, in two phases: ONE online keeper "
+    "stream dedups every modality (image pHash / audio fingerprint / "
+    "video frame-signature keys, modality-tagged, each modality cut on "
+    "its own id range, so every decision is its standalone keeper "
+    "stream's — the three oracles composed VERBATIM), then a pack "
+    "stream lays the SURVIVING documents into multimodal training "
+    "sequences at ingest — the full curation-to-training-examples "
+    "story for a multimodal corpus in one registered query. The keeper "
+    "decision ledger feeds the packer "
     "as a drop set anti-joined per trigger through the SIZE-ADAPTIVE "
     "gate (_adaptive_reject_anti_join, VERDICT r13 #1): the drop count "
     "is materialized anyway, so the join broadcasts when drops are "
@@ -507,14 +511,14 @@ def _ledger_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
     "holding, as here: 47/500 at sf0.01) and flips to a shuffled hash "
     "anti-join when the list is corpus-proportional. The packer is the "
     "same count-agnostic per-trigger body with the multimodal budget. "
-    "One wrong keep/drop decision in any modality's stream shifts "
+    "One wrong keep/drop decision in any modality shifts "
     "every downstream offset here, so the capstone re-verifies all "
     "three detectors through the layout.",
 )
 def stream_multimodal_ingest_to_training(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _mm_ingest_impl(spark, sf_dir, suffix="")
+    return _mm_ingest_impl(spark, sf_dir, unordered=False)
 
 
 @query(
@@ -522,7 +526,7 @@ def stream_multimodal_ingest_to_training(
     oracle=_mm_ingest_to_training_oracle("_unordered"),
     doc="The flagship multimodal capstone under Kafka CROSS-PARTITION "
     "DISORDER — keeper curation AND packing both run on round-robin "
-    "arrivals: the disorder-tolerant keeper streams decide keep/drop "
+    "arrivals: the round-robin keeper stream decides keep/drop "
     "with arrival-defined semantics (their unordered oracles composed "
     "verbatim, epochs replayed), and the survivors pack in arrival "
     "order (epoch, then id within the trigger). Identical code to the "
@@ -540,7 +544,7 @@ def stream_multimodal_ingest_to_training(
 def stream_multimodal_ingest_to_training_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _mm_ingest_impl(spark, sf_dir, suffix="_unordered")
+    return _mm_ingest_impl(spark, sf_dir, unordered=True)
 
 
 @query(
@@ -567,7 +571,7 @@ def stream_multimodal_ingest_to_training_persisted(
     return _mm_ingest_impl(
         spark,
         sf_dir,
-        suffix="",
+        unordered=False,
         keep_ledger_dir=_kept_ledger_dir("flagship_ledger"),
     )
 
@@ -592,7 +596,7 @@ def stream_multimodal_ingest_to_training_unordered_persisted(
     return _mm_ingest_impl(
         spark,
         sf_dir,
-        suffix="_unordered",
+        unordered=True,
         keep_ledger_dir=_kept_ledger_dir("flagship_unordered_ledger"),
     )
 
@@ -600,97 +604,95 @@ def stream_multimodal_ingest_to_training_unordered_persisted(
 def _mm_ingest_impl(
     spark: SparkSession,
     sf_dir: str,
-    suffix: str,
+    unordered: bool,
     keep_ledger_dir: "str | None" = None,
 ) -> DataFrame:
+    """The two-phase flagship (the docs' "4-stream" form, against the
+    fused one): ONE keeper stream decides all three media kinds (each
+    cut on its own id range, or round-robin like the packer), then the
+    pack stream anti-joins that ledger's drops in every trigger."""
+    from spark_streaming_twitter_spark.multimodal.phash import _media_keeper_stream
+
+    ledger = _media_keeper_stream(spark, sf_dir, 0, 1, 2, roundrobin=unordered)
+    drops = ledger.where(~F.col("kept")).select(F.col("media_id").alias("doc_id"))
+    # the gate's measured sizes: the drop set against the survivor side
+    # (a count-from-metadata parquet scan)
+    n_drops = drops.count()
+    n_docs = table(spark, sf_dir, "documents").count()
+    return _mm_pack_stream(
+        spark,
+        sf_dir,
+        unordered,
+        keep_ledger_dir,
+        lambda _tmp: lambda bdf: _adaptive_reject_anti_join(
+            bdf, drops, n_drops, n_docs
+        ),
+    )
+
+
+def _mm_pack_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    unordered: bool,
+    keep_ledger_dir: "str | None",
+    survivors_in: "Callable[[str], Callable[[DataFrame], DataFrame]]",
+) -> DataFrame:
+    """The multimodal flagships' pack stream: spool the documents
+    (round-robin, or by doc_id range), and per trigger pack the rows
+    that ``survivors_in(tmp)`` — called once with the run's temp dir,
+    where a keeper store may live — keeps of the batch, with the
+    multimodal token budget. With ``keep_ledger_dir`` the pack ledger
+    outlives the query and the returned frame is parquet-backed;
+    otherwise it is collected before the temp dir dies."""
     import os
     import shutil
     import tempfile
 
-    from spark_streaming_twitter_spark.multimodal import phash
     from spark_streaming_twitter_spark.streaming.harness import (
         run_foreach_batch,
         spool_ordered_batches,
         spool_roundrobin_batches,
     )
 
-    keeper_fns = [
-        getattr(phash, f"stream_media_{m}_keeper_dedup{suffix}")
-        for m in ("phash", "audio", "video")
-    ]
-    spool = spool_roundrobin_batches if suffix else spool_ordered_batches
-
-    # the three keeper streams are INDEPENDENT (disjoint media subsets,
-    # separate spools/indices/ledgers), so run them concurrently — wall
-    # becomes max(keeper) instead of sum(keeper), bits unchanged (each
-    # stream is its own registered, oracle-pinned query); a production
-    # job owns one consumer per modality topic for the same reason
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        ledgers = list(
-            pool.map(lambda fn: fn(spark, sf_dir), keeper_fns)
-        )
-    drops = ledgers[0].where(~F.col("kept")).select(
-        F.col("media_id").alias("doc_id")
-    )
-    for led in ledgers[1:]:
-        drops = drops.unionByName(
-            led.where(~F.col("kept")).select(
-                F.col("media_id").alias("doc_id")
-            )
-        )
-    tmp = tempfile.mkdtemp(prefix="stream_mm_ingest_")
+    tmp = tempfile.mkdtemp(prefix="stream_mm_")
     if keep_ledger_dir is not None:
-        # production read-back shape (VERDICT r12 #4): the ledger OUTLIVES
-        # the query — overwrite-at-start, like any output table rewrite —
-        # so the returned frame is the parquet-backed ledger itself, with
-        # NO collect between streaming finish and the caller's hands
+        # production read-back shape: the ledger outlives the query —
+        # overwrite-at-start, like any output-table rewrite
         _reclaim_ledger_dir(keep_ledger_dir)
         ledger_dir = keep_ledger_dir
     else:
         ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0}
+    survivors = survivors_in(tmp)
     media_cost = F.element_at(
         F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
         (F.col("doc_id") % 3 + 1).cast("int"),
     ).cast("bigint")
     count_expr = F.size(tokens(F.col("text"))).cast("bigint") + media_cost
-    # r16: shard bound from the one id-scan agg below — kills the
-    # per-trigger max-id agg job (offsets are shard-size invariant)
+    # one id-scan agg serves the spool cuts and the packer's shard bound
+    # (offsets are shard-size invariant, so no per-trigger max-id job)
     lo, hi = _doc_id_bounds(spark, sf_dir)
-    inner = _make_pack_batch(
-        ledger_dir, carry, count_expr=count_expr, max_id_bound=hi
+    pack = _make_pack_batch(
+        ledger_dir, {"offset": 0}, count_expr=count_expr, max_id_bound=hi
     )
 
+    def trigger(bdf: DataFrame, epoch_id: int) -> None:
+        bdf = bdf.persist()
+        try:
+            pack(survivors(bdf), epoch_id)
+        finally:
+            bdf.unpersist()
+
     try:
-        # persist inside the try so a failure anywhere after (incl. the
-        # materializing count) still reaches the finally's unpersist
-        # (ADVICE r12 — the old order leaked the cache if mkdtemp threw)
-        drops = drops.persist()
-        n_drops = drops.count()
         docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        # the gate's denominator: the survivor side the drop set joins
-        # against (count-from-metadata parquet scan, one cheap action)
-        n_docs = docs.count()
-
-        def pack_survivors(bdf: DataFrame, epoch_id: int) -> None:
-            # VERDICT r13 #1: broadcast vs shuffled is decided by the
-            # MEASURED drop count, not assumed small (under disorder the
-            # drop list is 75% of the corpus — see the unordered doc)
-            inner(
-                _adaptive_reject_anti_join(bdf, drops, n_drops, n_docs),
-                epoch_id,
-            )
-
-        if spool is spool_ordered_batches:
-            spool(docs, "doc_id", tmp, bounds=(lo, hi))
+        # spool in its own subdir — a partitioned keeper store must not
+        # share a root with the FileStreamSource's scan
+        spool_dir = os.path.join(tmp, "spool")
+        if unordered:
+            spool_roundrobin_batches(docs, "doc_id", spool_dir)
         else:
-            spool(docs, "doc_id", tmp)
+            spool_ordered_batches(docs, "doc_id", spool_dir, bounds=(lo, hi))
         run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            pack_survivors,
-            output_mode="append",
+            _stream_docs_from_spool(spark, spool_dir), trigger, output_mode="append"
         )
         led = _ledger_or_none(spark, ledger_dir)
         if led is None:  # zero survivors packed: total, not AnalysisException
@@ -703,16 +705,12 @@ def _mm_ingest_impl(
             "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
         )
         if keep_ledger_dir is not None:
-            result = out  # parquet-backed; ledger outlives the query
-        else:
-            # harness temp-dir lifecycle: the ledger dies in the finally,
-            # so materialize before it does
-            rows = out.collect()
-            result = spark.createDataFrame(rows, out.schema)
+            return out  # parquet-backed; the ledger outlives the query
+        # harness temp-dir lifecycle: the ledger dies in the finally, so
+        # materialize before it does
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        drops.unpersist()
-    return result
 
 
 def _stream_pack_oracle() -> str:
@@ -3665,15 +3663,16 @@ FROM c
     "equals the standalone keeper streams' — and the batch's survivors "
     "are packed, so curation "
     "and training-example construction happen in ONE pass over the "
-    "wire instead of four streams (3 keeper spools + a packer spool) "
-    "over the same bytes. Keeper semantics are IDENTICAL per trigger; "
-    "what changes is the epoch grid — decisions cut on the shared doc "
-    "spool's ranges instead of three per-modality spools — and the "
-    "oracle composes the same keeper CTE generators re-ranged to the "
-    "document spool, then the same pack tail. At 100 TB the fused "
-    "form reads the corpus ONCE per trigger where the 4-stream form "
-    "reads it four times: the bench pair prices exactly that "
-    "(measured in bytes: bench_artifacts/r14_fused_bytes_probe.json).",
+    "wire instead of two streams (a keeper stream, then a packer "
+    "stream) over the same corpus. Keeper semantics are IDENTICAL per "
+    "trigger; what changes is the epoch grid — decisions cut on the "
+    "shared doc spool's ranges instead of each modality's own id "
+    "range — and the oracle composes the same keeper CTE generators "
+    "re-ranged to the document spool, then the same pack tail. At "
+    "100 TB the fused form reads the corpus ONCE where the two-phase "
+    "form reads it twice; bench_artifacts/r14_fused_bytes_probe.json "
+    "measured the older form, which spooled three media payload "
+    "streams.",
 )
 def stream_multimodal_ingest_to_training_fused(
     spark: SparkSession, sf_dir: str
@@ -3753,104 +3752,42 @@ def _mm_fused_impl(
     unordered: bool,
     keep_ledger_dir: "str | None" = None,
 ) -> DataFrame:
+    """The fused flagship: one stream, whose every trigger builds its
+    modality-tagged keys in ONE Python pass, decides them in ONE probe
+    and packs the batch's survivors."""
     import os
-    import shutil
-    import tempfile
 
     import spark_streaming_twitter_spark.multimodal.phash as ph
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
-    )
 
-    tmp = tempfile.mkdtemp(prefix="stream_mm_fused_")
-    if keep_ledger_dir is not None:
-        # production read-back shape: the ledger outlives the query —
-        # overwrite-at-start, like any output-table rewrite
-        _reclaim_ledger_dir(keep_ledger_dir)
-        ledger_dir = keep_ledger_dir
-    else:
-        ledger_dir = os.path.join(tmp, "ledger")
-    # one modality-tagged keeper store (side=ledger + side=index) for all
-    # three media kinds, so every trigger's decisions and index entries
-    # land in a single write job (see streaming/keeper.py)
-    probe = ph.make_media_keeper_prober(spark, os.path.join(tmp, "media_store"))
+    def survivors_in(tmp: str) -> "Callable[[DataFrame], DataFrame]":
+        # one modality-tagged keeper store (side=ledger + side=index) for
+        # all three media kinds, so every trigger's decisions and index
+        # entries land in a single write job (see streaming/keeper.py)
+        probe = ph.make_media_keeper_prober(spark, os.path.join(tmp, "media_store"))
 
-    carry = {"offset": 0}
-    media_cost = F.element_at(
-        F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    ).cast("bigint")
-    count_expr = F.size(tokens(F.col("text"))).cast("bigint") + media_cost
-    # one id-scan agg serves the spool cuts and the packer's shard bound
-    # (offsets are shard-size invariant, so no per-trigger max-id job)
-    doc_lo, doc_hi = _doc_id_bounds(spark, sf_dir)
-    inner = _make_pack_batch(
-        ledger_dir, carry, count_expr=count_expr, max_id_bound=doc_hi
-    )
-
-    def fused(bdf: DataFrame, epoch_id: int) -> None:
-        bdf = bdf.persist()
-        # one Python pass builds every modality's keys; persisted because
-        # the prober reads them twice (report pin and store write), and
-        # the report is localCheckpointed, so unpersisting cannot force
-        # the payloads to be rebuilt
-        keys = ph.media_key_frame(
-            ph.media_keys_from_ids(bdf.select("doc_id"))
-        ).persist()
-        try:
-            report = probe(keys)
-        finally:
-            keys.unpersist()
-        # every doc is decided the trigger it arrives, so this batch's
-        # drops are the pinned report's hit rows
-        drops = report.where(F.col("n_index_hits") > 0).select(
-            F.col("media_id").alias("doc_id")
-        )
-        # the reject set is batch-bounded but NOT small under disorder
-        # (most of a clustered batch drops), so the measured gate picks
-        # the broadcast or the shuffled anti-join
-        inner(
-            _adaptive_reject_anti_join(
-                bdf, drops, *_reject_gate_counts(bdf, drops)
-            ),
-            epoch_id,
-        )
-        bdf.unpersist()
-
-    spool = spool_roundrobin_batches if unordered else spool_ordered_batches
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        # spool in its own subdir — the partitioned keeper stores must
-        # not share a root with the FileStreamSource's scan
-        spool_dir = os.path.join(tmp, "spool")
-        if spool is spool_ordered_batches:
-            spool(docs, "doc_id", spool_dir, bounds=(doc_lo, doc_hi))
-        else:
-            spool(docs, "doc_id", spool_dir)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_dir),
-            fused,
-            output_mode="append",
-        )
-        led = _ledger_or_none(spark, ledger_dir)
-        if led is None:  # zero survivors packed: total, not AnalysisException
-            led = spark.createDataFrame(
-                [],
-                "doc_id bigint, n_tokens bigint, start_offset bigint,"
-                " first_seq bigint, last_seq bigint",
+        def survivors(bdf: DataFrame) -> DataFrame:
+            # persisted because the prober reads the keys twice (report
+            # pin and store write); the report is localCheckpointed, so
+            # unpersisting cannot force the payloads to be rebuilt
+            keys = ph.media_key_frame(
+                ph.media_keys_from_ids(bdf.select("doc_id"))
+            ).persist()
+            try:
+                report = probe(keys)
+            finally:
+                keys.unpersist()
+            # every doc is decided the trigger it arrives, so this batch's
+            # drops are the pinned report's hit rows
+            drops = report.where(F.col("n_index_hits") > 0).select(
+                F.col("media_id").alias("doc_id")
             )
-        out = led.select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
-        )
-        if keep_ledger_dir is not None:
-            result = out  # parquet-backed; ledger outlives the query
-        else:
-            # harness temp-dir lifecycle: the ledger dies in the finally,
-            # so materialize before it does
-            rows = out.collect()
-            result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+            # the reject set is batch-bounded but NOT small under disorder
+            # (most of a clustered batch drops), so the measured gate picks
+            # the broadcast or the shuffled anti-join
+            return _adaptive_reject_anti_join(
+                bdf, drops, *_reject_gate_counts(bdf, drops)
+            )
+
+        return survivors
+
+    return _mm_pack_stream(spark, sf_dir, unordered, keep_ledger_dir, survivors_in)

@@ -182,3 +182,28 @@ def test_bpe_sentinel_replace_is_greedy_leftmost_merge():
         assert got == ref_merge(syms, a, b), (syms, a, b, got)
 
     check()
+
+
+def test_package_starts_no_thread_pool():
+    """No package module uses a ThreadPoolExecutor: every registered
+    query runs its streams one after another on the caller's thread, so
+    running queries concurrently on one session (what the shuffle-pin
+    lock in streaming/harness.py guards) is a caller's choice, never
+    the package's."""
+    import ast
+    import pathlib
+
+    import spark_streaming_twitter_spark
+
+    root = pathlib.Path(spark_streaming_twitter_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                getattr(node, "id", None)
+                or getattr(node, "attr", None)
+                or (node.name if isinstance(node, ast.alias) else None)
+            )
+            if name == "ThreadPoolExecutor":
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, f"ThreadPoolExecutor in the package: {hits}"
