@@ -760,7 +760,10 @@ def encode_wav(n_samples: int, samples, rate: int = WAV_RATE) -> bytes:
     if arr.size and (arr.min() < -32768 or arr.max() > 32767):
         raise ValueError("encode_wav: sample out of int16 range")
     pcm = arr.astype("<i2").tobytes()
-    assert len(pcm) == n_samples * 2
+    if len(pcm) != n_samples * 2:
+        raise ValueError(
+            f"encode_wav: {len(pcm) // 2} samples given, header says {n_samples}"
+        )
     fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
     return (
         b"RIFF"

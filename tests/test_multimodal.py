@@ -61,6 +61,15 @@ def test_encode_wav_rejects_out_of_range_samples():
             mm.encode_wav(len(bad), bad)
 
 
+def test_encode_wav_rejects_sample_count_mismatch():
+    # a ValueError, not an assert: python -O must not write a bad header
+    import pytest
+
+    for n, samples in ((3, [0, 1]), (1, [0, 1]), (1, [])):
+        with pytest.raises(ValueError, match="header says"):
+            mm.encode_wav(n, samples)
+
+
 def test_byte_histogram_fracs_sum_to_one(spark):
     media = mm.media_table(spark, SF).limit(10)
     sums = (

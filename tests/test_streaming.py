@@ -689,6 +689,97 @@ def test_checkpoint_recovery_on_rocksdb_provider(spark, stream_dir, tmp_path):
             spark.conf.set(key, prev)
 
 
+_STATE_PROVIDERS = {
+    "hdfs": "HDFSBackedStateStoreProvider",
+    "rocksdb": "RocksDBStateStoreProvider",
+}
+
+
+@pytest.mark.parametrize("provider", sorted(_STATE_PROVIDERS))
+def test_replayed_trigger_overwrites_landed_state(spark, tmp_path, provider):
+    """A trigger replayed after its state write landed: the test session
+    commits checkpoints through ``FileSystemBasedCheckpointFileManager``,
+    whose overwrite path is the only place it differs from Spark's
+    default. Dropping batch 1's commit makes the restart re-run batch 1,
+    which must rewrite state version 2 in place, leave no temp file and
+    keep the counts. Under the Hive ``ProxyLocalFileSystem`` that pyspark
+    otherwise maps ``file:`` to, the rename is refused and the old state
+    file silently stays."""
+    jvm = spark._jvm
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path("file:" + str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    src.mkdir()
+    name = f"replay_{provider}"
+
+    def run(*batches):
+        q = (
+            _stream(spark, str(src))
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            for i, rows in batches:
+                _write_batch(str(src), f"b{i}.json", rows)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+        return {r.user_id: r.n for r in spark.table(name).collect()}
+
+    def version_2_files():
+        found = {
+            str(p): (p.stat().st_ino, p.stat().st_mtime_ns)
+            for p in (ckpt / "state" / "0").glob("*/2.*")
+            if not p.name.endswith(".crc")
+        }
+        assert found, sorted(str(p) for p in (ckpt / "state").rglob("*"))
+        return found
+
+    def row(user_id):
+        return {"user_id": user_id, "ts": "2024-01-01 10:00:00", "event": "a"}
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        + _STATE_PROVIDERS[provider],
+    )
+    try:
+        assert run((1, [row(1), row(1)]), (2, [row(1), row(2)])) == {1: 3, 2: 1}
+        landed = version_2_files()
+        (ckpt / "commits" / "1").unlink()
+        (ckpt / "commits" / ".1.crc").unlink()
+
+        assert run() == {1: 3, 2: 1}, "the replayed batch 1 must not double-count"
+        rewritten = version_2_files()
+        assert rewritten.keys() == landed.keys()
+        assert all(rewritten[p] != landed[p] for p in landed), (
+            "the replay must overwrite state version 2"
+        )
+        leaked = sorted(p.name for p in ckpt.rglob("*.tmp"))
+        assert not leaked, f"every temp file must be renamed into place: {leaked}"
+        assert (ckpt / "commits" / "1").exists()
+
+        assert run((3, [row(2), row(3)])) == {1: 3, 2: 2, 3: 1}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_state_metadata_reader_describes_checkpoint(spark, sf_dir):
     """The state-metadata companion reader (Spark 4 State Data Source)
     must describe the checkpoint's operator topology: one stateStoreSave
