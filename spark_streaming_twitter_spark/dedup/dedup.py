@@ -26,6 +26,18 @@ pure-DataFrame composition with an exact SQL oracle twin:
 - capstones              — curation pipelines composing every stage
                            (``corpus_curation_pipeline``, ``_full``)
 
+Streaming MinHash dedup computes band keys row-wise inside the stream
+(``minhash_band_rows``: no groupBy, bit-identical to the batch
+``minhash_buckets``). ``_TEXT_KIND`` binds the ingest stream and the
+five self/TTL streams (``stream_text_minhash_{self_dedup[_unordered],
+ttl_dedup[_unordered|_bounded_disorder]}``) to the shells of
+streaming/bucket_state.py, which the media streams share: a band key is
+a bucket, 64 state shards are (band, first hex digit of band_key), and
+a pair's score is its number of shared bands. The table-index twin
+(``stream_text_minhash_self_dedup_batchidx``) and the keeper
+(``stream_text_minhash_keeper_dedup*``, streaming/keeper.py) read the
+same banded spool.
+
 Scale design (100 TB):
 - Every pipeline is shuffle-keyed on high-cardinality values (shingle hash,
   band key, simhash chunk) — no constant-key funnels.
@@ -61,6 +73,12 @@ from spark_streaming_twitter_spark.functions.hashing import (
 )
 from spark_streaming_twitter_spark.functions import sampling
 from spark_streaming_twitter_spark.registry import QUERIES, query
+from spark_streaming_twitter_spark.streaming.bucket_state import (
+    BucketKind,
+    ingest_stream,
+    read_spool,
+    state_stream,
+)
 from spark_streaming_twitter_spark.streaming.keeper import (
     keeper_stream,
     make_keeper_prober,
@@ -427,6 +445,54 @@ def minhash_band_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def _band_keys(bands: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) rows as bucket keys: c = band, chunk_val =
+    band_key, no signature."""
+    return bands.select(
+        "doc_id",
+        F.lit(None).cast("bigint").alias("sig"),
+        F.col("band").alias("c"),
+        F.col("band_key").alias("chunk_val"),
+    )
+
+
+def _canonical_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ingest index: the doc_id % 10 = 0 docs banded by the BATCH
+    minhash_buckets path, which the streamed row-wise banding must match
+    bit for bit."""
+    canon = widen(_docs(spark, sf_dir).where(F.col("doc_id") % 10 == 0), spark)
+    return _band_keys(minhash_buckets(doc_shingles(canon))).select(
+        F.col("doc_id").alias("ref_id"),
+        F.col("sig").alias("ref_sig"),
+        "c",
+        "chunk_val",
+    )
+
+
+# The text MinHash kind of the bucket-state streams: band keys computed
+# row-wise in the stream, 4 bands x 16 band_key hex prefixes = 64 state
+# shards, and (doc_id, ref_id, n_bands) pairs.
+_TEXT_KIND = BucketKind(
+    id_col="doc_id",
+    source=_docs,
+    spool_schema="doc_id long, text string",
+    keys=lambda docs: _band_keys(minhash_band_rows(docs)),
+    key_type="string",
+    shard="substring(chunk_val, 1, 1)",
+    bounds=lambda spark, sf_dir: tuple(
+        _docs(spark, sf_dir).agg(F.min("doc_id"), F.max("doc_id")).first()
+    ),
+    refs=_canonical_band_keys,
+    pairs=lambda hits: hits.groupBy("doc_id", "ref_id").agg(
+        F.count_distinct("c").alias("n_bands")
+    ),
+)
+
+
 @query(
     "stream_text_minhash_ingest_dedup",
     oracle=f"""
@@ -454,8 +520,8 @@ GROUP BY 1, 2
     "band index (the doc_id % 10 = 0 canonical corpus, banded by the "
     "BATCH minhash_buckets path — the two paths must agree "
     "bit-for-bit, which the oracle checks by replaying banding over "
-    "the whole corpus in SQL), emitting (doc_id, ref_id, band) hits "
-    "in append mode. Completely STATELESS: per-batch cost is "
+    "the whole corpus in SQL), emitting band-key hits in append "
+    "mode. Completely STATELESS: per-batch cost is "
     "O(batch x bands), independent of stream history — the shape that "
     "scales to unbounded ingest. The memory-sink read-back aggregates "
     "hits to (doc_id, ref_id, n_bands) batch-side.",
@@ -464,62 +530,7 @@ GROUP BY 1, 2
 def stream_text_minhash_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_to_memory,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="minhash_stream_")
-    data_dir = os.path.join(tmp, "docs")
-    ref_bands = None
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.repartition(4).write.parquet(data_dir)
-
-        # The static side of a stream-static join is RE-EVALUATED every
-        # micro-batch; persist it so the reference corpus is banded once,
-        # not once per trigger.
-        ref_bands = (
-            minhash_buckets(
-                doc_shingles(
-                    widen(docs.where(F.col("doc_id") % 10 == 0), spark)
-                )
-            )
-            .select(F.col("doc_id").alias("ref_id"), "band", "band_key")
-            .persist()
-        )
-        ref_bands.count()
-
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        # One file per trigger = ONE input partition per micro-batch; the
-        # md5-per-shingle banding is the hot loop, so spread the batch
-        # across cores before the projection (at cluster scale a Kafka
-        # topic's partition count does this at the source).
-        bands = minhash_band_rows(stream.repartition(par))
-        matches = (
-            bands.join(F.broadcast(ref_bands), ["band", "band_key"])
-            .where(F.col("doc_id") != F.col("ref_id"))
-            .select("doc_id", "ref_id", "band")
-        )
-        sink = run_to_memory(matches, output_mode="append")
-        agg = sink.groupBy("doc_id", "ref_id").agg(
-            F.count_distinct("band").alias("n_bands")
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        if ref_bands is not None:
-            ref_bands.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return ingest_stream(spark, sf_dir, _TEXT_KIND)
 
 
 # Oracle for stream_text_minhash_self_dedup (registered in
@@ -543,290 +554,18 @@ GROUP BY 1, 2
 """
 
 
-def _self_dedup_stream_bands(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """Streaming (doc_id, band, band_key) rows from an ordered doc spool —
-    the in-plan banding projection shared by both self-dedup variants
-    (tws MapState and persisted-index foreachBatch). One file per trigger
-    = one input partition; repartition spreads the md5-per-shingle hot
-    loop across cores before the projection (a Kafka topic's partition
-    count does this at the source at scale)."""
-    par = spark.sparkContext.defaultParallelism
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .option("pathGlobFilter", "batch_*.parquet")
-        .parquet(spool_dir)
-    )
-    return minhash_band_rows(stream.repartition(par))
-
-
-def stream_text_minhash_self_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SELF-REFERENTIAL streaming near-dup dedup — the production ingest
-    loop the static-index probe (stream_text_minhash_ingest_dedup above)
-    approximates, and the round-9 north star: there is NO pre-built
-    canonical index; the index IS the stream's own past. Each micro-batch
-    computes its documents' MinHash band keys row-wise inside the streaming
-    plan (same stateless minhash_signature_struct projection as the ingest
-    twin — bit-identical to the batch banding, which the oracle replays in
-    SQL), then probes them against a transformWithStateInPandas MapState
-    AND inserts the novel keys, so a duplicate arriving in batch 7 of a
-    document first seen in batch 2 is flagged with no static index —
-    first-occurrence-wins, within the stream itself.
-
-    State layout is the scale design: the tws grouping key is
-    (band, band_key-prefix) — 4 bands x 16 hex prefixes = 64 state
-    shards here; at cluster scale the prefix length is the dial that
-    matches shard count to executor width — and each shard holds ONE
-    MapState keyed by full band_key whose value is the owning (first-seen)
-    doc_id. A micro-batch therefore costs one point-probe/point-insert per
-    TOUCHED band key (RocksDB point lookups, the MapState advantage over a
-    whole-buffer ValueState rewrite), never a rescan of history; the
-    emission set per batch is bounded by the batch's own band-key hits.
-    The cost CONSTANT is the state client: each point op is one protobuf
-    round trip from the Python worker (~2 per touched key per batch —
-    measured ~250us each through the vendored pure-Python runtime), which
-    is what stream_text_minhash_self_dedup_batchidx below trades away by
-    keeping the same index in a persisted DataFrame instead of tws state.
-    Round-trip batching was TRIED and measured NEGATIVE (round 11): the
-    MapState API has no multi-get/multi-put — point ops only — and its
-    one batched read path, the paged iterator() full-map scan (multiple
-    entries per protobuf round trip), lost to per-key getValue at sf0.1
-    (11.39 vs 10.83 s p50, co-timed): the scan pays per-ENTRY pickle
-    deserialization over the WHOLE shard map, growing with state, while
-    point probes pay per-TOUCHED-key round trips, flat — and the write
-    side (one updateValue per novel key, the majority here) cannot batch
-    at all. Architecture guidance stands: wide batches that want batched
-    index ops should use the table-index twin below, where probe and
-    append are set-oriented JVM joins.
-    Mirrors the batch LSH candidate generator (lsh_candidate_pairs)
-    restricted to earlier-arrival refs: every arrival registers ALL its
-    band keys (keeper policy — e.g. not indexing flagged dups — is a
-    downstream choice, exactly as dedup_drop_list is to the batch pairs).
-
-    Arrival order: the fixture spools 4 doc_id-range files with strictly
-    increasing mtimes + maxFilesPerTrigger=1 + latestFirst=false, so the
-    stream arrives in doc_id order and the oracle's min-per-key owner is
-    exact (the Kafka swap-in keys the topic by doc order the same way;
-    reference topology TwitterDatasetTrendingHashtag.java:64-75).
-    """
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class BandOwners(StatefulProcessor):
-        """One MapState per (band, prefix) shard: band_key -> first doc."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "band_key string", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            band = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out_doc: list[int] = []
-            out_ref: list[int] = []
-            for bk, grp in pdf.groupby("band_key", sort=True):
-                ids = sorted(int(d) for d in grp["doc_id"])
-                # one state roundtrip per touched key (getValue returns
-                # None when absent — containsKey would double the proto
-                # round trips, the dominant cost of this plan)
-                cur = self._owners.getValue((bk,))
-                if cur is not None:
-                    owner = int(cur[0])
-                else:
-                    # first occurrence EVER of this band key: the batch's
-                    # earliest arrival claims it and emits nothing
-                    owner = ids.pop(0)
-                    self._owners.updateValue((bk,), (owner,))
-                out_doc.extend(ids)
-                out_ref.extend([owner] * len(ids))
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out_doc,
-                        "ref_id": out_ref,
-                        "band": [band] * len(out_doc),
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="minhash_self_stream_")
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", tmp)
-        bands = _self_dedup_stream_bands(spark, tmp).withColumn(
-            "pfx", F.substring("band_key", 1, 1)
-        )
-        hits = bands.groupBy("band", "pfx").transformWithStateInPandas(
-            statefulProcessor=BandOwners(),
-            outputStructType="doc_id bigint, ref_id bigint, band int",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = sink.groupBy("doc_id", "ref_id").agg(
-            F.count_distinct("band").alias("n_bands")
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+def stream_text_minhash_self_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-referential MinHash dedup, ordered arrival: the first arrival
+    owns a band key (see bucket_state)."""
+    return state_stream(spark, sf_dir, _TEXT_KIND, "self")
 
 
 def stream_text_minhash_self_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """DISORDER-TOLERANT self-referential streaming dedup — the ordered
-    twin (stream_text_minhash_self_dedup above) leans on the fixture's
-    doc_id-range spool for its first-occurrence-wins attribution; a real
-    Kafka topic (reference topology TwitterDatasetTrendingHashtag.java:
-    64-72) guarantees order only WITHIN a partition, so "first" must be
-    reconciled in state, not assumed from arrival. This variant runs the
-    identical banding plan over a ROUND-ROBIN spool (batch i = ids
-    congruent to i mod 4 — every batch spans the full id range, arrival
-    order disagrees with id order everywhere) and keeps the oracle
-    arrival-order-free (it already is: min-per-key owners).
-
-    Ownership is MIN-ID-RECONCILED in MapState with in-state demotion:
-    state per band key is the smallest doc_id seen SO FAR; when a smaller
-    id arrives it claims ownership and the DEMOTED previous owner is
-    re-emitted as a duplicate row. Emitted rows carry (band_key, current
-    owner) instead of a final attribution — owner-at-emission can be
-    stale the moment a smaller id lands in a later batch — and the
-    read-back reconciles attribution exactly: per band key the final
-    owner is min(owner) over that key's emissions (ownership only ever
-    decreases, and every demotion emits a row carrying the new owner, so
-    the global min is always witnessed), and the emitted doc set per key
-    is provably all-but-the-final-owner (a doc is emitted either at
-    arrival, when it isn't the min so far, or at demotion, when a
-    smaller id displaces it — only the never-demoted global min is never
-    emitted). That makes the reconciled set bit-identical to the ordered
-    twin's and to _SELF_DEDUP_ORACLE, for ANY arrival order.
-
-    Cost: state stays band_key -> owner (no duplicate lists — the
-    reconciliation agg runs on the emission read-back, bounded by hit
-    count); an unchanged-owner probe is ONE state round trip (the
-    ordered twin's shape), and only ownership changes pay the extra
-    updateValue. Same (band, key-prefix) sharding, same touched-keys-
-    bounded per-batch contract."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    class MinIdOwners(StatefulProcessor):
-        """band_key -> min doc_id so far; demotion re-emits old owner."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners", "band_key string", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            band = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out_doc: list[int] = []
-            out_key: list[str] = []
-            out_owner: list[int] = []
-            for bk, grp in pdf.groupby("band_key", sort=True):
-                ids = sorted(int(d) for d in grp["doc_id"])
-                cur = self._owners.getValue((bk,))
-                owner = int(cur[0]) if cur is not None else None
-                emit = ids
-                if owner is None or ids[0] < owner:
-                    demoted = owner
-                    owner = ids[0]
-                    self._owners.updateValue((bk,), (owner,))
-                    emit = ids[1:] + ([demoted] if demoted is not None else [])
-                out_doc.extend(emit)
-                out_key.extend([bk] * len(emit))
-                out_owner.extend([owner] * len(emit))
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out_doc,
-                        "band_key": out_key,
-                        "owner": out_owner,
-                        "band": [band] * len(out_doc),
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="minhash_self_unord_")
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_roundrobin_batches(docs, "doc_id", tmp)
-        bands = _self_dedup_stream_bands(spark, tmp).withColumn(
-            "pfx", F.substring("band_key", 1, 1)
-        )
-        hits = bands.groupBy("band", "pfx").transformWithStateInPandas(
-            statefulProcessor=MinIdOwners(),
-            outputStructType=(
-                "doc_id bigint, band_key string, owner bigint, band int"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        # reconcile attribution in ONE aggregation (a sink self-join would
-        # conflict the memory plan's attributes): final owner per key =
-        # min emitted owner; the key's emitted docs ride along as a set
-        # (bounded by the key's duplicate count, never the corpus)
-        agg = (
-            sink.groupBy("band", "band_key")
-            .agg(
-                F.min("owner").alias("ref_id"),
-                F.collect_set("doc_id").alias("docs"),
-            )
-            .select("band", "ref_id", F.explode("docs").alias("doc_id"))
-            .groupBy("doc_id", "ref_id")
-            .agg(F.count_distinct("band").alias("n_bands"))
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    """Self-referential MinHash dedup under round-robin disorder: the
+    min-id owner, reconciled on the read-back (see bucket_state)."""
+    return state_stream(spark, sf_dir, _TEXT_KIND, "self_unordered")
 
 
 @query(
@@ -863,20 +602,21 @@ def stream_text_minhash_self_dedup_batchidx(
     )
 
     tmp = tempfile.mkdtemp(prefix="minhash_selfidx_stream_")
-    # r16: one partitioned store per stream — side=hits (the audit
-    # ledger) + side=index (the band-key owner table) — so each trigger
-    # lands both in a SINGLE write job (VERDICT r15 next #1/#4). The
-    # spool lives in its own subdir: the partitioned store must not
-    # share a root with the FileStreamSource's scan.
+    # one partitioned store per stream — side=hits (the audit ledger) +
+    # side=index (the band-key owner table) — so each trigger lands both
+    # in a SINGLE write job. The spool lives in its own subdir: the
+    # partitioned store must not share a root with the FileStreamSource's
+    # scan.
     spool_dir = os.path.join(tmp, "spool")
     store_dir = os.path.join(tmp, "store")
     idx_dir = os.path.join(store_dir, "side=index")
     hits_dir = os.path.join(store_dir, "side=hits")
     state = {"has_index": False}
     try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", spool_dir)
-        bands = _self_dedup_stream_bands(spark, spool_dir)
+        spool_ordered_batches(_docs(spark, sf_dir), "doc_id", spool_dir)
+        bands = minhash_band_rows(
+            read_spool(spark, spool_dir, _TEXT_KIND.spool_schema)
+        )
 
         def probe_and_extend(bdf: DataFrame, _epoch_id: int) -> None:
             # pin the batch: foreachBatch DataFrames re-execute per action,
@@ -917,13 +657,11 @@ def stream_text_minhash_self_dedup_batchidx(
             # per-batch hits land in an executor-written parquet ledger
             # (the tempdir-sink pattern) — the driver never holds the
             # hit rows, matching the 100 TB narrative where this is the
-            # run's audit table. r16 (VERDICT r15 next #4): hits + novel
-            # index entries ride ONE partitioned write job, and the old
-            # hits-only repartition(4) now bounds BOTH sides' file count
-            # in the same single exchange (not coalesce: coalesce would
-            # narrow the upstream probe join and the cached banding to 4
-            # tasks) — one write job and one exchange per trigger where
-            # there were two writes plus an exchange.
+            # run's audit table. Hits + novel index entries ride ONE
+            # partitioned write job, and repartition(4) bounds BOTH
+            # sides' file count in one exchange (not coalesce: coalesce
+            # would narrow the upstream probe join and the cached banding
+            # to 4 tasks).
             hits = probed.where(F.col("doc_id") > F.col("ref_id")).select(
                 "doc_id", "ref_id", "band"
             )
@@ -974,442 +712,26 @@ WHERE p.doc_id - p.ref_id <= horizon
 GROUP BY 1, 2
 """
 
-_TTL_TS_BASE = 1_700_000_000  # synthetic event-time epoch for doc streams
-
-
-def stream_text_minhash_ttl_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HORIZON-BOUNDED streaming near-dup dedup — the bounded-state form
-    every production ingest pipeline eventually needs: an unbounded
-    stream cannot keep every band key forever, and the curation contract
-    is usually \"drop documents that duplicate something seen within the
-    last N days\", not since the beginning of time. This is
-    dropDuplicates-within-watermark generalized from exact keys to
-    MinHash near-dup band keys, and it exercises the tws combination the
-    five-primitive family leaves uncovered: MapState AND event-time
-    timers in one processor.
-
-    Semantics: a document is flagged against the LATEST earlier arrival
-    sharing a band key when their event-time distance is within the
-    horizon (ts = BASE + doc_id seconds, so the oracle replays the flag
-    as a max-earlier join on id distance). State per band key is the
-    last (doc_id, arrival) pair — every arrival refreshes it — and each
-    batch registers an event-time timer at batch-max + horizon whose
-    expiry sweeps the shard's map and removeKey()s entries idle past the
-    horizon, so STATE SIZE IS BOUNDED BY THE HORIZON, not by stream
-    history. Emission correctness never depends on sweep timing (the
-    probe re-checks the distance), which is what makes the TTL purely a
-    resource bound — the oracle is exact either way."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_ordered_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class LastSeen(StatefulProcessor):
-        """band_key -> (last doc_id, last arrival); timer-swept TTL."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._last = handle.getMapState(
-                "last_seen", "band_key string", "ref_id bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            band = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out_doc: list[int] = []
-            out_ref: list[int] = []
-            batch_max = int(pdf["doc_id"].max())
-            for bk, grp in pdf.groupby("band_key", sort=True):
-                ids = sorted(int(d) for d in grp["doc_id"])
-                cur = self._last.getValue((bk,))
-                last = int(cur[0]) if cur is not None else None
-                for d in ids:
-                    if last is not None and d - last <= horizon:
-                        out_doc.append(d)
-                        out_ref.append(last)
-                    last = d
-                self._last.updateValue((bk,), (last,))
-            # one TTL sweep timer per batch at watermark + 1 ms,
-            # never deleted: a timer above the (one-batch-lagging)
-            # watermark is replaced before firing, and deletion in
-            # handleInputRows kills the expired-but-unprocessed timer in
-            # the same batch — so THIS registration is what makes the
-            # sweep actually run mid-stream (probe-verified); eviction
-            # re-checks the horizon against the watermark, so cadence
-            # cannot affect output
-            self._h.registerTimer(
-                timerValues.getCurrentWatermarkInMs() + 1
-            )
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out_doc,
-                        "ref_id": out_ref,
-                        "band": [band] * len(out_doc),
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # sweep: drop band keys idle past the horizon — the state
-            # bound. Correctness never depends on this running.
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            expired = [
-                k_[0]
-                for k_, v_ in self._last.iterator()
-                if (_TTL_TS_BASE + int(v_[0]) + horizon) * 1000 < wm_ms
-            ]
-            for bk in expired:
-                self._last.removeKey((bk,))
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="minhash_ttl_stream_")
-    try:
-        spool_ordered_batches(docs, "doc_id", tmp)
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        )
-        bands = (
-            stream.repartition(par)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(_TTL_TS_BASE) + F.col("doc_id")),
-            )
-            .withWatermark("ts", "0 seconds")
-            .withColumn(
-                "sig",
-                minhash_signature_struct(
-                    shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                ),
-            )
-            .select(
-                "doc_id",
-                "ts",
-                F.explode(
-                    minhash_band_structs_from_sig(F.col("sig"))
-                ).alias("bk"),
-            )
-            .select(
-                "doc_id",
-                "ts",
-                F.col("bk.band").alias("band"),
-                F.col("bk.band_key").alias("band_key"),
-                F.substring("bk.band_key", 1, 1).alias("pfx"),
-            )
-        )
-        hits = bands.groupBy("band", "pfx").transformWithStateInPandas(
-            statefulProcessor=LastSeen(),
-            outputStructType="doc_id bigint, ref_id bigint, band int",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = sink.groupBy("doc_id", "ref_id").agg(
-            F.count_distinct("band").alias("n_bands")
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+def stream_text_minhash_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Horizon-bounded MinHash dedup, ordered arrival: each arrival pairs
+    with the latest earlier one (see bucket_state)."""
+    return state_stream(spark, sf_dir, _TEXT_KIND, "ttl")
 
 
 def stream_text_minhash_ttl_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """HORIZON-BOUNDED dedup under Kafka CROSS-PARTITION DISORDER — the
-    last disorder x semantics cell: TTL semantics are order-FREE on the
-    event-time axis (flag doc d against the max earlier-event-time
-    same-key arrival within the horizon; ts = BASE + doc_id seconds, so
-    the oracle is the ordered twin's VERBATIM), but under disorder the
-    predecessor may ARRIVE after the doc it should flag. The processor
-    therefore keeps, per band key, the SORTED id window in one
-    array-valued MapState entry; each batch merges its ids in and emits
-    every ADJACENT pair (pred, doc) with at least one new endpoint and
-    doc - pred <= horizon. Gap-filling only moves a doc's immediate
-    predecessor UP, so the read-back reconciles each (doc, band)'s
-    final ref as max(emitted ref) — and since id distance to the
-    immediate predecessor only shrinks as gaps fill, the final
-    predecessor is emitted iff it is within the horizon. Bit-identical
-    to the ordered twin for any arrival order (invariant-tested).
-
-    State bound, honestly: the ordered twin's timer sweep works because
-    arrival order bounds how late a predecessor can land; under
-    UNBOUNDED disorder (this fixture's round-robin spans the full id
-    range every batch) no entry is provably dead, so this variant keeps
-    the full per-key window and runs timeMode=None — it exists to pin
-    the worst case and is NOT the production form. In production the
-    disorder is watermark-bounded (delay D) and the sweep rule is the
-    ordered twin's shifted by D — evict ids older than
-    watermark - horizon - D — which
-    stream_text_minhash_ttl_dedup_bounded_disorder IMPLEMENTS (with
-    the eviction-safety proof and a measured state bound:
-    tools/self_dedup_cost_probe.py ttl mode). The semantics and oracle
-    are unchanged either way — the sweep is purely a resource bound."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_roundrobin_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    class SortedWindow(StatefulProcessor):
-        """band_key -> sorted id window (one array-valued entry)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._w = handle.getMapState(
-                "window", "band_key string", "ids array<bigint>"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            band = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out_doc: list[int] = []
-            out_ref: list[int] = []
-            for bk, grp in pdf.groupby("band_key", sort=True):
-                new = {int(d) for d in grp["doc_id"]}
-                cur = self._w.getValue((bk,))
-                merged = sorted(new.union(int(x) for x in cur[0])) if (
-                    cur is not None
-                ) else sorted(new)
-                for p, s in zip(merged, merged[1:]):
-                    if (p in new or s in new) and s - p <= horizon:
-                        out_doc.append(s)
-                        out_ref.append(p)
-                self._w.updateValue((bk,), (merged,))
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out_doc,
-                        "ref_id": out_ref,
-                        "band": [band] * len(out_doc),
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="minhash_ttl_unord_")
-    try:
-        spool_roundrobin_batches(docs, "doc_id", tmp)
-        bands = _self_dedup_stream_bands(spark, tmp).withColumn(
-            "pfx", F.substring("band_key", 1, 1)
-        )
-        hits = bands.groupBy("band", "pfx").transformWithStateInPandas(
-            statefulProcessor=SortedWindow(),
-            outputStructType="doc_id bigint, ref_id bigint, band int",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_tws_update(spark, hits)
-        # reconcile: final predecessor per (doc, band) = max emitted ref
-        agg = (
-            sink.groupBy("band", "doc_id")
-            .agg(F.max("ref_id").alias("ref_id"))
-            .groupBy("doc_id", "ref_id")
-            .agg(F.count_distinct("band").alias("n_bands"))
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    """Horizon-bounded MinHash dedup under round-robin disorder: a sorted
+    window per band key (see bucket_state)."""
+    return state_stream(spark, sf_dir, _TEXT_KIND, "ttl_unordered")
 
 
 def stream_text_minhash_ttl_dedup_bounded_disorder(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """HORIZON-BOUNDED dedup under BOUNDED disorder with a WATERMARK-SWEPT
-    state bound — the production form of the unordered TTL above, and
-    the one component of the disorder family whose state previously had
-    no demonstrated bound. Real Kafka disorder is not unbounded: a
-    consumer group's cross-partition interleave delays a record by at
-    most the partition lag the watermark delay D already budgets for.
-    Under that contract every per-key sorted id window CAN be swept:
-
-      evict id  <=>  (BASE + id + horizon) * 1000 < watermark_ms
-
-    i.e. ids below watermark - horizon - D of the max event time, since
-    the watermark itself runs D behind. Why the sweep can never change
-    output: (a) as a REF — any future arrival s has ts >= watermark, so
-    s - id > horizon: the pair would fail the horizon check anyway;
-    (b) as a DOC — id's own pairs were emitted at insertion, and no
-    future arrival can slot BELOW an evicted id (a late p < id would
-    need ts_p >= watermark > BASE + id + horizon > ts_p — contradiction),
-    so no false adjacency ever forms across the evicted gap. Emission,
-    reconciliation (final ref = max emitted ref), and the oracle are the
-    unordered twin's VERBATIM; the fixture is a block-reversed spool
-    whose disorder bound D feeds both the watermark delay and the sweep.
-    State is bounded by horizon + D of event time per key — at 100 TB
-    the difference between a TTL dedup and a slow unbounded one
-    (tools/self_dedup_cost_probe.py ttl mode measures the bound)."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        spool_block_reversed_batches,
-    )
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    horizon = (hi - lo + 1) // 2
-
-    tmp = tempfile.mkdtemp(prefix="minhash_ttl_bounded_")
-    try:
-        disorder_bound = spool_block_reversed_batches(docs, "doc_id", tmp)
-
-        class SweptWindow(StatefulProcessor):
-            """band_key -> sorted id window; watermark - horizon - D
-            sweep via event-time timers."""
-
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._h = handle
-                self._w = handle.getMapState(
-                    "window", "band_key string", "ids array<bigint>"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                band = int(key[0])
-                pdf = pd.concat(list(rows), ignore_index=True)
-                out_doc: list[int] = []
-                out_ref: list[int] = []
-                batch_max = int(pdf["doc_id"].max())
-                for bk, grp in pdf.groupby("band_key", sort=True):
-                    new = {int(d) for d in grp["doc_id"]}
-                    cur = self._w.getValue((bk,))
-                    merged = sorted(
-                        new.union(int(x) for x in cur[0])
-                    ) if cur is not None else sorted(new)
-                    for p, s in zip(merged, merged[1:]):
-                        if (p in new or s in new) and s - p <= horizon:
-                            out_doc.append(s)
-                            out_ref.append(p)
-                    self._w.updateValue((bk,), (merged,))
-                # one sweep timer per batch at watermark + 1 ms,
-                # never deleted: a timer registered above the
-                # (one-batch-lagging) watermark gets replaced before it
-                # can fire, and deleting inside handleInputRows kills
-                # the expired-but-unprocessed timer within the same
-                # batch — both measured failure modes
-                # (tools/self_dedup_cost_probe.py ttl mode). Fired
-                # timers auto-remove; the eviction condition is
-                # watermark-based so cadence never affects output.
-                self._h.registerTimer(
-                    timerValues.getCurrentWatermarkInMs() + 1
-                )
-                if out_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": out_doc,
-                            "ref_id": out_ref,
-                            "band": [band] * len(out_doc),
-                        }
-                    )
-
-            def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-                wm_ms = timerValues.getCurrentWatermarkInMs()
-                stale = []
-                for k_, v_ in self._w.iterator():
-                    ids = [int(x) for x in v_[0]]
-                    keep = [
-                        i
-                        for i in ids
-                        if (_TTL_TS_BASE + i + horizon) * 1000 >= wm_ms
-                    ]
-                    if len(keep) != len(ids):
-                        stale.append((k_[0], keep))
-                for bk, keep in stale:
-                    if keep:
-                        self._w.updateValue((bk,), (keep,))
-                    else:
-                        self._w.removeKey((bk,))
-                return iter(())
-
-            def close(self) -> None:
-                pass
-
-        bands = (
-            _self_dedup_stream_bands(spark, tmp)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(_TTL_TS_BASE) + F.col("doc_id")),
-            )
-            .withWatermark("ts", f"{disorder_bound} seconds")
-            .withColumn("pfx", F.substring("band_key", 1, 1))
-        )
-        hits = bands.groupBy("band", "pfx").transformWithStateInPandas(
-            statefulProcessor=SweptWindow(),
-            outputStructType="doc_id bigint, ref_id bigint, band int",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_tws_update(spark, hits)
-        agg = (
-            sink.groupBy("band", "doc_id")
-            .agg(F.max("ref_id").alias("ref_id"))
-            .groupBy("doc_id", "ref_id")
-            .agg(F.count_distinct("band").alias("n_bands"))
-        )
-        rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    """Horizon-bounded MinHash dedup under bounded disorder: a sorted
+    window swept below watermark - horizon (see bucket_state)."""
+    return state_stream(spark, sf_dir, _TEXT_KIND, "ttl_bounded")
 
 
 # Keeper-aware online dedup oracle: 4 unrolled stages (the spool's batch
@@ -1528,8 +850,10 @@ def _minhash_keeper_stream(
     return keeper_stream(
         spark,
         "doc_id",
-        table(spark, sf_dir, "documents").select("doc_id", "text"),
-        lambda spool_dir: _self_dedup_stream_bands(spark, spool_dir),
+        _docs(spark, sf_dir),
+        lambda spool_dir: minhash_band_rows(
+            read_spool(spark, spool_dir, _TEXT_KIND.spool_schema)
+        ),
         lambda store_dir: make_keeper_prober(
             spark, store_dir, "doc_id", ["band", "band_key"],
             item_slice=F.col("band") == 0,

@@ -2,9 +2,6 @@
 energy-envelope fingerprints and video frame signatures, batch and
 streaming.
 
-Closes the one LLM-pipeline dedup hole the round-7 judge named: the dedup
-family covered text five ways (MinHash/simhash/substring/chunk/semantic)
-but not images, while the multimodal layer already decodes real pixels.
 This module computes difference-hash and average-hash codes from DECODED
 pixel buffers (the standard pHash-family near-dup signatures for images)
 and finds near-duplicate pairs with the same chunk-LSH banding as
@@ -31,18 +28,16 @@ duplicate-group size, never corpus-quadratic (same argument as
 dedup_simhash_pairs; for adversarial buckets the dedup.lsh_candidate_pairs
 cap pattern applies unchanged).
 
-Streaming structure: every registered media stream binds modalities
-to one shell. ``_MEDIA_KINDS``, indexed by media_id % 3 (0 image,
-1 audio, 2 video), holds each modality's payload builder, decoder, key
-builder (media_id, sig, c, chunk_val) and pair rule (Hamming radius, or
-shared frames for video). The shells are ``_media_ingest_stream``
-(probe a static index of canonical items), ``_media_state_stream``
-(self and TTL dedup: one stateful processor; ``_STRATEGIES`` picks its
-per-bucket update rule from bucket_rules.py, the spool order, the
-read-back reconciliation and the event-time sweep) and
-``_media_keeper_stream`` (the keeper protocol, streaming/keeper.py,
-over modality-tagged keys: one modality, or all three in one stream
-for the multimodal flagship and the curation report).
+Streaming structure: every media ingest, self and TTL stream is a
+binding of one modality to a shell in streaming/bucket_state.py.
+``_MEDIA_KINDS``, indexed by media_id % 3 (0 image, 1 audio, 2 video),
+holds each modality's ``BucketKind``: payload builder, decoder, key
+frame (media_id, sig, c, chunk_val), shard, canonical refs and pair
+rule (Hamming radius on the signature for image and audio; shared
+frames for video, whose key is its signature, so it carries none).
+``_media_keeper_stream`` runs the keeper protocol (streaming/keeper.py)
+over modality-tagged keys: one modality, or all three in one stream for
+the multimodal flagship and the curation report.
 
 Reference parity: the reference engine (TwitterDatasetTrendingHashtag.java)
 has no image operators; this extends the mandated training-data-pipeline
@@ -54,13 +49,10 @@ Charikar simhash chunking).
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
-from spark_streaming_twitter_spark.multimodal import bucket_rules
 from spark_streaming_twitter_spark.multimodal.kernels import (
     AFP_FRAMES,
     DHASH_BITS,
@@ -77,11 +69,11 @@ from spark_streaming_twitter_spark.multimodal.kernels import (
     video_sig_batch,
 )
 from spark_streaming_twitter_spark.registry import query
-from spark_streaming_twitter_spark.streaming.harness import (
-    run_to_memory,
-    spool_block_reversed_batches,
-    spool_ordered_batches,
-    spool_roundrobin_batches,
+from spark_streaming_twitter_spark.streaming.bucket_state import (
+    BucketKind,
+    ingest_stream,
+    read_spool,
+    state_stream,
 )
 from spark_streaming_twitter_spark.streaming.keeper import (
     chunk_key_frame,
@@ -547,8 +539,6 @@ FROM ranked WHERE rn > 1
     "rounds; everything else is one window over groups.",
 )
 def media_phash_group_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from spark_streaming_twitter_spark.dedup.dedup import (
         connected_components,
     )
@@ -712,8 +702,6 @@ FROM vinter WHERE n_shared >= {VIDEO_MIN_SHARED}
     "per-pair frame alignment loop.",
 )
 def media_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     sigs = (
         media_video_frame_signatures(spark, sf_dir)
         .select("media_id", "frame_sig")
@@ -743,72 +731,115 @@ def media_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@dataclass(frozen=True)
-class _MediaKind:
-    """One modality of the streaming media dedup.
+def _hamming_pairs(radius: int):
+    """Image/audio pair rule over candidate rows: (media_id, ref_id,
+    hamming) where the full signatures are within ``radius``."""
 
-    ``synth`` builds payloads from ids, ``decode`` extracts signatures,
-    ``keys`` turns decoded rows into LSH keys (media_id, sig, c,
-    chunk_val). A candidate pair is verified by Hamming ``radius`` on
-    the full signatures or, where radius is None (video), by at least
-    VIDEO_MIN_SHARED distinct shared keys. ``max_occ`` caps a static
-    index key's postings."""
-
-    synth: Callable[[DataFrame], DataFrame]
-    decode: Callable[[DataFrame], DataFrame]
-    keys: Callable[[DataFrame], DataFrame]
-    n_chunks: int
-    radius: int | None
-    max_occ: int | None = None
-
-    def key_frame(self, payloads: DataFrame) -> DataFrame:
-        return self.keys(self.decode(payloads))
-
-    def pairs(self, hits: DataFrame) -> DataFrame:
-        """The pair rule over candidate rows (c, chunk_val, media_id, sig,
-        ref_id, ref_sig): (media_id, ref_id, hamming) or, for video,
-        (media_id, ref_id, n_shared)."""
-        if self.radius is None:
-            return (
-                hits.groupBy("media_id", "ref_id")
-                .agg(F.count_distinct("chunk_val").alias("n_shared"))
-                .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-            )
+    def pairs(hits: DataFrame) -> DataFrame:
         ham = F.bit_count(F.col("sig").bitwiseXOR(F.col("ref_sig")))
         return (
-            hits.where(ham <= self.radius)
+            hits.where(ham <= radius)
             .select("media_id", "ref_id", ham.cast("int").alias("hamming"))
             .distinct()
         )
 
+    return pairs
+
+
+def _shared_frame_pairs(hits: DataFrame) -> DataFrame:
+    """Video pair rule: (media_id, ref_id, n_shared), at least
+    VIDEO_MIN_SHARED distinct shared frame signatures."""
+    return (
+        hits.groupBy("media_id", "ref_id")
+        .agg(F.count_distinct("chunk_val").alias("n_shared"))
+        .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
+    )
+
 
 def _frame_keys(sigs: DataFrame) -> DataFrame:
-    """One key per video frame: c = 0, chunk_val = sig = frame_sig."""
+    """One key per video frame: c = 0, chunk_val = frame_sig. No
+    signature: the pair rule counts shared frames, so state keeps ids
+    only."""
     return sigs.select(
         "media_id",
-        F.col("frame_sig").alias("sig"),
+        F.lit(None).cast("bigint").alias("sig"),
         F.lit(0).alias("c"),
         F.col("frame_sig").alias("chunk_val"),
     )
 
 
+def _media_kind(
+    mod3: int,
+    synth: Callable[[DataFrame], DataFrame],
+    decode: Callable[[DataFrame], DataFrame],
+    keys: Callable[[DataFrame], DataFrame],
+    n_chunks: int,
+    radius: int | None,
+    max_occ: int | None = None,
+) -> BucketKind:
+    """The bucket kind of one modality (media_id % 3 == mod3): payloads
+    built by ``synth`` after the spool shuffle, decoded and keyed in the
+    stream, sharded by chunk_val mod 64 / n_chunks. The ingest refs are
+    the canonical items (media_id % 24 == mod3); ``max_occ`` caps a ref
+    key's postings."""
+
+    def key_frame(payloads: DataFrame) -> DataFrame:
+        return keys(decode(payloads))
+
+    def refs(spark: SparkSession, sf_dir: str) -> DataFrame:
+        canon = media_ids(spark, sf_dir, mod3).where(F.col("doc_id") % 24 == mod3)
+        out = key_frame(synth(canon)).select(
+            F.col("media_id").alias("ref_id"),
+            F.col("sig").alias("ref_sig"),
+            "c",
+            "chunk_val",
+        )
+        if max_occ is None:
+            return out
+        return (
+            out.distinct()
+            .withColumn(
+                "occ", F.count(F.lit(1)).over(Window.partitionBy("c", "chunk_val"))
+            )
+            .where(F.col("occ") <= max_occ)
+            .drop("occ")
+        )
+
+    return BucketKind(
+        id_col="media_id",
+        source=lambda spark, sf_dir: media_ids(spark, sf_dir, mod3),
+        spool_schema="media_id long, payload binary",
+        keys=key_frame,
+        key_type="bigint",
+        shard=f"pmod(chunk_val, {64 // n_chunks})",
+        bounds=lambda spark, sf_dir: media_id_bounds(spark, sf_dir)[mod3],
+        refs=refs,
+        pairs=_shared_frame_pairs if radius is None else _hamming_pairs(radius),
+        radius=radius,
+        synth=synth,
+    )
+
+
 # indexed by mod3 = media_id % 3
 _MEDIA_KINDS = (
-    _MediaKind(
+    _media_kind(
+        0,
         phash_media_from_ids,
         perceptual_hashes,
         lambda s: chunk_key_frame(s, "dhash", PHASH_CHUNKS, 14),
         PHASH_CHUNKS,
         PHASH_RADIUS,
     ),
-    _MediaKind(
+    _media_kind(
+        1,
         fp_audio_from_ids,
         audio_fingerprints,
         lambda s: chunk_key_frame(s, "fingerprint", AFP_CHUNKS, 12),
         AFP_CHUNKS,
         AFP_RADIUS,
     ),
-    _MediaKind(
+    _media_kind(
+        2,
         fp_video_from_ids,
         video_frame_signatures,
         _frame_keys,
@@ -818,365 +849,125 @@ _MEDIA_KINDS = (
     ),
 )
 
-# strategy -> (bucket update rule, spool order, read-back
-# reconciliation, event-time sweep); see bucket_rules
-_STRATEGIES = {
-    "self": (bucket_rules.first_owner, "ordered", None, False),
-    "self_unordered": (bucket_rules.min_owner, "roundrobin", "min_owner", False),
-    "ttl": (bucket_rules.last_seen, "ordered", None, True),
-    "ttl_unordered": (bucket_rules.sorted_window, "roundrobin", "max_ref", False),
-    "ttl_bounded": (bucket_rules.sorted_window, "block_reversed", "max_ref", True),
-}
-
-
-def _read_spool(
-    spark: SparkSession, spool_dir: str, schema: str = "media_id long, payload binary"
-) -> DataFrame:
-    """A media spool (batch_0.parquet ...) as a stream, payloads by
-    default: one file per trigger, in spool order, spread over the
-    cluster."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .option("pathGlobFilter", "batch_*.parquet")
-        .parquet(spool_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-
-def _spool_media(
-    spark: SparkSession,
-    sf_dir: str,
-    mod3: int,
-    spool_dir: str,
-    order: str,
-    bounds: "tuple[int, int]",
-) -> int:
-    """Spool a modality's ids in ``order`` (ordered, roundrobin or
-    block_reversed); the spool shuffles ids only and synthesises the
-    payloads after the exchange. Returns the disorder bound (0 unless
-    block-reversed)."""
-    ids = media_ids(spark, sf_dir, mod3)
-    synth = {"synth": _MEDIA_KINDS[mod3].synth, "synth_id_col": "media_id"}
-    if order == "roundrobin":
-        spool_roundrobin_batches(ids, "doc_id", spool_dir, **synth)
-        return 0
-    if order == "block_reversed":
-        return spool_block_reversed_batches(
-            ids, "doc_id", spool_dir, bounds=bounds, **synth
-        )
-    spool_ordered_batches(ids, "doc_id", spool_dir, bounds=bounds, **synth)
-    return 0
-
-
-def _media_ingest_stream(spark: SparkSession, sf_dir: str, mod3: int) -> DataFrame:
-    """Near-dup detection AT INGEST against a static index: each trigger's
-    keys probe a persisted, broadcast index of the canonical items
-    (media_id % 24 == mod3) on (c, chunk_val), statelessly, and the
-    read-back applies the pair rule."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    kind = _MEDIA_KINDS[mod3]
-    tmp = tempfile.mkdtemp(prefix="media_ingest_")
-    refs = None
-    try:
-        bounds = media_id_bounds(spark, sf_dir)[mod3]
-        _spool_media(spark, sf_dir, mod3, tmp, "ordered", bounds)
-        canon = media_ids(spark, sf_dir, mod3).where(F.col("doc_id") % 24 == mod3)
-        refs = kind.key_frame(kind.synth(canon)).select(
-            F.col("media_id").alias("ref_id"),
-            F.col("sig").alias("ref_sig"),
-            "c",
-            "chunk_val",
-        )
-        if kind.max_occ is not None:
-            refs = (
-                refs.distinct()
-                .withColumn(
-                    "occ",
-                    F.count(F.lit(1)).over(Window.partitionBy("c", "chunk_val")),
-                )
-                .where(F.col("occ") <= kind.max_occ)
-                .drop("occ")
-            )
-        # the static side of a stream-static join re-evaluates every
-        # trigger: persist it so the refs decode once
-        refs = refs.persist()
-        refs.count()
-        hits = (
-            kind.key_frame(_read_spool(spark, tmp))
-            .join(F.broadcast(refs), ["c", "chunk_val"])
-            .where(F.col("media_id") != F.col("ref_id"))
-        )
-        pairs = kind.pairs(run_to_memory(hits, output_mode="append"))
-        out = spark.createDataFrame(pairs.collect(), pairs.schema)
-    finally:
-        if refs is not None:
-            refs.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _media_state_stream(
-    spark: SparkSession, sf_dir: str, mod3: int, strategy: str
-) -> DataFrame:
-    """Self-referential streaming media dedup: there is no static index;
-    each bucket's state is the stream's own past.
-
-    Keys are sharded by (c, chunk_val mod 64 / n_chunks), 64 shards for
-    every modality, and one transformWithStateInPandas MapState maps
-    chunk_val to the bucket's (media_id, sig) entries. ``strategy``
-    picks the update rule, the spool order, the read-back reconciliation
-    and whether event-time timers sweep entries below watermark -
-    horizon (horizon = half the id range; the bounded spool's disorder
-    bound is the watermark delay). Ordered rules verify the Hamming
-    radius inside the processor, so only verified pairs are emitted;
-    disorder-tolerant rules emit candidates, because a later trigger may
-    still change a bucket's owner or an item's predecessor, and verify
-    after reconciling."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from spark_streaming_twitter_spark.streaming.queries import (
-        _forward_vendored_protobuf_to_workers,
-        _run_tws_update,
-    )
-
-    _forward_vendored_protobuf_to_workers(spark)
-    kind = _MEDIA_KINDS[mod3]
-    rule, order, reconcile, timed = _STRATEGIES[strategy]
-    lo, hi = bounds = media_id_bounds(spark, sf_dir)[mod3]
-    horizon = (hi - lo + 1) // 2
-    radius = kind.radius if reconcile is None else None
-
-    def entries(v) -> list:
-        return list(zip(map(int, v[0]), map(int, v[1])))
-
-    class MediaBuckets(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._buckets = handle.getMapState(
-                "buckets", "chunk_val bigint", "ids array<bigint>, sigs array<bigint>"
-            )
-
-        def _put(self, cv: int, old: list, new: list) -> None:
-            if new == old:
-                return
-            if new:
-                self._buckets.updateValue(
-                    (cv,), ([m for m, _ in new], [s for _, s in new])
-                )
-            else:
-                self._buckets.removeKey((cv,))
-
-        def handleInputRows(self, key, rows, timerValues):
-            c = int(key[0])
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out = []
-            for cv, grp in pdf.groupby("chunk_val", sort=True):
-                cv = int(cv)
-                cur = self._buckets.getValue((cv,))
-                old = entries(cur) if cur is not None else []
-                state, emits = bucket_rules.update(
-                    rule, old, grp["media_id"], grp["sig"], horizon, radius
-                )
-                self._put(cv, old, state)
-                out += [(c, cv, *e) for e in emits]
-            if timed:
-                # watermark + 1 ms, never deleted: the registration that
-                # fires mid-stream; the sweep re-checks the horizon, so
-                # its cadence cannot change the output
-                self._h.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["c", "chunk_val", "media_id", "sig", "ref_id", "ref_sig"]
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            stored = [(k[0], entries(v)) for k, v in self._buckets.iterator()]
-            for cv, old in stored:
-                self._put(cv, old, bucket_rules.expire(old, wm_ms, horizon))
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    tmp = tempfile.mkdtemp(prefix="media_state_")
-    try:
-        delay = _spool_media(spark, sf_dir, mod3, tmp, order, bounds)
-        keys = kind.key_frame(_read_spool(spark, tmp))
-        if timed:
-            keys = keys.withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(bucket_rules.TS_BASE) + F.col("media_id")),
-            ).withWatermark("ts", f"{delay} seconds")
-        hits = (
-            keys.withColumn("shard", F.pmod("chunk_val", F.lit(64 // kind.n_chunks)))
-            .groupBy("c", "shard")
-            .transformWithStateInPandas(
-                statefulProcessor=MediaBuckets(),
-                outputStructType="c int, chunk_val bigint, media_id bigint, "
-                "sig bigint, ref_id bigint, ref_sig bigint",
-                outputMode="Update",
-                timeMode="EventTime" if timed else "None",
-            )
-        )
-        rows = _run_tws_update(spark, hits)
-        if reconcile == "min_owner":
-            # final owner per bucket = min emitted owner: ownership only
-            # decreases and every demotion emits the new owner
-            rows = (
-                rows.groupBy("c", "chunk_val")
-                .agg(
-                    F.min(F.struct("ref_id", "ref_sig")).alias("o"),
-                    F.collect_set(F.struct("media_id", "sig")).alias("m"),
-                )
-                .select("c", "chunk_val", F.explode("m").alias("m"), "o")
-                .select("c", "chunk_val", "m.*", "o.*")
-            )
-        elif reconcile == "max_ref":
-            # final predecessor per (bucket, item) = max emitted ref
-            rows = (
-                rows.groupBy("c", "chunk_val", "media_id", "sig")
-                .agg(F.max(F.struct("ref_id", "ref_sig")).alias("r"))
-                .select("c", "chunk_val", "media_id", "sig", "r.*")
-            )
-        pairs = kind.pairs(rows)
-        out = spark.createDataFrame(pairs.collect(), pairs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
 
 def stream_media_phash_self_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential IMAGE dedup, ordered arrival: the first arrival
-    owns a bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 0, "self")
+    owns a bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[0], "self")
 
 
 def stream_media_audio_self_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential AUDIO dedup, ordered arrival: the first arrival
-    owns a bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 1, "self")
+    owns a bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[1], "self")
 
 
 def stream_media_video_self_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential VIDEO dedup, ordered arrival: the first arrival
-    owns a bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 2, "self")
+    owns a bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[2], "self")
 
 
 def stream_media_phash_self_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential IMAGE dedup under round-robin disorder: the
-    min-id owner, reconciled on the read-back (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 0, "self_unordered")
+    min-id owner, reconciled on the read-back (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[0], "self_unordered")
 
 
 def stream_media_audio_self_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential AUDIO dedup under round-robin disorder: the
-    min-id owner, reconciled on the read-back (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 1, "self_unordered")
+    min-id owner, reconciled on the read-back (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[1], "self_unordered")
 
 
 def stream_media_video_self_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Self-referential VIDEO dedup under round-robin disorder: the
-    min-id owner, reconciled on the read-back (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 2, "self_unordered")
+    min-id owner, reconciled on the read-back (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[2], "self_unordered")
 
 
 def stream_media_phash_ttl_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded IMAGE dedup, ordered arrival: each arrival pairs
-    with the latest earlier one (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 0, "ttl")
+    with the latest earlier one (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[0], "ttl")
 
 
 def stream_media_audio_ttl_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded AUDIO dedup, ordered arrival: each arrival pairs
-    with the latest earlier one (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 1, "ttl")
+    with the latest earlier one (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[1], "ttl")
 
 
 def stream_media_video_ttl_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded VIDEO dedup, ordered arrival: each arrival pairs
-    with the latest earlier one (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 2, "ttl")
+    with the latest earlier one (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[2], "ttl")
 
 
 def stream_media_phash_ttl_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded IMAGE dedup under round-robin disorder: a sorted
-    window per bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 0, "ttl_unordered")
+    window per bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[0], "ttl_unordered")
 
 
 def stream_media_audio_ttl_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded AUDIO dedup under round-robin disorder: a sorted
-    window per bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 1, "ttl_unordered")
+    window per bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[1], "ttl_unordered")
 
 
 def stream_media_video_ttl_dedup_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded VIDEO dedup under round-robin disorder: a sorted
-    window per bucket (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 2, "ttl_unordered")
+    window per bucket (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[2], "ttl_unordered")
 
 
 def stream_media_phash_ttl_dedup_bounded_disorder(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded IMAGE dedup under bounded disorder: a sorted window
-    swept below watermark - horizon (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 0, "ttl_bounded")
+    swept below watermark - horizon (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[0], "ttl_bounded")
 
 
 def stream_media_audio_ttl_dedup_bounded_disorder(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded AUDIO dedup under bounded disorder: a sorted window
-    swept below watermark - horizon (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 1, "ttl_bounded")
+    swept below watermark - horizon (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[1], "ttl_bounded")
 
 
 def stream_media_video_ttl_dedup_bounded_disorder(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Horizon-bounded VIDEO dedup under bounded disorder: a sorted window
-    swept below watermark - horizon (see _media_state_stream)."""
-    return _media_state_stream(spark, sf_dir, 2, "ttl_bounded")
+    swept below watermark - horizon (see bucket_state)."""
+    return state_stream(spark, sf_dir, _MEDIA_KINDS[2], "ttl_bounded")
 
 
 # ---------------------------------------------------------------------------
@@ -1233,7 +1024,7 @@ WHERE bit_count(xor(dhash, ref_dhash)) <= {PHASH_RADIUS}
 def stream_media_phash_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _media_ingest_stream(spark, sf_dir, 0)
+    return ingest_stream(spark, sf_dir, _MEDIA_KINDS[0])
 
 
 # Oracle for stream_media_phash_self_dedup (registered in
@@ -1500,7 +1291,7 @@ def _media_keeper_stream(
         "media_id",
         media_ids(spark, sf_dir, *mods),
         lambda d: media_key_frame(
-            media_keys_from_ids(_read_spool(spark, d, "doc_id long"))
+            media_keys_from_ids(read_spool(spark, d, "doc_id long"))
         ),
         lambda store_dir: make_media_keeper_prober(spark, store_dir),
         **opts,
@@ -1669,7 +1460,7 @@ WHERE bit_count(xor(fingerprint, ref_fp)) <= {AFP_RADIUS}
 def stream_media_audio_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _media_ingest_stream(spark, sf_dir, 1)
+    return ingest_stream(spark, sf_dir, _MEDIA_KINDS[1])
 
 
 # Oracles for the audio/video SELF-referential streaming dedups
@@ -1961,7 +1752,7 @@ HAVING count(DISTINCT frame_sig) >= {VIDEO_MIN_SHARED}
 def stream_media_video_ingest_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _media_ingest_stream(spark, sf_dir, 2)
+    return ingest_stream(spark, sf_dir, _MEDIA_KINDS[2])
 
 
 def _media_ledger_oracle() -> str:

@@ -1,12 +1,13 @@
-"""Per-bucket update rules of the streaming media dedup, Spark-free.
+"""Per-bucket update rules of the streaming self and TTL dedup, Spark-free.
 
-A bucket is one (chunk, chunk_val) LSH key (a frame signature for
-video). Its state is a list of ``(media_id, sig)`` entries sorted by
-id; ``new`` maps each id arriving in this trigger to its signature.
-Every rule returns ``(state', emits)``, where each emit is
-``(media_id, sig, ref_id, ref_sig)``: a candidate pair, verified later
-by the modality's pair rule. ``update`` runs one rule over one
-trigger's rows of one bucket.
+A bucket is one LSH key: a (chunk, chunk_val) of an image or audio
+signature, a video frame signature, or a text MinHash (band, band_key).
+Its state is a list of ``(id, sig)`` entries sorted by id, where ``sig``
+is None for a kind without a signature (text, video); ``new`` maps each
+id arriving in this trigger to its signature. Every rule returns
+``(state', emits)``, where each emit is ``(id, sig, ref_id, ref_sig)``:
+a candidate pair, verified later by the kind's pair rule. ``update``
+runs one rule over one trigger's rows of one bucket.
 
 - ``first_owner``: ordered self dedup. The first arrival owns the
   bucket; every later one pairs with it.
@@ -28,18 +29,18 @@ trigger's rows of one bucket.
 
 from __future__ import annotations
 
-TS_BASE = 1_700_000_000  # event time of media_id 0, in epoch seconds
+TS_BASE = 1_700_000_000  # event time of id 0, in epoch seconds
 
-Entries = list[tuple[int, int]]
+Entries = list[tuple[int, "int | None"]]
 
 
-def first_owner(state: Entries, new: dict[int, int], horizon=None):
+def first_owner(state: Entries, new: dict, horizon=None):
     items = sorted(new.items())
     owner = state[0] if state else items.pop(0)
     return [owner], [(m, s, *owner) for m, s in items]
 
 
-def min_owner(state: Entries, new: dict[int, int], horizon=None):
+def min_owner(state: Entries, new: dict, horizon=None):
     items = sorted(new.items())
     if state and state[0][0] < items[0][0]:
         owner, emit = state[0], items
@@ -48,7 +49,7 @@ def min_owner(state: Entries, new: dict[int, int], horizon=None):
     return [owner], [(m, s, *owner) for m, s in emit]
 
 
-def last_seen(state: Entries, new: dict[int, int], horizon: int):
+def last_seen(state: Entries, new: dict, horizon: int):
     last = state[-1] if state else None
     emits = []
     for m, s in sorted(new.items()):
@@ -58,7 +59,7 @@ def last_seen(state: Entries, new: dict[int, int], horizon: int):
     return [last], emits
 
 
-def sorted_window(state: Entries, new: dict[int, int], horizon: int):
+def sorted_window(state: Entries, new: dict, horizon: int):
     window = sorted({**dict(state), **new}.items())
     emits = [
         (m, s, p, ps)
@@ -73,11 +74,13 @@ def expire(state: Entries, watermark_ms: int, horizon: int) -> Entries:
 
 
 def update(rule, state: Entries, ids, sigs, horizon: int, radius: int | None = None):
-    """One trigger of one bucket: ``ids``/``sigs`` are its arriving rows.
-    A clip that repeats a frame signature arrives once per frame and
-    counts once. With ``radius``, emits whose signatures are further
-    apart in Hamming distance are dropped."""
-    new = dict(zip(map(int, ids), map(int, sigs)))
+    """One trigger of one bucket: ``ids``/``sigs`` are its arriving rows,
+    ``sigs`` None for a kind without a signature. A clip that repeats a
+    frame signature arrives once per frame and counts once. With
+    ``radius`` (which needs ``sigs``), emits whose signatures are
+    further apart in Hamming distance are dropped."""
+    ids = map(int, ids)
+    new = dict.fromkeys(ids) if sigs is None else dict(zip(ids, map(int, sigs)))
     state, emits = rule(state, new, horizon)
     if radius is not None:
         emits = [e for e in emits if (e[1] ^ e[3]).bit_count() <= radius]

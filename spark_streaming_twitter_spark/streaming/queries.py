@@ -977,9 +977,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "watermark already runs D behind), so state is bounded by "
         "horizon + D of event time per key instead of stream history. "
         "Sweep timing provably cannot change output; oracle is the "
-        "ordered twin's VERBATIM (see stream_text_minhash_ttl_dedup_"
-        "bounded_disorder in dedup/dedup.py for the eviction-safety "
-        "argument).",
+        "ordered twin's VERBATIM (see state_stream in "
+        "streaming/bucket_state.py for the eviction-safety argument).",
     )(stream_text_minhash_ttl_dedup_bounded_disorder)
 
     query(
@@ -989,9 +988,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "sorted per-key id window in one array-valued MapState entry, "
         "adjacent-pair emission on merge, max-ref reconciliation on the "
         "read-back; order-free TTL semantics under the ordered twin's "
-        "oracle VERBATIM (see stream_text_minhash_ttl_dedup_unordered "
-        "in dedup/dedup.py, incl. the honest disorder-bounded sweep "
-        "rule).",
+        "oracle VERBATIM (see state_stream in streaming/bucket_state.py).",
     )(stream_text_minhash_ttl_dedup_unordered)
 
     query(
@@ -1000,7 +997,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Self-referential streaming MinHash dedup via tws MapState — "
         "the index IS the stream's own past; probe + insert per "
         "micro-batch, first-occurrence-wins (see "
-        "stream_text_minhash_self_dedup in dedup/dedup.py).",
+        "state_stream in streaming/bucket_state.py).",
         bench=True,
     )(stream_text_minhash_self_dedup)
     query(
@@ -1013,8 +1010,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "the stored owner and re-emits it as the duplicate), and the "
         "read-back reconciles attribution to the global min per key — "
         "bit-identical to the ordered twin and to the arrival-order-free "
-        "oracle (see stream_text_minhash_self_dedup_unordered in "
-        "dedup/dedup.py).",
+        "oracle (see state_stream in streaming/bucket_state.py).",
     )(stream_text_minhash_self_dedup_unordered)
     query(
         "stream_text_minhash_ttl_dedup",
@@ -1022,7 +1018,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded streaming near-dup dedup — MapState + "
         "event-time TTL sweep timers in one processor; state bounded by "
         "the horizon, not stream history (see "
-        "stream_text_minhash_ttl_dedup in dedup/dedup.py).",
+        "state_stream in streaming/bucket_state.py).",
     )(stream_text_minhash_ttl_dedup)
 
     from spark_streaming_twitter_spark.multimodal.phash import (
@@ -1059,14 +1055,14 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "watermark - horizon by event-time timers, Hamming verify on "
         "the max-ref-reconciled read-back; eviction safety per the text "
         "twin's proof, oracle the ordered twin's verbatim (see "
-        "_media_state_stream in multimodal/phash.py).",
+        "state_stream in streaming/bucket_state.py).",
     )(stream_media_phash_ttl_dedup_bounded_disorder)
     query(
         "stream_media_audio_ttl_dedup_bounded_disorder",
         oracle=_AFP_TTL_DEDUP_ORACLE,
         doc="Horizon-bounded AUDIO dedup under BOUNDED disorder — the "
         "acoustic-fingerprint instance of the watermark-swept sorted "
-        "window (see _media_state_stream in multimodal/phash.py).",
+        "window (see state_stream in streaming/bucket_state.py).",
     )(stream_media_audio_ttl_dedup_bounded_disorder)
     query(
         "stream_media_video_ttl_dedup_bounded_disorder",
@@ -1074,9 +1070,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded VIDEO dedup under BOUNDED disorder — sorted "
         "clip-id windows per frame signature swept below watermark - "
         "horizon, max-ref reconciliation then the shared-frames "
-        "threshold on the read-back (see "
-        "stream_media_video_ttl_dedup_bounded_disorder in "
-        "multimodal/phash.py).",
+        "threshold on the read-back (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_video_ttl_dedup_bounded_disorder)
 
     query(
@@ -1088,7 +1083,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "merge, Hamming verify moved to the read-back against the "
         "max-ref-reconciled final predecessor; order-free TTL semantics "
         "under the ordered twin's oracle VERBATIM (see "
-        "_media_state_stream in multimodal/phash.py).",
+        "state_stream in streaming/bucket_state.py).",
     )(stream_media_phash_ttl_dedup_unordered)
     query(
         "stream_media_audio_ttl_dedup_unordered",
@@ -1096,7 +1091,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded AUDIO dedup under cross-partition disorder "
         "— the acoustic-fingerprint instance of the sorted-window TTL "
         "with the 48-bit Hamming verify on the reconciled read-back "
-        "(see _media_state_stream in multimodal/phash.py).",
+        "(see state_stream in streaming/bucket_state.py).",
     )(stream_media_audio_ttl_dedup_unordered)
     query(
         "stream_media_video_ttl_dedup_unordered",
@@ -1105,8 +1100,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "— sorted clip-id window per frame signature, adjacent-pair "
         "emission, max-ref reconciliation per (signature, clip), then "
         "the >= 8-shared-distinct-frames threshold on the read-back "
-        "(see stream_media_video_ttl_dedup_unordered in "
-        "multimodal/phash.py).",
+        "(see state_stream in streaming/bucket_state.py).",
     )(stream_media_video_ttl_dedup_unordered)
 
     query(
@@ -1116,15 +1110,16 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "round-robin spool (Kafka cross-partition disorder), min-id "
         "reconciled MapState ownership with demotion re-emission, and "
         "the Hamming verify moved to the read-back against the FINAL "
-        "reconciled owner's dHash (see multimodal/phash.py).",
+        "reconciled owner's dHash (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_phash_self_dedup_unordered)
     query(
         "stream_media_audio_self_dedup_unordered",
         oracle=_AFP_SELF_DEDUP_ORACLE,
         doc="DISORDER-TOLERANT self-referential streaming AUDIO dedup — "
         "the acoustic-fingerprint instance of the min-id-reconciled "
-        "chunk processor with read-back verify (see "
-        "multimodal/phash.py).",
+        "chunk processor with read-back verify (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_audio_self_dedup_unordered)
     query(
         "stream_media_video_self_dedup_unordered",
@@ -1132,7 +1127,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="DISORDER-TOLERANT self-referential streaming VIDEO dedup — "
         "min-id reconciled frame-signature ownership with demotion "
         "re-emission; the >= 8-shared-frames threshold runs on the "
-        "reconciled read-back (see multimodal/phash.py).",
+        "reconciled read-back (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_video_self_dedup_unordered)
 
     query(
@@ -1141,7 +1137,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded streaming AUDIO dedup — MapState carries the "
         "LAST (media_id, fingerprint) per chunk bucket, event-time timers "
         "sweep entries idle past the horizon, Hamming verify in state "
-        "(see stream_media_audio_ttl_dedup in multimodal/phash.py).",
+        "(see state_stream in streaming/bucket_state.py).",
     )(stream_media_audio_ttl_dedup)
     query(
         "stream_media_video_ttl_dedup",
@@ -1149,8 +1145,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Horizon-bounded streaming VIDEO dedup — MapState carries the "
         "LAST clip per frame signature, event-time timers sweep idle "
         "signatures; the >= 8-shared-frames pair threshold runs on the "
-        "read-back (see stream_media_video_ttl_dedup in "
-        "multimodal/phash.py).",
+        "read-back (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_video_ttl_dedup)
 
     query(
@@ -1160,8 +1156,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         "LAST (media_id, dhash) per chunk bucket, event-time timers sweep "
         "entries idle past the horizon; probes flag against the latest "
         "earlier same-bucket arrival within the horizon, Hamming-verified "
-        "in the processor (see stream_media_phash_ttl_dedup in "
-        "multimodal/phash.py).",
+        "in the processor (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_phash_ttl_dedup)
 
     query(
@@ -1170,8 +1166,8 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Self-referential streaming IMAGE dedup via tws MapState — "
         "decode + perceptual-hash inside the plan, chunk-LSH buckets "
         "probed AND inserted per micro-batch, Hamming-verified against "
-        "the owner dHash carried in state (see "
-        "stream_media_phash_self_dedup in multimodal/phash.py).",
+        "the owner dHash carried in state (see state_stream in "
+        "streaming/bucket_state.py).",
     )(stream_media_phash_self_dedup)
     query(
         "stream_media_audio_self_dedup",
@@ -1179,7 +1175,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Self-referential streaming AUDIO dedup via tws MapState — "
         "acoustic-fingerprint chunk buckets probed/inserted per batch, "
         "Hamming-verified against the owner fingerprint in state (see "
-        "stream_media_audio_self_dedup in multimodal/phash.py).",
+        "state_stream in streaming/bucket_state.py).",
     )(stream_media_audio_self_dedup)
     query(
         "stream_media_video_self_dedup",
@@ -1187,7 +1183,7 @@ HAVING count(CASE WHEN event_id % 4 <> 0 THEN 1 END) > 0
         doc="Self-referential streaming VIDEO dedup via tws MapState — "
         "per-frame signatures own their first-seen clip in state; the "
         ">= 8-shared-frames pair threshold runs on the read-back (see "
-        "stream_media_video_self_dedup in multimodal/phash.py).",
+        "state_stream in streaming/bucket_state.py).",
     )(stream_media_video_self_dedup)
 
 

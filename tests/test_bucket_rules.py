@@ -1,5 +1,5 @@
-"""Spark-free tests of the streaming media dedup's per-bucket update rules
-(multimodal/bucket_rules.py): each rule on its edge cases, and the
+"""Spark-free tests of the streaming self/TTL dedup's per-bucket update
+rules (streaming/bucket_rules.py): each rule on its edge cases, and the
 order-free invariant the disorder-tolerant strategies rest on."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ from __future__ import annotations
 import random
 from collections import defaultdict
 
-from spark_streaming_twitter_spark.multimodal.bucket_rules import (
+from spark_streaming_twitter_spark.streaming.bucket_rules import (
     TS_BASE,
     expire,
     first_owner,
@@ -102,9 +102,13 @@ def _keys(sig: int):
     return [(c, (sig >> (c * CHUNK_BITS)) & mask) for c in range(N_CHUNKS)]
 
 
-def _replay(rule, batches, sigs, horizon, radius=None, delay=None):
+def _replay(
+    rule, batches, sigs, horizon, radius=None, delay=None, carry="sig", final=None
+):
     """Feed arrival batches through one rule per bucket; with ``delay``,
-    sweep state after each batch at watermark = max id seen - delay."""
+    sweep state after each batch at watermark = max id seen - delay.
+    Rows carry their signature, or the constant ``carry`` (None: no
+    signature at all); ``final`` receives the end state."""
     state: dict = {}
     emitted = []
     seen = -1
@@ -115,6 +119,8 @@ def _replay(rule, batches, sigs, horizon, radius=None, delay=None):
                 rows[key][0].append(m)
                 rows[key][1].append(sigs[m])
         for key, (ids, ss) in sorted(rows.items()):
+            if carry != "sig":
+                ss = None if carry is None else [carry] * len(ids)
             state[key], emits = update(
                 rule, state.get(key, []), ids, ss, horizon, radius
             )
@@ -123,7 +129,28 @@ def _replay(rule, batches, sigs, horizon, radius=None, delay=None):
             seen = max(seen, *batch)
             wm_ms = (TS_BASE + seen - delay) * 1000
             state = {k: expire(v, wm_ms, horizon) for k, v in state.items()}
+    if final is not None:
+        final.update(state)
     return emitted
+
+
+def _assert_unsigned_matches_constant(rule, batches, sigs, horizon, delay=None):
+    """With no signature (sigs=None) a rule emits the same (id, ref)
+    pairs and keeps the same state ids as with one constant signature."""
+    runs = []
+    for carry in (0, None):
+        final: dict = {}
+        emitted = _replay(
+            rule, batches, sigs, horizon, delay=delay, carry=carry, final=final
+        )
+        runs.append(
+            (
+                [(k, m, r) for k, m, _, r, _ in emitted],
+                {k: [m for m, _ in v] for k, v in final.items()},
+            )
+        )
+    assert runs[0][0], rule.__name__
+    assert runs[0] == runs[1], rule.__name__
 
 
 def _min_owner_pairs(emitted):
@@ -180,6 +207,9 @@ def test_self_rules_are_order_free():
     for batches in (roundrobin, reversed_blocks):
         got = _verified(_min_owner_pairs(_replay(min_owner, batches, sigs, None)))
         assert got == want
+    _assert_unsigned_matches_constant(first_owner, ordered, sigs, None)
+    for batches in (roundrobin, reversed_blocks):
+        _assert_unsigned_matches_constant(min_owner, batches, sigs, None)
 
 
 def test_ttl_rules_are_order_free():
@@ -208,3 +238,8 @@ def test_ttl_rules_are_order_free():
         )
     )
     assert got == want
+    _assert_unsigned_matches_constant(last_seen, ordered, sigs, horizon, delay=0)
+    _assert_unsigned_matches_constant(sorted_window, roundrobin, sigs, horizon)
+    _assert_unsigned_matches_constant(
+        sorted_window, reversed_blocks, sigs, horizon, delay=block
+    )

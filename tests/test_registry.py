@@ -207,3 +207,33 @@ def test_package_starts_no_thread_pool():
             if name == "ThreadPoolExecutor":
                 hits.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not hits, f"ThreadPoolExecutor in the package: {hits}"
+
+
+def test_dedup_has_one_stateful_processor():
+    """Every self and TTL dedup stream, text and media, runs the one
+    StatefulProcessor of streaming/bucket_state.py: a second subclass in
+    the dedup or multimodal packages would be a hand copy of the
+    per-bucket rules in streaming/bucket_rules.py."""
+    import ast
+    import pathlib
+
+    import spark_streaming_twitter_spark
+
+    root = pathlib.Path(spark_streaming_twitter_spark.__file__).parent
+    paths = [
+        path
+        for pattern in ("dedup/*.py", "multimodal/*.py", "streaming/bucket_state.py")
+        for path in sorted(root.glob(pattern))
+    ]
+    hits = [
+        f"{path.relative_to(root)}:{node.lineno} {node.name}"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.ClassDef)
+        and any(
+            getattr(b, "id", None) == "StatefulProcessor"
+            or getattr(b, "attr", None) == "StatefulProcessor"
+            for b in node.bases
+        )
+    ]
+    assert len(hits) == 1, f"dedup StatefulProcessor subclasses: {hits}"
