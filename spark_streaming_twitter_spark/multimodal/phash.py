@@ -1901,103 +1901,6 @@ def media_caption_drop_propagation(
     )
 
 
-def _v8_oracle() -> str:
-    """Capstone-v8 oracle: the full multimodal curation report, every
-    stage oracle embedded VERBATIM at decoration time (the capstone
-    convention — a wrong pair in any detector flips a count here)."""
-    from spark_streaming_twitter_spark.registry import QUERIES
-
-    td = QUERIES["dedup_drop_list"].oracle
-    ik = QUERIES["media_phash_group_keeper"].oracle
-    cp = QUERIES["media_caption_drop_propagation"].oracle
-    ap = QUERIES["media_audio_dup_pairs"].oracle
-    vp = QUERIES["media_video_dup_pairs"].oracle
-    return f"""
-WITH tdrops AS ({td}),
-ikeeper AS ({ik}),
-cap AS ({cp}),
-apairs AS ({ap}),
-vpairs AS ({vp}),
-alldrops AS (
-  SELECT drop_doc_id AS doc_id FROM tdrops
-  UNION SELECT drop_media_id FROM ikeeper
-  UNION SELECT doc_id FROM cap
-  UNION SELECT media_b FROM apairs
-  UNION SELECT media_b FROM vpairs
-)
-SELECT 'text_near_dup' AS stage,
-       CAST((SELECT count(*) FROM tdrops) AS BIGINT) AS n_dropped
-UNION ALL SELECT 'image_keeper',
-       CAST((SELECT count(*) FROM ikeeper) AS BIGINT)
-UNION ALL SELECT 'caption_propagation',
-       CAST((SELECT count(*) FROM cap) AS BIGINT)
-UNION ALL SELECT 'audio_min_id',
-       CAST((SELECT count(DISTINCT media_b) FROM apairs) AS BIGINT)
-UNION ALL SELECT 'video_min_id',
-       CAST((SELECT count(DISTINCT media_b) FROM vpairs) AS BIGINT)
-UNION ALL SELECT 'all_distinct',
-       CAST((SELECT count(*) FROM alldrops) AS BIGINT)
-UNION ALL SELECT 'survivors',
-       CAST((SELECT count(*) FROM documents)
-            - (SELECT count(*) FROM alldrops) AS BIGINT)
-"""
-
-
-@query(
-    "corpus_curation_pipeline_v8",
-    oracle=_v8_oracle(),
-    doc="Curation capstone v8 — the FULL multimodal run report a 100 TB "
-    "training-data curation job logs once per run: per-stage drop counts "
-    "across BOTH sides of the corpus (text near-dup keep-min-id drop "
-    "list with exact-first staging; image keeper drops; their "
-    "PROPAGATED caption drops — identity linkage on this fixture, so "
-    "the caption row equals the image row by construction and the "
-    "distinct union absorbs it; audio and video min-id drops), plus the "
-    "distinct union of every dropped doc_id and the surviving-corpus "
-    "count. All five stage oracles are embedded verbatim at decoration "
-    "time, so this report can never drift from the registered "
-    "detectors. Scale: each stage is the already-banded/capped plan; "
-    "the report adds only tiny count aggregations and one distinct "
-    "union over drop lists, which are pairs-bounded — never "
-    "corpus-bounded.",
-)
-def corpus_curation_pipeline_v8(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from spark_streaming_twitter_spark.dedup.dedup import dedup_drop_list
-
-    tdrops = dedup_drop_list(spark, sf_dir).select(
-        F.col("drop_doc_id").alias("doc_id")
-    )
-    ikeeper = media_phash_group_keeper(spark, sf_dir)
-    cap = media_caption_drop_propagation(spark, sf_dir)
-    apairs = media_audio_dup_pairs(spark, sf_dir)
-    vpairs = media_video_dup_pairs(spark, sf_dir)
-    adrops = apairs.select(F.col("media_b").alias("doc_id")).distinct()
-    vdrops = vpairs.select(F.col("media_b").alias("doc_id")).distinct()
-    alldrops = (
-        tdrops.unionByName(
-            ikeeper.select(F.col("drop_media_id").alias("doc_id"))
-        )
-        .unionByName(cap.select("doc_id"))
-        .unionByName(adrops)
-        .unionByName(vdrops)
-        .distinct()
-    )
-    n_docs = table(spark, sf_dir, "documents").count()
-    n_all = alldrops.count()
-    rows = [
-        ("text_near_dup", tdrops.count()),
-        ("image_keeper", ikeeper.count()),
-        ("caption_propagation", cap.count()),
-        ("audio_min_id", adrops.count()),
-        ("video_min_id", vdrops.count()),
-        ("all_distinct", n_all),
-        ("survivors", n_docs - n_all),
-    ]
-    return spark.createDataFrame(rows, "stage string, n_dropped bigint")
-
-
 @query(
     "stream_media_phash_keeper_dedup_unordered",
     oracle=_phash_keeper_oracle(batch_label="s.media_id % 4"),
@@ -2172,3 +2075,103 @@ def stream_media_curation_report_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     return _media_curation_report_impl(spark, sf_dir, roundrobin=True)
+
+
+# Registered last: building this oracle imports dedup, whose text.corpus
+# import reads the keeper oracles registered above, so phash imports on its own.
+def _v8_oracle() -> str:
+    """Capstone-v8 oracle: the full multimodal curation report, every
+    stage oracle embedded VERBATIM at decoration time (the capstone
+    convention — a wrong pair in any detector flips a count here)."""
+    import spark_streaming_twitter_spark.dedup.dedup  # noqa: F401  (registers dedup_drop_list)
+    from spark_streaming_twitter_spark.registry import QUERIES
+
+    td = QUERIES["dedup_drop_list"].oracle
+    ik = QUERIES["media_phash_group_keeper"].oracle
+    cp = QUERIES["media_caption_drop_propagation"].oracle
+    ap = QUERIES["media_audio_dup_pairs"].oracle
+    vp = QUERIES["media_video_dup_pairs"].oracle
+    return f"""
+WITH tdrops AS ({td}),
+ikeeper AS ({ik}),
+cap AS ({cp}),
+apairs AS ({ap}),
+vpairs AS ({vp}),
+alldrops AS (
+  SELECT drop_doc_id AS doc_id FROM tdrops
+  UNION SELECT drop_media_id FROM ikeeper
+  UNION SELECT doc_id FROM cap
+  UNION SELECT media_b FROM apairs
+  UNION SELECT media_b FROM vpairs
+)
+SELECT 'text_near_dup' AS stage,
+       CAST((SELECT count(*) FROM tdrops) AS BIGINT) AS n_dropped
+UNION ALL SELECT 'image_keeper',
+       CAST((SELECT count(*) FROM ikeeper) AS BIGINT)
+UNION ALL SELECT 'caption_propagation',
+       CAST((SELECT count(*) FROM cap) AS BIGINT)
+UNION ALL SELECT 'audio_min_id',
+       CAST((SELECT count(DISTINCT media_b) FROM apairs) AS BIGINT)
+UNION ALL SELECT 'video_min_id',
+       CAST((SELECT count(DISTINCT media_b) FROM vpairs) AS BIGINT)
+UNION ALL SELECT 'all_distinct',
+       CAST((SELECT count(*) FROM alldrops) AS BIGINT)
+UNION ALL SELECT 'survivors',
+       CAST((SELECT count(*) FROM documents)
+            - (SELECT count(*) FROM alldrops) AS BIGINT)
+"""
+
+
+@query(
+    "corpus_curation_pipeline_v8",
+    oracle=_v8_oracle(),
+    doc="Curation capstone v8 — the FULL multimodal run report a 100 TB "
+    "training-data curation job logs once per run: per-stage drop counts "
+    "across BOTH sides of the corpus (text near-dup keep-min-id drop "
+    "list with exact-first staging; image keeper drops; their "
+    "PROPAGATED caption drops — identity linkage on this fixture, so "
+    "the caption row equals the image row by construction and the "
+    "distinct union absorbs it; audio and video min-id drops), plus the "
+    "distinct union of every dropped doc_id and the surviving-corpus "
+    "count. All five stage oracles are embedded verbatim at decoration "
+    "time, so this report can never drift from the registered "
+    "detectors. Scale: each stage is the already-banded/capped plan; "
+    "the report adds only tiny count aggregations and one distinct "
+    "union over drop lists, which are pairs-bounded — never "
+    "corpus-bounded.",
+)
+def corpus_curation_pipeline_v8(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from spark_streaming_twitter_spark.dedup.dedup import dedup_drop_list
+
+    tdrops = dedup_drop_list(spark, sf_dir).select(
+        F.col("drop_doc_id").alias("doc_id")
+    )
+    ikeeper = media_phash_group_keeper(spark, sf_dir)
+    cap = media_caption_drop_propagation(spark, sf_dir)
+    apairs = media_audio_dup_pairs(spark, sf_dir)
+    vpairs = media_video_dup_pairs(spark, sf_dir)
+    adrops = apairs.select(F.col("media_b").alias("doc_id")).distinct()
+    vdrops = vpairs.select(F.col("media_b").alias("doc_id")).distinct()
+    alldrops = (
+        tdrops.unionByName(
+            ikeeper.select(F.col("drop_media_id").alias("doc_id"))
+        )
+        .unionByName(cap.select("doc_id"))
+        .unionByName(adrops)
+        .unionByName(vdrops)
+        .distinct()
+    )
+    n_docs = table(spark, sf_dir, "documents").count()
+    n_all = alldrops.count()
+    rows = [
+        ("text_near_dup", tdrops.count()),
+        ("image_keeper", ikeeper.count()),
+        ("caption_propagation", cap.count()),
+        ("audio_min_id", adrops.count()),
+        ("video_min_id", vdrops.count()),
+        ("all_distinct", n_all),
+        ("survivors", n_docs - n_all),
+    ]
+    return spark.createDataFrame(rows, "stage string, n_dropped bigint")

@@ -237,3 +237,21 @@ def test_dedup_has_one_stateful_processor():
         )
     ]
     assert len(hits) == 1, f"dedup StatefulProcessor subclasses: {hits}"
+
+
+def test_phash_imports_on_its_own():
+    """A Python worker unpickling a phash function imports phash first, in
+    a fresh interpreter, with no ``load_all``: the module must register
+    cleanly on its own, including the oracles it embeds from dedup."""
+    import pathlib
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-c", "import spark_streaming_twitter_spark.multimodal.phash"],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -310,6 +310,7 @@ def test_tws_degrades_to_gate_on_bare_host():
     block intercepts the probe's sys.path insertion too) must import the
     full registry WITHOUT errors and simply not register the six tws
     queries, i.e. the capability probe degrades, never raises."""
+    import pathlib
     import subprocess
     import sys
 
@@ -348,7 +349,7 @@ print("DEGRADED_OK", len(names))
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=pathlib.Path(__file__).resolve().parents[1],
     )
     assert proc.returncode == 0, (
         f"bare-host registry import failed:\n{proc.stderr[-2000:]}"
