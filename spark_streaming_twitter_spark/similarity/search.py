@@ -32,6 +32,12 @@ serialized plan (a few KB), not as a side table.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -141,6 +147,30 @@ def _topk_filter(scored: DataFrame) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+def _exact_page(
+    corpus: DataFrame, vec: str, dot: "Callable[[Column, Column], Column]"
+) -> DataFrame:
+    """Brute-force exact top-k of the stride queries over ``corpus``
+    (vec_id, ``vec``, n2): the query set broadcasts against the corpus
+    scan and cosine is ``dot`` over the norms' square roots — the
+    similarity_topk_cosine shape for any exact integer dot."""
+    queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col(vec).alias("q_vec"),
+        F.col("n2").alias("q_n2"),
+    )
+    cosine = dot(F.col("q_vec"), F.col(vec)).cast("double") / (
+        F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
+    )
+    return _topk_filter(
+        corpus.crossJoin(F.broadcast(queries))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), cosine.alias("cosine")
+        )
     )
 
 
@@ -2266,10 +2296,6 @@ FROM irouted WHERE rn = 1
 def stream_embedding_index_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from spark_streaming_twitter_spark.streaming.harness import (
         run_to_memory,
     )
@@ -2443,10 +2469,6 @@ def _run_centroid_maintenance(
     4-epoch ingest. When ``landing_dir`` is given, each micro-batch's
     (vec_id, lab) cell assignments append there — the index landing
     table a later SPLIT reads its cell members from."""
-    import os
-    import shutil
-    import tempfile
-
     from spark_streaming_twitter_spark.streaming.harness import (
         run_foreach_batch,
         spool_ordered_batches,
@@ -2674,108 +2696,11 @@ SELECT 1 AS version, label, n_members, centroid FROM ver1
 """
 
 
-@query(
-    "stream_cell_split_maintenance",
-    oracle=_cell_split_oracle(),
-    doc="INDEX-LIFECYCLE COMPLETENESS — hot-cell SPLIT (the r10 verdict's "
-    "#7): centroid maintenance refreshes means but never re-partitions, "
-    "so at 100 TB a hot cell degrades IVF probe cost unboundedly (probe "
-    "work is O(|cell|)). This query runs the 4-epoch maintenance ingest "
-    "(landing each batch's cell assignments as the index table — the "
-    "ingest write path's layout) and then SPLITS the largest cell: "
-    "deterministic exact-integer 2-means — seeds = min-id member + the "
-    "member farthest from it (squared-distance argmax, min-id "
-    "tie-break), one strictly-nearer assignment pass, floor-div "
-    "centroids per side — emitting the routing table VERSIONED PER "
-    "EPOCH (version 0 = post-ingest, bitwise the maintenance rows; "
-    "version 1 = post-split, the hot cell replaced by its halves, the "
-    "new cell labeled max+1). Versioning is what lets concurrent "
-    "readers keep routing on v0 while the split commits — the routing "
-    "table is nlist x dim metadata, so a version is cheap to retain. "
-    "Scale shape: the split touches ONE cell's members (re-read from "
-    "the landing table by cell id — partition-pruned, never a corpus "
-    "scan); seed selection and assignment are row-wise folds over a "
-    "broadcast seed vector (two single-row collects, no shuffle), and "
-    "the side stats are one (side, dim) aggregation bounded by "
-    "|cell| x dim. Repeated greedily, max-cell splitting bounds the "
-    "hottest cell at ~2x the mean at O(log) splits per rebalance pass.",
-)
-def stream_cell_split_maintenance(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
-    def cent_str(cvec: "list[int]") -> str:
-        return ",".join(str(c) for c in cvec)
-
-    tmp = tempfile.mkdtemp(prefix="cell_split_")
-    try:
-        ver0, ver1, _, _, _, _ = _run_cell_split(spark, sf_dir, tmp)
-        out_rows = [(0, lab, n, cent_str(c)) for lab, n, c in ver0] + [
-            (1, lab, n, cent_str(c)) for lab, n, c in ver1
-        ]
-        out = spark.createDataFrame(
-            out_rows, "version int, label bigint, n_members bigint, centroid string"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 def _floor_div_centroid(st: "list[list[int]]") -> "list[int]":
     """Exact-integer floor-div centroid from per-dim [sum, count] stats
     (pmod-corrected so truncation == floor for negative sums — the
     formula every centroid in this module shares)."""
     return [(s - (((s % n) + n) % n)) // n for s, n in st]
-
-
-def _run_cell_split(
-    spark: SparkSession, sf_dir: str, workdir: str
-) -> "tuple[list, list, int, int, DataFrame, DataFrame]":
-    """Drive the 4-epoch centroid-maintenance ingest (landing table
-    under ``workdir``) and SPLIT the hottest post-ingest cell with the
-    deterministic exact-integer 2-means — the shared engine behind
-    stream_cell_split_maintenance (which formats the versioned routing
-    table) and the post-split SEARCH path (which routes through it).
-
-    Returns (ver0, ver1, big_label, new_label, sides, asg_v0):
-    ver0/ver1 are [(label, n_members, [centroid ints])] routing-table
-    versions; ``sides`` is the hot cell's (vec_id, side) assignment and
-    ``asg_v0`` the full post-ingest (vec_id, label) assignment (corpus
-    half + landed stream half) — both parquet-backed DataFrames valid
-    while ``workdir`` exists."""
-    import os
-
-    landing = os.path.join(workdir, "landing")
-    sides_dir = os.path.join(workdir, "sides")
-    labels, stats = _run_centroid_maintenance(
-        spark, sf_dir, landing_dir=landing
-    )
-    ver0 = [
-        (lab, stats[lab][0][1], _floor_div_centroid(stats[lab]))
-        for lab in labels
-    ]
-    # hottest cell: max members, min label on ties
-    big_label = max(ver0, key=lambda r: (r[1], -r[0]))[0]
-    new_label = max(labels) + 1
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    asg_v0 = (
-        emb.where(F.col("vec_id") % 2 == 0)
-        .select("vec_id", F.col("label").cast("bigint").alias("label"))
-        .unionByName(
-            spark.read.parquet(landing).select(
-                "vec_id", F.col("lab").cast("bigint").alias("label")
-            )
-        )
-    )
-    ver1, _, new_label, sides = _split_hottest_cell(
-        spark, sides_dir, ver0, asg_v0, emb
-    )
-    return ver0, ver1, big_label, new_label, sides, asg_v0
 
 
 def _split_hottest_cell(
@@ -2784,13 +2709,13 @@ def _split_hottest_cell(
     ver_in: "list[tuple[int, int, list[int]]]",
     asg_in: DataFrame,
     emb: DataFrame,
-) -> "tuple[list, int, int, DataFrame]":
+) -> "tuple[list, int, DataFrame]":
     """One greedy rebalance STEP: split the hottest cell of routing
     table ``ver_in`` (max members, min label on ties; the new cell
     takes max(label)+1) under assignment ``asg_in`` with the
-    deterministic exact-integer 2-means. Returns (ver_out, big_label,
-    new_label, sides) — reusable, so repeated application IS the greedy
-    rebalance pass SCALE.md describes."""
+    deterministic exact-integer 2-means. Returns (ver_out, new_label,
+    sides) — reusable, so repeated application IS the greedy
+    rebalance pass SCALE.md describes (_ivf_chain)."""
     big_label = max(ver_in, key=lambda r: (r[1], -r[0]))[0]
     new_label = max(lab for lab, _, _ in ver_in) + 1
     members = (
@@ -2853,7 +2778,7 @@ def _split_hottest_cell(
             continue
         ver_out.append((newlab, st[0][1], _floor_div_centroid(st)))
     ver_out.sort(key=lambda r: r[0])
-    return ver_out, big_label, new_label, sides
+    return ver_out, new_label, sides
 
 
 def _asg_after_split(
@@ -2975,15 +2900,6 @@ scorpus AS MATERIALIZED (
 )"""
 
 
-def _split_chain_sql() -> str:
-    """CTE chain shared by the post-split SEARCH oracles: the base
-    (asgall, ver0v, scorpus) plus ONE greedy split step -> v1 routing
-    table (ver1v) and v1 assignment (asg1all)."""
-    return _split_base_sql() + _split_step_sql_ctes(
-        "ver0v", "asgall", "", "1"
-    )
-
-
 def _postsplit_route_sql(
     ver: str, asg: str, tag: str, nprobe: int = 1
 ) -> str:
@@ -3031,12 +2947,13 @@ ranked{tag} AS MATERIALIZED (
 def _route_and_topk(
     spark: SparkSession,
     sf_dir: str,
-    cells: "list[tuple[int, list[int]]]",
+    ver: "list[tuple[int, int, list[int]]]",
     asg: DataFrame,
     nprobe: int = 1,
 ) -> "tuple[DataFrame, DataFrame]":
     """Spark twin of _postsplit_route_sql: route the stride queries by
-    row-wise argmax fold over the literal routing table (no join, no
+    row-wise argmax fold over routing-table version ``ver`` as a literal
+    (no join, no
     shuffle — the index-ingest pattern; nprobe > 1 ranks the same
     literal per row and explodes the top cells), score exact cosine
     within the routed cells under assignment ``asg``. Returns
@@ -3060,7 +2977,7 @@ def _route_and_topk(
                     *[F.lit(int(c)).cast("bigint") for c in cvec]
                 ).alias("cvec"),
             )
-            for lab, cvec in sorted(cells)
+            for lab, _, cvec in sorted(ver)
         ]
     )
     if nprobe == 1:
@@ -3121,20 +3038,505 @@ def _route_and_topk(
     return cand.select("query_id", "neighbor_id"), _topk_filter(scored)
 
 
-@query(
-    "stream_cell_split_rebalance",
-    oracle=_split_base_sql()
-    + _split_step_sql_ctes("ver0v", "asgall", "", "1")
-    + _split_step_sql_ctes("ver1v", "asg1all", "2", "2")
-    + """
+# ---------------------------------------------------------------------------
+# Skewed-fixture greedy rebalance: the embeddings fixture's natural cells
+# are near-balanced (max/mean 1.14), so the greedy split pass's stop rule
+# correctly refuses to run there. The skewed scenario gives the pass data
+# that NEEDS it: a deterministic skew overlay assigns vec_id % 10 < 5 (half
+# the corpus) to cell 0 on top of the true labels, making the hottest cell
+# 5.4x the mean at sf0.01 (>= the 5x bar). The pass then runs FOR REAL —
+# K split-the-hottest-cell steps — and the whole trajectory, the post-pass
+# search, and the v0-vs-vN recall/probe-cost pair are oracle-checked.
+# Reference parity: the reference has no ANN index maintenance at all
+# (TwitterDataset*.java are fixed-pipeline streams); this is §2.8 extension
+# surface, built on the split-step engine above.
+# ---------------------------------------------------------------------------
+
+SKEW_HOT_MOD = 10
+SKEW_HOT_LT = 5  # vec_id % 10 < 5 -> overlaid onto cell 0
+REBALANCE_STOP = 2.0  # stop threshold on max_members/mean_members
+SKEW_SPLIT_K = 5  # CONTRACTUAL split count: the registered queries run
+# EXACTLY K greedy splits — data-independent — so the oracle's K-step CTE
+# chain replays the pass bitwise at ANY scale factor (a loop
+# `while max/mean > REBALANCE_STOP` makes the pass length data-emergent and
+# breaks sf0.001 parity: that fixture needs 6 splits, the oracle unrolls
+# 5). K=5 is where the sf0.01 fixture first reaches max/mean <=
+# REBALANCE_STOP — that convergence claim lives in the sf0.01-pinned test
+# (tests/test_similarity_codecs.py::test_skewed_rebalance_converges_at_sf001),
+# and the stop metric itself is EMITTED per version (max_over_mean in
+# ivf_rebalance_skewed_trajectory), so the stop rule stays visible as
+# checked data rather than as a hidden loop condition.
+
+
+def _skewed_base_sql() -> str:
+    """Skewed-overlay base: mnorms (quantized corpus), asgall (the skew
+    assignment), ver0v (exact-integer per-cell centroids under the skew),
+    scorpus (scoring corpus with norms) — same CTE names the split-step
+    and route blocks expect, so both compose unchanged."""
+    return f"""
+WITH mnorms AS (
+  SELECT vec_id, label, {_QUANT_SQL.format(vec="embedding")} AS qv
+  FROM embeddings
+),
+asgall AS MATERIALIZED (
+  SELECT vec_id,
+         CAST(CASE WHEN vec_id % {SKEW_HOT_MOD} < {SKEW_HOT_LT} THEN 0
+              ELSE label END AS BIGINT) AS label
+  FROM mnorms
+),
+skd AS (
+  SELECT a.label, m.d, CAST(sum(m.q) AS BIGINT) AS s,
+         CAST(count(*) AS BIGINT) AS n
+  FROM asgall a
+  JOIN (SELECT vec_id, qv[d] AS q, d FROM
+        (SELECT vec_id, qv, unnest(generate_series(1, {DIM})) AS d
+         FROM mnorms)) m USING (vec_id)
+  GROUP BY 1, 2
+),
+ver0v AS MATERIALIZED (
+  SELECT label, max(n) AS n_members,
+         list(CAST((s - (((s % n) + n) % n)) // n AS BIGINT) ORDER BY d)
+           AS cvec
+  FROM skd GROUP BY label
+),
+scorpus AS MATERIALIZED (
+  SELECT vec_id, embedding,
+         {scaled_dot_sql("embedding", "embedding")} AS n2
+  FROM embeddings
+)"""
+
+
+def _skewed_v0(
+    spark: SparkSession, sf_dir: str, _workdir: str
+) -> "tuple[list[tuple[int, int, list[int]]], DataFrame, DataFrame]":
+    """Build the skew-overlay v0: returns (ver0, asg0, emb). ver0's
+    centroid stats come from ONE map-side aggregation collected as a
+    bounded n_cells x DIM table (640 rows at any corpus size — cells
+    and dims, never vectors, cross the driver). The overlay lands no
+    files, so the work dir goes unused."""
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding"
+    )
+    asg0 = emb.select(
+        "vec_id",
+        F.when(
+            F.col("vec_id") % SKEW_HOT_MOD < SKEW_HOT_LT, F.lit(0)
+        )
+        .otherwise(F.col("label"))
+        .cast("bigint")
+        .alias("label"),
+    )
+    stat_rows = (
+        widen(emb, spark)
+        .select(
+            F.when(
+                F.col("vec_id") % SKEW_HOT_MOD < SKEW_HOT_LT, F.lit(0)
+            )
+            .otherwise(F.col("label"))
+            .cast("bigint")
+            .alias("label"),
+            F.posexplode(_quantized(F.col("embedding"))).alias("dpos", "v"),
+        )
+        .groupBy("label", "dpos")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    )
+    labels = sorted({int(r["label"]) for r in stat_rows})
+    stats = {lab: [[0, 0] for _ in range(DIM)] for lab in labels}
+    for r in stat_rows:
+        stats[int(r["label"])][int(r["dpos"])] = [int(r["s"]), int(r["cnt"])]
+    ver0 = [
+        (lab, stats[lab][0][1], _floor_div_centroid(stats[lab]))
+        for lab in labels
+    ]
+    return ver0, asg0, emb
+
+
+def _ingest_v0(
+    spark: SparkSession, sf_dir: str, workdir: str
+) -> "tuple[list[tuple[int, int, list[int]]], DataFrame, DataFrame]":
+    """Split/rebalance v0: the 4-epoch centroid-maintenance ingest, its
+    per-batch cell assignments landed under ``workdir`` as the index
+    table (the ingest write path's layout). Returns (ver0, asg0, emb):
+    the post-ingest routing table, the full post-ingest (vec_id, label)
+    assignment (corpus half + landed stream half) and the embeddings."""
+    landing = os.path.join(workdir, "landing")
+    labels, stats = _run_centroid_maintenance(
+        spark, sf_dir, landing_dir=landing
+    )
+    ver0 = [
+        (lab, stats[lab][0][1], _floor_div_centroid(stats[lab]))
+        for lab in labels
+    ]
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding"
+    )
+    asg0 = (
+        emb.where(F.col("vec_id") % 2 == 0)
+        .select("vec_id", F.col("label").cast("bigint").alias("label"))
+        .unionByName(
+            spark.read.parquet(landing).select(
+                "vec_id", F.col("lab").cast("bigint").alias("label")
+            )
+        )
+    )
+    return ver0, asg0, emb
+
+
+# ---------------------------------------------------------------------------
+# IVF maintenance scenarios x measures. A scenario is how the routing table
+# is maintained: a v0 (routing table + assignment) and k greedy
+# split-the-hottest-cell steps chained onto it, run by _ivf_chain in Spark
+# and replayed by _chain_sql in SQL (CTEs ver{i}v / asg{i}all, i = 0..k). A
+# measure is what a registered query reads from the versions: the versions
+# themselves, their balance trajectory, top-k through version k, probe cost
+# v0 vs vk, or exact-page recall at (version, nprobe) points. Each
+# registered name binds one scenario to one measure.
+# ---------------------------------------------------------------------------
+
+
+class _Scenario(NamedTuple):
+    """``v0(spark, sf_dir, workdir)`` builds (ver0, asg0, emb);
+    ``base_sql()`` is its DuckDB twin, ending in the asgall / ver0v /
+    scorpus CTEs; ``k`` greedy split steps follow on both sides."""
+
+    v0: Callable[[SparkSession, str, str], tuple]
+    base_sql: Callable[[], str]
+    k: int
+
+
+SPLIT = _Scenario(_ingest_v0, _split_base_sql, 1)
+REBALANCE = _Scenario(_ingest_v0, _split_base_sql, 2)
+SKEWED = _Scenario(_skewed_v0, _skewed_base_sql, SKEW_SPLIT_K)
+
+
+def _ver_ctes(v: int) -> "tuple[str, str]":
+    """The SQL chain's (routing table, assignment) CTE names at version v."""
+    return f"ver{v}v", (f"asg{v}all" if v else "asgall")
+
+
+def _chain_sql(sc: _Scenario) -> str:
+    """The scenario's base plus its k chained split steps — the SQL
+    replay of _ivf_chain (step 1 keeps the unsuffixed CTE names)."""
+    return sc.base_sql() + "".join(
+        _split_step_sql_ctes(*_ver_ctes(i - 1), str(i) if i > 1 else "", str(i))
+        for i in range(1, sc.k + 1)
+    )
+
+
+@contextmanager
+def _ivf_chain(spark: SparkSession, sf_dir: str, sc: _Scenario):
+    """THE greedy rebalance pass, run for a CONTRACTUAL number of steps:
+    v0, then exactly ``sc.k`` applications of split-the-hottest-cell
+    (_split_hottest_cell), each folding its side assignment in. Yields
+    (vers, asgs): routing-table versions 0..k as [(label, n_members,
+    centroid)] and the matching (vec_id, label) assignments, which are
+    parquet-backed in a temp dir that lives until the block exits. The
+    step count is part of the query contract, not data-emergent, so
+    _chain_sql's statically chained k steps replay it exactly at every
+    scale factor. Split-hottest is total on any fixture (degenerate
+    one-member / identical-vector splits are handled inside the engine
+    and mirrored by the oracle's GROUP BY side), so the pass always
+    terminates; whether it CONVERGED stays visible as data
+    (max_over_mean per version in the balance trajectory)."""
+    tmp = tempfile.mkdtemp(prefix="ivf_chain_")
+    try:
+        ver, asg, emb = sc.v0(spark, sf_dir, tmp)
+        vers, asgs = [ver], [asg]
+        for step in range(1, sc.k + 1):
+            ver, new_label, sides = _split_hottest_cell(
+                spark, os.path.join(tmp, f"sides{step}"), ver, asg, emb
+            )
+            asg = _asg_after_split(asg, sides, new_label)
+            vers.append(ver)
+            asgs.append(asg)
+        yield vers, asgs
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """``df`` collected into a driver-built frame that outlives the
+    chain's temp dir (a measure's output is a page or one row)."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+
+
+def _count(df: DataFrame, name: str) -> DataFrame:
+    return df.agg(F.count(F.lit(1)).alias(name))
+
+
+def _ratio(num: str, den: str) -> Column:
+    return F.col(num).cast("double") / F.col(den).cast("double")
+
+
+def _routes_sql(sc: _Scenario, points) -> str:
+    """The chain plus one route/rank block per (version, nprobe, tag, ...)
+    point — the routed pages a measure reads."""
+    return _chain_sql(sc) + "".join(
+        "," + _postsplit_route_sql(*_ver_ctes(v), tag, nprobe)
+        for v, nprobe, tag, *_ in points
+    )
+
+
+def _versions_sql(sc: _Scenario) -> str:
+    return _chain_sql(sc) + """
 SELECT 0 AS version, label, n_members,
        array_to_string(cvec, ',') AS centroid
 FROM ver0v
-UNION ALL
-SELECT 1, label, n_members, array_to_string(cvec, ',') FROM ver1v
-UNION ALL
-SELECT 2, label, n_members, array_to_string(cvec, ',') FROM ver2v
-""",
+""" + "".join(
+        f"UNION ALL\nSELECT {v}, label, n_members, "
+        f"array_to_string(cvec, ',') FROM ver{v}v\n"
+        for v in range(1, sc.k + 1)
+    )
+
+
+def _versions_table(spark: SparkSession, sf_dir: str, sc: _Scenario) -> DataFrame:
+    """Measure: every routing-table version, centroids comma-joined."""
+    with _ivf_chain(spark, sf_dir, sc) as (vers, _):
+        rows = [
+            (v, lab, n, ",".join(str(c) for c in cvec))
+            for v, ver in enumerate(vers)
+            for lab, n, cvec in ver
+        ]
+    return spark.createDataFrame(
+        rows, "version int, label bigint, n_members bigint, centroid string"
+    )
+
+
+def _trajectory_sql(sc: _Scenario) -> str:
+    union = "\nUNION ALL ".join(
+        f"SELECT {v} AS version, label, n_members FROM ver{v}v"
+        for v in range(sc.k + 1)
+    )
+    return _chain_sql(sc) + f"""
+SELECT CAST(version AS INT) AS version,
+       CAST(count(*) AS BIGINT) AS n_cells,
+       max(n_members) AS max_members,
+       CAST(sum(n_members) AS BIGINT) AS total_members,
+       CAST(max(n_members) * count(*) AS DOUBLE)
+         / CAST(sum(n_members) AS DOUBLE) AS max_over_mean
+FROM ({union})
+GROUP BY version
+"""
+
+
+def _balance_trajectory(
+    spark: SparkSession, sf_dir: str, sc: _Scenario
+) -> DataFrame:
+    """Measure: per version, cell count, hottest cell, total members and
+    max/mean (exact ints, one division)."""
+    with _ivf_chain(spark, sf_dir, sc) as (vers, _):
+        sizes = [[n for _, n, _ in ver] for ver in vers]
+    rows = [
+        (v, len(s), max(s), sum(s), max(s) * len(s) / sum(s))
+        for v, s in enumerate(sizes)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "version int, n_cells bigint, max_members bigint, "
+        "total_members bigint, max_over_mean double",
+    )
+
+
+def _topk_sql(sc: _Scenario, tag: str) -> str:
+    return _routes_sql(sc, [(sc.k, 1, tag)]) + f"""
+SELECT query_id, neighbor_id, rank, cosine
+FROM ranked{tag} WHERE rank <= {TOP_K}
+"""
+
+
+def _topk_through(spark: SparkSession, sf_dir: str, sc: _Scenario) -> DataFrame:
+    """Measure: the top-k page routed through version k."""
+    with _ivf_chain(spark, sf_dir, sc) as (vers, asgs):
+        return _local(_route_and_topk(spark, sf_dir, vers[-1], asgs[-1])[1])
+
+
+def _probe_cost_sql(sc: _Scenario, tag: str) -> str:
+    r = "r" + tag.lower()
+    return _routes_sql(sc, [(0, 1, "0"), (sc.k, 1, tag)]) + f""",
+common AS (
+  SELECT r0.query_id, r0.neighbor_id
+  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r0
+  JOIN (SELECT query_id, neighbor_id FROM ranked{tag} WHERE rank <= {TOP_K}) {r}
+    ON r0.query_id = {r}.query_id AND r0.neighbor_id = {r}.neighbor_id
+)
+SELECT
+  (SELECT CAST(count(*) AS BIGINT) FROM cell0) AS n_queries,
+  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
+  (SELECT CAST(count(*) AS BIGINT) FROM cand{tag}) AS total_cand_v{tag},
+  CAST((SELECT count(*) FROM cand{tag}) AS DOUBLE)
+    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio,
+  (SELECT CAST(count(*) AS BIGINT)
+   FROM ranked0 WHERE rank <= {TOP_K}) AS n_top_v0,
+  (SELECT CAST(count(*) AS BIGINT) FROM common) AS n_top_common,
+  CAST((SELECT count(*) FROM common) AS DOUBLE)
+    / CAST((SELECT count(*) FROM ranked0 WHERE rank <= {TOP_K}) AS DOUBLE)
+    AS topk_recall_vs_v0
+"""
+
+
+def _probe_cost(
+    spark: SparkSession, sf_dir: str, sc: _Scenario, tag: str
+) -> DataFrame:
+    """Measure: candidates scanned through v0 and vk, and vk's top-k
+    overlap with v0's page (output column total_cand_v{tag})."""
+    vk, pair = f"total_cand_v{tag}", ["query_id", "neighbor_id"]
+    with _ivf_chain(spark, sf_dir, sc) as (vers, asgs):
+        cand0, topk0 = _route_and_topk(spark, sf_dir, vers[0], asgs[0])
+        candk, topkk = _route_and_topk(spark, sf_dir, vers[-1], asgs[-1])
+        queries = _corpus_with_norms(spark, sf_dir).where(
+            F.col("vec_id") % QUERY_STRIDE == 0
+        )
+        common = topk0.select(*pair).join(topkk.select(*pair), pair)
+        return _local(
+            _count(queries, "n_queries")
+            .crossJoin(_count(cand0, "total_cand_v0"))
+            .crossJoin(_count(candk, vk))
+            .crossJoin(_count(topk0, "n_top_v0"))
+            .crossJoin(_count(common, "n_top_common"))
+            .select(
+                "n_queries",
+                "total_cand_v0",
+                vk,
+                _ratio(vk, "total_cand_v0").alias("cand_ratio"),
+                "n_top_v0",
+                "n_top_common",
+                _ratio("n_top_common", "n_top_v0").alias("topk_recall_vs_v0"),
+            )
+        )
+
+
+class _Point(NamedTuple):
+    """A recall-sheet point: search routing-table ``version`` at
+    ``nprobe``. ``tag`` suffixes the oracle's CTEs; ``recall`` and
+    ``cand`` suffix the point's recall_* and total_cand_* columns."""
+
+    version: int
+    nprobe: int
+    tag: str
+    recall: str
+    cand: str
+
+
+def _recall_sql(sc: _Scenario, points: "tuple[_Point, ...]") -> str:
+    hits = ",".join(
+        f"""
+hit{p.tag} AS (
+  SELECT r.query_id, r.neighbor_id
+  FROM (SELECT query_id, neighbor_id FROM ranked{p.tag} WHERE rank <= {TOP_K}) r
+  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
+)"""
+        for p in points
+    )
+    cols = ["(SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_top_exact"]
+    cols += [
+        f"CAST((SELECT count(*) FROM hit{p.tag}) AS DOUBLE)\n"
+        f"    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_{p.recall}"
+        for p in points
+    ]
+    cols += [
+        f"(SELECT CAST(count(*) AS BIGINT) FROM cand{p.tag}) AS total_cand_{p.cand}"
+        for p in points
+    ]
+    if len(points) == 2:
+        cols.append(
+            f"CAST((SELECT count(*) FROM cand{points[1].tag}) AS DOUBLE)\n"
+            f"    / CAST((SELECT count(*) FROM cand{points[0].tag}) AS DOUBLE)"
+            " AS cand_ratio"
+        )
+    return _routes_sql(sc, points) + f""",
+rankedex AS MATERIALIZED (
+  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+         row_number() OVER (
+           PARTITION BY q.vec_id
+           ORDER BY CAST({scaled_dot_sql("q.embedding", "n.embedding")}
+                         AS DOUBLE)
+                      / (sqrt(CAST(q.n2 AS DOUBLE))
+                         * sqrt(CAST(n.n2 AS DOUBLE))) DESC,
+                    n.vec_id ASC) AS rank
+  FROM scorpus q JOIN scorpus n ON n.vec_id <> q.vec_id
+  WHERE q.vec_id % {QUERY_STRIDE} = 0
+),
+ex AS (SELECT query_id, neighbor_id FROM rankedex WHERE rank <= {TOP_K}),{hits}
+SELECT
+""" + ",\n".join("  " + c for c in cols) + "\n"
+
+
+def _recall_sheet(
+    spark: SparkSession,
+    sf_dir: str,
+    sc: _Scenario,
+    points: "tuple[_Point, ...]",
+) -> DataFrame:
+    """Measure: one row scoring each point's top-k page against the one
+    brute-force exact page, with the candidates each point scans; a
+    two-point sheet also prices the second point against the first
+    (cand_ratio)."""
+    pair = ["query_id", "neighbor_id"]
+    with _ivf_chain(spark, sf_dir, sc) as (vers, asgs):
+        exact = _exact_page(
+            _corpus_with_norms(spark, sf_dir), "embedding", scaled_dot
+        ).select(*pair)
+        routed = [
+            _route_and_topk(spark, sf_dir, vers[p.version], asgs[p.version], p.nprobe)
+            for p in points
+        ]
+        summary = _count(exact, "n_top_exact")
+        for p, (_, topk) in zip(points, routed):
+            hits = topk.select(*pair).join(exact, pair)
+            summary = summary.crossJoin(_count(hits, f"h{p.tag}"))
+        for p, (cand, _) in zip(points, routed):
+            summary = summary.crossJoin(_count(cand, f"total_cand_{p.cand}"))
+        cols = ["n_top_exact"]
+        cols += [
+            _ratio(f"h{p.tag}", "n_top_exact").alias(f"recall_{p.recall}")
+            for p in points
+        ]
+        cols += [f"total_cand_{p.cand}" for p in points]
+        if len(points) == 2:
+            cols.append(
+                _ratio(
+                    f"total_cand_{points[1].cand}", f"total_cand_{points[0].cand}"
+                ).alias("cand_ratio")
+            )
+        return _local(summary.select(*cols))
+
+
+@query(
+    "stream_cell_split_maintenance",
+    oracle=_cell_split_oracle(),
+    doc="INDEX-LIFECYCLE COMPLETENESS — hot-cell SPLIT: centroid "
+    "maintenance refreshes means but never re-partitions, "
+    "so at 100 TB a hot cell degrades IVF probe cost unboundedly (probe "
+    "work is O(|cell|)). This query runs the 4-epoch maintenance ingest "
+    "(landing each batch's cell assignments as the index table — the "
+    "ingest write path's layout) and then SPLITS the largest cell: "
+    "deterministic exact-integer 2-means — seeds = min-id member + the "
+    "member farthest from it (squared-distance argmax, min-id "
+    "tie-break), one strictly-nearer assignment pass, floor-div "
+    "centroids per side — emitting the routing table VERSIONED PER "
+    "EPOCH (version 0 = post-ingest, bitwise the maintenance rows; "
+    "version 1 = post-split, the hot cell replaced by its halves, the "
+    "new cell labeled max+1). Versioning is what lets concurrent "
+    "readers keep routing on v0 while the split commits — the routing "
+    "table is nlist x dim metadata, so a version is cheap to retain. "
+    "Scale shape: the split touches ONE cell's members (re-read from "
+    "the landing table by cell id — partition-pruned, never a corpus "
+    "scan); seed selection and assignment are row-wise folds over a "
+    "broadcast seed vector (two single-row collects, no shuffle), and "
+    "the side stats are one (side, dim) aggregation bounded by "
+    "|cell| x dim. Repeated greedily, max-cell splitting bounds the "
+    "hottest cell at ~2x the mean at O(log) splits per rebalance pass.",
+)
+def stream_cell_split_maintenance(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return _versions_table(spark, sf_dir, SPLIT)
+
+
+@query(
+    "stream_cell_split_rebalance",
+    oracle=_versions_sql(REBALANCE),
     doc="The GREEDY REBALANCE PASS — two chained hot-cell splits, making "
     "the 'repeated greedily' claim of stream_cell_split_maintenance a "
     "measured behavior instead of an assertion: split the hottest "
@@ -3151,47 +3553,13 @@ SELECT 2, label, n_members, array_to_string(cvec, ',') FROM ver2v
 def stream_cell_split_rebalance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    def cent_str(cvec: "list[int]") -> str:
-        return ",".join(str(c) for c in cvec)
-
-    tmp = tempfile.mkdtemp(prefix="cell_rebalance_")
-    try:
-        ver0, ver1, _, new1, sides1, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides1, new1)
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", "embedding"
-        )
-        ver2, _, _, _ = _split_hottest_cell(
-            spark, os.path.join(tmp, "sides2"), ver1, asg_v1, emb
-        )
-        out_rows = [
-            (v, lab, n, cent_str(c))
-            for v, ver in ((0, ver0), (1, ver1), (2, ver2))
-            for lab, n, c in ver
-        ]
-        out = spark.createDataFrame(
-            out_rows,
-            "version int, label bigint, n_members bigint, centroid string",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _versions_table(spark, sf_dir, REBALANCE)
 
 
-def _rebalance_balance_oracle() -> str:
-    """Compose the registered rebalance oracle verbatim (capstone
-    convention) and aggregate the balance trajectory per version."""
-    from spark_streaming_twitter_spark.registry import QUERIES
-
-    reb = QUERIES["stream_cell_split_rebalance"].oracle
-    return f"""
-WITH r AS ({reb})
+@query(
+    "ivf_rebalance_balance_stats",
+    oracle=f"""
+WITH r AS ({_versions_sql(REBALANCE)})
 SELECT version,
        CAST(count(*) AS BIGINT) AS n_cells,
        max(n_members) AS max_members,
@@ -3199,12 +3567,7 @@ SELECT version,
        CAST(max(n_members) * count(*) AS DOUBLE)
          / CAST(sum(n_members) AS DOUBLE) AS max_over_mean
 FROM r GROUP BY version
-"""
-
-
-@query(
-    "ivf_rebalance_balance_stats",
-    oracle=_rebalance_balance_oracle(),
+""",
     doc="The rebalance pass's GOVERNING METRIC, measured per routing-"
     "table version: cell count, hottest-cell size, total members, and "
     "max/mean — the ratio a production job loops the split step on "
@@ -3224,29 +3587,12 @@ FROM r GROUP BY version
 def ivf_rebalance_balance_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    reb = stream_cell_split_rebalance(spark, sf_dir)
-    return reb.groupBy("version").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.max("n_members").alias("max_members"),
-        F.sum("n_members").cast("bigint").alias("total_members"),
-        (
-            (F.max("n_members") * F.count(F.lit(1))).cast("double")
-            / F.sum("n_members").cast("double")
-        ).alias("max_over_mean"),
-    )
+    return _balance_trajectory(spark, sf_dir, REBALANCE)
 
 
 @query(
     "similarity_ivf_topk_postrebalance",
-    oracle=_split_base_sql()
-    + _split_step_sql_ctes("ver0v", "asgall", "", "1")
-    + _split_step_sql_ctes("ver1v", "asg1all", "2", "2")
-    + ","
-    + _postsplit_route_sql("ver2v", "asg2all", "r2")
-    + f"""
-SELECT query_id, neighbor_id, rank, cosine
-FROM rankedr2 WHERE rank <= {TOP_K}
-""",
+    oracle=_topk_sql(REBALANCE, "r2"),
     doc="IVF top-k THROUGH the twice-rebalanced routing table — version "
     "2 gets a consumer the moment it exists (the v1 lesson applied): "
     "queries route by argmax dot over the post-rebalance centroids and "
@@ -3258,44 +3604,14 @@ FROM rankedr2 WHERE rank <= {TOP_K}
 def similarity_ivf_topk_postrebalance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="postrebalance_topk_")
-    try:
-        ver0, ver1, _, new1, sides1, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides1, new1)
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", "embedding"
-        )
-        ver2, _, new2, sides2 = _split_hottest_cell(
-            spark, os.path.join(tmp, "sides2"), ver1, asg_v1, emb
-        )
-        asg_v2 = _asg_after_split(asg_v1, sides2, new2)
-        _, topk = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver2], asg_v2
-        )
-        rows = topk.collect()
-        out = spark.createDataFrame(rows, topk.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _topk_through(spark, sf_dir, REBALANCE)
 
 
 @query(
     "similarity_ivf_topk_postsplit",
-    oracle=_split_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver1v", "asg1all", "1")
-    + f"""
-SELECT query_id, neighbor_id, rank, cosine
-FROM ranked1 WHERE rank <= {TOP_K}
-""",
+    oracle=_topk_sql(SPLIT, "1"),
     doc="IVF top-k THROUGH the post-split routing table — the consumer "
-    "the r11 verdict said the hot-cell split lacked: the full "
+    "of the hot-cell split: the full "
     "maintenance ingest + hot-cell 2-means split runs first (shared "
     "engine with stream_cell_split_maintenance), then queries route by "
     "argmax dot over the VERSION-1 centroids (the hot cell replaced by "
@@ -3311,52 +3627,12 @@ FROM ranked1 WHERE rank <= {TOP_K}
 def similarity_ivf_topk_postsplit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="postsplit_topk_")
-    try:
-        _, ver1, big_label, new_label, sides, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides, new_label)
-        _, topk = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver1], asg_v1
-        )
-        rows = topk.collect()
-        out = spark.createDataFrame(rows, topk.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _topk_through(spark, sf_dir, SPLIT)
 
 
 @query(
     "similarity_ivf_split_probe_cost",
-    oracle=_split_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver0v", "asgall", "0")
-    + ","
-    + _postsplit_route_sql("ver1v", "asg1all", "1")
-    + f""",
-common AS (
-  SELECT r0.query_id, r0.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r0
-  JOIN (SELECT query_id, neighbor_id FROM ranked1 WHERE rank <= {TOP_K}) r1
-    ON r0.query_id = r1.query_id AND r0.neighbor_id = r1.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM cell0) AS n_queries,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand1) AS total_cand_v1,
-  CAST((SELECT count(*) FROM cand1) AS DOUBLE)
-    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio,
-  (SELECT CAST(count(*) AS BIGINT)
-   FROM ranked0 WHERE rank <= {TOP_K}) AS n_top_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM common) AS n_top_common,
-  CAST((SELECT count(*) FROM common) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ranked0 WHERE rank <= {TOP_K}) AS DOUBLE)
-    AS topk_recall_vs_v0
-""",
+    oracle=_probe_cost_sql(SPLIT, "1"),
     doc="The RECALL / PROBE-COST pair for the hot-cell split: one summary "
     "row comparing search through routing-table v0 (pre-split) and v1 "
     "(post-split) over the identical post-ingest corpus — total "
@@ -3372,101 +3648,18 @@ SELECT
 def similarity_ivf_split_probe_cost(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
+    return _probe_cost(spark, sf_dir, SPLIT, "1")
 
-    tmp = tempfile.mkdtemp(prefix="split_probe_cost_")
-    try:
-        ver0, ver1, big_label, new_label, sides, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides, new_label)
-        cand0, topk0 = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver0], asg_v0
-        )
-        cand1, topk1 = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver1], asg_v1
-        )
-        summary = (
-            _corpus_with_norms(spark, sf_dir)
-            .where(F.col("vec_id") % QUERY_STRIDE == 0)
-            .agg(F.count(F.lit(1)).alias("n_queries"))
-            .crossJoin(cand0.agg(F.count(F.lit(1)).alias("total_cand_v0")))
-            .crossJoin(cand1.agg(F.count(F.lit(1)).alias("total_cand_v1")))
-            .crossJoin(topk0.agg(F.count(F.lit(1)).alias("n_top_v0")))
-            .crossJoin(
-                topk0.select("query_id", "neighbor_id")
-                .join(
-                    topk1.select("query_id", "neighbor_id"),
-                    ["query_id", "neighbor_id"],
-                )
-                .agg(F.count(F.lit(1)).alias("n_top_common"))
-            )
-            .select(
-                "n_queries",
-                "total_cand_v0",
-                "total_cand_v1",
-                (
-                    F.col("total_cand_v1").cast("double")
-                    / F.col("total_cand_v0").cast("double")
-                ).alias("cand_ratio"),
-                "n_top_v0",
-                "n_top_common",
-                (
-                    F.col("n_top_common").cast("double")
-                    / F.col("n_top_v0").cast("double")
-                ).alias("topk_recall_vs_v0"),
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+_SPLIT_NP2 = (
+    _Point(0, 1, "0", "v0_np1", "v0"),
+    _Point(1, 2, "1", "v1_np2", "v1_np2"),
+)
 
 
 @query(
     "similarity_ivf_split_nprobe2_recall",
-    oracle=_split_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver0v", "asgall", "0")
-    + ","
-    + _postsplit_route_sql("ver1v", "asg1all", "1", nprobe=2)
-    + f""",
-rankedex AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY CAST({scaled_dot_sql("q.embedding", "n.embedding")}
-                         AS DOUBLE)
-                      / (sqrt(CAST(q.n2 AS DOUBLE))
-                         * sqrt(CAST(n.n2 AS DOUBLE))) DESC,
-                    n.vec_id ASC) AS rank
-  FROM scorpus q JOIN scorpus n ON n.vec_id <> q.vec_id
-  WHERE q.vec_id % {QUERY_STRIDE} = 0
-),
-ex AS (SELECT query_id, neighbor_id FROM rankedex WHERE rank <= {TOP_K}),
-hit0 AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-),
-hit1 AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked1 WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_top_exact,
-  CAST((SELECT count(*) FROM hit0) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v0_np1,
-  CAST((SELECT count(*) FROM hit1) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v1_np2,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand1) AS total_cand_v1_np2,
-  CAST((SELECT count(*) FROM cand1) AS DOUBLE)
-    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio
-""",
+    oracle=_recall_sql(SPLIT, _SPLIT_NP2),
     doc="The RECOVERY row for the hot-cell split, measured against the "
     "EXACT top-k (overlap-with-v0 would mislead here: a wider probe "
     "finds BETTER neighbors that displace v0's page, so v0-overlap "
@@ -3483,139 +3676,19 @@ SELECT
 def similarity_ivf_split_nprobe2_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
+    return _recall_sheet(spark, sf_dir, SPLIT, _SPLIT_NP2)
 
-    tmp = tempfile.mkdtemp(prefix="split_np2_")
-    try:
-        ver0, ver1, big_label, new_label, sides, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides, new_label)
-        cand0, topk0 = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver0], asg_v0
-        )
-        cand1, topk1 = _route_and_topk(
-            spark,
-            sf_dir,
-            [(lab, cvec) for lab, _, cvec in ver1],
-            asg_v1,
-            nprobe=2,
-        )
-        # exact page: brute force, broadcast queries — the
-        # similarity_topk_cosine shape over the same corpus
-        corpus = _corpus_with_norms(spark, sf_dir)
-        queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("n2").alias("q_n2"),
-        )
-        cosine = scaled_dot(F.col("q_emb"), F.col("embedding")).cast(
-            "double"
-        ) / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
-        )
-        exact = _topk_filter(
-            corpus.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine.alias("cosine"),
-            )
-        ).select("query_id", "neighbor_id")
 
-        def hits(topk: DataFrame) -> DataFrame:
-            return topk.select("query_id", "neighbor_id").join(
-                exact, ["query_id", "neighbor_id"]
-            )
-
-        summary = (
-            exact.agg(F.count(F.lit(1)).alias("n_top_exact"))
-            .crossJoin(hits(topk0).agg(F.count(F.lit(1)).alias("h0")))
-            .crossJoin(hits(topk1).agg(F.count(F.lit(1)).alias("h1")))
-            .crossJoin(cand0.agg(F.count(F.lit(1)).alias("total_cand_v0")))
-            .crossJoin(
-                cand1.agg(F.count(F.lit(1)).alias("total_cand_v1_np2"))
-            )
-            .select(
-                "n_top_exact",
-                (
-                    F.col("h0").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v0_np1"),
-                (
-                    F.col("h1").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v1_np2"),
-                "total_cand_v0",
-                "total_cand_v1_np2",
-                (
-                    F.col("total_cand_v1_np2").cast("double")
-                    / F.col("total_cand_v0").cast("double")
-                ).alias("cand_ratio"),
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+_REBALANCE_SHEET = (
+    _Point(1, 1, "a", "v1_np1", "v1_np1"),
+    _Point(2, 1, "b", "v2_np1", "v2_np1"),
+    _Point(2, 2, "c", "v2_np2", "v2_np2"),
+)
 
 
 @query(
     "similarity_ivf_rebalance_recall",
-    oracle=_split_base_sql()
-    + _split_step_sql_ctes("ver0v", "asgall", "", "1")
-    + _split_step_sql_ctes("ver1v", "asg1all", "2", "2")
-    + ","
-    + _postsplit_route_sql("ver1v", "asg1all", "a")
-    + ","
-    + _postsplit_route_sql("ver2v", "asg2all", "b")
-    + ","
-    + _postsplit_route_sql("ver2v", "asg2all", "c", nprobe=2)
-    + f""",
-rankedex AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY CAST({scaled_dot_sql("q.embedding", "n.embedding")}
-                         AS DOUBLE)
-                      / (sqrt(CAST(q.n2 AS DOUBLE))
-                         * sqrt(CAST(n.n2 AS DOUBLE))) DESC,
-                    n.vec_id ASC) AS rank
-  FROM scorpus q JOIN scorpus n ON n.vec_id <> q.vec_id
-  WHERE q.vec_id % {QUERY_STRIDE} = 0
-),
-ex AS (SELECT query_id, neighbor_id FROM rankedex WHERE rank <= {TOP_K}),
-hita AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM rankeda WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-),
-hitb AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM rankedb WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-),
-hitc AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM rankedc WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_top_exact,
-  CAST((SELECT count(*) FROM hita) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v1_np1,
-  CAST((SELECT count(*) FROM hitb) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v2_np1,
-  CAST((SELECT count(*) FROM hitc) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v2_np2,
-  (SELECT CAST(count(*) AS BIGINT) FROM canda) AS total_cand_v1_np1,
-  (SELECT CAST(count(*) AS BIGINT) FROM candb) AS total_cand_v2_np1,
-  (SELECT CAST(count(*) AS BIGINT) FROM candc) AS total_cand_v2_np2
-""",
+    oracle=_recall_sql(REBALANCE, _REBALANCE_SHEET),
     doc="The RECALL PRICE SHEET for the full greedy rebalance (two "
     "chained splits), closing for version 2 what similarity_ivf_split_"
     "nprobe2_recall closed for version 1: exact-top-k recall of the "
@@ -3632,101 +3705,7 @@ SELECT
 def similarity_ivf_rebalance_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="rebalance_recall_")
-    try:
-        ver0, ver1, _, new1, sides1, asg_v0 = _run_cell_split(
-            spark, sf_dir, tmp
-        )
-        asg_v1 = _asg_after_split(asg_v0, sides1, new1)
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", "embedding"
-        )
-        ver2, _, new2, sides2 = _split_hottest_cell(
-            spark, os.path.join(tmp, "sides2"), ver1, asg_v1, emb
-        )
-        asg_v2 = _asg_after_split(asg_v1, sides2, new2)
-        cand_a, topk_a = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver1], asg_v1
-        )
-        cand_b, topk_b = _route_and_topk(
-            spark, sf_dir, [(lab, cvec) for lab, _, cvec in ver2], asg_v2
-        )
-        cand_c, topk_c = _route_and_topk(
-            spark,
-            sf_dir,
-            [(lab, cvec) for lab, _, cvec in ver2],
-            asg_v2,
-            nprobe=2,
-        )
-        corpus = _corpus_with_norms(spark, sf_dir)
-        queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("n2").alias("q_n2"),
-        )
-        cosine = scaled_dot(F.col("q_emb"), F.col("embedding")).cast(
-            "double"
-        ) / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
-        )
-        exact = _topk_filter(
-            corpus.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine.alias("cosine"),
-            )
-        ).select("query_id", "neighbor_id")
-
-        def hits(topk: DataFrame) -> DataFrame:
-            return topk.select("query_id", "neighbor_id").join(
-                exact, ["query_id", "neighbor_id"]
-            )
-
-        summary = (
-            exact.agg(F.count(F.lit(1)).alias("n_top_exact"))
-            .crossJoin(hits(topk_a).agg(F.count(F.lit(1)).alias("ha")))
-            .crossJoin(hits(topk_b).agg(F.count(F.lit(1)).alias("hb")))
-            .crossJoin(hits(topk_c).agg(F.count(F.lit(1)).alias("hc")))
-            .crossJoin(
-                cand_a.agg(F.count(F.lit(1)).alias("total_cand_v1_np1"))
-            )
-            .crossJoin(
-                cand_b.agg(F.count(F.lit(1)).alias("total_cand_v2_np1"))
-            )
-            .crossJoin(
-                cand_c.agg(F.count(F.lit(1)).alias("total_cand_v2_np2"))
-            )
-            .select(
-                "n_top_exact",
-                (
-                    F.col("ha").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v1_np1"),
-                (
-                    F.col("hb").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v2_np1"),
-                (
-                    F.col("hc").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v2_np2"),
-                "total_cand_v1_np1",
-                "total_cand_v2_np1",
-                "total_cand_v2_np2",
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _recall_sheet(spark, sf_dir, REBALANCE, _REBALANCE_SHEET)
 
 
 @query(
@@ -3750,7 +3729,7 @@ SELECT a.vec_id, a.n_bench_close, n.nearest_bench_id, a.max_cosine
 FROM agg a JOIN nearest n USING (vec_id)
 """,
     doc="Semantic decontamination THROUGH THE ANN INDEX — the scale path "
-    "for semantic_decontaminate (VERDICT r9 ask #4): the exact version "
+    "for semantic_decontaminate: the exact version "
     "pays |bench| dot products per corpus row; here each BENCHMARK "
     f"vector is routed to its top-{IVF_NPROBE} IVF cells (corpus-only "
     "centroids, exact-integer routing with deterministic tie-break — "
@@ -3884,192 +3863,11 @@ def semantic_decontaminate_ann_recall(
     )
 
 
-# ---------------------------------------------------------------------------
-# Skewed-fixture greedy rebalance (VERDICT r12 #1): the embeddings fixture's
-# natural cells are near-balanced (max/mean 1.14), so the greedy split loop's
-# stop rule correctly refuses to run there. This family gives the loop data
-# that NEEDS it: a deterministic skew overlay assigns vec_id % 10 < 5 (half
-# the corpus) to cell 0 on top of the true labels, making the hottest cell
-# 5.4x the mean at sf0.01 (>= the 5x bar). The loop then runs FOR REAL —
-# split the hottest cell, re-check max/mean, repeat until <= 2 — and the
-# whole trajectory, the post-loop search, and the v0-vs-vN recall/probe-cost
-# pair are oracle-checked. Reference parity: the reference has no ANN index
-# maintenance at all (TwitterDataset*.java are fixed-pipeline streams); this
-# is §2.8 extension surface, built on the r11/r12 split-step engine.
-# ---------------------------------------------------------------------------
-
-SKEW_HOT_MOD = 10
-SKEW_HOT_LT = 5  # vec_id % 10 < 5 -> overlaid onto cell 0
-REBALANCE_STOP = 2.0  # loop while max_members/mean_members > this
-SKEW_SPLIT_K = 5  # CONTRACTUAL split count (VERDICT r14 #1): the
-# registered queries run EXACTLY K greedy splits — data-independent — so
-# the oracle's K-step CTE chain replays the loop bitwise at ANY scale
-# factor (the r12–r14 shape looped `while max/mean > REBALANCE_STOP`,
-# which made the loop length data-emergent and broke sf0.001 parity:
-# that fixture needs 6 splits, the oracle unrolled 5). K=5 is where the
-# sf0.01 fixture first reaches max/mean <= REBALANCE_STOP — that
-# convergence claim lives in the sf0.01-pinned test
-# (tests/test_similarity_codecs.py::test_skewed_rebalance_converges_at_sf001),
-# and the stop metric itself is EMITTED per version (max_over_mean in
-# ivf_rebalance_skewed_trajectory), so the stop rule stays visible as
-# checked data rather than as a hidden loop condition.
-
-
-def _skewed_base_sql() -> str:
-    """Skewed-overlay base: mnorms (quantized corpus), asgall (the skew
-    assignment), ver0v (exact-integer per-cell centroids under the skew),
-    scorpus (scoring corpus with norms) — same CTE names the split-step
-    and route blocks expect, so both compose unchanged."""
-    return f"""
-WITH mnorms AS (
-  SELECT vec_id, label, {_QUANT_SQL.format(vec="embedding")} AS qv
-  FROM embeddings
-),
-asgall AS MATERIALIZED (
-  SELECT vec_id,
-         CAST(CASE WHEN vec_id % {SKEW_HOT_MOD} < {SKEW_HOT_LT} THEN 0
-              ELSE label END AS BIGINT) AS label
-  FROM mnorms
-),
-skd AS (
-  SELECT a.label, m.d, CAST(sum(m.q) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS n
-  FROM asgall a
-  JOIN (SELECT vec_id, qv[d] AS q, d FROM
-        (SELECT vec_id, qv, unnest(generate_series(1, {DIM})) AS d
-         FROM mnorms)) m USING (vec_id)
-  GROUP BY 1, 2
-),
-ver0v AS MATERIALIZED (
-  SELECT label, max(n) AS n_members,
-         list(CAST((s - (((s % n) + n) % n)) // n AS BIGINT) ORDER BY d)
-           AS cvec
-  FROM skd GROUP BY label
-),
-scorpus AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         {scaled_dot_sql("embedding", "embedding")} AS n2
-  FROM embeddings
-)"""
-
-
-def _skewed_chain_sql(k: int = SKEW_SPLIT_K) -> str:
-    """The skewed base plus ``k`` chained greedy split steps — the SQL
-    replay of the Spark loop's sf0.01 run (verN/asgNall for N=1..k)."""
-    sql = _skewed_base_sql()
-    vin, ain = "ver0v", "asgall"
-    for i in range(1, k + 1):
-        suf = "" if i == 1 else str(i)
-        sql += _split_step_sql_ctes(vin, ain, suf, str(i))
-        vin, ain = f"ver{i}v", f"asg{i}all"
-    return sql
-
-
-def _skewed_trajectory_tail(k: int = SKEW_SPLIT_K) -> str:
-    union = "\nUNION ALL ".join(
-        f"SELECT {v} AS version, label, n_members FROM ver{v}v"
-        for v in range(k + 1)
-    )
-    return f"""
-SELECT CAST(version AS INT) AS version,
-       CAST(count(*) AS BIGINT) AS n_cells,
-       max(n_members) AS max_members,
-       CAST(sum(n_members) AS BIGINT) AS total_members,
-       CAST(max(n_members) * count(*) AS DOUBLE)
-         / CAST(sum(n_members) AS DOUBLE) AS max_over_mean
-FROM ({union})
-GROUP BY version
-"""
-
-
-def _mom(ver: "list[tuple[int, int, list[int]]]") -> float:
-    """max/mean of a routing-table version — exact ints, one division."""
-    total = sum(n for _, n, _ in ver)
-    return max(n for _, n, _ in ver) * len(ver) / total
-
-
-def _skewed_v0(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[list[tuple[int, int, list[int]]], DataFrame, DataFrame]":
-    """Build the skew-overlay v0: returns (ver0, asg0, emb). ver0's
-    centroid stats come from ONE map-side aggregation collected as a
-    bounded n_cells x DIM table (640 rows at any corpus size — cells
-    and dims, never vectors, cross the driver)."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    asg0 = emb.select(
-        "vec_id",
-        F.when(
-            F.col("vec_id") % SKEW_HOT_MOD < SKEW_HOT_LT, F.lit(0)
-        )
-        .otherwise(F.col("label"))
-        .cast("bigint")
-        .alias("label"),
-    )
-    stat_rows = (
-        widen(emb, spark)
-        .select(
-            F.when(
-                F.col("vec_id") % SKEW_HOT_MOD < SKEW_HOT_LT, F.lit(0)
-            )
-            .otherwise(F.col("label"))
-            .cast("bigint")
-            .alias("label"),
-            F.posexplode(_quantized(F.col("embedding"))).alias("dpos", "v"),
-        )
-        .groupBy("label", "dpos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    labels = sorted({int(r["label"]) for r in stat_rows})
-    stats = {lab: [[0, 0] for _ in range(DIM)] for lab in labels}
-    for r in stat_rows:
-        stats[int(r["label"])][int(r["dpos"])] = [int(r["s"]), int(r["cnt"])]
-    ver0 = [
-        (lab, stats[lab][0][1], _floor_div_centroid(stats[lab]))
-        for lab in labels
-    ]
-    return ver0, asg0, emb
-
-
-def _run_skewed_rebalance(
-    spark: SparkSession, sf_dir: str, workdir: str, k: int = SKEW_SPLIT_K
-) -> "tuple[list[list[tuple[int, int, list[int]]]], list[DataFrame]]":
-    """THE greedy rebalance pass, run for a CONTRACTUAL number of steps:
-    exactly ``k`` applications of split-the-hottest-cell (the shared
-    _split_hottest_cell engine), each folding its side assignment in.
-    Returns (vers, asgs): routing-table versions 0..k and the matching
-    assignments. The step count is part of the query contract — NOT
-    data-emergent — so the oracle's statically-chained k-step CTE replay
-    is exact at every scale factor (VERDICT r14 #1: the earlier
-    while-max/mean-over-threshold form diverged from the 5-step oracle
-    at sf0.001, which needs 6 splits to converge). Split-hottest is
-    total on any fixture (degenerate one-member/identical-vector splits
-    are handled inside the engine and mirrored by the oracle's GROUP BY
-    side), so fixed-k always terminates. Whether the trajectory has
-    CONVERGED remains visible data: max_over_mean is emitted per version
-    by ivf_rebalance_skewed_trajectory, and the 'reaches <= 2.0 in
-    exactly 5 splits at sf0.01' claim is pinned by its own test."""
-    import os
-
-    ver, asg, emb = _skewed_v0(spark, sf_dir)
-    vers, asgs = [ver], [asg]
-    for step in range(1, k + 1):
-        ver, _, new_label, sides = _split_hottest_cell(
-            spark, os.path.join(workdir, f"sides{step}"), ver, asg, emb
-        )
-        asg = _asg_after_split(asg, sides, new_label)
-        vers.append(ver)
-        asgs.append(asg)
-    return vers, asgs
-
-
 @query(
     "ivf_rebalance_skewed_trajectory",
-    oracle=_skewed_chain_sql() + _skewed_trajectory_tail(),
-    doc="The greedy rebalance pass run on data that needs it (VERDICT "
-    "r12 #1), with a CONTRACTUAL step count (VERDICT r14 #1): under "
+    oracle=_trajectory_sql(SKEWED),
+    doc="The greedy rebalance pass run on data that needs it, with a "
+    "CONTRACTUAL step count: under "
     "the deterministic skew overlay (vec_id % 10 < 5 piled onto cell "
     "0) the hottest cell starts at 5.42x the mean, and the query runs "
     "EXACTLY K=5 split-the-hottest-cell steps — data-independent, so "
@@ -4091,38 +3889,12 @@ def _run_skewed_rebalance(
 def ivf_rebalance_skewed_trajectory(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="skewed_rebalance_")
-    try:
-        vers, _ = _run_skewed_rebalance(spark, sf_dir, tmp)
-        rows = []
-        for v, ver in enumerate(vers):
-            total = sum(n for _, n, _ in ver)
-            mx = max(n for _, n, _ in ver)
-            rows.append((v, len(ver), mx, total, mx * len(ver) / total))
-        out = spark.createDataFrame(
-            rows,
-            "version int, n_cells bigint, max_members bigint, "
-            "total_members bigint, max_over_mean double",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _balance_trajectory(spark, sf_dir, SKEWED)
 
 
 @query(
     "similarity_ivf_topk_skewed_rebalanced",
-    oracle=_skewed_chain_sql()
-    + ","
-    + _postsplit_route_sql(
-        f"ver{SKEW_SPLIT_K}v", f"asg{SKEW_SPLIT_K}all", "rN"
-    )
-    + f"""
-SELECT query_id, neighbor_id, rank, cosine
-FROM rankedrN WHERE rank <= {TOP_K}
-""",
+    oracle=_topk_sql(SKEWED, "rN"),
     doc="IVF top-k THROUGH the fully rebalanced routing table — the "
     "post-pass consumer (the v1/v2 lesson applied to the skewed "
     "fixture): queries route by argmax dot over the version-N "
@@ -4136,161 +3908,37 @@ FROM rankedrN WHERE rank <= {TOP_K}
 def similarity_ivf_topk_skewed_rebalanced(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="skewed_topk_")
-    try:
-        vers, asgs = _run_skewed_rebalance(spark, sf_dir, tmp)
-        _, topk = _route_and_topk(
-            spark,
-            sf_dir,
-            [(lab, cvec) for lab, _, cvec in vers[-1]],
-            asgs[-1],
-        )
-        rows = topk.collect()
-        out = spark.createDataFrame(rows, topk.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _topk_through(spark, sf_dir, SKEWED)
 
 
 @query(
     "similarity_ivf_skewed_probe_cost",
-    oracle=_skewed_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver0v", "asgall", "0")
-    + ","
-    + _postsplit_route_sql(
-        f"ver{SKEW_SPLIT_K}v", f"asg{SKEW_SPLIT_K}all", "N"
-    )
-    + f""",
-common AS (
-  SELECT r0.query_id, r0.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r0
-  JOIN (SELECT query_id, neighbor_id FROM rankedN WHERE rank <= {TOP_K}) rn
-    ON r0.query_id = rn.query_id AND r0.neighbor_id = rn.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM cell0) AS n_queries,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM candN) AS total_cand_vN,
-  CAST((SELECT count(*) FROM candN) AS DOUBLE)
-    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio,
-  (SELECT CAST(count(*) AS BIGINT)
-   FROM ranked0 WHERE rank <= {TOP_K}) AS n_top_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM common) AS n_top_common,
-  CAST((SELECT count(*) FROM common) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ranked0 WHERE rank <= {TOP_K}) AS DOUBLE)
-    AS topk_recall_vs_v0
-""",
+    oracle=_probe_cost_sql(SKEWED, "N"),
     doc="What the FULL rebalance pass buys, priced on the skewed fixture: "
     "one summary row comparing search through v0 (hot cell at 5.4x "
     "mean — every query routed there scans 271 members) and vN (after "
     "the contractual K=5 splits) — total candidates scanned under each "
     "version (vN/v0 ratio = the probe-cost reduction the pass "
-    "delivers) and the vN top-k's overlap with the v0 page. This is "
-    "the row the r12 verdict said was missing: the split engine was "
-    "oracle-checked but had never met data where the pass RUNS — here "
+    "delivers) and the vN top-k's overlap with the v0 page. Without "
+    "this row the split engine was oracle-checked but had never met "
+    "data where the pass RUNS — here "
     "it runs 5 steps and the measured candidate reduction is the win.",
 )
 def similarity_ivf_skewed_probe_cost(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
+    return _probe_cost(spark, sf_dir, SKEWED, "N")
 
-    tmp = tempfile.mkdtemp(prefix="skewed_probe_cost_")
-    try:
-        vers, asgs = _run_skewed_rebalance(spark, sf_dir, tmp)
-        cand0, topk0 = _route_and_topk(
-            spark, sf_dir, [(lab, c) for lab, _, c in vers[0]], asgs[0]
-        )
-        candN, topkN = _route_and_topk(
-            spark, sf_dir, [(lab, c) for lab, _, c in vers[-1]], asgs[-1]
-        )
-        summary = (
-            _corpus_with_norms(spark, sf_dir)
-            .where(F.col("vec_id") % QUERY_STRIDE == 0)
-            .agg(F.count(F.lit(1)).alias("n_queries"))
-            .crossJoin(cand0.agg(F.count(F.lit(1)).alias("total_cand_v0")))
-            .crossJoin(candN.agg(F.count(F.lit(1)).alias("total_cand_vN")))
-            .crossJoin(topk0.agg(F.count(F.lit(1)).alias("n_top_v0")))
-            .crossJoin(
-                topk0.select("query_id", "neighbor_id")
-                .join(
-                    topkN.select("query_id", "neighbor_id"),
-                    ["query_id", "neighbor_id"],
-                )
-                .agg(F.count(F.lit(1)).alias("n_top_common"))
-            )
-            .select(
-                "n_queries",
-                "total_cand_v0",
-                "total_cand_vN",
-                (
-                    F.col("total_cand_vN").cast("double")
-                    / F.col("total_cand_v0").cast("double")
-                ).alias("cand_ratio"),
-                "n_top_v0",
-                "n_top_common",
-                (
-                    F.col("n_top_common").cast("double")
-                    / F.col("n_top_v0").cast("double")
-                ).alias("topk_recall_vs_v0"),
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+_SKEWED_SHEET = (
+    _Point(0, 1, "0", "v0", "v0"),
+    _Point(SKEW_SPLIT_K, 1, "N", "vN", "vN"),
+)
 
 
 @query(
     "similarity_ivf_skewed_recall",
-    oracle=_skewed_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver0v", "asgall", "0")
-    + ","
-    + _postsplit_route_sql(
-        f"ver{SKEW_SPLIT_K}v", f"asg{SKEW_SPLIT_K}all", "N"
-    )
-    + f""",
-rankedex AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY CAST({scaled_dot_sql("q.embedding", "n.embedding")}
-                         AS DOUBLE)
-                      / (sqrt(CAST(q.n2 AS DOUBLE))
-                         * sqrt(CAST(n.n2 AS DOUBLE))) DESC,
-                    n.vec_id ASC) AS rank
-  FROM scorpus q JOIN scorpus n ON n.vec_id <> q.vec_id
-  WHERE q.vec_id % {QUERY_STRIDE} = 0
-),
-ex AS (SELECT query_id, neighbor_id FROM rankedex WHERE rank <= {TOP_K}),
-hit0 AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-),
-hitN AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM rankedN WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_top_exact,
-  CAST((SELECT count(*) FROM hit0) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v0,
-  CAST((SELECT count(*) FROM hitN) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_vN,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM candN) AS total_cand_vN,
-  CAST((SELECT count(*) FROM candN) AS DOUBLE)
-    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio
-""",
+    oracle=_recall_sql(SKEWED, _SKEWED_SHEET),
     doc="The honest price tag on the skewed rebalance, measured against "
     "the EXACT brute-force top-k (overlap-with-v0 alone would flatter "
     "the loop — v0's page from a 271-member mega-cell is itself "
@@ -4310,121 +3958,18 @@ SELECT
 def similarity_ivf_skewed_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
+    return _recall_sheet(spark, sf_dir, SKEWED, _SKEWED_SHEET)
 
-    tmp = tempfile.mkdtemp(prefix="skewed_recall_")
-    try:
-        vers, asgs = _run_skewed_rebalance(spark, sf_dir, tmp)
-        cand0, topk0 = _route_and_topk(
-            spark, sf_dir, [(lab, c) for lab, _, c in vers[0]], asgs[0]
-        )
-        candN, topkN = _route_and_topk(
-            spark, sf_dir, [(lab, c) for lab, _, c in vers[-1]], asgs[-1]
-        )
-        corpus = _corpus_with_norms(spark, sf_dir)
-        queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("n2").alias("q_n2"),
-        )
-        cosine = scaled_dot(F.col("q_emb"), F.col("embedding")).cast(
-            "double"
-        ) / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
-        )
-        exact = _topk_filter(
-            corpus.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine.alias("cosine"),
-            )
-        ).select("query_id", "neighbor_id")
 
-        def hits(topk: DataFrame) -> DataFrame:
-            return topk.select("query_id", "neighbor_id").join(
-                exact, ["query_id", "neighbor_id"]
-            )
-
-        summary = (
-            exact.agg(F.count(F.lit(1)).alias("n_top_exact"))
-            .crossJoin(hits(topk0).agg(F.count(F.lit(1)).alias("h0")))
-            .crossJoin(hits(topkN).agg(F.count(F.lit(1)).alias("hN")))
-            .crossJoin(cand0.agg(F.count(F.lit(1)).alias("total_cand_v0")))
-            .crossJoin(candN.agg(F.count(F.lit(1)).alias("total_cand_vN")))
-            .select(
-                "n_top_exact",
-                (
-                    F.col("h0").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v0"),
-                (
-                    F.col("hN").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_vN"),
-                "total_cand_v0",
-                "total_cand_vN",
-                (
-                    F.col("total_cand_vN").cast("double")
-                    / F.col("total_cand_v0").cast("double")
-                ).alias("cand_ratio"),
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+_SKEWED_NP2 = (
+    _Point(0, 1, "0", "v0_np1", "v0"),
+    _Point(SKEW_SPLIT_K, 2, "N2", "vN_np2", "vN_np2"),
+)
 
 
 @query(
     "similarity_ivf_skewed_nprobe2_recall",
-    oracle=_skewed_chain_sql()
-    + ","
-    + _postsplit_route_sql("ver0v", "asgall", "0")
-    + ","
-    + _postsplit_route_sql(
-        f"ver{SKEW_SPLIT_K}v", f"asg{SKEW_SPLIT_K}all", "N2",
-        nprobe=2,
-    )
-    + f""",
-rankedex AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY CAST({scaled_dot_sql("q.embedding", "n.embedding")}
-                         AS DOUBLE)
-                      / (sqrt(CAST(q.n2 AS DOUBLE))
-                         * sqrt(CAST(n.n2 AS DOUBLE))) DESC,
-                    n.vec_id ASC) AS rank
-  FROM scorpus q JOIN scorpus n ON n.vec_id <> q.vec_id
-  WHERE q.vec_id % {QUERY_STRIDE} = 0
-),
-ex AS (SELECT query_id, neighbor_id FROM rankedex WHERE rank <= {TOP_K}),
-hit0 AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM ranked0 WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-),
-hitN2 AS (
-  SELECT r.query_id, r.neighbor_id
-  FROM (SELECT query_id, neighbor_id FROM rankedN2 WHERE rank <= {TOP_K}) r
-  JOIN ex ON ex.query_id = r.query_id AND ex.neighbor_id = r.neighbor_id
-)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_top_exact,
-  CAST((SELECT count(*) FROM hit0) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_v0_np1,
-  CAST((SELECT count(*) FROM hitN2) AS DOUBLE)
-    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall_vN_np2,
-  (SELECT CAST(count(*) AS BIGINT) FROM cand0) AS total_cand_v0,
-  (SELECT CAST(count(*) AS BIGINT) FROM candN2) AS total_cand_vN_np2,
-  CAST((SELECT count(*) FROM candN2) AS DOUBLE)
-    / CAST((SELECT count(*) FROM cand0) AS DOUBLE) AS cand_ratio
-""",
+    oracle=_recall_sql(SKEWED, _SKEWED_NP2),
     doc="The recovery knob ON the rebalanced table — making the 'buy "
     "recall back with nprobe=2 at the rebalanced price' claim from "
     "similarity_ivf_skewed_recall a measured row instead of a "
@@ -4439,84 +3984,11 @@ SELECT
 def similarity_ivf_skewed_nprobe2_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="skewed_np2_")
-    try:
-        vers, asgs = _run_skewed_rebalance(spark, sf_dir, tmp)
-        cand0, topk0 = _route_and_topk(
-            spark, sf_dir, [(lab, c) for lab, _, c in vers[0]], asgs[0]
-        )
-        candN2, topkN2 = _route_and_topk(
-            spark,
-            sf_dir,
-            [(lab, c) for lab, _, c in vers[-1]],
-            asgs[-1],
-            nprobe=2,
-        )
-        corpus = _corpus_with_norms(spark, sf_dir)
-        queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("n2").alias("q_n2"),
-        )
-        cosine = scaled_dot(F.col("q_emb"), F.col("embedding")).cast(
-            "double"
-        ) / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
-        )
-        exact = _topk_filter(
-            corpus.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine.alias("cosine"),
-            )
-        ).select("query_id", "neighbor_id")
-
-        def hits(topk: DataFrame) -> DataFrame:
-            return topk.select("query_id", "neighbor_id").join(
-                exact, ["query_id", "neighbor_id"]
-            )
-
-        summary = (
-            exact.agg(F.count(F.lit(1)).alias("n_top_exact"))
-            .crossJoin(hits(topk0).agg(F.count(F.lit(1)).alias("h0")))
-            .crossJoin(hits(topkN2).agg(F.count(F.lit(1)).alias("hN2")))
-            .crossJoin(cand0.agg(F.count(F.lit(1)).alias("total_cand_v0")))
-            .crossJoin(
-                candN2.agg(F.count(F.lit(1)).alias("total_cand_vN_np2"))
-            )
-            .select(
-                "n_top_exact",
-                (
-                    F.col("h0").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_v0_np1"),
-                (
-                    F.col("hN2").cast("double")
-                    / F.col("n_top_exact").cast("double")
-                ).alias("recall_vN_np2"),
-                "total_cand_v0",
-                "total_cand_vN_np2",
-                (
-                    F.col("total_cand_vN_np2").cast("double")
-                    / F.col("total_cand_v0").cast("double")
-                ).alias("cand_ratio"),
-            )
-        )
-        rows = summary.collect()
-        out = spark.createDataFrame(rows, summary.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _recall_sheet(spark, sf_dir, SKEWED, _SKEWED_NP2)
 
 
 # ---------------------------------------------------------------------------
-# Clustered-overlay recall regime (VERDICT r13 #5)
+# Clustered-overlay recall regime
 #
 # Every prior recall row is measured on noise-like synthetic embeddings — a
 # deliberately LOW-recall regime where cells are not Voronoi neighborhoods
@@ -4710,40 +4182,22 @@ SELECT {p} AS nprobe,
     oracle=_clustered_prelude_sql()
     + "\nSELECT query_id, neighbor_id, rank, cosine FROM cexact",
     doc="Exact brute-force top-k over the CLUSTERED overlay — the ground "
-    "truth the high-recall-regime curve measures against (VERDICT r13 "
-    "#5). Same integer-exact construction as similarity_topk_cosine, "
+    "truth the high-recall-regime curve measures against. Same "
+    "integer-exact construction as similarity_topk_cosine, "
     "but in the already-quantized bigint domain (no rounding step): "
     "the per-label offset dominates the noise, so each query's page "
     "is genuinely in-cluster — the regime where an IVF cell IS a "
     "Voronoi neighborhood. Broadcast query set, one corpus scan.",
 )
 def similarity_clustered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _clustered_corpus(spark, sf_dir)
-    queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cv").alias("q_cv"),
-        F.col("n2").alias("q_n2"),
-    )
-    cosine = _int_dot(F.col("q_cv"), F.col("cv")).cast("double") / (
-        F.sqrt(F.col("q_n2").cast("double"))
-        * F.sqrt(F.col("n2").cast("double"))
-    )
-    return _topk_filter(
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine.alias("cosine"),
-        )
-    )
+    return _exact_page(_clustered_corpus(spark, sf_dir), "cv", _int_dot)
 
 
 @query(
     "similarity_ivf_clustered_recall_curve",
     oracle=_clustered_prelude_sql() + _clustered_curve_tail(),
-    doc="The IVF recall/cost CURVE in a regime where ANN can win "
-    "(VERDICT r13 #5): on the clustered overlay, one row per nprobe in "
+    doc="The IVF recall/cost CURVE in a regime where ANN can win: "
+    "on the clustered overlay, one row per nprobe in "
     "1..3 — recall@5 of the routed search against the exact clustered "
     "page, total candidates scanned, and cand_frac = candidates / "
     "(queries x (corpus-1)), the fraction of brute-force work paid. "
@@ -4767,19 +4221,9 @@ def similarity_ivf_clustered_recall_curve(
             F.col("cv").alias("q_cv"),
             F.col("n2").alias("q_n2"),
         )
-        q_cos = _int_dot(F.col("q_cv"), F.col("cv")).cast("double") / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
+        exact = _exact_page(corpus, "cv", _int_dot).select(
+            "query_id", "neighbor_id"
         )
-        exact = _topk_filter(
-            corpus.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                q_cos.alias("cosine"),
-            )
-        ).select("query_id", "neighbor_id")
         # per-label exact integer centroid over the CLUSTERED vectors
         dims = corpus.select("label", F.posexplode(F.col("cv")).alias("d0", "v"))
         centroids = (
@@ -4920,7 +4364,7 @@ SELECT
     "similarity_lsh_clustered_recall",
     oracle=_clustered_prelude_sql() + _clustered_lsh_tail_sql(),
     doc="The LSH index measured in the SAME regime as the IVF clustered "
-    "curve (completing r13 verdict #5's juxtaposition): the 4x8-bit "
+    "curve, completing the juxtaposition: the 4x8-bit "
     "sign-hyperplane index over the CLUSTERED vectors, bucket-join "
     "candidates, exact integer re-rank, recall@5 against the clustered "
     "exact page plus the candidate-fraction price. The measured answer "
@@ -4942,8 +4386,7 @@ def similarity_lsh_clustered_recall(
     # every persisted frame goes on this list the moment it's persisted,
     # and the finally unpersists the LIST — an exception anywhere in the
     # body can no longer leak a cached frame into the rest of the gate
-    # session (ADVICE r14; same shape as
-    # similarity_ivf_clustered_recall_curve)
+    # session (same shape as similarity_ivf_clustered_recall_curve)
     pinned: "list[DataFrame]" = []
     corpus = _clustered_corpus(spark, sf_dir).persist()
     pinned.append(corpus)
@@ -4953,20 +4396,8 @@ def similarity_lsh_clustered_recall(
             F.col("cv").alias("q_cv"),
             F.col("n2").alias("q_n2"),
         )
-        q_cos = _int_dot(F.col("q_cv"), F.col("cv")).cast("double") / (
-            F.sqrt(F.col("q_n2").cast("double"))
-            * F.sqrt(F.col("n2").cast("double"))
-        )
         exact = (
-            _topk_filter(
-                corpus.crossJoin(F.broadcast(queries))
-                .where(F.col("vec_id") != F.col("query_id"))
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    q_cos.alias("cosine"),
-                )
-            )
+            _exact_page(corpus, "cv", _int_dot)
             .select("query_id", "neighbor_id")
             .persist()
         )
@@ -5048,7 +4479,7 @@ SQ_LEVELS = 255  # 8-bit code range 0..255 (mirrors similarity/sq.py's
 def _structure_sq8_mrl_ctes(p: str) -> str:
     """SQ8 and Matryoshka tier CTEs over the clustered vectors with name
     prefix ``p`` — the two BRUTE-FORCE codec tiers of the index-choice
-    frontier (VERDICT r14 #7). SQ8: per-dim corpus-wide (lo, rng) over
+    frontier. SQ8: per-dim corpus-wide (lo, rng) over
     the overlay values, 8-bit floor-division codes, SYMMETRIC search
     over reconstructions (both sides decoded — the shape a code-resident
     scan pays). MRL: exact cosine over the first MRL_DIMS-dim prefix
@@ -5182,7 +4613,7 @@ SELECT {gain} AS gain,
     "similarity_index_structure_curve",
     oracle=_structure_curve_sql(),
     doc="The COMPLETE index-choice frontier vs STRUCTURE STRENGTH in one "
-    "table (r14 verdict #7 closed the missing tiers): for a weak "
+    "table: for a weak "
     "overlay (gain 150: within-cluster cosine shift ~+0.08) and a "
     "strong one (gain 1500: ~0.89), FOUR serving strategies are each "
     "scored against that overlay's own exact ground truth — IVF "
@@ -5209,7 +4640,7 @@ def similarity_index_structure_curve(
     for gain in STRUCTURE_GAINS:
         # per-gain pinned list: every persist lands here and the finally
         # unpersists the list, so an exception mid-gain cannot leak
-        # cached frames into the rest of the gate session (ADVICE r14)
+        # cached frames into the rest of the gate session
         pinned: "list[DataFrame]" = []
         corpus = _clustered_corpus(spark, sf_dir, gain).persist()
         pinned.append(corpus)
@@ -5221,20 +4652,8 @@ def similarity_index_structure_curve(
                 F.col("cv").alias("q_cv"),
                 F.col("n2").alias("q_n2"),
             )
-            q_cos = _int_dot(F.col("q_cv"), F.col("cv")).cast("double") / (
-                F.sqrt(F.col("q_n2").cast("double"))
-                * F.sqrt(F.col("n2").cast("double"))
-            )
             exact = (
-                _topk_filter(
-                    corpus.crossJoin(F.broadcast(queries))
-                    .where(F.col("vec_id") != F.col("query_id"))
-                    .select(
-                        "query_id",
-                        F.col("vec_id").alias("neighbor_id"),
-                        q_cos.alias("cosine"),
-                    )
-                )
+                _exact_page(corpus, "cv", _int_dot)
                 .select("query_id", "neighbor_id")
                 .persist()
             )
@@ -5351,7 +4770,7 @@ def similarity_index_structure_curve(
             ).select("query_id", "neighbor_id")
             l_hits = ltop.join(exact, ["query_id", "neighbor_id"]).count()
 
-            # SQ8 tier (VERDICT r14 #7): 8-bit codes over the overlay
+            # SQ8 tier: 8-bit codes over the overlay
             # values, SYMMETRIC brute-force search over reconstructions
             # — the full scan at 1/8 the byte width. Lazy import: sq.py
             # imports this module, so the dependency must stay one-way

@@ -327,6 +327,129 @@ def _pack_multimodal_stream(
     return result
 
 
+# Registered before the multimodal ingest-to-training block below: its
+# oracles import phash, whose v8 capstone imports dedup, whose v5 capstone
+# reads doc_importance_weights — so text.corpus imports on its own.
+#
+# DSIR-class data selection (Xie et al. 2023, "Data Selection for Language
+# Models via Importance Resampling"): hashed n-gram bucket counts estimate a
+# target and a source distribution; documents are weighted by how target-like
+# their features are. Log-free adaptation: DSIR's log-likelihood-ratio sum
+# needs libm, so the per-bucket weight here is the SCALED PROBABILITY RATIO
+# (t_b+1)*SCALE DIV (s_b+1) (add-one smoothed; the constant (S+B)/(T+B)
+# normalizer is the same for every bucket, so dropping it preserves ranking
+# exactly), and the per-doc score is the exact-BIGINT SUM of its features'
+# weights — an order-free arithmetic-mean surrogate for DSIR's
+# log-probability product that both engines evaluate bitwise-identically.
+_DSIR_BUCKETS = 256
+_DSIR_SCALE = 1 << 20
+
+
+@query(
+    "doc_importance_weights",
+    oracle=rf"""
+WITH toks AS (
+  SELECT doc_id, lang,
+         list_filter(string_split_regex(lower(text), '\s+'),
+                     t -> t <> '') AS l
+  FROM documents
+),
+uni AS (SELECT doc_id, lang, unnest(l) AS f FROM toks),
+bi AS (
+  SELECT doc_id, lang, l[i] || ' ' || l[i + 1] AS f
+  FROM toks, unnest(generate_series(1, len(l) - 1)) AS u(i)
+),
+feats AS (
+  SELECT doc_id, lang, {portable_hash_sql("f")} % {_DSIR_BUCKETS} AS b
+  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
+),
+counts AS (
+  SELECT b, CAST(count(*) AS BIGINT) AS s_b,
+         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS t_b
+  FROM feats GROUP BY 1
+),
+w AS (SELECT b, ((t_b + 1) * {_DSIR_SCALE}) // (s_b + 1) AS wt FROM counts)
+SELECT f.doc_id,
+       CAST(count(*) AS BIGINT) AS n_feats,
+       CAST(sum(w.wt) AS BIGINT) AS importance_scaled,
+       CAST(sum(w.wt) AS BIGINT) // count(*) AS importance_mean_scaled
+FROM feats f JOIN w USING (b)
+GROUP BY 1
+""",
+    doc="DSIR-class importance weighting for data selection: hashed "
+    "unigram+bigram features into 256 buckets, target = lang='en' docs, "
+    "source = whole corpus, per-bucket add-one-smoothed scaled "
+    "probability ratio, per-doc exact-BIGINT weight sum + mean. Scale "
+    "shape: ONE feature pass aggregated to a 256-row weight table (the "
+    "target/source counts come from the same aggregation via a "
+    "conditional sum), broadcast back onto the feature stream, per-doc "
+    "sum — two shuffles (bucket id, doc_id), no floating point anywhere.",
+    bench=True,
+)
+def doc_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = widen(
+        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"), spark
+    )
+    return importance_weights(docs)
+
+
+def importance_weights(docs: DataFrame) -> DataFrame:
+    """Core of ``doc_importance_weights`` over any (doc_id, lang, text)
+    frame; target = lang='en'."""
+    toks = tokens(F.lower(F.col("text")))
+    bigrams = F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - 2),
+            lambda i: F.concat_ws(
+                " ", F.slice(toks, i + 1, 1)[0], F.slice(toks, i + 2, 1)[0]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    # the hashed feature stream feeds BOTH the bucket-count aggregation
+    # and the per-doc weight join — pin it (projected to the 3 columns the
+    # consumers need; the feature string dies at the hash) so the tokenize
+    # + bigram build + explode runs once per doc, not twice. Per-call
+    # localCheckpoint: no CacheManager entry, freed when the returned plan
+    # dies.
+    feats = (
+        docs.select(
+            "doc_id", "lang", F.explode(F.concat(toks, bigrams)).alias("f")
+        )
+        .select(
+            "doc_id",
+            "lang",
+            (portable_hash(F.col("f")) % _DSIR_BUCKETS).alias("b"),
+        )
+        .localCheckpoint()
+    )
+    counts = feats.groupBy("b").agg(
+        F.count(F.lit(1)).alias("s_b"),
+        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
+        .cast("long")
+        .alias("t_b"),
+    )
+    weights = counts.select(
+        "b", F.expr(f"((t_b + 1) * {_DSIR_SCALE}) DIV (s_b + 1)").alias("wt")
+    )
+    return (
+        feats.join(F.broadcast(weights), "b")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_feats"),
+            F.sum("wt").alias("importance_scaled"),
+        )
+        .select(
+            "doc_id",
+            "n_feats",
+            "importance_scaled",
+            F.expr("importance_scaled DIV n_feats").alias(
+                "importance_mean_scaled"
+            ),
+        )
+    )
+
+
 def _mm_ingest_to_training_oracle(suffix: str = "") -> str:
     """Compose the three streaming keeper oracles verbatim (capstone
     convention), drop their rejects, and lay out the multimodal token
@@ -3327,127 +3450,6 @@ def doc_bpe_encoded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("tok")).cast("bigint").alias("n_chars"),
         )
     )
-
-
-# DSIR-class data selection (Xie et al. 2023, "Data Selection for Language
-# Models via Importance Resampling"): hashed n-gram bucket counts estimate a
-# target and a source distribution; documents are weighted by how target-like
-# their features are. Log-free adaptation: DSIR's log-likelihood-ratio sum
-# needs libm, so the per-bucket weight here is the SCALED PROBABILITY RATIO
-# (t_b+1)*SCALE DIV (s_b+1) (add-one smoothed; the constant (S+B)/(T+B)
-# normalizer is the same for every bucket, so dropping it preserves ranking
-# exactly), and the per-doc score is the exact-BIGINT SUM of its features'
-# weights — an order-free arithmetic-mean surrogate for DSIR's
-# log-probability product that both engines evaluate bitwise-identically.
-_DSIR_BUCKETS = 256
-_DSIR_SCALE = 1 << 20
-
-
-@query(
-    "doc_importance_weights",
-    oracle=rf"""
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     t -> t <> '') AS l
-  FROM documents
-),
-uni AS (SELECT doc_id, lang, unnest(l) AS f FROM toks),
-bi AS (
-  SELECT doc_id, lang, l[i] || ' ' || l[i + 1] AS f
-  FROM toks, unnest(generate_series(1, len(l) - 1)) AS u(i)
-),
-feats AS (
-  SELECT doc_id, lang, {portable_hash_sql("f")} % {_DSIR_BUCKETS} AS b
-  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)
-),
-counts AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS s_b,
-         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS t_b
-  FROM feats GROUP BY 1
-),
-w AS (SELECT b, ((t_b + 1) * {_DSIR_SCALE}) // (s_b + 1) AS wt FROM counts)
-SELECT f.doc_id,
-       CAST(count(*) AS BIGINT) AS n_feats,
-       CAST(sum(w.wt) AS BIGINT) AS importance_scaled,
-       CAST(sum(w.wt) AS BIGINT) // count(*) AS importance_mean_scaled
-FROM feats f JOIN w USING (b)
-GROUP BY 1
-""",
-    doc="DSIR-class importance weighting for data selection: hashed "
-    "unigram+bigram features into 256 buckets, target = lang='en' docs, "
-    "source = whole corpus, per-bucket add-one-smoothed scaled "
-    "probability ratio, per-doc exact-BIGINT weight sum + mean. Scale "
-    "shape: ONE feature pass aggregated to a 256-row weight table (the "
-    "target/source counts come from the same aggregation via a "
-    "conditional sum), broadcast back onto the feature stream, per-doc "
-    "sum — two shuffles (bucket id, doc_id), no floating point anywhere.",
-    bench=True,
-)
-def doc_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = widen(
-        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"), spark
-    )
-    return importance_weights(docs)
-
-
-def importance_weights(docs: DataFrame) -> DataFrame:
-    """Core of ``doc_importance_weights`` over any (doc_id, lang, text)
-    frame; target = lang='en'."""
-    toks = tokens(F.lower(F.col("text")))
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ", F.slice(toks, i + 1, 1)[0], F.slice(toks, i + 2, 1)[0]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # r16 (VERDICT r15 #6, guide §5): the hashed feature stream feeds BOTH
-    # the bucket-count aggregation and the per-doc weight join — pin it
-    # (projected to the 3 columns the consumers need; the feature string
-    # dies at the hash) so the tokenize + bigram build + explode runs
-    # once per doc, not twice. Per-call localCheckpoint: no CacheManager
-    # entry, freed when the returned plan dies.
-    feats = (
-        docs.select(
-            "doc_id", "lang", F.explode(F.concat(toks, bigrams)).alias("f")
-        )
-        .select(
-            "doc_id",
-            "lang",
-            (portable_hash(F.col("f")) % _DSIR_BUCKETS).alias("b"),
-        )
-        .localCheckpoint()
-    )
-    counts = feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("s_b"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("long")
-        .alias("t_b"),
-    )
-    weights = counts.select(
-        "b", F.expr(f"((t_b + 1) * {_DSIR_SCALE}) DIV (s_b + 1)").alias("wt")
-    )
-    return (
-        feats.join(F.broadcast(weights), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sum("wt").alias("importance_scaled"),
-        )
-        .select(
-            "doc_id",
-            "n_feats",
-            "importance_scaled",
-            F.expr("importance_scaled DIV n_feats").alias(
-                "importance_mean_scaled"
-            ),
-        )
-    )
-
-
 def _stream_run_order_unordered_oracle() -> str:
     """Shuffle oracle verbatim + the manifest derivation rebound to the
     arrival-defined (unordered) packer's oracle: disorder changes WHICH

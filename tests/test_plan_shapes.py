@@ -180,14 +180,21 @@ def test_stream_static_dim_join_broadcasts(spark):
     assert "StreamingRelation" in plan, "must join a real streaming source"
 
 
-def test_spool_fixture_refreshes_on_fixture_change(tmp_path):
+def test_spool_fixture_refreshes_on_fixture_change(tmp_path, monkeypatch):
     """The spool cache key must fold in fixture CONTENT: regenerating the
     fixture parquet in place yields a fresh spool dir, and an unchanged
     fixture reuses the cached one without re-invoking the writer."""
     import os
+    import tempfile
 
     from spark_streaming_twitter_spark.catalog import spool_fixture
 
+    # spools land in the process temp dir under a tag of the fixture path,
+    # sizes and mtimes; pytest reuses tmp_path names across sessions, so a
+    # spool an earlier session left at this path would answer for this one
+    spool_root = tmp_path / "spools"
+    spool_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(spool_root))
     fixture = tmp_path / "sf"
     fixture.mkdir()
     pq = fixture / "documents.parquet"

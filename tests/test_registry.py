@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_coverage_doc_cites_every_query():
@@ -239,16 +240,31 @@ def test_dedup_has_one_stateful_processor():
     assert len(hits) == 1, f"dedup StatefulProcessor subclasses: {hits}"
 
 
-def test_phash_imports_on_its_own():
-    """A Python worker unpickling a phash function imports phash first, in
-    a fresh interpreter, with no ``load_all``: the module must register
-    cleanly on its own, including the oracles it embeds from dedup."""
+def _package_modules() -> "list[str]":
+    import pathlib
+
+    import spark_streaming_twitter_spark
+
+    root = pathlib.Path(spark_streaming_twitter_spark.__file__).parent
+    return sorted(
+        ".".join(path.relative_to(root).with_suffix("").parts)
+        for path in root.rglob("*.py")
+        if path.name != "__init__.py"
+    )
+
+
+@pytest.mark.parametrize("module", _package_modules())
+def test_module_imports_on_its_own(module):
+    """A Python worker unpickling a package function imports its module
+    first, in a fresh interpreter, with no ``load_all``: every module must
+    register cleanly on its own, including the oracles it embeds from
+    other modules (phash's from dedup, text.corpus's from phash)."""
     import pathlib
     import subprocess
     import sys
 
     proc = subprocess.run(
-        [sys.executable, "-c", "import spark_streaming_twitter_spark.multimodal.phash"],
+        [sys.executable, "-c", f"import spark_streaming_twitter_spark.{module}"],
         capture_output=True,
         text=True,
         timeout=300,

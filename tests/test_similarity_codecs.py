@@ -8,6 +8,7 @@ docstrings is wrong.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -174,3 +175,32 @@ def test_skewed_rebalance_converges_at_sf001(spark):
     assert len(rows) == SKEW_SPLIT_K + 1, [r["version"] for r in rows]
     assert all(r["max_over_mean"] > REBALANCE_STOP for r in rows[:-1])
     assert rows[-1]["max_over_mean"] <= REBALANCE_STOP, rows[-1]
+
+
+@pytest.mark.parametrize("scenario", ["split", "rebalance", "skewed"])
+def test_ivf_chain_versions_match_sql_chain(spark, sf_dir, scenario):
+    """Every routing-table version of a scenario's Spark chain equals the
+    ver{i}v CTE of the same scenario's SQL chain, cell by cell: (label,
+    n_members, centroid), bitwise. For the skewed chain the registered
+    oracles read only aggregates of versions 1..k-1 and the routing of
+    version k, so this is what pins those versions' centroids."""
+    from spark_streaming_twitter_spark.similarity import search
+    from tests.oracle import run_oracle
+
+    sc = getattr(search, scenario.upper())
+    with search._ivf_chain(spark, sf_dir, sc) as (vers, _):
+        got = sorted(
+            (v, lab, n, tuple(cvec))
+            for v, ver in enumerate(vers)
+            for lab, n, cvec in ver
+        )
+    union = "\nUNION ALL\n".join(
+        f"SELECT {v} AS version, label, n_members, cvec FROM ver{v}v"
+        for v in range(sc.k + 1)
+    )
+    want = sorted(
+        (int(r.version), int(r.label), int(r.n_members), tuple(int(c) for c in r.cvec))
+        for r in run_oracle(search._chain_sql(sc) + "\n" + union, sf_dir).itertuples()
+    )
+    assert len(vers) == sc.k + 1
+    assert got == want
