@@ -1118,7 +1118,7 @@ LEFT JOIN dupdocs dup ON dup.doc_id = q.doc_id
 @query(
     "stream_corpus_ingest_pipeline",
     oracle=_ingest_pipeline_oracle(),
-    doc="THE ROUND-10 CAPSTONE — the full curation pipeline AT INGEST, "
+    doc="THE CAPSTONE — the full curation pipeline AT INGEST, "
     "one streaming pass: every micro-batch of arriving documents is "
     "quality-scored (quality_projection, shared verbatim with "
     "doc_quality_scores), decontaminated against the persisted "
@@ -1158,13 +1158,19 @@ def _ingest_pipeline_stream(
     from spark_streaming_twitter_spark.text.analysis import (
         quality_projection,
     )
+    from spark_streaming_twitter_spark.text.corpus import (
+        SINGLE,
+        _doc_id_bounds,
+        _ledger_carry,
+        _pack_batch,
+        _text_tokens,
+    )
 
     tmp = tempfile.mkdtemp(prefix="ingest_pipeline_")
     idx_dir = os.path.join(tmp, "index")
     ledger_dir = os.path.join(tmp, "ledger")
     pack_dir = os.path.join(tmp, "pack")
     state = {"has_index": False}
-    carry = {"offset": 0}
     bench = None
     try:
         docs = table(spark, sf_dir, "documents").select(
@@ -1190,152 +1196,103 @@ def _ingest_pipeline_stream(
         )
         spool(corpus, "doc_id", tmp)
 
-        def curate_batch(bdf: DataFrame, _epoch_id: int) -> None:
-            bdf = bdf.persist()
-            # stage 1: quality (pure projection)
-            q = quality_projection(bdf).select("doc_id", "quality")
-            # stage 2: decontamination (broadcast membership join)
-            sh = bdf.select(
-                "doc_id",
-                F.explode(
-                    shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                ).alias("sh"),
+        if pack:
+            # stage 4: the KEPT survivors pack into training sequences in
+            # the SAME pass, through the at-ingest packer's per-trigger
+            # body (its carried offset and batch are the only cross-batch
+            # state)
+            pack_kept = _pack_batch(
+                pack_dir,
+                _ledger_carry(spark, pack_dir),
+                SINGLE,
+                _text_tokens(),
+                _doc_id_bounds(spark, sf_dir)[1],
             )
-            dec = _decontaminate_report(sh, bench).select(
-                "doc_id", "is_contaminated"
-            )
-            # stage 3: near-dup against the cross-batch table index
-            bands = minhash_band_rows(bdf).persist()
-            owners_here = bands.groupBy("band", "band_key").agg(
-                F.min("doc_id").alias("new_ref")
-            )
-            if not state["has_index"]:
-                probed = bands.join(
-                    F.broadcast(
-                        owners_here.select(
-                            "band", "band_key",
-                            F.col("new_ref").alias("ref_id"),
-                        )
-                    ),
-                    ["band", "band_key"],
-                )
-                novel = owners_here.select(
-                    "band", "band_key", F.col("new_ref").alias("ref_id")
-                )
-            else:
-                idx = spark.read.parquet(idx_dir)
-                probed = (
-                    bands.join(F.broadcast(idx), ["band", "band_key"], "left")
-                    .join(F.broadcast(owners_here), ["band", "band_key"])
-                    .withColumn("ref_id", F.coalesce("ref_id", "new_ref"))
-                )
-                novel = owners_here.join(
-                    idx.select("band", "band_key"),
-                    ["band", "band_key"],
-                    "left_anti",
-                ).select("band", "band_key", F.col("new_ref").alias("ref_id"))
-            dup = (
-                probed.where(F.col("doc_id") > F.col("ref_id"))
-                .select("doc_id")
-                .distinct()
-                .withColumn("is_dup", F.lit(True))
-            )
-            keep = (
-                (F.col("quality") >= F.lit(0.6))
-                & ~F.col("is_contaminated")
-                & ~F.col("is_dup")
-            )
-            # executor-written parquet curation ledger (the run's audit
-            # table at 100 TB), not a driver list
-            led = (
-                q.join(dec, "doc_id")
-                .join(dup, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "quality",
-                    "is_contaminated",
-                    F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-                )
-                .withColumn("keep", keep)
-            )
-            led.write.mode("append").parquet(ledger_dir)
-            if pack:
-                # stage 4: the KEPT survivors pack into training
-                # sequences in the SAME pass — the at-ingest packer's
-                # sharded two-stage cumsum over this batch's kept rows,
-                # one carried scalar of cross-batch state
-                from spark_streaming_twitter_spark.text.corpus import (
-                    PACK_MAX_SHARDS,
-                    PACK_SHARD,
-                    SEQ_LEN,
-                )
 
-                kept_docs = bdf.join(
-                    spark.read.parquet(ledger_dir)
-                    .where(F.col("keep"))
-                    .select("doc_id"),
+        def curate_batch(bdf: DataFrame, epoch_id: int) -> None:
+            bdf = bdf.persist()
+            bands = None
+            try:
+                # stage 1: quality (pure projection)
+                q = quality_projection(bdf).select("doc_id", "quality")
+                # stage 2: decontamination (broadcast membership join)
+                sh = bdf.select(
                     "doc_id",
+                    F.explode(
+                        shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
+                    ).alias("sh"),
                 )
-                max_id = kept_docs.agg(F.max("doc_id").alias("max_doc_id"))
-                toks = kept_docs.crossJoin(F.broadcast(max_id)).select(
-                    "doc_id",
-                    F.expr(
-                        f"doc_id DIV greatest({PACK_SHARD}L, "
-                        f"max_doc_id DIV {PACK_MAX_SHARDS} + 1)"
-                    ).alias("shard"),
-                    F.size(tokens(F.col("text"))).cast("bigint").alias(
-                        "n_tokens"
-                    ),
+                dec = _decontaminate_report(sh, bench).select(
+                    "doc_id", "is_contaminated"
                 )
-                w_in = (
-                    Window.partitionBy("shard")
-                    .orderBy("doc_id")
-                    .rowsBetween(Window.unboundedPreceding, 0)
+                # stage 3: near-dup against the cross-batch table index
+                bands = minhash_band_rows(bdf).persist()
+                owners_here = bands.groupBy("band", "band_key").agg(
+                    F.min("doc_id").alias("new_ref")
                 )
-                with_cs = toks.withColumn(
-                    "cs_in_shard", F.sum("n_tokens").over(w_in)
+                if not state["has_index"]:
+                    probed = bands.join(
+                        F.broadcast(
+                            owners_here.select(
+                                "band", "band_key",
+                                F.col("new_ref").alias("ref_id"),
+                            )
+                        ),
+                        ["band", "band_key"],
+                    )
+                    novel = owners_here.select(
+                        "band", "band_key", F.col("new_ref").alias("ref_id")
+                    )
+                else:
+                    idx = spark.read.parquet(idx_dir)
+                    probed = (
+                        bands.join(
+                            F.broadcast(idx), ["band", "band_key"], "left"
+                        )
+                        .join(F.broadcast(owners_here), ["band", "band_key"])
+                        .withColumn("ref_id", F.coalesce("ref_id", "new_ref"))
+                    )
+                    novel = owners_here.join(
+                        idx.select("band", "band_key"),
+                        ["band", "band_key"],
+                        "left_anti",
+                    ).select(
+                        "band", "band_key", F.col("new_ref").alias("ref_id")
+                    )
+                dup = (
+                    probed.where(F.col("doc_id") > F.col("ref_id"))
+                    .select("doc_id")
+                    .distinct()
+                    .withColumn("is_dup", F.lit(True))
                 )
-                shard_tot = toks.groupBy("shard").agg(
-                    F.sum("n_tokens").alias("tot")
+                keep = (
+                    (F.col("quality") >= F.lit(0.6))
+                    & ~F.col("is_contaminated")
+                    & ~F.col("is_dup")
                 )
-                w_sh = Window.orderBy("shard").rowsBetween(
-                    Window.unboundedPreceding, -1
+                # executor-written parquet curation ledger (the run's audit
+                # table at 100 TB), not a driver list
+                led = (
+                    q.join(dec, "doc_id")
+                    .join(dup, "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        "quality",
+                        "is_contaminated",
+                        F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
+                    )
+                    .withColumn("keep", keep)
                 )
-                shard_pre = shard_tot.select(
-                    "shard",
-                    F.coalesce(F.sum("tot").over(w_sh), F.lit(0)).alias(
-                        "shard_prefix"
-                    ),
-                )
-                with_cs.join(shard_pre, "shard").select(
-                    "doc_id",
-                    "n_tokens",
-                    (
-                        F.lit(carry["offset"])
-                        + F.col("shard_prefix")
-                        + F.col("cs_in_shard")
-                        - F.col("n_tokens")
-                    ).alias("start_offset"),
-                ).select(
-                    "doc_id",
-                    "n_tokens",
-                    "start_offset",
-                    F.expr(f"start_offset DIV {SEQ_LEN}").alias(
-                        "first_seq"
-                    ),
-                    F.expr(
-                        f"CASE WHEN n_tokens = 0 "
-                        f"THEN start_offset DIV {SEQ_LEN} "
-                        f"ELSE (start_offset + n_tokens - 1) DIV {SEQ_LEN} "
-                        f"END"
-                    ).alias("last_seq"),
-                ).write.mode("append").parquet(pack_dir)
-                total = toks.agg(F.sum("n_tokens")).first()[0]
-                carry["offset"] += int(total or 0)
-            novel.write.mode("append").parquet(idx_dir)
-            state["has_index"] = True
-            bands.unpersist()
-            bdf.unpersist()
+                led.write.mode("append").parquet(ledger_dir)
+                if pack:
+                    kept = spark.read.parquet(ledger_dir).where(F.col("keep"))
+                    pack_kept(bdf.join(kept.select("doc_id"), "doc_id"), epoch_id)
+                novel.write.mode("append").parquet(idx_dir)
+                state["has_index"] = True
+            finally:
+                if bands is not None:
+                    bands.unpersist()
+                bdf.unpersist()
 
         par = spark.sparkContext.defaultParallelism
         stream = (

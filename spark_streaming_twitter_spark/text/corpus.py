@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
@@ -44,9 +44,20 @@ from spark_streaming_twitter_spark.text.analysis import tokens
 SEQ_LEN = 2048  # tokens per packed training sequence
 PACK_SHARD = 1000  # MINIMUM docs per cumsum shard (stage-1 parallelism unit)
 PACK_MAX_SHARDS = 1_000_000  # hard cap on stage-2 window rows (see below)
+PACK_PART_MIN = 4000  # MINIMUM docs per writer partition (range unit)
+PACK_MAX_PARTS = 10_000  # hard cap on coordinator-table rows
 CHUNK_LEN = 128  # tokens per context-window chunk
 CHUNK_STRIDE = 64  # overlap stride
 VOCAB_SIZE = 1000  # top-V vocabulary
+
+# Layout keys: a single writer cuts the id axis into cumsum shards; a
+# ranged (multi-writer) layout also cuts it into writer partitions.
+SINGLE = ("shard",)
+RANGED = ("part", "shard")
+_SPANS = {
+    "shard": (PACK_SHARD, PACK_MAX_SHARDS),
+    "part": (PACK_PART_MIN, PACK_MAX_PARTS),
+}
 
 
 @query(
@@ -93,60 +104,92 @@ def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pack_layout(docs: DataFrame) -> DataFrame:
     """The batch packer's layout over ANY (doc_id, text) corpus slice —
     reused by the full-corpus query and the opt-out re-pack delta."""
-    return _pack_layout_from_counts(
-        docs.select(
-            "doc_id",
-            F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
-        )
+    toks = docs.select("doc_id", _text_tokens().alias("n_tokens"))
+    return _pack_core(_keyed(toks, SINGLE), SINGLE)
+
+
+def _text_tokens() -> Column:
+    return F.size(tokens(F.col("text"))).cast("bigint")
+
+
+def _keyed(
+    df: DataFrame, keys: "tuple[str, ...]", hi: "int | None" = None
+) -> DataFrame:
+    """``df`` plus its layout keys, each ``doc_id DIV`` a span that adapts
+    to the id range: at least the key's minimum span, and wide enough
+    that at most its cap of key values exist at ANY corpus size. The
+    range's top is the bound ``hi`` when the caller knows one, else
+    ``df``'s own max doc_id from a broadcast 1-row aggregate (no driver
+    collect; the max prunes to the id column, so a token-count branch
+    is not recomputed)."""
+    if hi is None:
+        top = "max_doc_id"
+        src = df.crossJoin(F.broadcast(df.agg(F.max("doc_id").alias(top))))
+    else:
+        top, src = f"{int(hi)}L", df
+    return src.select(
+        *df.columns,
+        *(
+            F.expr(f"doc_id DIV greatest({lo}L, {top} DIV {cap} + 1)").alias(k)
+            for k in keys
+            for lo, cap in [_SPANS[k]]
+        ),
     )
 
 
-def _pack_layout_from_counts(counts: DataFrame) -> DataFrame:
-    """Concat-and-slice layout over ANY (doc_id, ..., n_tokens) count
-    table — the token-counting step is the caller's, so the same sharded
-    two-stage cumsum packs plain text (``_pack_layout``) or multimodal
-    token budgets (``pack_multimodal_sequences``). Extra columns pass
-    through untouched."""
-    # shard size from a broadcast scalar agg (no driver collect; the max
-    # prunes to the id column, so the token-count branch is not recomputed)
-    max_id = counts.agg(F.max("doc_id").alias("max_doc_id"))
-    toks = counts.crossJoin(F.broadcast(max_id)).select(
-        *counts.columns,
-        F.expr(
-            f"doc_id DIV greatest({PACK_SHARD}L, "
-            f"max_doc_id DIV {PACK_MAX_SHARDS} + 1)"
-        ).alias("shard"),
-    )
+def _pack_core(
+    toks: DataFrame, keys: "tuple[str, ...]", base: int = 0
+) -> DataFrame:
+    """Concat-and-slice layout of a (doc_id, *keys, n_tokens, ...) frame,
+    starting at token offset ``base``: the sharded two-stage cumsum.
+    Stage 1 is a window per key group over the doc rows, in parallel;
+    stage 2 is one cumsum over the key-group totals, ordered by the
+    keys. A single writer keys on shard. A ranged (multi-writer) layout
+    keys on (part, shard), so the stage-2 table is the COORDINATOR: it
+    has at most n_parts + n_shards rows (both cut the same id axis),
+    and a part's handed-out range starts at its first shard's start,
+    min(shard_start) over the part. No doc-row window spans two key
+    groups. Other columns pass through; the layout keys are dropped
+    except ``part``, which is returned with its ``part_range_start``."""
     w_in = (
-        Window.partitionBy("shard")
+        Window.partitionBy(*keys)
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    with_cs = toks.withColumn("cs_in_shard", F.sum("n_tokens").over(w_in))
-    shard_tot = toks.groupBy("shard").agg(F.sum("n_tokens").alias("tot"))
-    w_sh = (
-        Window.orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    shard_pre = shard_tot.select(
-        "shard",
-        F.coalesce(F.sum("tot").over(w_sh), F.lit(0)).alias("shard_prefix"),
-    )
-    return (
-        with_cs.join(shard_pre, "shard")
+    w_pre = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
+    starts = (
+        toks.groupBy(*keys)
+        .agg(F.sum("n_tokens").alias("tot"))
         .select(
-            *counts.columns,
-            (F.col("shard_prefix") + F.col("cs_in_shard") - F.col("n_tokens"))
-            .alias("start_offset"),
+            *keys,
+            (
+                F.lit(base).cast("bigint")
+                + F.coalesce(F.sum("tot").over(w_pre), F.lit(0))
+            ).alias("shard_start"),
         )
+    )
+    ranges: "tuple[str, ...]" = ()
+    if "part" in keys:
+        ranges = ("part", "part_range_start")
+        starts = starts.withColumn(
+            "part_range_start",
+            F.min("shard_start").over(Window.partitionBy("part")),
+        )
+    rest = [c for c in toks.columns if c not in keys]
+    start = F.col("shard_start") + F.col("cs_in_shard") - F.col("n_tokens")
+    return (
+        toks.withColumn("cs_in_shard", F.sum("n_tokens").over(w_in))
+        .join(starts, list(keys))
+        .select(*rest, start.alias("start_offset"), *ranges)
         .select(
-            *counts.columns,
+            *rest,
             "start_offset",
             F.expr(f"start_offset DIV {SEQ_LEN}").alias("first_seq"),
+            # a zero-token doc sits in the sequence its offset falls in
             F.expr(
-                f"CASE WHEN n_tokens = 0 THEN start_offset DIV {SEQ_LEN} "
-                f"ELSE (start_offset + n_tokens - 1) DIV {SEQ_LEN} END"
+                f"(start_offset + greatest(n_tokens - 1, 0)) DIV {SEQ_LEN}"
             ).alias("last_seq"),
+            *ranges,
         )
     )
 
@@ -191,7 +234,7 @@ FROM c
     "vision-encoder output length a trainer budgets, independent of "
     "payload bytes), and the concat-and-slice layout packs the "
     "COMBINED text+media token count. Reuses the sharded two-stage "
-    "cumsum verbatim via _pack_layout_from_counts — the layout engine "
+    "cumsum verbatim via _pack_core — the layout engine "
     "is modality-agnostic; only the count column changes. n_tokens is "
     "always >= the media cost so the zero-token branch never fires "
     "(the oracle drops the CASE accordingly). Downstream derivations "
@@ -206,19 +249,27 @@ def pack_multimodal_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(k) for k in MEDIA_TOKEN_COST]),
         (F.col("doc_id") % 3 + 1).cast("int"),
     )
-    media_cost = F.element_at(
-        F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    ).cast("bigint")
     counts = docs.select(
         "doc_id",
         kind.alias("kind"),
-        F.size(tokens(F.col("text"))).cast("bigint").alias("n_text_tokens"),
-        media_cost.alias("n_media_tokens"),
+        _text_tokens().alias("n_text_tokens"),
+        _media_tokens().alias("n_media_tokens"),
     ).withColumn(
         "n_tokens", F.col("n_text_tokens") + F.col("n_media_tokens")
     )
-    return _pack_layout_from_counts(counts)
+    return _pack_core(_keyed(counts, SINGLE), SINGLE)
+
+
+def _media_tokens() -> Column:
+    """Each doc's media item as its fixed per-kind patch-token cost."""
+    return F.element_at(
+        F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    ).cast("bigint")
+
+
+def _mm_tokens() -> Column:
+    return _text_tokens() + _media_tokens()
 
 
 @query(
@@ -250,7 +301,7 @@ FROM c
     "doc % 3 media pairing) are packed incrementally as documents "
     "arrive, with the identical per-trigger machinery as the text "
     "packer — only the count expression changes "
-    "(_make_pack_batch's count_expr parameter), which is the point: "
+    "(_pack_stream's count parameter), which is the point: "
     "the at-ingest layout engine is count-agnostic, so the streaming "
     "curation-to-training-examples story holds for multimodal corpora "
     "with zero new moving parts. Oracle is the multimodal budget's "
@@ -260,15 +311,15 @@ FROM c
 def stream_pack_multimodal_sequences(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_multimodal_stream(spark, sf_dir)
+    return _pack_stream(spark, sf_dir, count=_mm_tokens)
 
 
 @query(
     "stream_pack_multimodal_sequences_persisted",
     oracle=QUERIES["stream_pack_multimodal_sequences"].oracle,
     doc="The multimodal streaming packer in its PRODUCTION READ-BACK "
-    "shape (r14 verdict #4, same _kept_ledger_dir pattern as the text "
-    "packer's persisted twin): identical count-agnostic per-trigger "
+    "shape (the text packer's persisted twin, same _kept_ledger_dir "
+    "pattern): identical count-agnostic per-trigger "
     "body with the multimodal budget, ledger written to a kept "
     "per-user location (overwrite-at-start with the pre-rmtree "
     "ownership recheck), returned frame IS the parquet-backed ledger "
@@ -278,53 +329,8 @@ def stream_pack_multimodal_sequences(
 def stream_pack_multimodal_sequences_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_multimodal_stream(
-        spark, sf_dir, keep_ledger_dir=_kept_ledger_dir("pack_mm_ledger")
-    )
-
-
-def _pack_multimodal_stream(
-    spark: SparkSession, sf_dir: str, keep_ledger_dir: "str | None" = None
-) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_mm_")
-    if keep_ledger_dir is not None:
-        _reclaim_ledger_dir(keep_ledger_dir)
-        ledger_dir = keep_ledger_dir
-    else:
-        ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0}
-    media_cost = F.element_at(
-        F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    ).cast("bigint")
-    count_expr = F.size(tokens(F.col("text"))).cast("bigint") + media_cost
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", tmp)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            _make_pack_batch(ledger_dir, carry, count_expr=count_expr),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
-        )
-        if keep_ledger_dir is not None:
-            return out
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    keep = _kept_ledger_dir("pack_mm_ledger")
+    return _pack_stream(spark, sf_dir, count=_mm_tokens, keep_ledger_dir=keep)
 
 
 # Registered before the multimodal ingest-to-training block below: its
@@ -496,7 +502,7 @@ FROM c
 """
 
 
-# VERDICT r13 #1 — the reject-set join gate. A keeper DROP list is
+# The reject-set join gate. A keeper DROP list is
 # broadcastable only while it is genuinely small: under disorder the
 # builder's own fixture measures it at 75% of the corpus (373/500 docs at
 # sf0.01 — arrival clustering makes keeper dedup drop most near-dup group
@@ -510,8 +516,7 @@ FROM c
 # corpus-proportional ever lands on one node. Plan-pinned both sides in
 # tests/test_plan_shapes.py.
 # Both bounds are INCLUSIVE (<=): at exactly 4M rows / exactly 1/10 of
-# the survivors the gate still broadcasts (ADVICE r14 doc alignment —
-# the code has always used <=; the docs now say so too).
+# the survivors the gate still broadcasts.
 REJECT_BROADCAST_MAX_ROWS = 4_000_000  # ~32 MB of bigint ids
 REJECT_BROADCAST_MAX_FRAC = 10  # ...and drops <= survivors-side/10
 
@@ -544,8 +549,8 @@ def _reject_gate_counts(src: DataFrame, drops: DataFrame) -> "tuple[int, int]":
 
 
 def _kept_ledger_dir(name: str) -> str:
-    """Namespaced kept location for a persisted flagship ledger (ADVICE
-    r13): per-user under ``$SPARK_GRAFT_LEDGER_BASE`` (default the temp
+    """Namespaced kept location for a persisted flagship ledger:
+    per-user under ``$SPARK_GRAFT_LEDGER_BASE`` (default the temp
     dir), so concurrent users/processes on a shared host don't silently
     corrupt each other's ledger, and ownership-verified before the
     overwrite-at-start rmtree so a pre-planted directory or symlink is
@@ -579,7 +584,7 @@ def _kept_ledger_dir(name: str) -> str:
 
 def _reclaim_ledger_dir(path: str) -> None:
     """Re-verify ownership IMMEDIATELY before the overwrite-at-start
-    rmtree (ADVICE r14): _kept_ledger_dir checks at path-computation
+    rmtree: _kept_ledger_dir checks at path-computation
     time, but the rmtree happens later in the impl — re-running the
     lexists/lstat check here closes the window in which a same-uid
     process could plant a symlink at the ledger path between the two
@@ -604,7 +609,7 @@ def _ledger_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
     landed yet (dir absent, or present with no data files — an empty
     micro-batch write leaves only _SUCCESS). Makes every recovery /
     re-seed path TOTAL: a pre-crash half that packed zero docs resumes
-    from offset 0 instead of raising AnalysisException (ADVICE r13)."""
+    from offset 0 instead of raising AnalysisException."""
     import glob as glob_mod
     import os
 
@@ -628,7 +633,7 @@ def _ledger_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
     "story for a multimodal corpus in one registered query. The keeper "
     "decision ledger feeds the packer "
     "as a drop set anti-joined per trigger through the SIZE-ADAPTIVE "
-    "gate (_adaptive_reject_anti_join, VERDICT r13 #1): the drop count "
+    "gate (_adaptive_reject_anti_join): the drop count "
     "is materialized anyway, so the join broadcasts when drops are "
     "both <= 4M rows and <= 1/10 of the corpus (the dedup premise "
     "holding, as here: 47/500 at sf0.01) and flips to a shuffled hash "
@@ -660,7 +665,7 @@ def stream_multimodal_ingest_to_training(
     "(373/500 docs at sf0.01, the sensitivity SCALE.md names) — so "
     "the size-adaptive gate FLIPS here: 373 > 500/10 fails the "
     "fraction test and the packer anti-joins through a shuffled hash "
-    "join instead of a broadcast (VERDICT r13 #1). This query is the "
+    "join instead of a broadcast. This query is the "
     "gate's shuffled side IN the driver's correctness gate; the "
     "ordered flagship exercises the broadcast side.",
 )
@@ -673,11 +678,11 @@ def stream_multimodal_ingest_to_training_unordered(
 @query(
     "stream_multimodal_ingest_to_training_persisted",
     oracle=_mm_ingest_to_training_oracle(),
-    bench=True,  # r13 verdict #4: the headline flagship entries point at
+    bench=True,  # the headline flagship entries point at
     # the persisted (production read-back) shapes, not the
     # collect-materializing harness-lifecycle variants
-    doc="The flagship capstone in its PRODUCTION READ-BACK shape "
-    "(r12 verdict ask #4): identical keeper-dedup + at-ingest packing, "
+    doc="The flagship capstone in its PRODUCTION READ-BACK shape: "
+    "identical keeper-dedup + at-ingest packing, "
     "but the packer ledger is written to a KEPT location (overwritten "
     "at start, like any output-table rewrite) and the returned frame "
     "IS the parquet-backed ledger — no collect() anywhere between "
@@ -703,8 +708,8 @@ def stream_multimodal_ingest_to_training_persisted(
     "stream_multimodal_ingest_to_training_unordered_persisted",
     oracle=_mm_ingest_to_training_oracle("_unordered"),
     bench=True,
-    doc="The DISORDERED flagship in the production read-back shape "
-    "(r13 verdict #4): keeper curation and packing on round-robin "
+    doc="The DISORDERED flagship in the production read-back shape: "
+    "keeper curation and packing on round-robin "
     "arrivals, ledger written to a kept per-user location, returned "
     "frame IS the parquet-backed ledger — no collect between streaming "
     "finish and the caller. Because disorder makes the reject list "
@@ -742,98 +747,16 @@ def _mm_ingest_impl(
     # (a count-from-metadata parquet scan)
     n_drops = drops.count()
     n_docs = table(spark, sf_dir, "documents").count()
-    return _mm_pack_stream(
+    return _pack_stream(
         spark,
         sf_dir,
-        unordered,
-        keep_ledger_dir,
-        lambda _tmp: lambda bdf: _adaptive_reject_anti_join(
+        count=_mm_tokens,
+        roundrobin=unordered,
+        keep_ledger_dir=keep_ledger_dir,
+        survivors_in=lambda _tmp: lambda bdf: _adaptive_reject_anti_join(
             bdf, drops, n_drops, n_docs
         ),
     )
-
-
-def _mm_pack_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    unordered: bool,
-    keep_ledger_dir: "str | None",
-    survivors_in: "Callable[[str], Callable[[DataFrame], DataFrame]]",
-) -> DataFrame:
-    """The multimodal flagships' pack stream: spool the documents
-    (round-robin, or by doc_id range), and per trigger pack the rows
-    that ``survivors_in(tmp)`` — called once with the run's temp dir,
-    where a keeper store may live — keeps of the batch, with the
-    multimodal token budget. With ``keep_ledger_dir`` the pack ledger
-    outlives the query and the returned frame is parquet-backed;
-    otherwise it is collected before the temp dir dies."""
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_mm_")
-    if keep_ledger_dir is not None:
-        # production read-back shape: the ledger outlives the query —
-        # overwrite-at-start, like any output-table rewrite
-        _reclaim_ledger_dir(keep_ledger_dir)
-        ledger_dir = keep_ledger_dir
-    else:
-        ledger_dir = os.path.join(tmp, "ledger")
-    survivors = survivors_in(tmp)
-    media_cost = F.element_at(
-        F.array(*[F.lit(v) for v in MEDIA_TOKEN_COST.values()]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    ).cast("bigint")
-    count_expr = F.size(tokens(F.col("text"))).cast("bigint") + media_cost
-    # one id-scan agg serves the spool cuts and the packer's shard bound
-    # (offsets are shard-size invariant, so no per-trigger max-id job)
-    lo, hi = _doc_id_bounds(spark, sf_dir)
-    pack = _make_pack_batch(
-        ledger_dir, {"offset": 0}, count_expr=count_expr, max_id_bound=hi
-    )
-
-    def trigger(bdf: DataFrame, epoch_id: int) -> None:
-        bdf = bdf.persist()
-        try:
-            pack(survivors(bdf), epoch_id)
-        finally:
-            bdf.unpersist()
-
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        # spool in its own subdir — a partitioned keeper store must not
-        # share a root with the FileStreamSource's scan
-        spool_dir = os.path.join(tmp, "spool")
-        if unordered:
-            spool_roundrobin_batches(docs, "doc_id", spool_dir)
-        else:
-            spool_ordered_batches(docs, "doc_id", spool_dir, bounds=(lo, hi))
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_dir), trigger, output_mode="append"
-        )
-        led = _ledger_or_none(spark, ledger_dir)
-        if led is None:  # zero survivors packed: total, not AnalysisException
-            led = spark.createDataFrame(
-                [],
-                "doc_id bigint, n_tokens bigint, start_offset bigint,"
-                " first_seq bigint, last_seq bigint",
-            )
-        out = led.select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
-        )
-        if keep_ledger_dir is not None:
-            return out  # parquet-backed; the ledger outlives the query
-        # harness temp-dir lifecycle: the ledger dies in the finally, so
-        # materialize before it does
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_pack_oracle() -> str:
@@ -848,8 +771,8 @@ def _stream_pack_oracle() -> str:
 @query(
     "stream_pack_training_sequences",
     oracle=_stream_pack_oracle(),
-    bench=True,  # r14 verdict #4: benched beside its persisted twin so
-    # the lifecycle-vs-production cost delta is a measured number
+    bench=True,  # benched beside its persisted twin so the
+    # lifecycle-vs-production cost delta is a measured number
     doc="AT-INGEST sequence packing — extends the streaming story from "
     "curation to TRAINING-EXAMPLE construction: documents arrive in "
     "micro-batches and each is assigned its GLOBAL token offset (and "
@@ -858,7 +781,8 @@ def _stream_pack_oracle() -> str:
     "batch packer's own sharded two-stage cumsum restricted to the "
     "batch's rows (stage-1 windows per shard in parallel, stage-2 over "
     "#shards rows); the ONLY cross-batch coordination is one scalar — "
-    "the running token total, carried in foreachBatch and added to "
+    "the running token total, read back from the ledger when a run "
+    "starts, carried across triggers and added to "
     "every within-batch offset — which is the monotone 'offset "
     "allocator' a production ingest owns anyway (the Kafka-offset "
     "shape: a coordinator hands out ranges, workers fill them — "
@@ -875,7 +799,7 @@ def _stream_pack_oracle() -> str:
 def stream_pack_training_sequences(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_training_stream(spark, sf_dir)
+    return _pack_stream(spark, sf_dir)
 
 
 @query(
@@ -883,7 +807,7 @@ def stream_pack_training_sequences(
     oracle=_stream_pack_oracle(),
     bench=True,
     doc="The streaming text packer in its PRODUCTION READ-BACK shape "
-    "(r14 verdict #4 — the flagship's _kept_ledger_dir pattern applied "
+    "(the flagship's _kept_ledger_dir pattern applied "
     "to the packer family): identical per-trigger sharded-cumsum "
     "machinery, but the per-doc ledger is written to a KEPT per-user "
     "location (overwritten at start like any output-table rewrite, "
@@ -900,21 +824,43 @@ def stream_pack_training_sequences(
 def stream_pack_training_sequences_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_training_stream(
-        spark, sf_dir, keep_ledger_dir=_kept_ledger_dir("pack_training_ledger")
-    )
+    keep = _kept_ledger_dir("pack_training_ledger")
+    return _pack_stream(spark, sf_dir, keep_ledger_dir=keep)
 
 
-def _pack_training_stream(
-    spark: SparkSession, sf_dir: str, keep_ledger_dir: "str | None" = None
+# What a packer ledger returns: the layout, plus the trigger each doc was
+# packed in (round-robin arrival) or the writer-range handoffs (ranged).
+_PACK_COLS = ("doc_id", "n_tokens", "start_offset", "first_seq", "last_seq")
+_ARRIVAL_COLS = _PACK_COLS + ("batch AS arrival_epoch",)
+_RANGED_COLS = _PACK_COLS + ("batch", "part", "part_range_start")
+
+
+def _pack_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    cols: "tuple[str, ...]" = _PACK_COLS,
+    keys: "tuple[str, ...]" = SINGLE,
+    count: "Callable[[], Column]" = _text_tokens,
+    roundrobin: bool = False,
+    resume: bool = False,
+    keep_ledger_dir: "str | None" = None,
+    survivors_in: "Callable[[str], Callable[[DataFrame], DataFrame]] | None" = None,
+    assign: bool = False,
 ) -> DataFrame:
-    """The streaming text packer's shared lifecycle: harness shape
-    (ledger inside the temp dir, collect-materialized before rmtree)
-    when ``keep_ledger_dir`` is None, production read-back shape
-    (ledger written to the kept per-user location, returned frame IS
-    the parquet-backed ledger, no collect) when given — the flagship's
-    `_kept_ledger_dir` pattern (VERDICT r14 #4) applied to the packer
-    family."""
+    """The at-ingest packer: spool the documents (by doc_id range, or
+    round-robin), then run the stream, each trigger packing the batch
+    (or what ``survivors_in(tmp)``, called once with the run's temp dir
+    where a keeper store may live, keeps of it) into the ledger through
+    _pack_batch. Every run seeds its offset and batch counter from the
+    ledger it appends to, so ``resume`` is just a second run: the
+    first run sees batches 0-1, the driver's carry is dropped, and a
+    fresh run over batches 2.. reads it back. ``assign`` adds the run
+    order's assign step after each pack and returns the run order read
+    from both ledgers; otherwise the ledger's ``cols`` are returned.
+    With ``keep_ledger_dir`` the ledger outlives the query
+    (overwritten at start) and the returned frame is parquet-backed;
+    otherwise it is collected before the temp dir dies."""
+    import glob
     import os
     import shutil
     import tempfile
@@ -922,292 +868,152 @@ def _pack_training_stream(
     from spark_streaming_twitter_spark.streaming.harness import (
         run_foreach_batch,
         spool_ordered_batches,
+        spool_roundrobin_batches,
     )
 
     tmp = tempfile.mkdtemp(prefix="stream_pack_")
     if keep_ledger_dir is not None:
         _reclaim_ledger_dir(keep_ledger_dir)
-        ledger_dir = keep_ledger_dir
-    else:
-        ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0}
+    ledger_dir = keep_ledger_dir or os.path.join(tmp, "ledger")
+    shuffle_dir = os.path.join(tmp, "shuffle_ledger")
+    spools = [os.path.join(tmp, "spool"), os.path.join(tmp, "after_restart")]
     try:
         docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        # r16: one id-scan agg serves the spool cuts AND the packer's
-        # shard bound (was: a docs persist + 2 passes, then a per-trigger
-        # max-id agg job)
+        # one id-scan agg serves the spool cuts and the single writer's
+        # shard bound. The spool gets its own subdir: a partitioned keeper
+        # store must not share a root with the FileStreamSource's scan
         lo, hi = _doc_id_bounds(spark, sf_dir)
-        spool_ordered_batches(docs, "doc_id", tmp, bounds=(lo, hi))
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            _make_pack_batch(ledger_dir, carry, max_id_bound=hi),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
-        )
+        if roundrobin:
+            spool_roundrobin_batches(docs, "doc_id", spools[0])
+        else:
+            spool_ordered_batches(docs, "doc_id", spools[0], bounds=(lo, hi))
+        if resume:
+            os.makedirs(spools[1])
+            for f in sorted(glob.glob(os.path.join(spools[0], "batch_*")))[2:]:
+                shutil.move(f, spools[1])
+        survivors = survivors_in(tmp) if survivors_in is not None else None
+        for spool_dir in spools[: 2 if resume else 1]:
+            carry = _ledger_carry(spark, ledger_dir)
+            # ranged parts keep the per-batch max id, which the oracles'
+            # part replays; shards are offset-invariant, so any bound works
+            bound = None if "part" in keys else hi
+            trigger = _pack_batch(ledger_dir, carry, keys, count(), bound, survivors)
+            if assign:
+                trigger = _assign_seqs(spark, trigger, carry, shuffle_dir)
+            stream = _stream_docs_from_spool(spark, spool_dir)
+            run_foreach_batch(stream, trigger, output_mode="append")
+        if assign:
+            out = _run_order_from_ledgers(spark, ledger_dir, shuffle_dir)
+        else:
+            led = _ledger_or_none(spark, ledger_dir)
+            if led is None:  # nothing packed: total, not AnalysisException
+                led = spark.createDataFrame([], _LEDGER_SCHEMA)
+            out = led.selectExpr(*cols)
         if keep_ledger_dir is not None:
             return out
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return result
 
 
-def _make_pack_batch(
+_LEDGER_SCHEMA = (
+    "doc_id bigint, n_tokens bigint, start_offset bigint, first_seq bigint,"
+    " last_seq bigint, part bigint, part_range_start bigint, batch bigint"
+)
+
+
+def _ledger_carry(spark: SparkSession, ledger_dir: str) -> dict:
+    """A packer run's starting state, read from the ledger it appends to:
+    the next token offset (sum of n_tokens, exactly the tokens already
+    laid out) and the next batch (max(batch) + 1). A missing or empty
+    ledger starts from zero without running a job. At scale each is a
+    map-side aggregate (parquet footer statistics make it metadata-only)."""
+    led = _ledger_or_none(spark, ledger_dir)
+    if led is None:
+        return {"offset": 0, "batch": 0}
+    row = led.agg(
+        F.coalesce(F.sum("n_tokens"), F.lit(0)),
+        F.coalesce(F.max("batch") + 1, F.lit(0)),
+    ).first()
+    return {"offset": int(row[0]), "batch": int(row[1])}
+
+
+def _pack_batch(
     ledger_dir: str,
     carry: dict,
-    with_arrival_epoch=False,
-    count_expr=None,
-    max_id_bound: "int | None" = None,
+    keys: "tuple[str, ...]",
+    count: Column,
+    hi: "int | None" = None,
+    survivors: "Callable[[DataFrame], DataFrame] | None" = None,
 ):
-    """The streaming packer's per-trigger body, shared by the plain,
-    resumed, unordered(+resumed), and multimodal variants: the batch
-    packer's DYNAMIC shard size (from this batch's max doc_id — offsets
-    are shard-size invariant, but a hardcoded shard would leave the
-    stage-2 window over shard totals unbounded for sparse/large id
-    spaces, the same #shards cap must hold per batch), the sharded
-    two-stage cumsum over the batch's rows, the carried running total
-    added to every within-batch offset, and an executor-written parquet
-    ledger append. ``with_arrival_epoch`` additionally stamps each row
-    with the carried trigger counter (the disordered variants' arrival
-    pin); ``count_expr`` swaps the per-row token count (the multimodal
-    variant's combined text+media budget) — the layout machinery is
-    count-agnostic.
+    """The at-ingest packer's per-trigger body: key the batch's rows
+    (those ``survivors`` keeps, if given) with ``count`` as n_tokens,
+    lay them out with _pack_core from the carried offset, stamp every
+    row with the carried batch, and append them to the parquet ledger.
+    The ONLY cross-trigger state is that scalar pair. ``hi`` is an
+    upper bound on every batch's max doc_id; a single writer shards
+    from it, so no trigger runs a max-id job. That is safe because
+    offsets do not depend on the shard size (the ledger carries no
+    shard), and bound >= batch max keeps <= PACK_MAX_SHARDS shards."""
 
-    ``max_id_bound`` (r16): an UPPER BOUND on every batch's max doc_id
-    — the spooled stream's global id max, which the caller already
-    computed for the spool cuts. Sharding from the bound instead of a
-    per-trigger max agg removes one job per trigger, and is safe
-    because offsets are shard-size invariant (the ledger carries no
-    shard column) while the #shards cap still holds: bound >= batch max
-    ⇒ shard span >= the per-batch span ⇒ <= PACK_MAX_SHARDS shards."""
-    if count_expr is None:
-        count_expr = F.size(tokens(F.col("text"))).cast("bigint")
-
-    def pack_batch(bdf: DataFrame, _epoch_id: int) -> None:
-        # r15 optimization (guide §2.3/§5): persist the NARROW per-doc
-        # token counts, not the raw batch. The old body cached the full
-        # (doc_id, text) rows and recomputed the tokenize for every scan
-        # of `toks` — the two cumsum branches and the running-total agg
-        # each re-split the text, ~3 tokenizations per trigger. Caching
-        # (doc_id, shard, n_tokens) runs the tokenizer once per trigger
-        # and the cache holds 3 bigints/row instead of the payload. bdf
-        # stays persisted too: the max_id broadcast subquery and the toks
-        # scan are separate evaluations of bdf's plan (which for the
-        # flagship is the reject anti-join — worth computing exactly once).
-        # try/finally (ADVICE r15): an exception mid-trigger (the write,
-        # obs.get) must not leak the persisted frames for the session
+    def pack(bdf: DataFrame, _epoch_id: int) -> None:
+        # Cache the narrow (doc_id, keys, n_tokens) rows, not the payload:
+        # the tokenizer runs once per trigger although both cumsum stages
+        # read them. bdf is cached too, since a ranged batch's max and
+        # its rows are separate reads of it. try/finally: an exception
+        # mid-trigger must not leak the cached frames for the session.
         bdf = bdf.persist()
         toks = None
         try:
-            if max_id_bound is not None:
-                shard_expr = F.expr(
-                    f"doc_id DIV greatest({PACK_SHARD}L, "
-                    f"{int(max_id_bound)}L DIV {PACK_MAX_SHARDS} + 1)"
-                )
-                toks = bdf.select(
-                    "doc_id",
-                    shard_expr.alias("shard"),
-                    count_expr.alias("n_tokens"),
-                ).persist()
-            else:
-                max_id = bdf.agg(F.max("doc_id").alias("max_doc_id"))
-                toks = (
-                    bdf.crossJoin(F.broadcast(max_id))
-                    .select(
-                        "doc_id",
-                        F.expr(
-                            f"doc_id DIV greatest({PACK_SHARD}L, "
-                            f"max_doc_id DIV {PACK_MAX_SHARDS} + 1)"
-                        ).alias("shard"),
-                        count_expr.alias("n_tokens"),
-                    )
-                    .persist()
-                )
-            w_in = (
-                Window.partitionBy("shard")
-                .orderBy("doc_id")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            with_cs = toks.withColumn("cs_in_shard", F.sum("n_tokens").over(w_in))
-            shard_tot = toks.groupBy("shard").agg(F.sum("n_tokens").alias("tot"))
-            w_sh = Window.orderBy("shard").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            shard_pre = shard_tot.select(
-                "shard",
-                F.coalesce(F.sum("tot").over(w_sh), F.lit(0)).alias(
-                    "shard_prefix"
-                ),
-            )
-            packed = (
-                with_cs.join(shard_pre, "shard")
-                .select(
-                    "doc_id",
-                    "n_tokens",
-                    (
-                        F.lit(carry["offset"])
-                        + F.col("shard_prefix")
-                        + F.col("cs_in_shard")
-                        - F.col("n_tokens")
-                    ).alias("start_offset"),
-                )
-                .select(
-                    "doc_id",
-                    "n_tokens",
-                    "start_offset",
-                    F.expr(f"start_offset DIV {SEQ_LEN}").alias("first_seq"),
-                    F.expr(
-                        f"CASE WHEN n_tokens = 0 "
-                        f"THEN start_offset DIV {SEQ_LEN} "
-                        f"ELSE (start_offset + n_tokens - 1) DIV {SEQ_LEN} "
-                        f"END"
-                    ).alias("last_seq"),
-                )
-            )
-            if with_arrival_epoch:
-                packed = packed.withColumn(
-                    "arrival_epoch", F.lit(carry["batch"]).cast("bigint")
-                )
-            # r15: the running total rides the write action as an observed
-            # metric (CollectMetrics) — sum(n_tokens) over `packed` is the
-            # same rows as over `toks` (the shard join drops nothing), so
-            # the old separate agg job per trigger is folded into the write
+            rows = bdf if survivors is None else survivors(bdf)
+            toks = _keyed(
+                rows.select("doc_id", count.alias("n_tokens")), keys, hi
+            ).persist()
+            # the running total rides the write as an observed metric
+            # (the key join drops no row), so it costs no extra job
             obs = Observation()
-            packed = packed.observe(obs, F.sum("n_tokens").alias("total"))
-            packed.write.mode("append").parquet(ledger_dir)
-            total = obs.get["total"]
-            carry["offset"] += int(total or 0)
-            carry["batch"] = carry.get("batch", 0) + 1
-        finally:
-            if toks is not None:
-                toks.unpersist()
-            bdf.unpersist()
-
-    return pack_batch
-
-
-def _make_unordered_pack_batch(ledger_dir: str, carry: dict):
-    """The disordered packer's per-trigger body: the plain body plus the
-    carried-arrival-epoch stamp."""
-    return _make_pack_batch(ledger_dir, carry, with_arrival_epoch=True)
-
-
-def _make_ranged_pack_batch(ledger_dir: str, carry: dict):
-    """The multi-writer packer's per-trigger body, shared by the ordered
-    and round-robin (disordered) ranged variants: writer partitions are
-    id-contiguous segments of THIS batch's members (part span adaptive
-    from the batch's max id), the per-trigger coordinator cumsum over
-    per-part totals is seeded by the carried cross-trigger running
-    total, and each part packs independently via the sharded two-stage
-    cumsum — no window sees another writer's rows."""
-
-    def pack_batch(bdf: DataFrame, _epoch_id: int) -> None:
-        # r15: same narrow-cache + observed-total shape as _make_pack_batch
-        # — tokenize once per trigger, running total rides the write
-        # try/finally (ADVICE r15): an exception mid-trigger must not
-        # leak the persisted frames for the session
-        bdf = bdf.persist()
-        toks = None
-        try:
-            bmax = bdf.agg(F.max("doc_id").alias("bmax"))
-            toks = (
-                bdf.crossJoin(F.broadcast(bmax))
-                .select(
-                    "doc_id",
-                    F.expr(
-                        f"doc_id DIV greatest({PACK_PART_MIN}L, "
-                        f"bmax DIV {PACK_MAX_PARTS} + 1)"
-                    ).alias("part"),
-                    F.expr(
-                        f"doc_id DIV greatest({PACK_SHARD}L, "
-                        f"bmax DIV {PACK_MAX_SHARDS} + 1)"
-                    ).alias("shard"),
-                    F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
-                )
-                .persist()
+            (
+                _pack_core(toks, keys, carry["offset"])
+                .withColumn("batch", F.lit(carry["batch"]).cast("bigint"))
+                .observe(obs, F.sum("n_tokens").alias("total"))
+                .write.mode("append")
+                .parquet(ledger_dir)
             )
-            # COORDINATOR: per-part totals -> range starts, seeded by the
-            # carried cross-trigger running total. Bounded rows.
-            part_tot = toks.groupBy("part").agg(F.sum("n_tokens").alias("tot"))
-            w_part = Window.orderBy("part").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            part_ranges = part_tot.select(
-                "part",
-                (
-                    F.lit(carry["offset"])
-                    + F.coalesce(F.sum("tot").over(w_part), F.lit(0))
-                ).cast("bigint").alias("part_range_start"),
-            )
-            # WORKERS: per-part independent sharded two-stage cumsum.
-            w_in = (
-                Window.partitionBy("part", "shard")
-                .orderBy("doc_id")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            with_cs = toks.withColumn("cs_in_shard", F.sum("n_tokens").over(w_in))
-            shard_tot = toks.groupBy("part", "shard").agg(
-                F.sum("n_tokens").alias("tot")
-            )
-            w_sh = (
-                Window.partitionBy("part")
-                .orderBy("shard")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            shard_pre = shard_tot.select(
-                "part",
-                "shard",
-                F.coalesce(F.sum("tot").over(w_sh), F.lit(0)).alias(
-                    "shard_prefix"
-                ),
-            )
-            packed = (
-                with_cs.join(shard_pre, ["part", "shard"])
-                .join(F.broadcast(part_ranges), "part")
-                .select(
-                    "doc_id",
-                    "n_tokens",
-                    (
-                        F.col("part_range_start")
-                        + F.col("shard_prefix")
-                        + F.col("cs_in_shard")
-                        - F.col("n_tokens")
-                    ).alias("start_offset"),
-                    F.lit(carry["batch"]).cast("bigint").alias("batch"),
-                    F.col("part").cast("bigint").alias("part"),
-                    "part_range_start",
-                )
-                .select(
-                    "doc_id",
-                    "n_tokens",
-                    "start_offset",
-                    F.expr(f"start_offset DIV {SEQ_LEN}").alias("first_seq"),
-                    F.expr(
-                        f"CASE WHEN n_tokens = 0 "
-                        f"THEN start_offset DIV {SEQ_LEN} "
-                        f"ELSE (start_offset + n_tokens - 1) DIV {SEQ_LEN} "
-                        f"END"
-                    ).alias("last_seq"),
-                    "batch",
-                    "part",
-                    "part_range_start",
-                )
-            )
-            obs = Observation()
-            packed = packed.observe(obs, F.sum("n_tokens").alias("total"))
-            packed.write.mode("append").parquet(ledger_dir)
-            total = obs.get["total"]
-            carry["offset"] += int(total or 0)
+            carry["offset"] += int(obs.get["total"] or 0)
             carry["batch"] += 1
         finally:
             if toks is not None:
                 toks.unpersist()
             bdf.unpersist()
 
-    return pack_batch
+    return pack
+
+
+def _assign_seqs(spark: SparkSession, pack, carry: dict, shuffle_dir: str):
+    """The run order's assign step after each pack: every training
+    sequence the trigger brings into existence (seq ids [next,
+    (offset - 1) DIV 2048]; the carried offset already knows them, no
+    history scan) gets its shuffle assignment appended to the shuffle
+    ledger, exactly once. The next-unassigned pointer is read from that
+    ledger at run start (max(seq_id) + 1): it is the recovery state
+    that keeps a restarted run from assigning a sequence twice."""
+    shl = _ledger_or_none(spark, shuffle_dir)
+    nxt = 0
+    if shl is not None:
+        nxt = shl.agg(F.coalesce(F.max("seq_id") + 1, F.lit(0))).first()[0]
+    state = {"next": int(nxt)}
+
+    def pack_and_assign(bdf: DataFrame, epoch_id: int) -> None:
+        pack(bdf, epoch_id)
+        last = (carry["offset"] - 1) // SEQ_LEN
+        if last >= state["next"]:
+            new_seqs = spark.range(state["next"], last + 1).select(
+                F.col("id").cast("bigint").alias("seq_id")
+            )
+            _shuffle_keys(new_seqs).write.mode("append").parquet(shuffle_dir)
+            state["next"] = last + 1
+
+    return pack_and_assign
 
 
 def _doc_id_bounds(spark: SparkSession, sf_dir: str) -> "tuple[int, int]":
@@ -1233,10 +1039,6 @@ def _stream_docs_from_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
         .option("pathGlobFilter", "batch_*.parquet")
         .parquet(spool_dir)
     ).repartition(par)
-
-
-PACK_PART_MIN = 4000  # MINIMUM docs per writer partition (range unit)
-PACK_MAX_PARTS = 10_000  # hard cap on coordinator-table rows
 
 
 def _seq_manifest_oracle(pack: "str | None" = None) -> str:
@@ -1399,20 +1201,24 @@ FROM c
     "ranges, workers fill them'), demonstrated: documents are cut into "
     "contiguous-id WRITER PARTITIONS (part = doc_id DIV part_span, "
     "part_span adaptive like the shard size so the coordinator table "
-    "is provably <= 10^4 rows at any corpus size), the COORDINATOR "
-    "step is one cumsum over per-part token totals (bounded rows — "
-    "the only global synchronization, and the only thing a real "
-    "multi-writer ingest serializes), and each partition then packs "
-    "INDEPENDENTLY inside its handed-out offset range using the same "
-    "sharded two-stage cumsum, seeing nothing but its own rows plus "
-    "one scalar range start. Concatenating the per-part layouts in "
+    "is provably <= 10^4 parts at any corpus size). The COORDINATOR "
+    "step is one cumsum over the (part, shard) token totals, ordered "
+    "by part then shard — at most #parts + #shards rows, since both "
+    "cut the same id axis; the only global synchronization, and the "
+    "only thing a real multi-writer ingest serializes — and a part's "
+    "handed-out range starts at its first shard's start "
+    "(min(shard_start) over the part, on the same small table). Each "
+    "partition's doc rows are then laid out by per-(part, shard) "
+    "windows, seeing nothing but its own rows plus one scalar start "
+    "per shard. Concatenating the per-part layouts in "
     "part order tiles the global offset space with no gaps or "
     "overlaps (invariant-tested) and reproduces pack_training_"
     "sequences' concat-and-slice layout bitwise; the output adds the "
     "(part, part_range_start) columns so the range handoff itself is "
     "oracle-checked. At 100 TB: parts are the write tasks, the "
-    "coordinator is a <= 10^4-row broadcast, and no window ever spans "
-    "more than one partition's rows.",
+    "coordinator is a cumsum over a table of at most #parts + #shards "
+    "rows, and no doc-row window ever spans more than one partition's "
+    "rows.",
 )
 def pack_training_sequences_ranged(
     spark: SparkSession, sf_dir: str
@@ -1420,80 +1226,8 @@ def pack_training_sequences_ranged(
     docs = widen(
         table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     )
-    max_id = docs.agg(F.max("doc_id").alias("max_doc_id"))
-    toks = docs.crossJoin(F.broadcast(max_id)).select(
-        "doc_id",
-        F.expr(
-            f"doc_id DIV greatest({PACK_PART_MIN}L, "
-            f"max_doc_id DIV {PACK_MAX_PARTS} + 1)"
-        ).alias("part"),
-        F.expr(
-            f"doc_id DIV greatest({PACK_SHARD}L, "
-            f"max_doc_id DIV {PACK_MAX_SHARDS} + 1)"
-        ).alias("shard"),
-        F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
-    )
-    # COORDINATOR: per-part token totals -> range starts. The only
-    # cross-part window, bounded by PACK_MAX_PARTS rows.
-    part_tot = toks.groupBy("part").agg(F.sum("n_tokens").alias("tot"))
-    w_part = Window.orderBy("part").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    part_ranges = part_tot.select(
-        "part",
-        F.coalesce(F.sum("tot").over(w_part), F.lit(0)).alias(
-            "part_range_start"
-        ),
-    )
-    # WORKERS: each part packs independently — every window below is
-    # partitioned by part, so no stage sees another writer's rows.
-    w_in = (
-        Window.partitionBy("part", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    with_cs = toks.withColumn("cs_in_shard", F.sum("n_tokens").over(w_in))
-    shard_tot = toks.groupBy("part", "shard").agg(
-        F.sum("n_tokens").alias("tot")
-    )
-    w_sh = (
-        Window.partitionBy("part")
-        .orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    shard_pre = shard_tot.select(
-        "part",
-        "shard",
-        F.coalesce(F.sum("tot").over(w_sh), F.lit(0)).alias("shard_prefix"),
-    )
-    return (
-        with_cs.join(shard_pre, ["part", "shard"])
-        .join(F.broadcast(part_ranges), "part")
-        .select(
-            "doc_id",
-            "n_tokens",
-            (
-                F.col("part_range_start")
-                + F.col("shard_prefix")
-                + F.col("cs_in_shard")
-                - F.col("n_tokens")
-            ).alias("start_offset"),
-            "part",
-            "part_range_start",
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "start_offset",
-            F.expr(f"start_offset DIV {SEQ_LEN}").alias("first_seq"),
-            F.expr(
-                f"CASE WHEN n_tokens = 0 THEN start_offset DIV {SEQ_LEN} "
-                f"ELSE (start_offset + n_tokens - 1) DIV {SEQ_LEN} END"
-            ).alias("last_seq"),
-            "part",
-            "part_range_start",
-        )
-    )
+    toks = docs.select("doc_id", _text_tokens().alias("n_tokens"))
+    return _pack_core(_keyed(toks, RANGED), RANGED)
 
 
 def _datasheet_oracle() -> str:
@@ -1816,7 +1550,7 @@ def _run_order_from_ledgers(
 ) -> DataFrame:
     """Read position rank + provenance join over the LANDED ledgers —
     the epoch-start step shared by the streaming run-order chains.
-    Total on empty ledgers (ADVICE r13): a run that packed zero docs /
+    Total on empty ledgers: a run that packed zero docs /
     assigned zero sequences yields an empty run order, not an
     AnalysisException from reading a never-created directory."""
     led = _ledger_or_none(spark, ledger_dir)
@@ -1920,7 +1654,7 @@ WHERE position > p
 @query(
     "training_run_order_resumed",
     oracle=_run_order_resumed_oracle(),
-    doc="RESUME-FROM-STEP, demonstrated (r12 verdict ask #2): a worker "
+    doc="RESUME-FROM-STEP, demonstrated: a worker "
     "that died mid-epoch recomputes reader R's remaining stream from "
     "checkpoint position p — here epoch 1, reader 2, p = the midpoint "
     "of that reader's stream (data-derived so the demo scales) — "
@@ -1968,8 +1702,8 @@ def training_run_order_resumed(
 @query(
     "stream_training_run_order",
     oracle=_run_order_oracle(),
-    doc="The training chain goes STREAMING past the packer (r12 verdict "
-    "ask #5): in the SAME foreachBatch pass that packs each "
+    doc="The training chain goes STREAMING past the packer: "
+    "in the SAME foreachBatch pass that packs each "
     "micro-batch, every training sequence the batch brings into "
     "existence (seq ids [emitted, (offset_after-1) DIV 2048] — the "
     "carried offset already knows them, no history scan) gets its "
@@ -1992,58 +1726,7 @@ def training_run_order_resumed(
 def stream_training_run_order(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _stream_run_order_impl(spark, sf_dir, unordered=False)
-
-
-def _stream_run_order_impl(
-    spark: SparkSession, sf_dir: str, unordered: bool
-) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_run_order_")
-    ledger_dir = os.path.join(tmp, "ledger")
-    shuffle_dir = os.path.join(tmp, "shuffle_ledger")
-    carry = {"offset": 0, "batch": 0}
-    emitted = {"n": 0}  # seq ids already assigned (next unassigned id)
-    pack = _make_pack_batch(
-        ledger_dir, carry, with_arrival_epoch=unordered
-    )
-
-    def pack_and_assign(bdf: DataFrame, epoch_id: int) -> None:
-        pack(bdf, epoch_id)
-        hi = (carry["offset"] - 1) // SEQ_LEN
-        if carry["offset"] > 0 and hi >= emitted["n"]:
-            new_seqs = spark.range(emitted["n"], hi + 1).select(
-                F.col("id").cast("bigint").alias("seq_id")
-            )
-            _shuffle_keys(new_seqs).write.mode("append").parquet(
-                shuffle_dir
-            )
-            emitted["n"] = hi + 1
-
-    spool = spool_roundrobin_batches if unordered else spool_ordered_batches
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool(docs, "doc_id", tmp)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            pack_and_assign,
-            output_mode="append",
-        )
-        out = _run_order_from_ledgers(spark, ledger_dir, shuffle_dir)
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, assign=True)
 
 
 def _blast_radius_oracle() -> str:
@@ -2354,11 +2037,13 @@ FROM c
     "per-partition offset ranges; writers pack independently), closing "
     "the production claim end-to-end: per micro-batch, the batch's rows "
     "are cut into contiguous-id writer partitions (part span adaptive "
-    "from the batch's max doc_id, coordinator table provably <= 10^4 "
-    "rows), the per-trigger COORDINATOR step is one cumsum over per-part "
-    "token totals seeded by the carried running total, and each part "
-    "then packs its own rows inside its handed-out range (windows "
-    "partitioned by part — no stage sees another writer's rows). The "
+    "from the batch's max doc_id, provably <= 10^4 parts), the "
+    "per-trigger COORDINATOR step is one cumsum over the batch's "
+    "(part, shard) token totals (at most #parts + #shards rows) seeded "
+    "by the carried running total, each part's range starts at its "
+    "first shard's start, and each part's rows are laid out inside "
+    "that range (doc-row windows partitioned by (part, shard) — no "
+    "window sees another writer's rows). The "
     "output keeps (batch, part, part_range_start) so BOTH handoffs — "
     "cross-trigger scalar and intra-trigger ranges — are oracle-checked: "
     "the oracle replays the ordered spool's id-range batching (cuts at "
@@ -2371,14 +2056,14 @@ FROM c
 def stream_pack_training_sequences_ranged(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_ranged_stream(spark, sf_dir)
+    return _pack_stream(spark, sf_dir, _RANGED_COLS, RANGED)
 
 
 @query(
     "stream_pack_training_sequences_ranged_persisted",
     oracle=QUERIES["stream_pack_training_sequences_ranged"].oracle,
     doc="The multi-writer (ranged) streaming packer in its PRODUCTION "
-    "READ-BACK shape (r14 verdict #4): identical per-trigger "
+    "READ-BACK shape: identical per-trigger "
     "coordinator-cumsum + per-part packing, ledger written to a kept "
     "per-user location (overwrite-at-start with the pre-rmtree "
     "ownership recheck), returned frame IS the parquet-backed ledger "
@@ -2389,49 +2074,8 @@ def stream_pack_training_sequences_ranged(
 def stream_pack_training_sequences_ranged_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _pack_ranged_stream(
-        spark, sf_dir, keep_ledger_dir=_kept_ledger_dir("pack_ranged_ledger")
-    )
-
-
-def _pack_ranged_stream(
-    spark: SparkSession, sf_dir: str, keep_ledger_dir: "str | None" = None
-) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_ranged_")
-    if keep_ledger_dir is not None:
-        _reclaim_ledger_dir(keep_ledger_dir)
-        ledger_dir = keep_ledger_dir
-    else:
-        ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0, "batch": 0}
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", tmp)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            _make_ranged_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq",
-            "batch", "part", "part_range_start",
-        )
-        if keep_ledger_dir is not None:
-            return out
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    keep = _kept_ledger_dir("pack_ranged_ledger")
+    return _pack_stream(spark, sf_dir, _RANGED_COLS, RANGED, keep_ledger_dir=keep)
 
 
 @query(
@@ -2470,7 +2114,9 @@ FROM c
     doc="The FULL production topology in one query: MULTI-WRITER packing "
     "of a DISORDERED stream — Kafka cross-partition disorder (the "
     "round-robin spool) feeding per-trigger coordinator/range packing "
-    "(the multi-writer shape). Within a trigger the writer partitions "
+    "(the multi-writer shape: one cumsum over the batch's (part, shard) "
+    "token totals hands each part its range). Within a trigger the "
+    "writer partitions "
     "are id-contiguous segments OF THAT BATCH'S members (part span "
     "adaptive from the batch's max id), so the within-trigger layout is "
     "still id order and the global layout is arrival order — the oracle "
@@ -2484,35 +2130,7 @@ FROM c
 def stream_pack_training_sequences_ranged_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_rng_unord_")
-    ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0, "batch": 0}
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_roundrobin_batches(docs, "doc_id", tmp)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            _make_ranged_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq",
-            "batch", "part", "part_range_start",
-        )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, _RANGED_COLS, RANGED, roundrobin=True)
 
 
 def _ranged_resumed_oracle() -> str:
@@ -2539,57 +2157,7 @@ def _ranged_resumed_oracle() -> str:
 def stream_pack_training_sequences_ranged_resumed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_rng_resume_")
-    spool_a = os.path.join(tmp, "before_crash")
-    spool_b = os.path.join(tmp, "after_restart")
-    ledger_dir = os.path.join(tmp, "ledger")
-    os.makedirs(spool_b)
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", spool_a)
-        for f in sorted(glob.glob(os.path.join(spool_a, "batch_*.parquet")))[
-            2:
-        ]:
-            shutil.move(f, os.path.join(spool_b, os.path.basename(f)))
-
-        carry = {"offset": 0, "batch": 0}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_a),
-            _make_ranged_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        # ---- the crash: the driver (and its carry dict) is lost ----
-        del carry
-        # ---- restart: BOTH scalars recovered from the ledger ----
-        rec = spark.read.parquet(ledger_dir).agg(
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
-            (F.coalesce(F.max("batch"), F.lit(-1)) + 1).alias("b"),
-        ).first()
-        carry2 = {"offset": int(rec["t"]), "batch": int(rec["b"])}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_b),
-            _make_ranged_pack_batch(ledger_dir, carry2),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq",
-            "batch", "part", "part_range_start",
-        )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, _RANGED_COLS, RANGED, resume=True)
 
 
 @query(
@@ -2638,35 +2206,7 @@ FROM c
 def stream_pack_training_sequences_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_roundrobin_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_unord_")
-    ledger_dir = os.path.join(tmp, "ledger")
-    carry = {"offset": 0, "batch": 0}
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_roundrobin_batches(docs, "doc_id", tmp)
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, tmp),
-            _make_unordered_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq",
-            "arrival_epoch",
-        )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, _ARRIVAL_COLS, roundrobin=True)
 
 
 def _stream_pack_resumed_oracle() -> str:
@@ -2698,57 +2238,7 @@ def _stream_pack_resumed_oracle() -> str:
 def stream_pack_training_sequences_resumed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_resume_")
-    spool_a = os.path.join(tmp, "before_crash")
-    spool_b = os.path.join(tmp, "after_restart")
-    ledger_dir = os.path.join(tmp, "ledger")
-    os.makedirs(spool_b)
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", spool_a)
-        # hold back the later half of the spool: those batches arrive
-        # only after the restart
-        for f in sorted(glob.glob(os.path.join(spool_a, "batch_*.parquet")))[
-            2:
-        ]:
-            shutil.move(f, os.path.join(spool_b, os.path.basename(f)))
-
-        carry = {"offset": 0}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_a),
-            _make_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        # ---- the crash: the driver (and its carry scalar) is lost ----
-        del carry
-        # ---- restart: recover the allocator from the ledger ----
-        recovered = spark.read.parquet(ledger_dir).agg(
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t")
-        ).first()[0]
-        carry2 = {"offset": int(recovered)}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_b),
-            _make_pack_batch(ledger_dir, carry2),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"
-        )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, resume=True)
 
 
 def _unordered_resumed_oracle() -> str:
@@ -2776,55 +2266,9 @@ def _unordered_resumed_oracle() -> str:
 def stream_pack_training_sequences_unordered_resumed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_roundrobin_batches,
+    return _pack_stream(
+        spark, sf_dir, _ARRIVAL_COLS, roundrobin=True, resume=True
     )
-
-    tmp = tempfile.mkdtemp(prefix="stream_pack_unord_resume_")
-    spool_a = os.path.join(tmp, "before_crash")
-    spool_b = os.path.join(tmp, "after_restart")
-    ledger_dir = os.path.join(tmp, "ledger")
-    os.makedirs(spool_b)
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_roundrobin_batches(docs, "doc_id", spool_a)
-        for f in sorted(glob.glob(os.path.join(spool_a, "batch_*.parquet")))[
-            2:
-        ]:
-            shutil.move(f, os.path.join(spool_b, os.path.basename(f)))
-
-        carry = {"offset": 0, "batch": 0}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_a),
-            _make_unordered_pack_batch(ledger_dir, carry),
-            output_mode="append",
-        )
-        del carry
-        rec = spark.read.parquet(ledger_dir).agg(
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
-            (F.coalesce(F.max("arrival_epoch"), F.lit(-1)) + 1).alias("b"),
-        ).first()
-        carry2 = {"offset": int(rec["t"]), "batch": int(rec["b"])}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_b),
-            _make_unordered_pack_batch(ledger_dir, carry2),
-            output_mode="append",
-        )
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "n_tokens", "start_offset", "first_seq", "last_seq",
-            "arrival_epoch",
-        )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
 
 
 @query(
@@ -3450,6 +2894,8 @@ def doc_bpe_encoded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("tok")).cast("bigint").alias("n_chars"),
         )
     )
+
+
 def _stream_run_order_unordered_oracle() -> str:
     """Shuffle oracle verbatim + the manifest derivation rebound to the
     arrival-defined (unordered) packer's oracle: disorder changes WHICH
@@ -3489,7 +2935,7 @@ FROM sh JOIN mf USING (seq_id)
 def stream_training_run_order_unordered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _stream_run_order_impl(spark, sf_dir, unordered=True)
+    return _pack_stream(spark, sf_dir, assign=True, roundrobin=True)
 
 
 @query(
@@ -3516,88 +2962,7 @@ def stream_training_run_order_unordered(
 def stream_training_run_order_resumed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_foreach_batch,
-        spool_ordered_batches,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_run_order_resume_")
-    spool_a = os.path.join(tmp, "before_crash")
-    spool_b = os.path.join(tmp, "after_restart")
-    ledger_dir = os.path.join(tmp, "ledger")
-    shuffle_dir = os.path.join(tmp, "shuffle_ledger")
-    os.makedirs(spool_b)
-
-    def make_body(carry: dict, emitted: dict):
-        pack = _make_pack_batch(ledger_dir, carry)
-
-        def pack_and_assign(bdf: DataFrame, epoch_id: int) -> None:
-            pack(bdf, epoch_id)
-            hi = (carry["offset"] - 1) // SEQ_LEN
-            if carry["offset"] > 0 and hi >= emitted["n"]:
-                new_seqs = spark.range(emitted["n"], hi + 1).select(
-                    F.col("id").cast("bigint").alias("seq_id")
-                )
-                _shuffle_keys(new_seqs).write.mode("append").parquet(
-                    shuffle_dir
-                )
-                emitted["n"] = hi + 1
-
-        return pack_and_assign
-
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        spool_ordered_batches(docs, "doc_id", spool_a)
-        for f in sorted(glob.glob(os.path.join(spool_a, "batch_*.parquet")))[
-            2:
-        ]:
-            shutil.move(f, os.path.join(spool_b, os.path.basename(f)))
-
-        carry, emitted = {"offset": 0}, {"n": 0}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_a),
-            make_body(carry, emitted),
-            output_mode="append",
-        )
-        # ---- the crash: driver (offset allocator + seq pointer) lost ----
-        del carry, emitted
-        # ---- restart: re-seed BOTH scalars from the ledgers. Guarded so
-        # recovery is TOTAL (ADVICE r13): a pre-crash half that packed
-        # zero docs / assigned zero sequences has no ledger dirs to read
-        # — that's a resume from 0, not an AnalysisException ----
-        led = _ledger_or_none(spark, ledger_dir)
-        off = (
-            0
-            if led is None
-            else led.agg(
-                F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t")
-            ).first()[0]
-        )
-        shl = _ledger_or_none(spark, shuffle_dir)
-        nxt = (
-            0
-            if shl is None
-            else shl.agg(
-                F.coalesce(F.max("seq_id") + 1, F.lit(0)).alias("n")
-            ).first()[0]
-        )
-        carry2, emitted2 = {"offset": int(off)}, {"n": int(nxt)}
-        run_foreach_batch(
-            _stream_docs_from_spool(spark, spool_b),
-            make_body(carry2, emitted2),
-            output_mode="append",
-        )
-        out = _run_order_from_ledgers(spark, ledger_dir, shuffle_dir)
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+    return _pack_stream(spark, sf_dir, assign=True, resume=True)
 
 
 def _mm_fused_oracle() -> str:
@@ -3687,7 +3052,7 @@ def stream_multimodal_ingest_to_training_fused(
     oracle=_mm_fused_oracle(),
     bench=True,
     doc="The fused one-consumer flagship in the production read-back "
-    "shape (r13 verdict #4): same one-topic/one-trigger-grid topology, "
+    "shape: same one-topic/one-trigger-grid topology, "
     "ledger written to a kept per-user location and returned as the "
     "parquet-backed frame — no collect between streaming finish and "
     "the caller. Fused-flagship oracle verbatim — same bits, "
@@ -3792,4 +3157,11 @@ def _mm_fused_impl(
 
         return survivors
 
-    return _mm_pack_stream(spark, sf_dir, unordered, keep_ledger_dir, survivors_in)
+    return _pack_stream(
+        spark,
+        sf_dir,
+        count=_mm_tokens,
+        roundrobin=unordered,
+        keep_ledger_dir=keep_ledger_dir,
+        survivors_in=survivors_in,
+    )

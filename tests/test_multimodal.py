@@ -428,20 +428,27 @@ def test_keeper_prober_report_is_pinned_across_index_append(spark, tmp_path):
 
 
 def test_pack_batch_observed_total_and_empty_batch(spark, tmp_path):
-    """r15 packer internals: the running total rides the ledger write as
-    an observed metric. An EMPTY micro-batch must write nothing, leave
-    the carried offset unchanged (sum over zero rows observes NULL), and
-    a following batch must continue from the same offset."""
+    """Packer internals: the running total rides the ledger write as an
+    observed metric. An EMPTY micro-batch must write nothing, leave the
+    carried offset unchanged (sum over zero rows observes NULL) while
+    still advancing the batch counter, and a following batch must
+    continue from the same offset."""
     from pyspark.sql import functions as F
 
     from spark_streaming_twitter_spark.registry import load_all
 
     load_all()  # corpus oracles compose registry entries from dedup/phash
-    from spark_streaming_twitter_spark.text.corpus import _make_pack_batch
+    from spark_streaming_twitter_spark.text.corpus import (
+        SINGLE,
+        _ledger_carry,
+        _pack_batch,
+        _text_tokens,
+    )
 
     ledger = str(tmp_path / "ledger")
-    carry = {"offset": 0}
-    pack = _make_pack_batch(ledger, carry)
+    carry = _ledger_carry(spark, ledger)
+    assert carry == {"offset": 0, "batch": 0}  # no ledger yet
+    pack = _pack_batch(ledger, carry, SINGLE, _text_tokens(), hi=3)
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "d e"), (3, "f")], "doc_id long, text string"
     )
@@ -450,10 +457,10 @@ def test_pack_batch_observed_total_and_empty_batch(spark, tmp_path):
     empty = docs.where(F.col("doc_id") < 0)
     pack(empty, 1)
     assert carry["offset"] == 5  # NULL-sum guard: unchanged
+    assert carry["batch"] == 2  # the empty trigger still counts
     pack(docs.where(F.col("doc_id") == 3), 2)
     assert carry["offset"] == 6
-    rows = {
-        (r.doc_id, r.n_tokens, r.start_offset)
-        for r in spark.read.parquet(ledger).collect()
-    }
+    led = spark.read.parquet(ledger).collect()
+    rows = {(r.doc_id, r.n_tokens, r.start_offset) for r in led}
     assert rows == {(1, 3, 0), (2, 2, 3), (3, 1, 5)}
+    assert {(r.doc_id, r.batch) for r in led} == {(1, 0), (2, 0), (3, 2)}

@@ -794,6 +794,64 @@ def test_run_order_resume_filters_reader_before_rank(spark):
     )
 
 
+def test_single_writer_pack_trigger_plans_shard_only(spark, monkeypatch):
+    """Every single-writer packer trigger — plain, round-robin,
+    multimodal, and the flagships' shell (multimodal count behind a
+    survivors filter) — shards from the spool's id bound: its ledger
+    write plans no per-batch max-id aggregate and no 1-row broadcast of
+    it (the only broadcast left is the planner's hash broadcast of the
+    tiny shard-start table, joined on shard), carries no writer
+    ``part`` column, and its doc-row cumsum window is partitioned by
+    ``shard`` alone."""
+    import re
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from spark_streaming_twitter_spark.text import corpus
+
+    plans: list[str] = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if "start_offset" in self._df.columns:
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    cells = {
+        "plain": lambda: SPECS["stream_pack_training_sequences"].fn(spark, SF),
+        "unordered": lambda: SPECS["stream_pack_training_sequences_unordered"].fn(
+            spark, SF
+        ),
+        "multimodal": lambda: SPECS["stream_pack_multimodal_sequences"].fn(
+            spark, SF
+        ),
+        "flagship": lambda: corpus._pack_stream(
+            spark,
+            SF,
+            count=corpus._mm_tokens,
+            survivors_in=lambda _tmp: lambda bdf: bdf.where(F.col("doc_id") % 7 != 0),
+        ),
+    }
+    window = re.compile(
+        r"sum\(n_tokens#\d+L?\) windowspecdefinition\(shard#\d+L?, doc_id#\d+L? ASC"
+    )
+    for cell, run in cells.items():
+        plans.clear()
+        run()
+        assert len(plans) == 4, (cell, len(plans))  # one write per trigger
+        for plan in plans:
+            assert "max(doc_id" not in plan, (cell, plan)
+            assert set(re.findall(r"BroadcastExchange (\w+)", plan)) <= {
+                "HashedRelationBroadcastMode"
+            }, (cell, plan)
+            for join_keys in re.findall(r"BroadcastHashJoin \[([^\]]*)\]", plan):
+                assert re.fullmatch(r"shard#\d+L?", join_keys), (cell, plan)
+            assert not re.search(r"\bpart#\d+", plan), (cell, plan)
+            assert window.search(plan), (cell, plan)
+
+
 def test_adaptive_reject_anti_join_pins_both_sides(spark):
     """VERDICT r13 #1: the flagship reject-set anti-join is size-adaptive
     on the MEASURED drop count — broadcast hash anti-join while the drop

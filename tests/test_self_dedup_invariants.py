@@ -593,6 +593,82 @@ def test_disorder_capstone_order_free_stages_match_ordered(spark):
         off += r.n_tokens
 
 
+@pytest.mark.parametrize("order", ["ordered", "roundrobin"])
+@pytest.mark.parametrize("layout", ["single", "ranged"])
+def test_pack_batch_ledger_seeded_carry_equals_uninterrupted_run(
+    spark, tmp_path, layout, order
+):
+    """A packer run seeds its (offset, batch) carry from the ledger it
+    appends to, so stopping after k triggers and starting a fresh carry
+    from the ledger must land exactly the uninterrupted run's ledger —
+    with no stream, for both layouts and both arrival orders. k = 0
+    seeds from a ledger that does not exist yet. The ids span 20 shards
+    and 5 writer parts, so both cumsum stages and the range handoff see
+    more than one key group."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_twitter_spark.text.corpus import (
+        PACK_MAX_PARTS,
+        PACK_PART_MIN,
+        RANGED,
+        SEQ_LEN,
+        SINGLE,
+        _ledger_carry,
+        _pack_batch,
+        _text_tokens,
+    )
+
+    ids = [i * 737 for i in range(28)]
+    n_tok = [(i * 97) % 401 for i in range(28)]  # doc 0 has no tokens
+    docs = spark.createDataFrame(
+        [(d, " ".join(["w"] * n)) for d, n in zip(ids, n_tok)],
+        "doc_id long, text string",
+    )
+    batch_of = [i // 7 if order == "ordered" else i % 4 for i in range(28)]
+    batches = [
+        docs.where(
+            F.col("doc_id").isin([d for d, b in zip(ids, batch_of) if b == k])
+        )
+        for k in range(4)
+    ]
+    keys = SINGLE if layout == "single" else RANGED
+    hi = max(ids) if keys == SINGLE else None
+
+    # the uninterrupted layout: arrival order is (batch, doc_id); a
+    # ranged batch cuts its ids into parts by the batch's own max id
+    expected, carries, off = [], [{"offset": 0, "batch": 0}], 0
+    for k in range(4):
+        mine = sorted((d, n) for d, n, b in zip(ids, n_tok, batch_of) if b == k)
+        span = max(PACK_PART_MIN, max(d for d, _ in mine) // PACK_MAX_PARTS + 1)
+        starts: dict = {}
+        for d, n in mine:
+            row = (d, n, off, off // SEQ_LEN, (off + max(n - 1, 0)) // SEQ_LEN, k)
+            if keys == RANGED:
+                row += (d // span, starts.setdefault(d // span, off))
+            expected.append(row)
+            off += n
+        carries.append({"offset": off, "batch": k + 1})
+    assert len({r[3] for r in expected}) > 1  # several training sequences
+    if keys == RANGED:
+        assert len({(r[5], r[6]) for r in expected}) > 4  # several ranges
+
+    cols = ["doc_id", "n_tokens", "start_offset", "first_seq", "last_seq"]
+    cols += ["batch"] + (["part", "part_range_start"] if keys == RANGED else [])
+    for k in (0, 2, 4):
+        ledger = str(tmp_path / f"ledger_{k}")
+        for lo, up in ((0, k), (k, 4)):
+            carry = _ledger_carry(spark, ledger)
+            assert carry == carries[lo], (k, lo)
+            pack = _pack_batch(ledger, carry, keys, _text_tokens(), hi)
+            for b in range(lo, up):
+                pack(batches[b], b)
+            assert carry == carries[up], (k, up)
+        got = sorted(
+            tuple(r) for r in spark.read.parquet(ledger).select(*cols).collect()
+        )
+        assert got == sorted(expected), k
+
+
 def test_stream_ranged_packer_equals_batch_packer_and_tiles(spark):
     """The at-ingest multi-writer packer reproduces the batch layout
     bitwise on the shared columns, AND both handoffs tile: each
