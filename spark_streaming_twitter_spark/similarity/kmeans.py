@@ -29,7 +29,9 @@ from spark_streaming_twitter_spark.catalog import table, widen
 from spark_streaming_twitter_spark.registry import query
 from spark_streaming_twitter_spark.similarity.search import (
     _QUANT_SQL,
+    _centroids,
     _quantized,
+    _route,
     DIM,
     QUERY_STRIDE,
 )
@@ -58,23 +60,6 @@ def _assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("vec_id", "qv", "cid", "dist2")
-    )
-
-
-def _recompute(assigned: DataFrame) -> DataFrame:
-    """Floor-avg centroid per cluster: posexplode -> (cid, dim) agg."""
-    dims = assigned.select("cid", F.posexplode("qv").alias("d0", "v"))
-    cdims = (
-        dims.groupBy("cid", "d0")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "cid", "d0", F.expr("(s - pmod(s, cnt)) DIV cnt").alias("c")
-        )
-    )
-    return cdims.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d0", "c"))), lambda x: x["c"]
-        ).alias("cvec")
     )
 
 
@@ -149,7 +134,7 @@ def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _assign(corpus, centroids)
     for _ in range(N_ITERS - 1):
         assigned = _assign(
-            assigned.select("vec_id", "qv"), _recompute(assigned)
+            assigned.select("vec_id", "qv"), _centroids(assigned, "cid")
         )
     return assigned.select(
         "vec_id",
@@ -503,8 +488,6 @@ FROM (
     "corpus members, so their subspace distances are already computed.",
 )
 def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_streaming_twitter_spark.similarity.search import scaled_norm2  # noqa: F401
-
     emb = widen(
         table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", "embedding"
@@ -513,38 +496,11 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.withColumn("qv", _quantized(F.col("embedding")))
     # --- IVF routing (exact-integer centroids per label cell) ---
-    dims = corpus.select("label", F.posexplode(F.col("qv")).alias("d0", "v"))
-    centroid_dims = (
-        dims.groupBy("label", "d0")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "label",
-            "d0",
-            F.expr("(s - pmod(s, cnt)) DIV cnt").cast("bigint").alias("c"),
-        )
-    )
-    centroids = centroid_dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d0", "c"))), lambda x: x["c"]
-        ).alias("cvec")
-    )
     queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("q_qv")
+        F.col("vec_id").alias("query_id"), "qv"
     )
-    cdot = F.aggregate(
-        F.zip_with(F.col("q_qv"), F.col("cvec"), lambda x, w: x * w),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w_route = Window.partitionBy("query_id").orderBy(
-        F.col("cdot").desc(), F.col("label").asc()
-    )
-    cells = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cdot", cdot)
-        .withColumn("rn", F.row_number().over(w_route))
-        .where(F.col("rn") <= 1)
-        .select("query_id", "label")
+    cells = _route(queries, _centroids(corpus), "query_id", 1).select(
+        "query_id", "label"
     )
     # --- PQ encode + LUT (shared subspace-distance relation) ---
     sub_arr = F.array(

@@ -19,6 +19,17 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
+@pytest.fixture(autouse=True)
+def _release_staged_persists():
+    """Unpersist the staging relations a test's queries registered
+    (catalog.stage) once the test ends, so cached prepared corpora do not
+    accumulate over the session the way they would outside bench.py."""
+    yield
+    from spark_streaming_twitter_spark.catalog import release_staged
+
+    release_staged()
+
+
 def pytest_collection_modifyitems(config, items):
     """Mark the measured-heavyweight tests from tests/slow_manifest.txt
     (r13 verdict #7; scope corrected r15 — the manifest now also lists

@@ -195,12 +195,10 @@ def test_pagerank_matches_python_on_star_graph(spark):
 
 
 def test_kmeans_separates_two_obvious_clusters(spark):
-    """_assign/_recompute recover two well-separated clusters from seeds
+    """_assign/_centroids recover two well-separated clusters from seeds
     inside each blob, and recomputed centroids are the exact floor-means."""
-    from spark_streaming_twitter_spark.similarity.kmeans import (
-        _assign,
-        _recompute,
-    )
+    from spark_streaming_twitter_spark.similarity.kmeans import _assign
+    from spark_streaming_twitter_spark.similarity.search import _centroids
 
     blob_a = [[10 + i, 10] for i in range(3)]  # around (11, 10)
     blob_b = [[-10 - i, -10] for i in range(3)]
@@ -213,7 +211,7 @@ def test_kmeans_separates_two_obvious_clusters(spark):
     got = {r.vec_id: r.cid for r in assigned.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 1}
 
-    cents = {r.cid: r.cvec for r in _recompute(assigned).collect()}
+    cents = {r.cid: r.cvec for r in _centroids(assigned, "cid").collect()}
     assert cents[0] == [(10 + 11 + 12) // 3, 10]
     assert cents[1] == [(-10 - 11 - 12) // 3, -10]  # floor division, exact
 

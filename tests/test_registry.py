@@ -271,3 +271,28 @@ def test_module_imports_on_its_own(module):
         cwd=pathlib.Path(__file__).resolve().parents[1],
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_registry_names_and_oracles_pinned():
+    """The oracle contract is pinned: 376 registered names, and the
+    sha256 over the sorted names (each name's bytes, then its oracle's
+    bytes, empty for rows-only) is unchanged. A refactor that moves code
+    between modules must not change a single oracle byte."""
+    import hashlib
+
+    from spark_streaming_twitter_spark.registry import load_all
+    from spark_streaming_twitter_spark.streaming.queries import (
+        _protobuf_available,
+    )
+
+    if not _protobuf_available():
+        pytest.skip("the tws names register only with protobuf available")
+    specs = load_all()
+    h = hashlib.sha256()
+    for name in sorted(specs):
+        h.update(name.encode())
+        h.update((specs[name].oracle or "").encode())
+    assert len(specs) == 376
+    assert h.hexdigest() == (
+        "87af2fcdea5df0518d53719fc90596778edee1b6f39b928e348bd4496873acc6"
+    )

@@ -204,3 +204,97 @@ def test_ivf_chain_versions_match_sql_chain(spark, sf_dir, scenario):
     )
     assert len(vers) == sc.k + 1
     assert got == want
+
+
+# The IVF coarse quantizer on small static frames: five 3-dim centroids
+# where labels 1 and 3 are the SAME vector (a planted exact tie on every
+# row) and row 0 also ties labels 1/3 with label 4 (dot 5 each); row 3 is
+# the zero vector, so all five cells tie and label order alone decides.
+_CELLS = {0: [3, -1, 2], 1: [5, 1, 0], 2: [-4, 2, 2], 3: [5, 1, 0], 4: [5, -2, 7]}
+_ROWS = [(0, [1, 0, 0]), (1, [0, 1, 1]), (2, [-2, 3, -1]), (3, [0, 0, 0])]
+
+
+def _py_top_cells(qv, nprobe):
+    def dot(c):
+        return sum(x * y for x, y in zip(qv, _CELLS[c]))
+
+    return sorted(_CELLS, key=lambda c: (-dot(c), c))[:nprobe]
+
+
+def test_route_and_top_cells_match_python_sort(spark):
+    """The join router (_route) and the literal router (_top_cells) both
+    rank cells by (dot DESC, label ASC): for every nprobe they return
+    the ordered cells of the Python (-dot, label) sort, ties included."""
+    from spark_streaming_twitter_spark.similarity.search import (
+        _cell_literal,
+        _route,
+        _top_cells,
+    )
+
+    rows = spark.createDataFrame(_ROWS, "vec_id long, qv array<bigint>")
+    cents = spark.createDataFrame(
+        list(_CELLS.items()), "label long, cvec array<bigint>"
+    )
+    probes = (1, 2, 3)
+    routed = _route(rows, cents, "vec_id", 1).withColumn("n", F.lit(1))
+    for n in probes[1:]:
+        routed = routed.unionByName(
+            _route(rows, cents, "vec_id", n).withColumn("n", F.lit(n))
+        )
+    by_route: dict = {}
+    for r in routed.orderBy("n", "vec_id", "rr").collect():
+        by_route.setdefault((r.n, r.vec_id), []).append(r.label)
+    cells = _cell_literal(_CELLS)
+    top = rows.select(
+        "vec_id", *[_top_cells(cells, n).alias(f"t{n}") for n in probes]
+    ).collect()
+    for n in probes:
+        want = {vid: _py_top_cells(qv, n) for vid, qv in _ROWS}
+        assert {vid: by_route[(n, vid)] for vid in want} == want, (n, by_route)
+        got = {r.vec_id: [s.label for s in r[f"t{n}"]] for r in top}
+        assert got == want, (n, got, want)
+    assert want[0] == [1, 3, 4] and want[3] == [0, 1, 2]  # the planted ties
+
+
+def test_cell_stats_floor_centroid_equals_centroids(spark):
+    """Driver-side stats + Python floor division and the distributed
+    floor-mean (pmod-corrected DIV) give the same exact-integer centroid,
+    including negative, non-divisible dim sums."""
+    from spark_streaming_twitter_spark.similarity.search import (
+        _cell_stats,
+        _centroids,
+        _floor_div_centroid,
+    )
+
+    vecs = [(0, [-7, 3, 0]), (0, [2, -2, -1]), (0, [-1, -4, 5]),
+            (1, [5, -9, 2]), (1, [-8, 4, -3])]
+    df = spark.createDataFrame(vecs, "label long, qv array<bigint>")
+    python = {}
+    for lab in (0, 1):
+        members = [v for k, v in vecs if k == lab]
+        python[lab] = [sum(col) // len(members) for col in zip(*members)]
+    assert python == {0: [-2, -1, 1], 1: [-2, -3, -1]}
+    stats = _cell_stats(df, "label")
+    assert {lab: _floor_div_centroid(st) for lab, st in stats.items()} == python
+    assert {r.label: list(r.cvec) for r in _centroids(df).collect()} == python
+
+
+def test_top_cells_projection_plans_no_join_or_exchange(spark):
+    """_top_cells is a pure projection over the literal centroid table:
+    no join and no exchange, where _route over the same rows plans the
+    broadcast cross join and the rank window's shuffle."""
+    from spark_streaming_twitter_spark.plans.audit import plan_features
+    from spark_streaming_twitter_spark.similarity.search import (
+        _cell_literal,
+        _route,
+        _top_cells,
+    )
+
+    rows = spark.createDataFrame(_ROWS, "vec_id long, qv array<bigint>")
+    f = plan_features(rows.select("vec_id", _top_cells(_cell_literal(_CELLS), 2)))
+    assert not f.join_nodes and f.n_exchanges == 0, f.raw
+    cents = spark.createDataFrame(
+        list(_CELLS.items()), "label long, cvec array<bigint>"
+    )
+    f = plan_features(_route(rows, cents, "vec_id", 2))
+    assert f.join_nodes and f.n_exchanges > 0, f.raw
