@@ -41,12 +41,15 @@ same banded spool.
 Scale design (100 TB):
 - Every pipeline is shuffle-keyed on high-cardinality values (shingle hash,
   band key, simhash chunk) — no constant-key funnels.
-- LSH band buckets are the only skew risk (a boilerplate shingle shared by
+- Every batch pair scorer takes its candidates from the one shared-key
+  self-join kernel in dedup/pairs.py (``a.id < b.id``, each pair once).
+  Hot keys are the only skew risk (a boilerplate shingle shared by
   millions of docs). AQE skew-join splitting handles moderate skew; for
-  adversarial data, ``lsh_candidate_pairs(buckets, bucket_cap=N)`` keeps
-  only the N smallest doc_ids per bucket before the self-join (pathological
-  buckets degrade gracefully; documented recall trade-off, tested in
-  tests/test_dedup.py).
+  adversarial data the kernel's ``rare_keys`` drops keys above a
+  document-frequency cap before the self-join, and
+  ``lsh_candidate_pairs(buckets, bucket_cap=N)`` keeps only the N
+  smallest doc_ids per bucket (pathological keys degrade gracefully;
+  documented recall trade-off, tested in tests/test_dedup.py).
 - The exact Jaccard verification joins shingles ONLY for candidate pairs —
   the full O(n^2) comparison never materializes.
 - The brute-force cosine self-join here is the correctness baseline;
@@ -67,6 +70,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import stage, table, widen
+from spark_streaming_twitter_spark.dedup.pairs import (
+    hamming_pairs,
+    key_matches,
+    rare_keys,
+    shared_key_pairs,
+)
 from spark_streaming_twitter_spark.functions.hashing import (
     portable_hash,
     portable_hash_sql,
@@ -257,17 +266,8 @@ def lsh_candidate_pairs(
             .where(F.col("__rn") <= bucket_cap)
             .drop("__rn")
         )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_bands"))
+    return shared_key_pairs(
+        buckets, "doc_id", ("band", "band_key"), ("doc_a", "doc_b", "n_bands")
     )
 
 
@@ -1211,7 +1211,7 @@ def _ingest_pipeline_stream(
 
         def curate_batch(bdf: DataFrame, epoch_id: int) -> None:
             bdf = bdf.persist()
-            bands = None
+            bands = led = None
             try:
                 # stage 1: quality (pure projection)
                 q = quality_projection(bdf).select("doc_id", "quality")
@@ -1271,7 +1271,9 @@ def _ingest_pipeline_stream(
                     & ~F.col("is_dup")
                 )
                 # executor-written parquet curation ledger (the run's audit
-                # table at 100 TB), not a driver list
+                # table at 100 TB), not a driver list; persisted so the pack
+                # step reads this trigger's keep flags, never the ledger's
+                # history
                 led = (
                     q.join(dec, "doc_id")
                     .join(dup, "doc_id", "left")
@@ -1282,16 +1284,18 @@ def _ingest_pipeline_stream(
                         F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
                     )
                     .withColumn("keep", keep)
+                    .persist()
                 )
                 led.write.mode("append").parquet(ledger_dir)
                 if pack:
-                    kept = spark.read.parquet(ledger_dir).where(F.col("keep"))
-                    pack_kept(bdf.join(kept.select("doc_id"), "doc_id"), epoch_id)
+                    kept = led.where(F.col("keep")).select("doc_id")
+                    pack_kept(bdf.join(kept, "doc_id"), epoch_id)
                 novel.write.mode("append").parquet(idx_dir)
                 state["has_index"] = True
             finally:
-                if bands is not None:
-                    bands.unpersist()
+                for df in (led, bands):
+                    if df is not None:
+                        df.unpersist()
                 bdf.unpersist()
 
         par = spark.sparkContext.defaultParallelism
@@ -1457,41 +1461,12 @@ SELECT doc_a, doc_b, n_common, jaccard FROM jac WHERE jaccard >= 0.5
     "shingle join computes intersections without a cross product; set sizes "
     "join back on doc_id as PLAIN shuffle joins — the size table is one row "
     "per document (unbounded at corpus scale), so no broadcast hint: AQE "
-    "may still pick broadcast at small SF, but never by force (VERDICT r2 "
-    "'wrong' #2). Jaccard = int/int division — bit-exact across engines.",
+    "may still pick broadcast at small SF, but never by force. Jaccard = "
+    "int/int division — bit-exact across engines.",
 )
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.5)
-    )
+    return _jaccard_pairs(sh, sh)
 
 
 # Exact-substring span detection (the Lee et al. 2022 "Deduplicating
@@ -1545,6 +1520,39 @@ runs AS (
 """
 
 
+def _span_runs(with_toks: DataFrame) -> DataFrame:
+    """The Spark twin of ``_SPAN_RUNS_SQL`` over (doc_id, toks): positional
+    shingles, the occurrence-capped self-join on sh, and each match's
+    diagonal island (doc_a, doc_b, diag, island, pa, pb). The capped
+    shingles are staged: both sides of the self-join read them, so the
+    explode and the occurrence window run once."""
+    psh = (
+        with_toks.where(F.size("toks") >= SHINGLE_N)
+        .select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.size("toks") - SHINGLE_N),
+                    lambda i: F.concat_ws(
+                        " ", F.slice(F.col("toks"), i + 1, SHINGLE_N)
+                    ),
+                )
+            ).alias("pos0", "sh"),
+        )
+        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "sh")
+    )
+    rare = stage(rare_keys(psh, "sh", SPAN_MAX_SHINGLE_OCC))
+    m = key_matches(rare, "doc_id", "sh").select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.pos").alias("pa"),
+        F.col("b.pos").alias("pb"),
+        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
+    )
+    w_run = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
+    return m.withColumn("island", F.col("pa") - F.row_number().over(w_run))
+
+
 @query(
     "dedup_substring_spans",
     oracle=rf"""
@@ -1579,41 +1587,9 @@ GROUP BY doc_a, doc_b
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen(table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
-    toks = tokens(F.lower(F.col("text")))
-    with_toks = docs.select("doc_id", toks.alias("toks")).where(
-        F.size("toks") >= SHINGLE_N
+    runs = _span_runs(
+        docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("toks"))
     )
-    psh = with_toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - SHINGLE_N),
-                lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SHINGLE_N)),
-            )
-        ).alias("pos0", "sh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "sh")
-    # r15: both sides of the diagonal self-join read this relation; cache
-    # it so the tokenize + explode + occurrence-count window run once,
-    # not once per side (the dedup_prefix_filter_pairs persist precedent).
-    # r16 (VERDICT r15 #3): scoped staging persist — released between
-    # bench runs, see catalog.stage.
-    rare = stage(
-        psh.withColumn(
-            "occ", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        ).where(F.col("occ") <= SPAN_MAX_SHINGLE_OCC)
-    )
-    a, b = rare.alias("a"), rare.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pa"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-    )
-    w_run = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    runs = m.withColumn("island", F.col("pa") - F.row_number().over(w_run))
     spans = runs.groupBy("doc_a", "doc_b", "diag", "island").agg(
         (F.count(F.lit(1)) + SHINGLE_N - 1).cast("bigint").alias("span_tokens")
     )
@@ -1666,8 +1642,8 @@ SELECT d.doc_id,
        coalesce(k.kept_md5, md5('')) AS kept_md5
 FROM toks d LEFT JOIN kept k ON k.doc_id = d.doc_id
 """,
-    doc="Exact-substring span REMOVAL with document reassembly (VERDICT r7 "
-    "ask #4) — the second half of Lee et al. 2022, which dedup_"
+    doc="Exact-substring span REMOVAL with document reassembly — the "
+    "second half of Lee et al. 2022, which dedup_"
     "substring_spans only detects: every >= 8-token verbatim span keeps "
     "its FIRST corpus-wide occurrence (the minimum-doc_id copy — every "
     "later copy pairs with some earlier doc via the shared rare "
@@ -1690,55 +1666,17 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen(
         table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     )
-    # r15 (guide §5, the dedup_prefix_filter_pairs precedent): the token
-    # arrays are read by THREE consumers below (the positional-shingle
-    # explode, the survivor re-explode, and the totals) and the regex
-    # tokenize is a higher-order expression with no codegen subexpression
-    # elimination — cache it once. At 100 TB this cache is the tokenized
-    # staging table the removal pipeline writes anyway. r16 (VERDICT r15
-    # #3): scoped staging persist — released between bench runs.
+    # The token arrays are read by THREE consumers below (the
+    # positional-shingle explode, the survivor re-explode, and the totals)
+    # and the regex tokenize is a higher-order expression with no codegen
+    # subexpression elimination — cache it once (the
+    # dedup_prefix_filter_pairs precedent). At 100 TB this cache is the
+    # tokenized staging table the removal pipeline writes anyway. A scoped
+    # staging persist: released between bench runs, see catalog.stage.
     with_toks = stage(
         docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("toks"))
     )
-    psh = (
-        with_toks.where(F.size("toks") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - SHINGLE_N),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("toks"), i + 1, SHINGLE_N)
-                    ),
-                )
-            ).alias("pos0", "sh"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "sh")
-    )
-    # r15: both sides of the diagonal self-join read this relation; cache
-    # it so the tokenize + explode + occurrence-count window run once,
-    # not once per side (the dedup_prefix_filter_pairs persist precedent).
-    # r16 (VERDICT r15 #3): scoped staging persist — released between
-    # bench runs, see catalog.stage.
-    rare = stage(
-        psh.withColumn(
-            "occ", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        ).where(F.col("occ") <= SPAN_MAX_SHINGLE_OCC)
-    )
-    a, b = rare.alias("a"), rare.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.sh") == F.col("b.sh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pa"),
-        F.col("b.pos").alias("pb"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-    )
-    w_run = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    runs = m.withColumn("island", F.col("pa") - F.row_number().over(w_run))
+    runs = _span_runs(with_toks)
     sp = (
         runs.groupBy("doc_a", "doc_b", "diag", "island")
         .agg(F.min("pb").alias("s"), F.count(F.lit(1)).alias("n_sh"))
@@ -2144,37 +2082,14 @@ WHERE bit_count(xor(sig_a, sig_b)) <= 8
     "the only shuffle over pairs; never O(n^2).",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = _simhash_signatures(spark, sf_dir)
-    chunks = sigs.select(
+    return hamming_pairs(
+        _simhash_signatures(spark, sf_dir),
         "doc_id",
         "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_CHUNKS - 1))).alias("c"),
-    ).withColumn(
-        # F.shiftright only takes a literal bit count; use the SQL form for a
-        # per-row shift amount.
-        "chunk_val",
-        F.expr("shiftright(simhash, c * 15)").bitwiseAND(F.lit(32767)),
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select("doc_a", "doc_b", hamming.cast("int").alias("hamming")).where(
-        F.col("hamming") <= 8
+        SIMHASH_CHUNKS,
+        15,
+        8,
+        ("doc_a", "doc_b", "hamming"),
     )
 
 
@@ -2784,48 +2699,14 @@ WHERE n_common * 1000000 // sa.n >= 800000
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            F.expr("n_common * 1000000 DIV na")
-            .cast("bigint")
-            .alias("contain_a_scaled"),
-            F.expr("n_common * 1000000 DIV nb")
-            .cast("bigint")
-            .alias("contain_b_scaled"),
-        )
-        .where(
-            (F.col("contain_a_scaled") >= 800000)
-            | (F.col("contain_b_scaled") >= 800000)
-        )
-    )
+    return _containment_pairs(sh, sh)
 
 
-# Document-frequency cap for the EXACT pair scorers (VERDICT r6 "what's
-# wrong" #2): the inverted shingle self-join costs O(Σ_s df(s)^2), so ONE
-# boilerplate shingle (license header, nav text) shared by millions of docs
-# makes a single df^2 term quadratic in corpus size. Dropping shingles with
-# df > cap BEFORE the join bounds every term at cap^2 — the standard df
+# Document-frequency cap for the EXACT pair scorers: the inverted shingle
+# self-join costs O(Σ_s df(s)^2), so ONE boilerplate shingle (license
+# header, nav text) shared by millions of docs makes a single df^2 term
+# quadratic in corpus size. Dropping shingles with df > cap BEFORE the
+# join (``rare_keys``) bounds every term at cap^2 — the standard df
 # cutoff (Broder 1997 resemblance estimation practice). Cap=64 matches the
 # MinHash bucket_cap and SPAN_MAX_SHINGLE_OCC, and is fixture-neutral:
 # measured max shingle df is 7 at sf0.01 and 25 at sf0.1, so on driver
@@ -2835,21 +2716,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as denominators: a pair can only lose credit for corpus-wide boilerplate
 # shingles — exactly the matches that are false evidence of quotation.
 PAIR_DF_CAP = 64
-
-
-def _rare_shingles(sh: DataFrame, df_cap: int) -> DataFrame:
-    """Shingles with corpus document frequency <= df_cap.
-
-    One window pass partitioned by ``sh`` — the SAME shuffle key as the
-    inverted pair join that follows, so the exchange is reusable and the
-    guard adds no extra shuffle stage beyond the df computation itself.
-    """
-    w = Window.partitionBy("sh")
-    return (
-        sh.withColumn("df", F.count(F.lit(1)).over(w))
-        .where(F.col("df") <= df_cap)
-        .drop("df")
-    )
 
 
 @query(
@@ -2872,9 +2738,7 @@ def dedup_ngram_jaccard_pairs_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
-    return _pair_scores_from(sh, _rare_shingles(sh, PAIR_DF_CAP)).select(
-        "doc_a", "doc_b", "n_common", "jaccard"
-    ).where(F.col("jaccard") >= 0.5)
+    return _jaccard_pairs(sh, rare_keys(sh, "sh", PAIR_DF_CAP))
 
 
 @query(
@@ -2907,21 +2771,7 @@ def dedup_containment_pairs_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
-    scored = _pair_scores_from(sh, _rare_shingles(sh, PAIR_DF_CAP))
-    return scored.select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        F.expr("n_common * 1000000 DIV na").cast("bigint").alias(
-            "contain_a_scaled"
-        ),
-        F.expr("n_common * 1000000 DIV nb").cast("bigint").alias(
-            "contain_b_scaled"
-        ),
-    ).where(
-        (F.col("contain_a_scaled") >= 800000)
-        | (F.col("contain_b_scaled") >= 800000)
-    )
+    return _containment_pairs(sh, rare_keys(sh, "sh", PAIR_DF_CAP))
 
 
 def _pair_scores_from(sh_sizes: DataFrame, sh_join: DataFrame) -> DataFrame:
@@ -2935,29 +2785,38 @@ def _pair_scores_from(sh_sizes: DataFrame, sh_join: DataFrame) -> DataFrame:
     doc_a, doc_b, n_common, na, nb, jaccard.
     """
     sizes = sh_sizes.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh_join.alias("a")
-    b = sh_join.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     return (
-        inter.join(sa, "doc_a")
+        shared_key_pairs(sh_join, "doc_id", "sh", ("doc_a", "doc_b", "n_common"))
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
             / (F.col("na") + F.col("nb") - F.col("n_common")),
         )
+    )
+
+
+def _jaccard_pairs(sh: DataFrame, sh_join: DataFrame) -> DataFrame:
+    """The ``_pair_scores_from(sh, sh_join)`` pairs with Jaccard >= 0.5."""
+    scored = _pair_scores_from(sh, sh_join)
+    return scored.select("doc_a", "doc_b", "n_common", "jaccard").where(
+        F.col("jaccard") >= 0.5
+    )
+
+
+def _containment_pairs(sh: DataFrame, sh_join: DataFrame) -> DataFrame:
+    """The ``_pair_scores_from(sh, sh_join)`` pairs with either side
+    >= 0.8 contained, as exact scaled BIGINTs."""
+    scaled = [
+        F.expr(f"CAST(n_common * 1000000 DIV n{s} AS BIGINT) AS contain_{s}_scaled")
+        for s in "ab"
+    ]
+    scored = _pair_scores_from(sh, sh_join)
+    return scored.select("doc_a", "doc_b", "n_common", *scaled).where(
+        F.greatest("contain_a_scaled", "contain_b_scaled") >= 800000
     )
 
 
@@ -3437,18 +3296,11 @@ def dedup_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("wt") * F.col("wt")).alias("n2")
     )
-    a = w.select(
-        F.col("doc_id").alias("doc_a"), "term", F.col("wt").alias("wa")
-    )
-    b = w.select(
-        F.col("doc_id").alias("doc_b"), "term", F.col("wt").alias("wb")
-    )
     dots = (
-        a.join(b, "term")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        key_matches(w, "doc_id", "term")
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(
-            F.sum(F.col("wa") * F.col("wb")).alias("dot"),
+            F.sum(F.col("a.wt") * F.col("b.wt")).alias("dot"),
             F.count(F.lit(1)).alias("n_common"),
         )
     )
@@ -3753,22 +3605,16 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n", "sh", "rn")
         .persist()
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
+    # AllPairs length filter (Bayardo et al. WWW'07 §3): at t=0.5,
+    # J >= t forces max(na, nb) <= min(na, nb)/t = 2*min(na, nb).
+    length = (F.col("b.n") <= 2 * F.col("a.n")) & (F.col("a.n") <= 2 * F.col("b.n"))
     # Positional filter (PPJoin, Xiao et al. WWW'08 §3.2), exact: both
     # shingle lists are ranked by the SAME global (df, sh) order, so the
     # FIRST shared prefix shingle (min rn on either side — consistent
     # order means both mins land on the same shingle) bounds the overlap:
     # I <= 1 + min(na - rn_a, nb - rn_b). J >= 0.5 needs 3*I >= na + nb.
     cand = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # AllPairs length filter (Bayardo et al. WWW'07 §3): at t=0.5,
-            # J >= t forces max(na, nb) <= min(na, nb)/t = 2*min(na, nb).
-            & (F.col("b.n") <= 2 * F.col("a.n"))
-            & (F.col("a.n") <= 2 * F.col("b.n")),
-        )
+        key_matches(prefix, "doc_id", "sh", extra=length)
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

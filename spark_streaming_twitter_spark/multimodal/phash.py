@@ -25,8 +25,9 @@ Pairs shuffle only on (chunk, chunk_val): 4 x 14-bit chunks of the 56-bit
 dHash give guaranteed recall at Hamming radius <= 3 (pigeonhole) and the
 verify keeps radius <= 8; a bucket's join cost is bounded by its
 duplicate-group size, never corpus-quadratic (same argument as
-dedup_simhash_pairs; for adversarial buckets the dedup.lsh_candidate_pairs
-cap pattern applies unchanged).
+dedup_simhash_pairs, through the one pair kernel of dedup/pairs.py; for
+adversarial buckets its ``rare_keys`` document-frequency cap applies
+unchanged, as it does for video frame signatures).
 
 Streaming structure: every media ingest, self and TTL stream is a
 binding of one modality to a shell in streaming/bucket_state.py.
@@ -53,6 +54,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
+from spark_streaming_twitter_spark.dedup.pairs import (
+    hamming_pairs,
+    rare_keys,
+    shared_key_pairs,
+)
 from spark_streaming_twitter_spark.multimodal.kernels import (
     AFP_FRAMES,
     DHASH_BITS,
@@ -261,43 +267,16 @@ WHERE bit_count(xor(da, db)) <= {PHASH_RADIUS}
     "the ~13k cross-group pairs.",
 )
 def media_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = media_phash_codes(spark, sf_dir)
-    chunks = sigs.select(
+    return hamming_pairs(
+        media_phash_codes(spark, sf_dir),
         "media_id",
         "dhash",
-        "ahash",
-        F.explode(F.sequence(F.lit(0), F.lit(PHASH_CHUNKS - 1))).alias("c"),
-    ).withColumn(
-        "chunk_val",
-        F.expr("shiftright(dhash, c * 14)").bitwiseAND(F.lit(16383)),
+        PHASH_CHUNKS,
+        14,
+        PHASH_RADIUS,
+        ("media_a", "media_b", "hamming_dhash"),
+        also=("ahash",),
     )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.dhash").alias("da"),
-            F.col("b.dhash").alias("db"),
-            F.col("a.ahash").alias("aa"),
-            F.col("b.ahash").alias("ab"),
-        )
-        .distinct()
-    )
-    hd = F.bit_count(F.col("da").bitwiseXOR(F.col("db")))
-    ha = F.bit_count(F.col("aa").bitwiseXOR(F.col("ab")))
-    return cand.select(
-        "media_a",
-        "media_b",
-        hd.cast("int").alias("hamming_dhash"),
-        ha.cast("int").alias("hamming_ahash"),
-    ).where(F.col("hamming_dhash") <= PHASH_RADIUS)
 
 
 # ---------------------------------------------------------------------------
@@ -430,40 +409,19 @@ WHERE bit_count(xor(fa, fb)) <= {AFP_RADIUS}
     "bit_count(xor) <= 6 verify. Same join shape and same 100 TB "
     "argument as media_phash_dup_pairs / dedup_simhash_pairs: shuffle "
     "only on (chunk, chunk_val), bucket cost bounded by duplicate-group "
-    "size, the lsh_candidate_pairs cap pattern available for "
+    "size, the dedup/pairs.py rare_keys cap available for "
     "adversarial buckets.",
 )
 def media_audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = media_audio_fingerprints(spark, sf_dir)
-    chunks = sigs.select(
+    return hamming_pairs(
+        media_audio_fingerprints(spark, sf_dir),
         "media_id",
         "fingerprint",
-        F.explode(F.sequence(F.lit(0), F.lit(AFP_CHUNKS - 1))).alias("c"),
-    ).withColumn(
-        "chunk_val",
-        F.expr("shiftright(fingerprint, c * 12)").bitwiseAND(F.lit(4095)),
+        AFP_CHUNKS,
+        12,
+        AFP_RADIUS,
+        ("media_a", "media_b", "hamming"),
     )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.fingerprint").alias("fa"),
-            F.col("b.fingerprint").alias("fb"),
-        )
-        .distinct()
-    )
-    hd = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-    return cand.select(
-        "media_a", "media_b", hd.cast("int").alias("hamming")
-    ).where(F.col("hamming") <= AFP_RADIUS)
 
 
 # ---------------------------------------------------------------------------
@@ -707,23 +665,12 @@ def media_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("media_id", "frame_sig")
         .distinct()
     )
-    rare = sigs.withColumn(
-        "occ", F.count(F.lit(1)).over(Window.partitionBy("frame_sig"))
-    ).where(F.col("occ") <= VIDEO_SIG_MAX_OCC)
-    a, b = rare.alias("a"), rare.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.frame_sig") == F.col("b.frame_sig"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
-        .where(F.col("n_shared") >= VIDEO_MIN_SHARED)
-    )
+    return shared_key_pairs(
+        rare_keys(sigs, "frame_sig", VIDEO_SIG_MAX_OCC),
+        "media_id",
+        "frame_sig",
+        ("media_a", "media_b", "n_shared"),
+    ).where(F.col("n_shared") >= VIDEO_MIN_SHARED)
 
 
 # ---------------------------------------------------------------------------
@@ -796,14 +743,7 @@ def _media_kind(
         )
         if max_occ is None:
             return out
-        return (
-            out.distinct()
-            .withColumn(
-                "occ", F.count(F.lit(1)).over(Window.partitionBy("c", "chunk_val"))
-            )
-            .where(F.col("occ") <= max_occ)
-            .drop("occ")
-        )
+        return rare_keys(out.distinct(), ("c", "chunk_val"), max_occ)
 
     return BucketKind(
         id_col="media_id",

@@ -168,12 +168,17 @@ def _topk_filter(scored: DataFrame) -> DataFrame:
 
 
 def _exact_page(
-    corpus: DataFrame, vec: str, dot: "Callable[[Column, Column], Column]"
+    corpus: DataFrame,
+    vec: str,
+    dot: "Callable[[Column, Column], Column]",
+    neighbors: "DataFrame | None" = None,
 ) -> DataFrame:
     """Brute-force exact top-k of the stride queries over ``corpus``
-    (vec_id, ``vec``, n2): the query set broadcasts against the corpus
+    (vec_id, ``vec``, n2): the query set broadcasts against the neighbor
     scan and cosine is ``dot`` over the norms' square roots — the
-    similarity_topk_cosine shape for any exact integer dot."""
+    similarity_topk_cosine shape for any exact integer dot. The
+    neighbors are ``corpus`` itself unless ``neighbors`` (a filtered
+    corpus of the same columns) is given."""
     queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col(vec).alias("q_vec"),
@@ -183,7 +188,8 @@ def _exact_page(
         F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
     )
     return _topk_filter(
-        corpus.crossJoin(F.broadcast(queries))
+        (corpus if neighbors is None else neighbors)
+        .crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("vec_id").alias("neighbor_id"), cosine.alias("cosine")
@@ -1762,34 +1768,13 @@ FILTERED_IVF_MOD = 4  # headline predicate: vec_id % 4 = 1 (25% eligible)
 FILTERED_IVF_MODS = (4, 16)  # recall reported at 25% and 6.25% selectivity
 
 
-def _exact_mod_topk(
-    spark: SparkSession, sf_dir: str, mod: int
-) -> DataFrame:
+def _exact_mod_topk(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
     """Exact filtered page for the ``vec_id % mod = 1`` predicate: the
     brute-force scorer over eligible vectors only — ground truth for the
     filtered-IVF recall metric."""
     corpus = _corpus_with_norms(spark, sf_dir)
-    queries = corpus.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    pairs = (
-        corpus.where(F.col("vec_id") % mod == 1)
-        .join(F.broadcast(queries), F.col("query_id") != F.col("vec_id"))
-    )
-    cosine = scaled_dot(F.col("q_emb"), F.col("embedding")).cast(
-        "double"
-    ) / (
-        F.sqrt(F.col("q_n2").cast("double"))
-        * F.sqrt(F.col("n2").cast("double"))
-    )
-    return _topk_filter(
-        pairs.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine.alias("cosine"),
-        )
+    return _exact_page(
+        corpus, "embedding", scaled_dot, corpus.where(F.col("vec_id") % mod == 1)
     )
 
 

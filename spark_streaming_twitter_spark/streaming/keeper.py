@@ -25,6 +25,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_twitter_spark.dedup.pairs import chunk_slices
+
 
 def keeper_store_dirs(store_dir: str) -> "tuple[str, str]":
     """(ledger subdir, index subdir) of a keeper's partitioned store.
@@ -57,17 +59,10 @@ def chunk_key_frame(
 ) -> DataFrame:
     """Chunk-LSH probe keys (media_id, sig, c, chunk_val): one row per
     (item, chunk index), ``chunk_val`` the signature's c-th
-    ``chunk_bits``-wide slice. No distinct is needed: the explode of a
-    per-item 0..n_chunks-1 sequence over unique ids is one row per key
-    by construction."""
-    mask = (1 << chunk_bits) - 1
-    return sig_df.select(
-        "media_id",
-        F.col(sig_col).alias("sig"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-    ).withColumn(
-        "chunk_val", F.expr(f"shiftright(sig, c * {chunk_bits}) & {mask}")
-    )
+    ``chunk_bits``-wide slice (dedup/pairs.py's ``chunk_slices``, the
+    slice rule the batch Hamming scorers join on)."""
+    sigs = sig_df.select("media_id", F.col(sig_col).alias("sig"))
+    return chunk_slices(sigs, "sig", n_chunks, chunk_bits)
 
 
 def make_keeper_prober(

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.catalog import table, widen
+from spark_streaming_twitter_spark.dedup.pairs import rare_keys, shared_key_pairs
 from spark_streaming_twitter_spark.functions.hashing import (
     portable_hash,
     portable_hash_sql,
@@ -1607,21 +1608,12 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("fh"),
     ).localCheckpoint()
-    kept = (
-        fh.groupBy("fh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= _WIN_PAIR_DF_CAP)
-        .select("fh")
-    )
-    a = fh.join(kept, "fh").select(F.col("doc_id").alias("doc_a"), "fh")
-    b = fh.select(F.col("doc_id").alias("doc_b"), "fh")
-    return (
-        a.join(b, "fh")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_fps"))
-        .where(F.col("n_shared_fps") >= _WIN_PAIR_MIN_SHARED)
-    )
+    return shared_key_pairs(
+        rare_keys(fh, "fh", _WIN_PAIR_DF_CAP),
+        "doc_id",
+        "fh",
+        ("doc_a", "doc_b", "n_shared_fps"),
+    ).where(F.col("n_shared_fps") >= _WIN_PAIR_MIN_SHARED)
 
 
 # Spearman calibration sample: rank correlation needs GLOBAL ranks, and a

@@ -305,17 +305,15 @@ def test_star_cc_matches_min_label_on_random_graphs(spark):
 
 
 def test_df_cap_suppresses_boilerplate_pair_blowup(spark):
-    """The exact pair scorers' hot-shingle guard (VERDICT r6 #2): one
+    """The exact pair scorers' hot-shingle guard: one
     boilerplate text shared by 40 docs makes every one of its shingles
     df=40, so the uncapped inverted join emits C(40,2)=780 pair rows per
     shingle. With df_cap=8 every boilerplate shingle is dropped before the
     join and the blow-up vanishes, while a genuine quotation pair (short
     doc verbatim inside a long one, rare shingles) keeps containment 1.0
     with TRUE uncapped sizes as denominators."""
-    from spark_streaming_twitter_spark.dedup.dedup import (
-        _pair_scores_from,
-        _rare_shingles,
-    )
+    from spark_streaming_twitter_spark.dedup.dedup import _pair_scores_from
+    from spark_streaming_twitter_spark.dedup.pairs import rare_keys
 
     boiler = [(i, "terms of service apply to all users of this site "
                "and govern every interaction with the platform")
@@ -333,7 +331,7 @@ def test_df_cap_suppresses_boilerplate_pair_blowup(spark):
     uncapped = _pair_scores_from(sh, sh)
     assert uncapped.where(F.col("doc_a") < 100).count() == 780
 
-    capped = _pair_scores_from(sh, _rare_shingles(sh, 8))
+    capped = _pair_scores_from(sh, rare_keys(sh, "sh", 8))
     rows = capped.collect()
     assert all(r.doc_a >= 100 for r in rows), "boilerplate pairs must vanish"
     (pair,) = [r for r in rows if (r.doc_a, r.doc_b) == (100, 101)]
@@ -486,3 +484,87 @@ def test_prefix_filter_pairs_equal_naive_inverted_index(spark):
     }
     assert naive, "fixture planted no >= 0.5 Jaccard pairs"
     assert pref == naive
+
+
+# ---------------------------------------------------------------------------
+# The shared-key pair kernel (dedup/pairs.py) on small static frames.
+# ---------------------------------------------------------------------------
+
+
+def test_shared_key_pairs_equal_python_brute_force(spark):
+    """Each unordered pair sharing a multi-column key appears once, smaller
+    id first, never self-paired, counted once per shared key row pair:
+    repeated (id, key) rows count again, and an id repeating a key never
+    pairs with itself."""
+    import random
+    from collections import Counter
+
+    from spark_streaming_twitter_spark.dedup.pairs import shared_key_pairs
+
+    rnd = random.Random(7)
+    rows = [
+        (rnd.randrange(8), rnd.randrange(3), rnd.choice("xy")) for _ in range(40)
+    ]
+    rows += [(20, 9, "z"), (20, 9, "z"), (21, 9, "z")]  # planted repeats
+    want = Counter(
+        (r[0], s[0])
+        for r in rows
+        for s in rows
+        if r[1:] == s[1:] and r[0] < s[0]
+    )
+    df = spark.createDataFrame(rows, "id long, k1 long, k2 string")
+    pairs = shared_key_pairs(df, "id", ("k1", "k2"), ("id_a", "id_b", "n"))
+    got = {(r.id_a, r.id_b): r.n for r in pairs.collect()}
+    assert got == dict(want)
+    assert got[(20, 21)] == 2
+
+
+def test_rare_keys_keeps_a_key_at_exactly_cap(spark):
+    """A key with exactly ``cap`` rows survives; one more row drops all of
+    them. The cap counts rows per full (multi-column) key."""
+    from spark_streaming_twitter_spark.dedup.pairs import rare_keys
+
+    cap = 3
+    rows = [(i, 1, "at_cap") for i in range(cap)]
+    rows += [(i, 1, "over_cap") for i in range(cap + 1)]
+    rows += [(i, 2, "over_cap") for i in range(cap)]  # other k1: at cap
+    df = spark.createDataFrame(rows, "id long, k1 long, k2 string")
+    got = sorted(tuple(r) for r in rare_keys(df, ("k1", "k2"), cap).collect())
+    assert got == sorted(r for r in rows if r[1:] != (1, "over_cap"))
+    assert rare_keys(df, "k2", cap).where(F.col("k2") == "over_cap").count() == 0
+    assert rare_keys(df, "k2", cap).columns == df.columns
+
+
+def test_hamming_pairs_equal_all_pairs_scan(spark):
+    """With radius < n_chunks every pair within the radius shares a chunk
+    slice (pigeonhole), so the chunk-LSH join equals an all-pairs Hamming
+    scan, including the ``also`` signature's distance."""
+    import random
+
+    from spark_streaming_twitter_spark.dedup.pairs import hamming_pairs
+
+    n_chunks, bits, radius = 4, 6, 3
+    rnd = random.Random(11)
+    width = n_chunks * bits
+    sigs = []
+    for g in range(6):
+        base = rnd.getrandbits(width)
+        for v in range(4):  # planted near copies: 0..4 flipped bits
+            sig = base
+            for b in rnd.sample(range(width), rnd.randrange(5)):
+                sig ^= 1 << b
+            sigs.append((g * 10 + v, sig, rnd.getrandbits(width)))
+    want = {
+        (a[0], b[0]): (bin(a[1] ^ b[1]).count("1"), bin(a[2] ^ b[2]).count("1"))
+        for a in sigs
+        for b in sigs
+        if a[0] < b[0] and bin(a[1] ^ b[1]).count("1") <= radius
+    }
+    df = spark.createDataFrame(sigs, "id long, sig long, other long")
+    out = hamming_pairs(
+        df, "id", "sig", n_chunks, bits, radius, ("id_a", "id_b", "ham"),
+        also=("other",),
+    )
+    assert out.columns == ["id_a", "id_b", "ham", "hamming_other"]
+    got = {(r.id_a, r.id_b): (r.ham, r.hamming_other) for r in out.collect()}
+    assert want and got == want

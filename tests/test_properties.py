@@ -377,43 +377,23 @@ def test_dynamic_session_union_matches_python(spark, offsets, purchase_flags):
 )
 @_SETTINGS
 def test_substring_span_islands_match_python(spark, toks_a, toks_b):
-    """The positional-shingle diagonal/islands formulation finds exactly the
-    maximal shared token runs a naive O(n*m) dynamic program finds (for runs
-    long enough to contain one 3-shingle; hot-shingle cap disabled by the
-    tiny input)."""
-    from pyspark.sql import Window
+    """The positional-shingle diagonal/islands builder the span queries
+    share (``_span_runs``) finds exactly the maximal shared token runs a
+    naive O(n*m) dynamic program finds (for runs long enough to contain one
+    3-shingle; the hot-shingle cap cannot bite on two docs of <= 18
+    tokens)."""
+    from spark_streaming_twitter_spark.dedup.dedup import _span_runs
 
     n = 3
     docs = spark.createDataFrame(
         [(1, " ".join(toks_a)), (2, " ".join(toks_b))], ["doc_id", "text"]
     )
-    toks = tokens(F.lower(F.col("text")))
-    with_toks = docs.select("doc_id", toks.alias("toks")).where(
-        F.size("toks") >= n
+    runs = _span_runs(
+        docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("toks"))
     )
-    psh = with_toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, n)),
-            )
-        ).alias("pos0", "sh"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "sh")
-    a, b = psh.alias("a"), psh.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.sh") == F.col("b.sh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.pos").alias("pa"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-    )
-    w_run = Window.partitionBy("diag").orderBy("pa")
-    runs = m.withColumn("island", F.col("pa") - F.row_number().over(w_run))
     spans = sorted(
         r.span
-        for r in runs.groupBy("diag", "island")
+        for r in runs.groupBy("doc_a", "doc_b", "diag", "island")
         .agg((F.count(F.lit(1)) + n - 1).alias("span"))
         .collect()
     )

@@ -240,6 +240,39 @@ def test_dedup_has_one_stateful_processor():
     assert len(hits) == 1, f"dedup StatefulProcessor subclasses: {hits}"
 
 
+def _alias_self_joins(root) -> "list[str]":
+    """``<name>.alias("a")`` calls on a DataFrame variable in the dedup,
+    multimodal and text packages, outside dedup/pairs.py."""
+    import ast
+
+    return [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for pattern in ("dedup/*.py", "multimodal/*.py", "text/*.py")
+        for path in sorted(root.glob(pattern))
+        if path.relative_to(root).as_posix() != "dedup/pairs.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "alias"
+        and isinstance(node.func.value, ast.Name)
+        and [getattr(a, "value", None) for a in node.args] == ["a"]
+    ]
+
+
+def test_pair_scorers_share_one_self_join():
+    """Every batch near-dup scorer takes its candidate pairs from the one
+    shared-key self-join of dedup/pairs.py (``a.id < b.id``, each pair
+    once): a DataFrame aliased ``a`` elsewhere is a hand copy of that
+    rule."""
+    import pathlib
+
+    import spark_streaming_twitter_spark
+
+    root = pathlib.Path(spark_streaming_twitter_spark.__file__).parent
+    hits = _alias_self_joins(root)
+    assert not hits, f"hand-written self-joins outside dedup/pairs.py: {hits}"
+
+
 def _package_modules() -> "list[str]":
     import pathlib
 

@@ -1,12 +1,12 @@
 """Planted-boilerplate measurement: exact pair scorers, capped vs uncapped.
 
-Companion to ``dedup_{containment,ngram_jaccard}_pairs_capped`` (VERDICT r6
-"what's wrong" #2). The inverted shingle self-join emits SUM_s df(s)^2 pair
-rows before aggregation, so one boilerplate shingle shared by B documents
-contributes B^2 rows per shingle — quadratic in corpus size when B scales
-with the corpus (license headers, navigation chrome). The df cap drops
-shingles with document frequency > 64 BEFORE the join, bounding every term
-at 64^2.
+Companion to ``dedup_{containment,ngram_jaccard}_pairs_capped``. The
+inverted shingle self-join emits SUM_s df(s)^2 pair rows before
+aggregation, so one boilerplate shingle shared by B documents contributes
+B^2 rows per shingle — quadratic in corpus size when B scales with the
+corpus (license headers, navigation chrome). The df cap
+(``dedup.pairs.rare_keys``) drops shingles with document frequency > 64
+BEFORE the join, bounding every term at 64^2.
 
 The probe plants a B-document boilerplate block (every doc identical text,
 ~S shingles each) on top of the sf0.01 documents fixture and measures, for
@@ -42,9 +42,9 @@ from spark_streaming_twitter_spark.catalog import table, widen
 from spark_streaming_twitter_spark.dedup.dedup import (
     PAIR_DF_CAP,
     _pair_scores_from,
-    _rare_shingles,
     doc_shingles,
 )
+from spark_streaming_twitter_spark.dedup.pairs import key_matches, rare_keys
 from spark_streaming_twitter_spark.session import get_spark
 
 BOILER = (
@@ -52,17 +52,6 @@ BOILER = (
     "any kind either express or implied including but not limited to the "
     "implied warranties of merchantability and fitness for a purpose"
 )
-
-
-def _join_rows(sh_join) -> int:
-    """Pre-aggregation intersection row count: the freq^2 exposure."""
-    a = sh_join.alias("a")
-    b = sh_join.alias("b")
-    return a.join(
-        b,
-        (F.col("a.sh") == F.col("b.sh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).count()
 
 
 def main() -> None:
@@ -81,10 +70,11 @@ def main() -> None:
         out = {"planted_docs": planted}
         for variant, sh_join in (
             ("uncapped", sh),
-            ("capped", _rare_shingles(sh, PAIR_DF_CAP)),
+            ("capped", rare_keys(sh, "sh", PAIR_DF_CAP)),
         ):
             t0 = time.perf_counter()
-            rows = _join_rows(sh_join)
+            # pre-aggregation intersection rows: the freq^2 exposure
+            rows = key_matches(sh_join, "doc_id", "sh").count()
             # full scorer wall time (the user-facing cost)
             _pair_scores_from(sh, sh_join).where(
                 F.expr("n_common * 1000000 DIV na") >= 800000
