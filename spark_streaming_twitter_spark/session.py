@@ -5,8 +5,9 @@ with whole-stage codegen *disabled*; we invert that (SURVEY.md §4): codegen
 on, AQE on, Arrow on, UTC session time zone pinned for oracle parity.
 
 Every conf here is also the right default on a multi-executor cluster,
-with one local-only exception: how streaming checkpoints are renamed into
-place (see ``get_spark``).
+with two local-only exceptions: how streaming checkpoints are renamed
+into place, and which daemon starts the Python workers (see
+``get_spark``).
 """
 
 from __future__ import annotations
@@ -14,6 +15,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory this package was imported from, so local Python workers
+# import the daemon module (pyworker) from the same copy as the driver
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -25,8 +30,8 @@ def get_spark(
 
     Local mode is a test harness only; every conf here is also the right
     default on a multi-executor cluster (AQE coalescing + skew-join handle
-    the per-cluster tuning at runtime), except how streaming checkpoints
-    are renamed into place, which only a ``local`` master changes.
+    the per-cluster tuning at runtime), except two settings that only a
+    ``local`` master changes.
 
     A local session writes its streaming checkpoints (offset, commit and
     file-source logs, HDFS-backed and RocksDB state) through Spark's
@@ -43,6 +48,21 @@ def get_spark(
     trigger would keep its old state file and leak the new temp file.
     A cluster master keeps both defaults, because on HDFS ``FileContext``
     is what gives an atomic rename with overwrite.
+
+    A local session also starts its Python workers from
+    ``spark_streaming_twitter_spark.pyworker`` (``spark.python.daemon.module``)
+    and puts the directory the driver imported this package from on the
+    workers' ``PYTHONPATH``, so they import the same copy. Without it, every
+    Python task (``mapInPandas``, pandas UDFs, the stateful Python
+    processors) spends 140-200 ms of worker CPU re-reading the central
+    directories of ``pyspark.zip`` and the spark-core jar, because
+    ``importlib.invalidate_caches()`` runs once per task and, on Python
+    3.11, re-reads every zip archive the worker imports from. The module
+    runs PySpark's own daemon unchanged; it only skips the re-read of an
+    archive whose size, mtime and inode are unchanged since its last read,
+    so a rewritten archive is still picked up. A cluster master keeps
+    Spark's own daemon, because there the deployment owns the executors'
+    Python path.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -81,7 +101,11 @@ def get_spark(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
-        ).config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+        ).config(
+            "spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem"
+        ).config(
+            "spark.python.daemon.module", "spark_streaming_twitter_spark.pyworker"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_twitter_spark.dedup.pairs import chunk_slices
@@ -83,7 +83,11 @@ def make_keeper_prober(
     counts each item's hits against the kept index, and lands the
     per-item decision rows (side=ledger) and ONLY kept items' entries
     (side=index) in one partitioned write. It returns the batch's PINNED
-    decision report (id_col, n_index_hits).
+    decision report (id_col, n_index_hits). The store write carries an
+    ``Observation`` over the report, so after each call
+    ``probe_and_keep.observed`` holds that trigger's ``items`` and
+    ``hits`` (items with at least one hit, the dropped ones) without a
+    job of their own.
 
     - ``entry``: (source column, index column) stored beside the keys in
       each index entry, e.g. the full signature a chunk hit is verified
@@ -104,7 +108,6 @@ def make_keeper_prober(
     would have matched its own item, so that item is not kept.
     """
     _, idx_dir = keeper_store_dirs(store_dir)
-    idx_cols = [*key_cols, entry[1]] if entry else key_cols
     entry_cols = [F.col(entry[0]).alias(entry[1])] if entry else []
     zero = F.lit(0).cast("bigint")
     state = {"has_index": False}
@@ -117,7 +120,10 @@ def make_keeper_prober(
         if not state["has_index"]:
             report = items.select(id_col, zero.alias("n_index_hits"))
         else:
-            idx = spark.read.parquet(idx_dir).select(*idx_cols)
+            # read with the schema the index is written with, so no
+            # trigger runs a footer-inference job
+            written = keys.select(*key_cols, *entry_cols).schema
+            idx = spark.read.schema(written).parquet(idx_dir)
             hits = keys.join(F.broadcast(idx), key_cols)
             if verify is not None:
                 hits = hits.where(verify)
@@ -147,7 +153,12 @@ def make_keeper_prober(
         # is the report's zero-hit rows, with no ledger read-back
         kept = report.where(F.col("n_index_hits") == 0).select(id_col)
         novel = keys.join(F.broadcast(kept), id_col).select(*key_cols, *entry_cols)
-        report.withColumn("side", F.lit("ledger")).unionByName(
+        seen = Observation()
+        report.observe(
+            seen,
+            F.count(F.lit(1)).alias("items"),
+            F.count(F.when(F.col("n_index_hits") > 0, 1)).alias("hits"),
+        ).withColumn("side", F.lit("ledger")).unionByName(
             novel.distinct().withColumn("side", F.lit("index")),
             allowMissingColumns=True,
         ).write.mode("append").partitionBy("side").parquet(store_dir)
@@ -155,6 +166,7 @@ def make_keeper_prober(
         # empty or all-dropped batch must not flip the flag onto an
         # unreadable empty dir
         state["has_index"] = os.path.isdir(idx_dir)
+        probe_and_keep.observed = seen.get
         return report
 
     return probe_and_keep

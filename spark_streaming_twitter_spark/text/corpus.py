@@ -535,19 +535,6 @@ def _adaptive_reject_anti_join(
     return src.join(drops.hint("shuffle_hash"), "doc_id", "left_anti")
 
 
-def _reject_gate_counts(src: DataFrame, drops: DataFrame) -> "tuple[int, int]":
-    """(n_drops, n_src) for _adaptive_reject_anti_join, counted in ONE
-    action over the union of both sides."""
-    is_drop = F.col("is_drop")
-    row = (
-        src.select(F.lit(False).alias("is_drop"))
-        .unionByName(drops.select(F.lit(True).alias("is_drop")))
-        .agg(F.count(F.when(is_drop, 1)), F.count(F.when(~is_drop, 1)))
-        .first()
-    )
-    return row[0], row[1]
-
-
 def _kept_ledger_dir(name: str) -> str:
     """Namespaced kept location for a persisted flagship ledger:
     per-user under ``$SPARK_GRAFT_LEDGER_BASE`` (default the temp
@@ -3122,46 +3109,53 @@ def _mm_fused_impl(
     """The fused flagship: one stream, whose every trigger builds its
     modality-tagged keys in ONE Python pass, decides them in ONE probe
     and packs the batch's survivors."""
-    import os
-
-    import spark_streaming_twitter_spark.multimodal.phash as ph
-
-    def survivors_in(tmp: str) -> "Callable[[DataFrame], DataFrame]":
-        # one modality-tagged keeper store (side=ledger + side=index) for
-        # all three media kinds, so every trigger's decisions and index
-        # entries land in a single write job (see streaming/keeper.py)
-        probe = ph.make_media_keeper_prober(spark, os.path.join(tmp, "media_store"))
-
-        def survivors(bdf: DataFrame) -> DataFrame:
-            # persisted because the prober reads the keys twice (report
-            # pin and store write); the report is localCheckpointed, so
-            # unpersisting cannot force the payloads to be rebuilt
-            keys = ph.media_key_frame(
-                ph.media_keys_from_ids(bdf.select("doc_id"))
-            ).persist()
-            try:
-                report = probe(keys)
-            finally:
-                keys.unpersist()
-            # every doc is decided the trigger it arrives, so this batch's
-            # drops are the pinned report's hit rows
-            drops = report.where(F.col("n_index_hits") > 0).select(
-                F.col("media_id").alias("doc_id")
-            )
-            # the reject set is batch-bounded but NOT small under disorder
-            # (most of a clustered batch drops), so the measured gate picks
-            # the broadcast or the shuffled anti-join
-            return _adaptive_reject_anti_join(
-                bdf, drops, *_reject_gate_counts(bdf, drops)
-            )
-
-        return survivors
-
     return _pack_stream(
         spark,
         sf_dir,
         count=_mm_tokens,
         roundrobin=unordered,
         keep_ledger_dir=keep_ledger_dir,
-        survivors_in=survivors_in,
+        survivors_in=lambda tmp: _fused_survivors(spark, tmp),
     )
+
+
+def _fused_survivors(
+    spark: SparkSession, tmp: str
+) -> "Callable[[DataFrame], DataFrame]":
+    """The fused flagship's per-trigger survivor side: the batch minus
+    the docs its one media keeper probe drops. Beyond the probe it runs
+    no action; the reject gate reads the counts the store write
+    observed."""
+    import os
+
+    import spark_streaming_twitter_spark.multimodal.phash as ph
+
+    # one modality-tagged keeper store (side=ledger + side=index) for
+    # all three media kinds, so every trigger's decisions and index
+    # entries land in a single write job (see streaming/keeper.py)
+    probe = ph.make_media_keeper_prober(spark, os.path.join(tmp, "media_store"))
+
+    def survivors(bdf: DataFrame) -> DataFrame:
+        # persisted because the prober reads the keys twice (report
+        # pin and store write); the report is localCheckpointed, so
+        # unpersisting cannot force the payloads to be rebuilt
+        keys = ph.media_key_frame(
+            ph.media_keys_from_ids(bdf.select("doc_id"))
+        ).persist()
+        try:
+            report = probe(keys)
+        finally:
+            keys.unpersist()
+        # every doc is decided the trigger it arrives, so this batch's
+        # drops are the pinned report's hit rows
+        drops = report.where(F.col("n_index_hits") > 0).select(
+            F.col("media_id").alias("doc_id")
+        )
+        # the reject set is batch-bounded but NOT small under disorder
+        # (most of a clustered batch drops), so the gate picks the
+        # broadcast or the shuffled anti-join from the counts the store
+        # write observed: dropped items against probed items
+        seen = probe.observed
+        return _adaptive_reject_anti_join(bdf, drops, seen["hits"], seen["items"])
+
+    return survivors

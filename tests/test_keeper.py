@@ -139,6 +139,34 @@ def test_video_prober_counts_distinct_shared_frames(spark, tmp_path):
     assert keys.where("media_id = 2").count() > len(set(clips[2]))
 
 
+def test_prober_observes_report_counts(spark, tmp_path):
+    """The store write observes each trigger's items and hits (items
+    with at least one hit): they equal the returned report's counts on
+    a first batch, a batch with hits, an empty batch and an all-dropped
+    batch."""
+    rows = [
+        (1, 0, "a0"), (1, 1, "a1"),
+        (2, 0, "a0"), (2, 1, "b1"),  # hits A
+        (3, 0, "c0"), (3, 1, "c1"),
+        (4, 0, "a0"), (4, 1, "x1"),  # hits A
+        (5, 0, "y0"), (5, 1, "c1"),  # hits C
+    ]
+    keys = spark.createDataFrame(rows, "doc_id long, band int, band_key string")
+    prober = make_keeper_prober(
+        spark, str(tmp_path / "store"), "doc_id", ["band", "band_key"],
+        item_slice=F.col("band") == 0,
+    )
+    for where, want in [
+        ("doc_id = 1", (1, 0)),
+        ("doc_id IN (2, 3)", (2, 1)),
+        ("doc_id < 0", (0, 0)),
+        ("doc_id >= 4", (2, 2)),
+    ]:
+        hits = [r.n_index_hits for r in prober(keys.where(where)).collect()]
+        assert (len(hits), sum(h > 0 for h in hits)) == want, where
+        assert prober.observed == {"items": want[0], "hits": want[1]}, where
+
+
 def test_chunk_and_band_slices_are_the_distinct_items(spark):
     from spark_streaming_twitter_spark.dedup.dedup import minhash_band_rows
 

@@ -903,28 +903,50 @@ def test_adaptive_reject_anti_join_pins_both_sides(spark):
     assert a == b == list(range(750, 1000))
 
 
-def test_reject_gate_counts_both_sides_in_one_action(spark):
-    """The flagship's reject gate counts the drop set and the batch in
-    one action, and n_src counts every batch row, dropped or not."""
+def test_fused_trigger_runs_no_gate_action(spark, tmp_path):
+    """The fused flagship's trigger body runs its media keeper probe and
+    no other action: the reject gate reads the counts the probe's store
+    write observed, so per trigger the body runs exactly the jobs of a
+    bare probe over the same keys, and its survivors are the batch minus
+    the probe's drops."""
+    import uuid
+
     from pyspark.sql import functions as F
 
-    from spark_streaming_twitter_spark.text.corpus import _reject_gate_counts
+    from spark_streaming_twitter_spark.multimodal import phash as ph
+    from spark_streaming_twitter_spark.text.corpus import _fused_survivors
 
-    src = spark.range(1000).select(F.col("id").alias("doc_id"))
-    big = spark.range(750).select(F.col("id").alias("doc_id"))
-    none = big.where(F.lit(False))
     sc = spark.sparkContext
 
-    def jobs(group, fn):
+    def jobs(fn):
+        group = f"fused-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
             out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    (counts, n_one) = jobs("gate_one", lambda: _reject_gate_counts(src, big))
-    assert counts == (750, 1000)
-    assert _reject_gate_counts(src, none) == (0, 1000)
-    (_, n_two) = jobs("gate_two", lambda: (big.count(), src.count()))
-    assert n_one < n_two
+    def bare(bdf):
+        keys = ph.media_key_frame(ph.media_keys_from_ids(bdf)).persist()
+        try:
+            return probe(keys)
+        finally:
+            keys.unpersist()
+
+    survivors = _fused_survivors(spark, str(tmp_path / "fused"))
+    probe = ph.make_media_keeper_prober(spark, str(tmp_path / "bare"))
+    docs = spark.range(240).select(F.col("id").alias("doc_id"))
+    # a payload's near-dup group is doc_id // 24, so the second batch
+    # holds near-dups of the first batch's keepers
+    dropped = 0
+    for batch in (docs.where("doc_id % 24 < 12"), docs.where("doc_id % 24 >= 12")):
+        kept, n_fused = jobs(lambda: survivors(batch))
+        report, n_bare = jobs(lambda: bare(batch))
+        assert n_fused == n_bare
+        drops = {r.media_id for r in report.collect() if r.n_index_hits > 0}
+        ids = {r.doc_id for r in batch.collect()}
+        assert {r.doc_id for r in kept.collect()} == ids - drops
+        dropped += len(drops)
+    assert dropped > 0
