@@ -593,7 +593,6 @@ def stream_text_minhash_self_dedup_batchidx(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from spark_streaming_twitter_spark.streaming.harness import (
@@ -601,18 +600,19 @@ def stream_text_minhash_self_dedup_batchidx(
         spool_ordered_batches,
     )
 
-    tmp = tempfile.mkdtemp(prefix="minhash_selfidx_stream_")
-    # one partitioned store per stream — side=hits (the audit ledger) +
-    # side=index (the band-key owner table) — so each trigger lands both
-    # in a SINGLE write job. The spool lives in its own subdir: the
-    # partitioned store must not share a root with the FileStreamSource's
-    # scan.
-    spool_dir = os.path.join(tmp, "spool")
-    store_dir = os.path.join(tmp, "store")
-    idx_dir = os.path.join(store_dir, "side=index")
-    hits_dir = os.path.join(store_dir, "side=hits")
-    state = {"has_index": False}
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="minhash_selfidx_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        # one partitioned store per stream — side=hits (the audit ledger) +
+        # side=index (the band-key owner table) — so each trigger lands both
+        # in a SINGLE write job. The spool lives in its own subdir: the
+        # partitioned store must not share a root with the FileStreamSource's
+        # scan.
+        spool_dir = os.path.join(tmp, "spool")
+        store_dir = os.path.join(tmp, "store")
+        idx_dir = os.path.join(store_dir, "side=index")
+        hits_dir = os.path.join(store_dir, "side=hits")
+        state = {"has_index": False}
         spool_ordered_batches(_docs(spark, sf_dir), "doc_id", spool_dir)
         bands = minhash_band_rows(
             read_spool(spark, spool_dir, _TEXT_KIND.spool_schema)
@@ -681,11 +681,7 @@ def stream_text_minhash_self_dedup_batchidx(
             .groupBy("doc_id", "ref_id")
             .agg(F.count_distinct("band").alias("n_bands"))
         )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # Horizon-bounded (TTL) self-dedup oracle: docs carry synthetic event time
@@ -1021,62 +1017,61 @@ def _decontaminate_report(corpus: DataFrame, bench: DataFrame) -> DataFrame:
 )
 def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from spark_streaming_twitter_spark.streaming.harness import (
         run_foreach_batch,
     )
 
-    tmp = tempfile.mkdtemp(prefix="decon_stream_")
-    data_dir = os.path.join(tmp, "docs")
-    bench = None
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.where(F.col("doc_id") % 50 != 0).repartition(4).write.parquet(
-            data_dir
-        )
-
-        # the static side of a stream-side join re-evaluates per batch:
-        # shingle the benchmark once, keep it pinned for every trigger
-        bench = (
-            doc_shingles(widen(docs.where(F.col("doc_id") % 50 == 0), spark))
-            .select("sh")
-            .distinct()
-            .persist()
-        )
-        bench.count()
-
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        corpus_sh = stream.repartition(par).select(
-            "doc_id",
-            F.explode(
-                shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-            ).alias("sh"),
-        )
-
-        rep_dir = os.path.join(tmp, "reports")
-
-        def report_batch(bdf: DataFrame, _epoch_id: int) -> None:
-            # executor-written parquet report ledger (tempdir-sink
-            # pattern), not a driver list
-            _decontaminate_report(bdf, bench).write.mode("append").parquet(
-                rep_dir
+    with tempfile.TemporaryDirectory(
+        prefix="decon_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        data_dir = os.path.join(tmp, "docs")
+        bench = None
+        try:
+            docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+            docs.where(F.col("doc_id") % 50 != 0).repartition(4).write.parquet(
+                data_dir
             )
 
-        run_foreach_batch(corpus_sh, report_batch, output_mode="append")
-        ledger = spark.read.parquet(rep_dir)
-        out = spark.createDataFrame(ledger.collect(), ledger.schema)
-    finally:
-        if bench is not None:
-            bench.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+            # the static side of a stream-side join re-evaluates per batch:
+            # shingle the benchmark once, keep it pinned for every trigger
+            bench = (
+                doc_shingles(widen(docs.where(F.col("doc_id") % 50 == 0), spark))
+                .select("sh")
+                .distinct()
+                .persist()
+            )
+            bench.count()
+
+            par = spark.sparkContext.defaultParallelism
+            stream = (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(data_dir)
+            )
+            corpus_sh = stream.repartition(par).select(
+                "doc_id",
+                F.explode(
+                    shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
+                ).alias("sh"),
+            )
+
+            rep_dir = os.path.join(tmp, "reports")
+
+            def report_batch(bdf: DataFrame, _epoch_id: int) -> None:
+                # executor-written parquet report ledger (tempdir-sink
+                # pattern), not a driver list
+                _decontaminate_report(bdf, bench).write.mode("append").parquet(
+                    rep_dir
+                )
+
+            run_foreach_batch(corpus_sh, report_batch, output_mode="append")
+            ledger = spark.read.parquet(rep_dir)
+            return spark.createDataFrame(ledger.collect(), ledger.schema)
+        finally:
+            if bench is not None:
+                bench.unpersist()
 
 
 def _ingest_pipeline_oracle() -> str:
@@ -1147,7 +1142,6 @@ def _ingest_pipeline_stream(
     spark: SparkSession, sf_dir: str, roundrobin: bool, pack: bool
 ) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from spark_streaming_twitter_spark.streaming.harness import (
@@ -1166,174 +1160,173 @@ def _ingest_pipeline_stream(
         _text_tokens,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ingest_pipeline_")
-    idx_dir = os.path.join(tmp, "index")
-    ledger_dir = os.path.join(tmp, "ledger")
-    pack_dir = os.path.join(tmp, "pack")
-    state = {"has_index": False}
-    bench = None
-    try:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "n_chars"
-        )
-        corpus = docs.where(F.col("doc_id") % 50 != 0)
-        bench = (
-            doc_shingles(
-                widen(
-                    docs.where(F.col("doc_id") % 50 == 0).select(
-                        "doc_id", "text"
-                    ),
-                    spark,
-                )
+    with tempfile.TemporaryDirectory(
+        prefix="ingest_pipeline_", ignore_cleanup_errors=True
+    ) as tmp:
+        idx_dir = os.path.join(tmp, "index")
+        ledger_dir = os.path.join(tmp, "ledger")
+        pack_dir = os.path.join(tmp, "pack")
+        state = {"has_index": False}
+        bench = None
+        try:
+            docs = table(spark, sf_dir, "documents").select(
+                "doc_id", "text", "n_chars"
             )
-            .select("sh")
-            .distinct()
-            .persist()
-        )
-        bench.count()
-        spool = (
-            spool_roundrobin_batches if roundrobin else spool_ordered_batches
-        )
-        spool(corpus, "doc_id", tmp)
-
-        if pack:
-            # stage 4: the KEPT survivors pack into training sequences in
-            # the SAME pass, through the at-ingest packer's per-trigger
-            # body (its carried offset and batch are the only cross-batch
-            # state)
-            pack_kept = _pack_batch(
-                pack_dir,
-                _ledger_carry(spark, pack_dir),
-                SINGLE,
-                _text_tokens(),
-                _doc_id_bounds(spark, sf_dir)[1],
-            )
-
-        def curate_batch(bdf: DataFrame, epoch_id: int) -> None:
-            bdf = bdf.persist()
-            bands = led = None
-            try:
-                # stage 1: quality (pure projection)
-                q = quality_projection(bdf).select("doc_id", "quality")
-                # stage 2: decontamination (broadcast membership join)
-                sh = bdf.select(
-                    "doc_id",
-                    F.explode(
-                        shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                    ).alias("sh"),
-                )
-                dec = _decontaminate_report(sh, bench).select(
-                    "doc_id", "is_contaminated"
-                )
-                # stage 3: near-dup against the cross-batch table index
-                bands = minhash_band_rows(bdf).persist()
-                owners_here = bands.groupBy("band", "band_key").agg(
-                    F.min("doc_id").alias("new_ref")
-                )
-                if not state["has_index"]:
-                    probed = bands.join(
-                        F.broadcast(
-                            owners_here.select(
-                                "band", "band_key",
-                                F.col("new_ref").alias("ref_id"),
-                            )
+            corpus = docs.where(F.col("doc_id") % 50 != 0)
+            bench = (
+                doc_shingles(
+                    widen(
+                        docs.where(F.col("doc_id") % 50 == 0).select(
+                            "doc_id", "text"
                         ),
-                        ["band", "band_key"],
+                        spark,
                     )
-                    novel = owners_here.select(
-                        "band", "band_key", F.col("new_ref").alias("ref_id")
-                    )
-                else:
-                    idx = spark.read.parquet(idx_dir)
-                    probed = (
-                        bands.join(
-                            F.broadcast(idx), ["band", "band_key"], "left"
-                        )
-                        .join(F.broadcast(owners_here), ["band", "band_key"])
-                        .withColumn("ref_id", F.coalesce("ref_id", "new_ref"))
-                    )
-                    novel = owners_here.join(
-                        idx.select("band", "band_key"),
-                        ["band", "band_key"],
-                        "left_anti",
-                    ).select(
-                        "band", "band_key", F.col("new_ref").alias("ref_id")
-                    )
-                dup = (
-                    probed.where(F.col("doc_id") > F.col("ref_id"))
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("is_dup", F.lit(True))
                 )
-                keep = (
-                    (F.col("quality") >= F.lit(0.6))
-                    & ~F.col("is_contaminated")
-                    & ~F.col("is_dup")
-                )
-                # executor-written parquet curation ledger (the run's audit
-                # table at 100 TB), not a driver list; persisted so the pack
-                # step reads this trigger's keep flags, never the ledger's
-                # history
-                led = (
-                    q.join(dec, "doc_id")
-                    .join(dup, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        "quality",
-                        "is_contaminated",
-                        F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-                    )
-                    .withColumn("keep", keep)
-                    .persist()
-                )
-                led.write.mode("append").parquet(ledger_dir)
-                if pack:
-                    kept = led.where(F.col("keep")).select("doc_id")
-                    pack_kept(bdf.join(kept, "doc_id"), epoch_id)
-                novel.write.mode("append").parquet(idx_dir)
-                state["has_index"] = True
-            finally:
-                for df in (led, bands):
-                    if df is not None:
-                        df.unpersist()
-                bdf.unpersist()
+                .select("sh")
+                .distinct()
+                .persist()
+            )
+            bench.count()
+            spool = (
+                spool_roundrobin_batches if roundrobin else spool_ordered_batches
+            )
+            spool(corpus, "doc_id", tmp)
 
-        par = spark.sparkContext.defaultParallelism
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, n_chars bigint"
+            if pack:
+                # stage 4: the KEPT survivors pack into training sequences in
+                # the SAME pass, through the at-ingest packer's per-trigger
+                # body (its carried offset and batch are the only cross-batch
+                # state)
+                pack_kept = _pack_batch(
+                    pack_dir,
+                    _ledger_carry(spark, pack_dir),
+                    SINGLE,
+                    _text_tokens(),
+                    _doc_id_bounds(spark, sf_dir)[1],
+                )
+
+            def curate_batch(bdf: DataFrame, epoch_id: int) -> None:
+                bdf = bdf.persist()
+                bands = led = None
+                try:
+                    # stage 1: quality (pure projection)
+                    q = quality_projection(bdf).select("doc_id", "quality")
+                    # stage 2: decontamination (broadcast membership join)
+                    sh = bdf.select(
+                        "doc_id",
+                        F.explode(
+                            shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
+                        ).alias("sh"),
+                    )
+                    dec = _decontaminate_report(sh, bench).select(
+                        "doc_id", "is_contaminated"
+                    )
+                    # stage 3: near-dup against the cross-batch table index
+                    bands = minhash_band_rows(bdf).persist()
+                    owners_here = bands.groupBy("band", "band_key").agg(
+                        F.min("doc_id").alias("new_ref")
+                    )
+                    if not state["has_index"]:
+                        probed = bands.join(
+                            F.broadcast(
+                                owners_here.select(
+                                    "band", "band_key",
+                                    F.col("new_ref").alias("ref_id"),
+                                )
+                            ),
+                            ["band", "band_key"],
+                        )
+                        novel = owners_here.select(
+                            "band", "band_key", F.col("new_ref").alias("ref_id")
+                        )
+                    else:
+                        idx = spark.read.parquet(idx_dir)
+                        probed = (
+                            bands.join(
+                                F.broadcast(idx), ["band", "band_key"], "left"
+                            )
+                            .join(F.broadcast(owners_here), ["band", "band_key"])
+                            .withColumn("ref_id", F.coalesce("ref_id", "new_ref"))
+                        )
+                        novel = owners_here.join(
+                            idx.select("band", "band_key"),
+                            ["band", "band_key"],
+                            "left_anti",
+                        ).select(
+                            "band", "band_key", F.col("new_ref").alias("ref_id")
+                        )
+                    dup = (
+                        probed.where(F.col("doc_id") > F.col("ref_id"))
+                        .select("doc_id")
+                        .distinct()
+                        .withColumn("is_dup", F.lit(True))
+                    )
+                    keep = (
+                        (F.col("quality") >= F.lit(0.6))
+                        & ~F.col("is_contaminated")
+                        & ~F.col("is_dup")
+                    )
+                    # executor-written parquet curation ledger (the run's audit
+                    # table at 100 TB), not a driver list; persisted so the pack
+                    # step reads this trigger's keep flags, never the ledger's
+                    # history
+                    led = (
+                        q.join(dec, "doc_id")
+                        .join(dup, "doc_id", "left")
+                        .select(
+                            "doc_id",
+                            "quality",
+                            "is_contaminated",
+                            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
+                        )
+                        .withColumn("keep", keep)
+                        .persist()
+                    )
+                    led.write.mode("append").parquet(ledger_dir)
+                    if pack:
+                        kept = led.where(F.col("keep")).select("doc_id")
+                        pack_kept(bdf.join(kept, "doc_id"), epoch_id)
+                    novel.write.mode("append").parquet(idx_dir)
+                    state["has_index"] = True
+                finally:
+                    for df in (led, bands):
+                        if df is not None:
+                            df.unpersist()
+                    bdf.unpersist()
+
+            par = spark.sparkContext.defaultParallelism
+            stream = (
+                spark.readStream.schema(
+                    "doc_id long, text string, n_chars bigint"
+                )
+                .option("maxFilesPerTrigger", 1)
+                .option("latestFirst", "false")
+                .option("pathGlobFilter", "batch_*.parquet")
+                .parquet(tmp)
+            ).repartition(par)
+            run_foreach_batch(stream, curate_batch, output_mode="append")
+            out = spark.read.parquet(ledger_dir).select(
+                "doc_id", "quality", "is_contaminated", "is_dup", "keep"
             )
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "batch_*.parquet")
-            .parquet(tmp)
-        ).repartition(par)
-        run_foreach_batch(stream, curate_batch, output_mode="append")
-        out = spark.read.parquet(ledger_dir).select(
-            "doc_id", "quality", "is_contaminated", "is_dup", "keep"
-        )
-        if pack:
-            neg = F.lit(-1).cast("bigint")
-            out = out.join(
-                spark.read.parquet(pack_dir), "doc_id", "left"
-            ).select(
-                "doc_id",
-                "quality",
-                "is_contaminated",
-                "is_dup",
-                "keep",
-                F.coalesce("n_tokens", neg).alias("n_tokens"),
-                F.coalesce("start_offset", neg).alias("start_offset"),
-                F.coalesce("first_seq", neg).alias("first_seq"),
-                F.coalesce("last_seq", neg).alias("last_seq"),
-            )
-        rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
-    finally:
-        if bench is not None:
-            bench.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return result
+            if pack:
+                neg = F.lit(-1).cast("bigint")
+                out = out.join(
+                    spark.read.parquet(pack_dir), "doc_id", "left"
+                ).select(
+                    "doc_id",
+                    "quality",
+                    "is_contaminated",
+                    "is_dup",
+                    "keep",
+                    F.coalesce("n_tokens", neg).alias("n_tokens"),
+                    F.coalesce("start_offset", neg).alias("start_offset"),
+                    F.coalesce("first_seq", neg).alias("first_seq"),
+                    F.coalesce("last_seq", neg).alias("last_seq"),
+                )
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            if bench is not None:
+                bench.unpersist()
 
 
 def _ingest_pipeline_unordered_oracle() -> str:

@@ -1321,33 +1321,30 @@ WHERE NOT k.kept
 def stream_caption_drop_propagation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
     import tempfile
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    cap_dir = tempfile.mkdtemp(prefix="caption_flags_") + "/flags"
+    with tempfile.TemporaryDirectory(
+        prefix="caption_flags_", ignore_cleanup_errors=True
+    ) as tmp:
+        cap_dir = tmp + "/flags"
 
-    def flag_captions(report: DataFrame) -> None:
-        # this batch's drops, straight from the keeper's pinned report
-        drops = report.where(F.col("n_index_hits") > 0)
-        docs.join(
-            F.broadcast(drops), F.col("doc_id") == F.col("media_id")
-        ).select(
-            "doc_id",
-            "n_index_hits",
-            F.length("text").cast("bigint").alias("caption_len"),
-        ).write.mode("append").parquet(cap_dir)
+        def flag_captions(report: DataFrame) -> None:
+            # this batch's drops, straight from the keeper's pinned report
+            drops = report.where(F.col("n_index_hits") > 0)
+            docs.join(
+                F.broadcast(drops), F.col("doc_id") == F.col("media_id")
+            ).select(
+                "doc_id",
+                "n_index_hits",
+                F.length("text").cast("bigint").alias("caption_len"),
+            ).write.mode("append").parquet(cap_dir)
 
-    try:
         _media_keeper_stream(spark, sf_dir, 0, on_report=flag_captions)
         flags = spark.read.parquet(cap_dir).select(
             "doc_id", "n_index_hits", "caption_len"
         )
-        rows = flags.collect()
-        out = spark.createDataFrame(rows, flags.schema)
-    finally:
-        shutil.rmtree(cap_dir.rsplit("/", 1)[0], ignore_errors=True)
-    return out
+        return spark.createDataFrame(flags.collect(), flags.schema)
 
 
 @query(

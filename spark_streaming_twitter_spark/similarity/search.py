@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -2194,9 +2193,10 @@ def stream_embedding_index_ingest(
         run_to_memory,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ivf_ingest_stream_")
-    data_dir = os.path.join(tmp, "vecs")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_ingest_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        data_dir = os.path.join(tmp, "vecs")
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", "embedding"
         )
@@ -2232,11 +2232,7 @@ def stream_embedding_index_ingest(
             )
         )
         sink = run_to_memory(routed, output_mode="append")
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return spark.createDataFrame(sink.collect(), sink.schema)
 
 
 def _centroid_maintenance_ctes() -> str:
@@ -2340,8 +2336,9 @@ def _run_centroid_maintenance(
         spool_ordered_batches,
     )
 
-    tmp = tempfile.mkdtemp(prefix="centroid_maint_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="centroid_maint_", ignore_cleanup_errors=True
+    ) as tmp:
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", "embedding"
         )
@@ -2386,8 +2383,6 @@ def _run_centroid_maintenance(
             .parquet(tmp)
         ).repartition(par)
         run_foreach_batch(stream, update_batch, output_mode="append")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return stats
 
 
@@ -2970,8 +2965,9 @@ def _ivf_chain(spark: SparkSession, sf_dir: str, sc: _Scenario):
     and mirrored by the oracle's GROUP BY side), so the pass always
     terminates; whether it CONVERGED stays visible as data
     (max_over_mean per version in the balance trajectory)."""
-    tmp = tempfile.mkdtemp(prefix="ivf_chain_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_chain_", ignore_cleanup_errors=True
+    ) as tmp:
         ver, asg, emb = sc.v0(spark, sf_dir, tmp)
         vers, asgs = [ver], [asg]
         for step in range(1, sc.k + 1):
@@ -2982,8 +2978,6 @@ def _ivf_chain(spark: SparkSession, sf_dir: str, sc: _Scenario):
             vers.append(ver)
             asgs.append(asg)
         yield vers, asgs
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _local(df: DataFrame) -> DataFrame:

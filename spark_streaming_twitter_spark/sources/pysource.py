@@ -361,14 +361,25 @@ def python_datasource_writer_roundtrip(
         .option("shards", str(PYSOURCE_SHARDS))
         .load()
     )
-    out = tempfile.mkdtemp(prefix="manifest_sink_")
-    src.write.format("manifest_sink").option("path", out).mode(
-        "append"
-    ).save()
-    back = read_manifest_sink(spark, out)
-    return back.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("event_id").alias("first_id"),
-        F.max("event_id").alias("last_id"),
-        F.sum("value").alias("value_sum"),
+    with tempfile.TemporaryDirectory(
+        prefix="manifest_sink_", ignore_cleanup_errors=True
+    ) as out:
+        src.write.format("manifest_sink").option("path", out).mode(
+            "append"
+        ).save()
+        rows = (
+            read_manifest_sink(spark, out)
+            .groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("event_id").alias("first_id"),
+                F.max("event_id").alias("last_id"),
+                F.sum("value").alias("value_sum"),
+            )
+            .collect()
+        )
+    return spark.createDataFrame(
+        rows,
+        "shard int, n_rows bigint, first_id bigint, last_id bigint, "
+        "value_sum bigint",
     )

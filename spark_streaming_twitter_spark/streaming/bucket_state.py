@@ -15,7 +15,6 @@ streaming/queries.py (behind its capability probe) call it.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -123,26 +122,27 @@ def ingest_stream(spark: SparkSession, sf_dir: str, kind: BucketKind) -> DataFra
     keys probe a persisted, broadcast index of the kind's canonical
     items on (c, chunk_val), statelessly, and the read-back applies the
     pair rule."""
-    tmp = tempfile.mkdtemp(prefix="bucket_ingest_")
-    refs = None
-    try:
-        spool_items(spark, sf_dir, kind, tmp, "ordered", kind.bounds(spark, sf_dir))
-        # the static side of a stream-static join re-evaluates every
-        # trigger: persist it so the refs are keyed once
-        refs = kind.refs(spark, sf_dir).persist()
-        refs.count()
-        hits = (
-            kind.keys(read_spool(spark, tmp, kind.spool_schema))
-            .join(F.broadcast(refs), ["c", "chunk_val"])
-            .where(F.col(kind.id_col) != F.col("ref_id"))
-        )
-        pairs = kind.pairs(run_to_memory(hits, output_mode="append"))
-        out = spark.createDataFrame(pairs.collect(), pairs.schema)
-    finally:
-        if refs is not None:
-            refs.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    with tempfile.TemporaryDirectory(
+        prefix="bucket_ingest_", ignore_cleanup_errors=True
+    ) as tmp:
+        refs = None
+        try:
+            bounds = kind.bounds(spark, sf_dir)
+            spool_items(spark, sf_dir, kind, tmp, "ordered", bounds)
+            # the static side of a stream-static join re-evaluates every
+            # trigger: persist it so the refs are keyed once
+            refs = kind.refs(spark, sf_dir).persist()
+            refs.count()
+            hits = (
+                kind.keys(read_spool(spark, tmp, kind.spool_schema))
+                .join(F.broadcast(refs), ["c", "chunk_val"])
+                .where(F.col(kind.id_col) != F.col("ref_id"))
+            )
+            pairs = kind.pairs(run_to_memory(hits, output_mode="append"))
+            return spark.createDataFrame(pairs.collect(), pairs.schema)
+        finally:
+            if refs is not None:
+                refs.unpersist()
 
 
 def state_stream(
@@ -258,8 +258,9 @@ def state_stream(
         def close(self) -> None:
             pass
 
-    tmp = tempfile.mkdtemp(prefix="bucket_state_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="bucket_state_", ignore_cleanup_errors=True
+    ) as tmp:
         delay = spool_items(spark, sf_dir, kind, tmp, order, bounds)
         keys = kind.keys(read_spool(spark, tmp, kind.spool_schema))
         if timed:
@@ -297,7 +298,4 @@ def state_stream(
                 .select("c", "chunk_val", ident, "sig", "r.*")
             )
         pairs = kind.pairs(rows)
-        out = spark.createDataFrame(pairs.collect(), pairs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return spark.createDataFrame(pairs.collect(), pairs.schema)

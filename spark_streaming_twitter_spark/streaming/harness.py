@@ -7,10 +7,14 @@ sink side replaces the reference's per-record InfluxDB ForeachWriter
 (TwitterDatasetTrendingHashtag.java:212-367) with ``foreachBatch`` /
 ``memory`` sinks — batch-at-a-time, executor-side, connection-per-partition.
 
-``run_to_memory`` drives a query synchronously (``processAllAvailable`` then
-``stop``) and hands back the result as a batch DataFrame — which is how the
-streaming queries participate in the driver's DuckDB-oracle gate: final
-streaming state must equal the batch/SQL answer over the same data.
+``run_stream`` is the one place a query starts: it takes the query's sink
+(memory, ``foreachBatch`` body or parquet path), output mode, trigger and
+checkpoint, drives the query to its end under the shuffle-partition pin,
+stops it, and returns the memory sink's table with the query's progress.
+``run_to_memory`` and ``run_foreach_batch`` are its two common bindings.
+The memory sink's table as a batch DataFrame is how the streaming queries
+participate in the driver's DuckDB-oracle gate: final streaming state must
+equal the batch/SQL answer over the same data.
 """
 
 from __future__ import annotations
@@ -420,107 +424,72 @@ def _scoped_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
                 del _PIN_STATE[sk]
 
 
-def run_to_memory(
-    sdf: DataFrame, name: str | None = None, output_mode: str = "complete"
-) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink.
-
-    Synchronous: processes everything currently available, stops the query,
-    returns the sink table as a batch DataFrame. ``complete`` mode gives the
-    full final result table for aggregations (the oracle-comparable form);
-    ``append`` is for non-aggregating or watermark-closed output.
-    """
-    spark = sdf.sparkSession
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    with _scoped_shuffle_partitions(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    return spark.table(name)
-
-
-def run_available_now(
-    sdf: DataFrame, name: str | None = None, output_mode: str = "complete"
-) -> DataFrame:
-    """Run a streaming DataFrame under ``Trigger.AvailableNow`` to a memory sink.
-
-    Unlike :func:`run_to_memory` (which drives an always-on query with
-    ``processAllAvailable`` and then stops it from the outside), AvailableNow
-    is the CATCH-UP trigger: the query plans the data available at start,
-    processes it — honoring source rate limits such as ``maxFilesPerTrigger``,
-    so a backlog drains as several bounded micro-batches, not one giant one —
-    and terminates ITSELF. ``awaitTermination`` here really waits for the
-    query's own end-of-input shutdown, which is the semantics a scheduled
-    (cron-style) incremental job relies on at 100 TB: bounded work per run,
-    exactly-once via the same checkpoint across runs.
-    """
-    spark = sdf.sparkSession
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    with _scoped_shuffle_partitions(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
-
-
-def run_processing_time(
+def run_stream(
     sdf: DataFrame,
-    interval: str = "500 milliseconds",
-    name: str | None = None,
-    output_mode: str = "complete",
-    min_data_batches: int = 1,
-) -> DataFrame:
-    """Run a stream under a real ``Trigger.ProcessingTime`` to a memory sink.
+    sink: "str | Callable[[DataFrame, int], None] | None" = None,
+    *,
+    mode: str,
+    trigger: str | None = None,
+    checkpoint: str | None = None,
+) -> "tuple[DataFrame | None, list[dict]]":
+    """Run one streaming query to its end; return ``(result, progress)``.
 
-    The reference's DStream pipeline runs on a fixed 500 ms batch cadence
-    (TwitterDStreamTrendingHashtag.java:49); this is the Structured
-    Streaming analogue — micro-batches fire on the interval clock rather
-    than back-to-back, so combined with a source rate limit
-    (``maxFilesPerTrigger``) a backlog drains across several clock-driven
-    triggers. ``processAllAvailable`` still bounds the run (it blocks until
-    everything available is processed, however many triggers that takes).
-    ``min_data_batches`` asserts the multi-trigger shape: with a rate limit
-    of one file per trigger an N-file backlog MUST take N data batches, so
-    the check is deterministic, not timing-dependent.
+    The parameters are the query's own (Structured Streaming, SIGMOD 2018:
+    source and plan in ``sdf``, then sink, output ``mode``, trigger and
+    checkpoint location):
+
+    - ``sink``: ``None`` is a memory sink and ``result`` is its table as a
+      batch DataFrame; a callable is a ``foreachBatch(df, epoch_id)`` body;
+      a string is a parquet file-sink path. Only the memory sink has a
+      result; the others return ``None``.
+    - ``trigger``: ``None`` drives an always-on query with
+      ``processAllAvailable`` and stops it from outside. ``"availableNow"``
+      is the catch-up trigger: the query drains the data available at
+      start, honouring source rate limits such as ``maxFilesPerTrigger``,
+      and terminates itself, which ``awaitTermination`` waits for. Any
+      other string is a ``processingTime`` interval (the reference's
+      500 ms DStream cadence, TwitterDStreamTrendingHashtag.java:49),
+      still bounded by ``processAllAvailable``.
+
+    The query runs under :func:`_scoped_shuffle_partitions` and is stopped
+    in ``finally``. ``progress`` is its ``recentProgress``, one dict per
+    trigger (``numInputRows``, ``durationMs``, ...).
     """
     spark = sdf.sparkSession
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
+    writer = sdf.writeStream.outputMode(mode)
+    name = None
+    if sink is None:
+        name = f"mem_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(name)
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if trigger == "availableNow":
+        writer = writer.trigger(availableNow=True)
+    elif trigger is not None:
+        writer = writer.trigger(processingTime=trigger)
     with _scoped_shuffle_partitions(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(processingTime=interval)
-            .start()
-        )
+        q = writer.start()
         try:
-            q.processAllAvailable()
-            data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(data_batches) < min_data_batches:
-                raise AssertionError(
-                    f"expected >= {min_data_batches} data micro-batches under "
-                    f"ProcessingTime({interval}), got {len(data_batches)}"
-                )
+            if trigger == "availableNow":
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
         finally:
             q.stop()
             q.awaitTermination()
-    return spark.table(name)
+    return (spark.table(name) if name else None), q.recentProgress
+
+
+def run_to_memory(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """:func:`run_stream` into a memory sink: the final result table as a
+    batch DataFrame. ``complete`` mode gives the full table for
+    aggregations (the oracle-comparable form); ``append`` is for
+    non-aggregating or watermark-closed output."""
+    return run_stream(sdf, mode=output_mode)[0]
 
 
 def run_foreach_batch(
@@ -528,22 +497,13 @@ def run_foreach_batch(
     write_batch: Callable[[DataFrame, int], None],
     output_mode: str = "update",
 ) -> None:
-    """Drive a stream through a foreachBatch sink to completion.
+    """:func:`run_stream` through a ``foreachBatch`` sink.
 
     ``write_batch(df, epoch_id)`` runs on the driver but the DataFrame it
     receives is distributed — writers should call df.write / df.foreachPartition
     so the actual I/O happens on executors, one connection per partition per
     epoch (vs the reference's connection per RECORD,
-    TwitterDStreamTrendingHashtag.java:102-104).
+    TwitterDStreamTrendingHashtag.java:102-104). Callers look this name up
+    at call time, so a wrapper patched onto the module sees every run.
     """
-    with _scoped_shuffle_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+    run_stream(sdf, write_batch, mode=output_mode)

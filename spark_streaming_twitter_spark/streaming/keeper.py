@@ -199,7 +199,6 @@ def keeper_stream(
       parquet-backed ledger side; otherwise the ledger is collected and
       the store removed with the temp dir.
     """
-    import shutil
     import tempfile
 
     from spark_streaming_twitter_spark.streaming.harness import (
@@ -209,17 +208,18 @@ def keeper_stream(
     )
     from spark_streaming_twitter_spark.text.corpus import _reclaim_ledger_dir
 
-    tmp = tempfile.mkdtemp(prefix="keeper_stream_")
-    # the spool lives in its own subdir: the partitioned store (side=...)
-    # must not share a root with the FileStreamSource's scan, or its
-    # partition inference sees conflicting directory structures
-    spool_dir = os.path.join(tmp, "spool")
-    if keep_ledger_dir is not None:
-        _reclaim_ledger_dir(keep_ledger_dir)
-        store_dir = keep_ledger_dir
-    else:
-        store_dir = os.path.join(tmp, "store")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="keeper_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        # the spool lives in its own subdir: the partitioned store (side=...)
+        # must not share a root with the FileStreamSource's scan, or its
+        # partition inference sees conflicting directory structures
+        spool_dir = os.path.join(tmp, "spool")
+        if keep_ledger_dir is not None:
+            _reclaim_ledger_dir(keep_ledger_dir)
+            store_dir = keep_ledger_dir
+        else:
+            store_dir = os.path.join(tmp, "store")
         if roundrobin:
             spool_roundrobin_batches(src, "doc_id", spool_dir)
         else:
@@ -240,7 +240,4 @@ def keeper_stream(
         )
         if keep_ledger_dir is not None:
             return ledger
-        out = spark.createDataFrame(ledger.collect(), ledger.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return spark.createDataFrame(ledger.collect(), ledger.schema)

@@ -178,16 +178,16 @@ def quality_projection(docs: DataFrame) -> DataFrame:
 )
 def stream_quality_gate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from spark_streaming_twitter_spark.streaming.harness import (
         run_to_memory,
     )
 
-    tmp = tempfile.mkdtemp(prefix="quality_stream_")
-    data_dir = os.path.join(tmp, "docs")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="quality_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        data_dir = os.path.join(tmp, "docs")
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", "text", "n_chars"
         )
@@ -200,11 +200,7 @@ def stream_quality_gate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         scored = quality_projection(stream.repartition(par))
         sink = run_to_memory(scored, output_mode="append")
-        rows = sink.collect()
-        out = spark.createDataFrame(rows, sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return spark.createDataFrame(sink.collect(), sink.schema)
 
 
 def _lang_marker_rows() -> list[tuple[str, str]]:

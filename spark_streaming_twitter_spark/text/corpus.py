@@ -858,13 +858,14 @@ def _pack_stream(
         spool_roundrobin_batches,
     )
 
-    tmp = tempfile.mkdtemp(prefix="stream_pack_")
-    if keep_ledger_dir is not None:
-        _reclaim_ledger_dir(keep_ledger_dir)
-    ledger_dir = keep_ledger_dir or os.path.join(tmp, "ledger")
-    shuffle_dir = os.path.join(tmp, "shuffle_ledger")
-    spools = [os.path.join(tmp, "spool"), os.path.join(tmp, "after_restart")]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_pack_", ignore_cleanup_errors=True
+    ) as tmp:
+        if keep_ledger_dir is not None:
+            _reclaim_ledger_dir(keep_ledger_dir)
+        ledger_dir = keep_ledger_dir or os.path.join(tmp, "ledger")
+        shuffle_dir = os.path.join(tmp, "shuffle_ledger")
+        spools = [os.path.join(tmp, "spool"), os.path.join(tmp, "after_restart")]
         docs = table(spark, sf_dir, "documents").select("doc_id", "text")
         # one id-scan agg serves the spool cuts and the single writer's
         # shard bound. The spool gets its own subdir: a partitioned keeper
@@ -899,8 +900,6 @@ def _pack_stream(
         if keep_ledger_dir is not None:
             return out
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _LEDGER_SCHEMA = (

@@ -5,7 +5,6 @@ under task failure."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -29,9 +28,9 @@ def _src(spark, rows=2000):
     )
 
 
-def test_commit_publishes_exactly_the_written_rows(spark):
+def test_commit_publishes_exactly_the_written_rows(spark, tmp_path):
     src = _src(spark)
-    out = tempfile.mkdtemp(prefix="msink_ok_")
+    out = str(tmp_path)
     src.write.format("manifest_sink").option("path", out).mode("append").save()
     assert os.path.exists(os.path.join(out, "_MANIFEST"))
     back = read_manifest_sink(spark, out)
@@ -39,12 +38,12 @@ def test_commit_publishes_exactly_the_written_rows(spark):
     assert back.select("event_id").distinct().count() == 2000
 
 
-def test_abort_leaves_nothing_visible(spark):
+def test_abort_leaves_nothing_visible(spark, tmp_path):
     """An injected failure on one shard must fail the job, leave NO
     manifest, and (manifest-gated) no visible rows — even though other
     tasks may have completed their files before the failure."""
     src = _src(spark)
-    out = tempfile.mkdtemp(prefix="msink_fail_")
+    out = str(tmp_path)
     with pytest.raises(Exception, match="injected write failure"):
         src.write.format("manifest_sink").option("path", out).option(
             "fail_shard", "3"

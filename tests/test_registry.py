@@ -273,6 +273,64 @@ def test_pair_scorers_share_one_self_join():
     assert not hits, f"hand-written self-joins outside dedup/pairs.py: {hits}"
 
 
+def _functions_using(root) -> "dict[str, set[str]]":
+    """The package functions (``path::qualname``) that name ``writeStream``,
+    enter a ``_scoped_shuffle_partitions`` scope, or call ``mkdtemp``."""
+    import ast
+
+    found: "dict[str, set[str]]" = {
+        "writeStream": set(),
+        "_scoped_shuffle_partitions": set(),
+        "mkdtemp": set(),
+    }
+
+    def called(node) -> "str | None":
+        if isinstance(node, ast.Call):
+            f = node.func
+            return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        return None
+
+    def visit(node, path: str, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            where = f"{path}::{inner}"
+            if isinstance(child, ast.Attribute) and child.attr == "writeStream":
+                found["writeStream"].add(where)
+            if isinstance(child, ast.withitem) and (
+                called(child.context_expr) == "_scoped_shuffle_partitions"
+            ):
+                found["_scoped_shuffle_partitions"].add(where)
+            if called(child) == "mkdtemp":
+                found["mkdtemp"].add(where)
+            visit(child, path, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(), "")
+    return found
+
+
+def test_one_stream_shell_and_scoped_work_dirs():
+    """Every streaming query starts in ``harness.run_stream``: it is the one
+    function that builds a ``writeStream`` and the one that enters the
+    shuffle-partition pin, so every query runs pinned and stopped. Every
+    work dir is a ``TemporaryDirectory`` scope; only the fixture spool,
+    whose build dir must outlive the call until its atomic rename, calls
+    ``mkdtemp``."""
+    import pathlib
+
+    import spark_streaming_twitter_spark
+
+    root = pathlib.Path(spark_streaming_twitter_spark.__file__).parent
+    shell = {"streaming/harness.py::run_stream"}
+    assert _functions_using(root) == {
+        "writeStream": shell,
+        "_scoped_shuffle_partitions": shell,
+        "mkdtemp": {"catalog.py::spool_fixture"},
+    }
+
+
 def _package_modules() -> "list[str]":
     import pathlib
 

@@ -462,9 +462,7 @@ def test_processing_time_trigger_drains_backlog_multi_batch(spark, stream_dir):
     cadence, made deterministic by the source rate limit), and the final
     state equals the batch answer.
     """
-    from spark_streaming_twitter_spark.streaming.harness import (
-        run_processing_time,
-    )
+    from spark_streaming_twitter_spark.streaming.harness import run_stream
 
     for i in range(3):
         _write_batch(
@@ -485,9 +483,8 @@ def test_processing_time_trigger_drains_backlog_multi_batch(spark, stream_dir):
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = run_processing_time(
-        agg, interval="500 milliseconds", min_data_batches=3
-    )
+    out, progress = run_stream(agg, mode="complete", trigger="500 milliseconds")
+    assert sum(p["numInputRows"] > 0 for p in progress) >= 3
     got = {r["w"].start.minute: r["n"] for r in out.collect()}
     assert got == {0: 2, 1: 2, 2: 2}
 
@@ -781,40 +778,26 @@ def test_replayed_trigger_overwrites_landed_state(spark, tmp_path, provider):
             spark.conf.set(key, prev)
 
 
-def test_state_metadata_reader_describes_checkpoint(spark, sf_dir):
+def test_state_metadata_reader_describes_checkpoint(spark, sf_dir, tmp_path):
     """The state-metadata companion reader (Spark 4 State Data Source)
     must describe the checkpoint's operator topology: one stateStoreSave
     operator, partition count = the run's shuffle partitions, batch 0
     committed — the observability contract stream_state_store_checkpoint's
     value check builds on."""
-    import tempfile
-    import uuid
-
     from spark_streaming_twitter_spark.streaming.harness import (
-        _scoped_shuffle_partitions,
+        run_stream,
         stream_events,
     )
 
-    ckpt = tempfile.mkdtemp(prefix="state_meta_test_")
+    ckpt = str(tmp_path)
     agg = (
         stream_events(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with _scoped_shuffle_partitions(spark):
-        expected_parts = spark.sparkContext.defaultParallelism
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(f"meta_{uuid.uuid4().hex[:8]}")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+    # run_stream pins shuffle partitions to the default parallelism
+    expected_parts = spark.sparkContext.defaultParallelism
+    run_stream(agg, mode="complete", checkpoint=ckpt)
 
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1
@@ -1081,20 +1064,18 @@ def test_watermark_policy_max_finalizes_more_nulls(spark):
     assert matched["max"] == matched["min"], matched
 
 
-def test_rocksdb_changelog_files_written(spark):
+def test_rocksdb_changelog_files_written(spark, tmp_path):
     """Changelog checkpointing must actually engage: the state checkpoint
     directory contains .changelog delta files (the per-commit O(changed
     keys) upload), not only full .zip snapshots."""
-    import pathlib
-
     from spark_streaming_twitter_spark.streaming.queries import (
         _rocksdb_changelog_run,
     )
 
-    out, ckpt = _rocksdb_changelog_run(spark, "/root/testdata/sf0.001")
+    out = _rocksdb_changelog_run(spark, "/root/testdata/sf0.001", str(tmp_path))
     assert out.count() > 0
-    files = list(pathlib.Path(ckpt).rglob("*.changelog"))
-    assert files, f"no .changelog files under {ckpt}"
+    files = list(tmp_path.rglob("*.changelog"))
+    assert files, f"no .changelog files under {tmp_path}"
 
 
 def test_state_partition_count_pinned_by_checkpoint(spark, stream_dir, tmp_path):
@@ -1314,3 +1295,35 @@ def test_scoped_shuffle_partitions_concurrent_and_nested(spark):
         assert spark.conf.get(key) == caller_val
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_state_store_checkpoint",
+        "stream_upsert_latest_state",
+        "stream_incremental_availablenow_runs",
+        "stream_exactly_once_sink_replay",
+        "stream_events_per_minute_rocksdb_changelog",
+        "python_datasource_writer_roundtrip",
+    ],
+)
+def test_registered_query_leaves_no_work_dir(spark, tmp_path, monkeypatch, name):
+    """A registered query owns its work dirs: once its result is collected,
+    nothing it made is left in the temp dir except the fixture spools
+    (catalog.spool_fixture), which later runs reuse by design. A query
+    that returns a lazy frame over its own checkpoint or sink leaves that
+    dir behind on every run."""
+    import tempfile
+
+    from spark_streaming_twitter_spark.registry import QUERIES, load_all
+
+    load_all()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES[name].fn(spark, "/root/testdata/sf0.001").collect()
+    left = sorted(
+        p.name
+        for p in tmp_path.iterdir()
+        if not p.name.startswith("spark_graft_spool_")
+    )
+    assert not left, f"{name} left {left}"

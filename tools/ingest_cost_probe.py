@@ -63,11 +63,13 @@ def main() -> None:
         shingles,
         tokens,
     )
+    from spark_streaming_twitter_spark.streaming.harness import run_stream
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     batch_rows = docs.count()
-    tmp = tempfile.mkdtemp(prefix="ingest_probe_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ingest_probe_", ignore_cleanup_errors=True
+    ) as tmp:
         # K files, each the SAME document set (fixed batch size): at
         # trigger i the stream has seen i * batch_rows rows of history.
         one = docs.coalesce(1)
@@ -94,63 +96,52 @@ def main() -> None:
             .select(F.col("doc_id").alias("ref_id"), "band", "band_key")
             .persist()
         )
-        ref_bands.count()
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        bands = (
-            stream.repartition(cpus)
-            .withColumn(
-                "sig",
-                minhash_signature_struct(
-                    shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
-                ),
-            )
-            .select(
-                "doc_id",
-                F.explode(
-                    minhash_band_structs_from_sig(F.col("sig"))
-                ).alias("bk"),
-            )
-            .select(
-                "doc_id",
-                F.col("bk.band").alias("band"),
-                F.col("bk.band_key").alias("band_key"),
-            )
-        )
-        matches = (
-            bands.join(F.broadcast(ref_bands), ["band", "band_key"])
-            .where(F.col("doc_id") != F.col("ref_id"))
-            .select("doc_id", "ref_id", "band")
-        )
-        t0 = time.time()
-        q = (
-            matches.writeStream.format("memory")
-            .queryName("ingest_probe")
-            .outputMode("append")
-            .start()
-        )
         try:
-            q.processAllAvailable()
+            ref_bands.count()
+            stream = (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(data_dir)
+            )
+            bands = (
+                stream.repartition(cpus)
+                .withColumn(
+                    "sig",
+                    minhash_signature_struct(
+                        shingles(tokens(F.lower(F.col("text"))), SHINGLE_N)
+                    ),
+                )
+                .select(
+                    "doc_id",
+                    F.explode(
+                        minhash_band_structs_from_sig(F.col("sig"))
+                    ).alias("bk"),
+                )
+                .select(
+                    "doc_id",
+                    F.col("bk.band").alias("band"),
+                    F.col("bk.band_key").alias("band_key"),
+                )
+            )
+            matches = (
+                bands.join(F.broadcast(ref_bands), ["band", "band_key"])
+                .where(F.col("doc_id") != F.col("ref_id"))
+                .select("doc_id", "ref_id", "band")
+            )
+            t0 = time.time()
+            _, progress = run_stream(matches, mode="append")
+            wall = time.time() - t0
         finally:
-            q.stop()
-            q.awaitTermination()
-        wall = time.time() - t0
-        per_batch = [
-            {
-                "batch": p["batchId"],
-                "rows": p["numInputRows"],
-                "add_batch_ms": p["durationMs"]["addBatch"],
-            }
-            for p in q.recentProgress
-            if p["numInputRows"] > 0
-        ]
-    finally:
-        ref_bands.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
+            ref_bands.unpersist()
+    per_batch = [
+        {
+            "batch": p["batchId"],
+            "rows": p["numInputRows"],
+            "add_batch_ms": p["durationMs"]["addBatch"],
+        }
+        for p in progress
+        if p["numInputRows"] > 0
+    ]
 
     times = [b["add_batch_ms"] for b in per_batch]
     half = len(times) // 2
